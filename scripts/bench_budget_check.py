@@ -41,14 +41,13 @@ with the round notes).
 """
 import argparse
 import json
-import os
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-THRESH = 0.6                          # mirrors Bench.scala heavyThresh default
-MID = 3.0                             # mirrors Bench.scala midThresh default
-REPS = 3
+THRESH = 0.6                          # mirrors Bench.scala HeavyThresh
+MID = 3.0                             # mirrors Bench.scala MidThresh
+REPS = 3                              # mirrors Bench.scala Reps
 # mirror of Bench.scala heavyMeasure: isolate loop `2×(System.gc();
 # sleep(400))` + `sleep(600)`, per-rep `System.gc(); sleep(600)`;
 # GC cost estimated ≈250 ms per cycle
@@ -64,14 +63,8 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--budget", type=float, default=2400.0)
     ap.add_argument("--extra", type=int, default=0)
-    ap.add_argument("--thresh", type=float,
-                    default=float(os.environ.get("SPARK_GRAFT_BENCH_THRESH", THRESH)))
-    # r13 (ADVICE fix): the mid cutoff is env-overridable in Bench.scala
-    # (SPARK_GRAFT_BENCH_MID_THRESH) — the gate must track it the same
-    # way --thresh tracks SPARK_GRAFT_BENCH_THRESH, or an override at
-    # bench time silently desyncs the budget model from the harness.
-    ap.add_argument("--mid", type=float,
-                    default=float(os.environ.get("SPARK_GRAFT_BENCH_MID_THRESH", MID)))
+    ap.add_argument("--thresh", type=float, default=THRESH)
+    ap.add_argument("--mid", type=float, default=MID)
     args = ap.parse_args()
     # r14 (ADVICE fix): an inverted band (thresh >= mid) would silently
     # cost every query in [mid, thresh) as cheap (2v) instead of mid

@@ -1,6 +1,74 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Pre-flight settle: wait (in 15 s steps, at most SettleMaxSec) until
+    * the 1-min loadavg is under SettleLoad before measuring.
+    */
+  private val SettleLoad = 2.5
+  private val SettleMaxSec = 180.0
+  // Median-of-Reps per query for the heavy tail: single-JVM
+  // sequential timings carry ±30% GC/JIT noise on one-shot runs, which
+  // made the documented per-query bands unfalsifiable. The median of
+  // three reps is stable enough that a breach means the code, not the
+  // weather.
+  private val Reps = 3
+  // ADAPTIVE DISCIPLINE (round 10 — the r9 bench timed out, rc=124):
+  // the full-discipline harness spent ~4.5 s of deliberate settle per
+  // query regardless of cost, ≈23 min of pure sleep across 313
+  // queries. The fix the r9 verdict prescribes: queries whose
+  // COMMITTED expectation (docs/BENCH_EXPECT.json — last full driver
+  // record, band midpoints for newer queries) is under the threshold
+  // get ONE warm rep + ONE measured rep and no deep settle (they are
+  // bounded by the <1 s bulk band rule, where ±0.2 s of GC adjacency
+  // noise cannot flag anything); the ≥threshold tail keeps the full
+  // r6 discipline: deep isolate-settle + median of `Reps` settled
+  // reps. A cheap-classified query that measures ≥0.6 s escalates to
+  // the heavy path in-run, so a misclassification (or a real
+  // regression) still gets a defensible median, never a one-shot
+  // number.
+  // 0.6, not the verdict's nominal 0.5: the r10 container measures
+  // ~1.2-1.4× over the r8 driver record (bench_records.jsonl carries
+  // both, loadavg/cpu fields in each), so 0.6 here = the ~0.45-0.5
+  // cheap class the rule intends, and puts ~190 of 317 queries on the
+  // cheap path (the verdict's "~200 of 313"). Every cheap query is
+  // bounded by the <1 s bulk band rule with 2× headroom.
+  private val HeavyThresh = 0.6
+  // MID TIER (r12): both wall-guard-tripped records (r11 driver, r12
+  // local) show the cost structure that overruns the guard is the
+  // full median-of-3-plus-settle discipline applied to ~90 queries in
+  // the 0.6–3 s band (~4 executions + ~3 s of settle each ≈ 8–12 min
+  // of the wall). Now that the spike re-run pass exists, a mid-band
+  // query can take ONE settled rep: an interference-inflated reading
+  // breaches 2×expect+0.75 s and gets re-measured as a median-of-3 by
+  // that pass — the escalation IS the outlier protection, paid only
+  // when a reading is suspicious instead of 3× always. Sub-2×
+  // window drift (1.3–1.8×) stays band-adjudication territory exactly
+  // as it already was for the one-shot cheap class. Full discipline
+  // remains for the ≥3 s tail, where a single rep's GC adjacency can
+  // move absolute seconds without tripping the relative spike rule.
+  private val MidThresh = 3.0
+  /** Measured wall after which remaining queries degrade to one-shot,
+    * and after which the spike re-run pass stops.
+    */
+  private val WallGuardSec = 1900.0
+  private val RerunWallSec = 2050.0
+
+  /** Time one execution of `fn` to its `count()`. A throw propagates —
+    * the caller records a failure, never the time it took to fail.
+    * Persisted intermediates are dropped either way so the next rep
+    * (and next query) re-executes the full plan.
+    */
+  private[graft] def timed(spark: SparkSession, dir: String, fn: Query): Double = {
+    val t0 = System.nanoTime()
+    try fn(spark, dir).count()
+    finally spark.catalog.clearCache()
+    (System.nanoTime() - t0) / 1e9
+  }
 
   /** Parse docs/BENCH_EXPECT.json (flat {"qname": seconds} under
     * "expect") without a JSON dependency — the keys are registry query
@@ -60,59 +128,14 @@ object Bench {
         .readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split("\\s+")(0).toDouble
       catch { case _: Throwable => 0.0 }
-    val settleLoad = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_LOAD", "2.5").toDouble
-    val settleMaxSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_MAX", "180").toDouble
     var settleWaited = 0.0
-    while (loadavg1 > settleLoad && settleWaited < settleMaxSec) {
+    while (loadavg1 > SettleLoad && settleWaited < SettleMaxSec) {
       Thread.sleep(15000)
       settleWaited += 15.0
     }
     val (loadavgStart, _, _) = hostId()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Median-of-N per query for the heavy tail (default 3): single-JVM
-    // sequential timings carry ±30% GC/JIT noise on one-shot runs, which
-    // made the documented per-query bands unfalsifiable. The median of
-    // three reps is stable enough that a breach means the code, not the
-    // weather.
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    // ADAPTIVE DISCIPLINE (round 10 — the r9 bench timed out, rc=124):
-    // the full-discipline harness spent ~4.5 s of deliberate settle per
-    // query regardless of cost, ≈23 min of pure sleep across 313
-    // queries. The fix the r9 verdict prescribes: queries whose
-    // COMMITTED expectation (docs/BENCH_EXPECT.json — last full driver
-    // record, band midpoints for newer queries) is under the threshold
-    // get ONE warm rep + ONE measured rep and no deep settle (they are
-    // bounded by the <1 s bulk band rule, where ±0.2 s of GC adjacency
-    // noise cannot flag anything); the ≥threshold tail keeps the full
-    // r6 discipline: deep isolate-settle + median of `reps` settled
-    // reps. A cheap-classified query that measures ≥0.6 s escalates to
-    // the heavy path in-run, so a misclassification (or a real
-    // regression) still gets a defensible median, never a one-shot
-    // number. SPARK_GRAFT_BENCH_ADAPTIVE=0 reproduces the r9 harness
-    // for A/B runs.
-    val adaptive = sys.env.getOrElse("SPARK_GRAFT_BENCH_ADAPTIVE", "1") == "1"
-    // 0.6, not the verdict's nominal 0.5: the r10 container measures
-    // ~1.2-1.4× over the r8 driver record (bench_records.jsonl carries
-    // both, loadavg/cpu fields in each), so 0.6 here = the ~0.45-0.5
-    // cheap class the rule intends, and puts ~190 of 317 queries on the
-    // cheap path (the verdict's "~200 of 313"). Every cheap query is
-    // bounded by the <1 s bulk band rule with 2× headroom.
-    val heavyThresh = sys.env.getOrElse("SPARK_GRAFT_BENCH_THRESH", "0.6").toDouble
-    // MID TIER (r12): both wall-guard-tripped records (r11 driver, r12
-    // local) show the cost structure that overruns the guard is the
-    // full median-of-3-plus-settle discipline applied to ~90 queries in
-    // the 0.6–3 s band (~4 executions + ~3 s of settle each ≈ 8–12 min
-    // of the wall). Now that the spike re-run pass exists, a mid-band
-    // query can take ONE settled rep: an interference-inflated reading
-    // breaches 2×expect+0.75 s and gets re-measured as a median-of-3 by
-    // that pass — the escalation IS the outlier protection, paid only
-    // when a reading is suspicious instead of 3× always. Sub-2×
-    // window drift (1.3–1.8×) stays band-adjudication territory exactly
-    // as it already was for the one-shot cheap class. Full discipline
-    // remains for the ≥3 s tail, where a single rep's GC adjacency can
-    // move absolute seconds without tripping the relative spike rule.
-    val midThresh = sys.env.getOrElse("SPARK_GRAFT_BENCH_MID_THRESH", "3.0").toDouble
     val expect = loadExpect(sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_EXPECT", "/root/repo/docs/BENCH_EXPECT.json"))
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
@@ -139,67 +162,44 @@ object Bench {
         }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val isolate = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE", "1") == "1"
-    // Warm-up. Non-adaptive: ONE registry pass at sf0.01 (r10 change —
-    // the r9 harness ran sf0.001 AND sf0.01, executing all 313 queries
-    // twice before measuring; the sf0.001 pass only loads classes,
-    // which the sf0.01 pass does anyway). Adaptive: no global pass at
-    // all — every query gets its own warm execution (cheap: the warm
-    // rep at the bench SF; heavy: an untimed sf0.01 run right before
-    // its settled reps, which compiles its codegen kernels the way the
-    // old global pass did, but pays only for the queries being
-    // measured).
+    // Warm-up: no global pass — every query gets its own warm execution
+    // (cheap: the warm rep at the bench SF; mid/heavy: an untimed sf0.01
+    // run right before its settled reps, which compiles its codegen
+    // kernels but pays only for the queries being measured).
     val warmDir = {
       val d = "/root/testdata/sf0.01"
       if (new java.io.File(d).isDirectory) d else sfDir
     }
-    if (!adaptive) {
-      ordered.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count()
-        catch { case _: Throwable => () }
-      }
+    def timed(fn: Query): Double = Bench.timed(spark, sfDir, fn)
+    // an untimed warm execution; its failure is not the measurement's
+    def warmAt001(fn: Query): Unit = {
+      try fn(spark, warmDir).count() catch { case _: Throwable => () }
       spark.catalog.clearCache()
     }
 
-    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      // drop persisted intermediates so the next rep (and next query)
-      // re-executes the full plan instead of reading this rep's caches
-      spark.catalog.clearCache()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // Full r6 discipline: deep isolate-settle (three GC cycles with
+    // Full r6 discipline: deep isolate-settle (GC cycles with
     // ContextCleaner drain time + a final beat, BETWEEN queries so it
-    // costs wall time, not measured time), then `reps` reps each with a
-    // per-rep settle (GC + 750 ms) so the previous execution's garbage
+    // costs wall time, not measured time), then `Reps` reps each with a
+    // per-rep settle (GC + 600 ms) so the previous execution's garbage
     // isn't collected on this rep's clock. Median of reps.
-    def heavyMeasure(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-                     warm: Boolean): Double = {
-      if (warm) { // adaptive mode has no global warm-up pass
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-      }
+    def heavyMeasure(fn: Query, warm: Boolean): Double = {
+      if (warm) warmAt001(fn)
       // r10 trim: 2 settle cycles + 600 ms beat (was 3 + 1000) and a
       // 600 ms per-rep beat (was 750) — the first full-registry run
       // measured the old constants at ~4.75 s of fixed overhead per
       // heavy query, which alone is ~12 min across the ≥thresh tail;
       // these still give two full GC+drain cycles between queries and
-      // one before every rep, and the A/B knob (ADAPTIVE=0) plus the
-      // committed records make any induced drift measurable.
-      if (isolate) {
-        var i = 0
-        while (i < 2) { System.gc(); Thread.sleep(400); i += 1 }
-        Thread.sleep(600)
-      }
-      val times = (1 to reps).map { _ =>
+      // one before every rep.
+      var i = 0
+      while (i < 2) { System.gc(); Thread.sleep(400); i += 1 }
+      Thread.sleep(600)
+      val times = (1 to Reps).map { _ =>
         System.gc()
         Thread.sleep(600)
         timed(fn)
       }.sorted
-      if (reps % 2 == 1) times(reps / 2)
-      else (times(reps / 2 - 1) + times(reps / 2)) / 2
+      if (Reps % 2 == 1) times(Reps / 2)
+      else (times(Reps / 2 - 1) + times(Reps / 2)) / 2
     }
 
     // WALL GUARD (r11 — the structural fix for the r9 rc=124 class):
@@ -209,88 +209,32 @@ object Bench {
     // instead of timing out with no record at all. Degraded names ride
     // in the record so band adjudication knows those values are
     // one-shot under load, not settled medians.
-    val wallGuardSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_WALL_GUARD", "1900").toDouble
     val wallStart = System.nanoTime()
     def wallElapsed: Double = (System.nanoTime() - wallStart) / 1e9
     val degraded = scala.collection.mutable.ArrayBuffer.empty[String]
-    // JIT/codegen/task-metrics side-channel (r14 — the q96 mechanism
-    // hunt): per-query deltas of HotSpot compile time, janino
-    // compilations, GC, class count, executor task tallies (run time,
-    // task GC, spill, shuffle bytes, job/task counts) plus absolute
-    // CodeHeap/Metaspace occupancy, appended as JSONL. ON by default —
-    // the q96-class inflation appears only in FULL in-session runs
-    // (2 of 4 r13 records) and was uninstrumented every time it fired;
-    // the cost is two MXBean reads and eight AtomicLong adds per task,
-    // invisible next to a measured query. The file is gitignored;
-    // SPARK_GRAFT_BENCH_JITSTATS=0 disables, any other value is a path.
-    val jitStatsPath: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_JITSTATS")
-      .orElse(Some("1"))
-      .filter(v => v.nonEmpty && v != "0")
-      .map(v => if (v == "1") "/root/repo/jitstats.jsonl" else v)
-    val tally = jitStatsPath.map { _ =>
-      val t = new BenchRules.TaskTally
-      spark.sparkContext.addSparkListener(t)
-      t
-    }
-    def appendLine(path: String, line: String): Unit =
-      try {
-        val w = new java.io.FileWriter(path, true)
-        try w.write(line + "\n") finally w.close()
-      } catch { case _: Throwable => () }
-    // JSON string escaping for hand-built lines: flags/paths are
-    // environment-controlled (SPARK_GRAFT_JVM_EXTRA, SF dir) — a quote,
-    // backslash, or embedded newline in either would break the
-    // line-oriented json.loads in the triage script
-    def jstr(s: String): String =
-      s.flatMap {
-        case '\\' => "\\\\"
-        case '"'  => "\\\""
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-    // one header line per run: the memory posture this JVM actually got
-    // (the r14 heap pin lives in build.sbt fork options — adjudicating a
-    // future inflated record starts with "did the fix reach the JVM?")
-    jitStatsPath.foreach { p =>
-      import scala.jdk.CollectionConverters._
-      val flags = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala
-        .filter(a => a.startsWith("-Xm") || a.contains("PreTouch") || a.contains("CodeCache"))
-        .mkString(" ")
-      appendLine(p, s"""{"run_header":true,"jvm_flags":"${jstr(flags)}","sf":"${jstr(sfDir)}","cpus":"$cpus"}""")
-    }
-    val results = ordered.map { case (name, fn) =>
-      val jitBefore = jitStatsPath.map(_ => BenchRules.sample())
-      val tallyBefore = tally.map(_.snap())
-      val overWall = wallElapsed > wallGuardSec
+    // A query that throws (in any timed rep, warm reps at the bench SF
+    // included) is listed in `failed` and kept out of `queries`/`total`.
+    val (results, mainFailed) = BenchRules.measureAll(ordered) { (name, fn) =>
+      val overWall = wallElapsed > WallGuardSec
       if (overWall) degraded += name
-      val med =
-        if (overWall) { timed(fn); timed(fn) } // warm + one-shot, no settle
-        else if (!adaptive) heavyMeasure(fn, warm = false)
-        else if (expect.get(name).exists(_ < heavyThresh)) {
-          timed(fn) // warm rep at the bench SF (codegen + JIT)
-          val v = timed(fn)
-          // escalate a surprise: a "cheap" query measuring heavy gets
-          // the full discipline so bands compare like with like (same
-          // knob as classification — overriding SPARK_GRAFT_BENCH_THRESH
-          // must move both cutoffs together)
-          if (v >= heavyThresh) heavyMeasure(fn, warm = false) else v
-        } else if (expect.get(name).exists(_ < midThresh)) {
-          // mid tier: sf0.01 warm (codegen), one settled rep; the spike
-          // re-run pass escalates any suspicious reading to median-of-3
-          try fn(spark, warmDir).count() catch { case _: Throwable => () }
-          spark.catalog.clearCache()
-          System.gc()
-          Thread.sleep(600)
-          timed(fn)
-        } else heavyMeasure(fn, warm = true)
-      jitStatsPath.foreach { p =>
-        val extra = tally.map(t => t.deltaJson(tallyBefore.get, t.snap())).getOrElse("")
-        appendLine(p, BenchRules.jitLine(name, med, jitBefore.get, BenchRules.sample(), extra))
-      }
-      name -> med
+      if (overWall) { timed(fn); timed(fn) } // warm + one-shot, no settle
+      else if (expect.get(name).exists(_ < HeavyThresh)) {
+        timed(fn) // warm rep at the bench SF (codegen + JIT)
+        val v = timed(fn)
+        // escalate a surprise: a "cheap" query measuring heavy gets
+        // the full discipline so bands compare like with like (same
+        // constant as classification, so both cutoffs move together)
+        if (v >= HeavyThresh) heavyMeasure(fn, warm = false) else v
+      } else if (expect.get(name).exists(_ < MidThresh)) {
+        // mid tier: sf0.01 warm (codegen), one settled rep; the spike
+        // re-run pass escalates any suspicious reading to median-of-3
+        warmAt001(fn)
+        System.gc()
+        Thread.sleep(600)
+        timed(fn)
+      } else heavyMeasure(fn, warm = true)
     }
+    val failed = scala.collection.mutable.ArrayBuffer.from(mainFailed)
     // SPIKE RE-RUN ADJUDICATION (r12 — the r11 verdict's #1 task): the
     // binding r11 record shipped q94_pq_adc at 17.5× its four-record
     // consensus because an interference window hit its measurement and
@@ -299,15 +243,15 @@ object Bench {
     // moves it IN: after the main pass — when the load window that
     // inflated a value has typically moved on — re-measure (warm +
     // median-of-up-to-3, light settle) every query whose value exceeds
-    // SPIKE_K× its committed expectation by at least SPIKE_ABS seconds,
-    // worst absolute excess first, and REPLACE the value. A re-run that
-    // still reads high stays high — that is a real regression, recorded
-    // as such. `rerun` names + original `spiked` values ride in the
+    // SpikeK× its committed expectation by at least the effective
+    // SpikeAbs margin, worst absolute excess first, and REPLACE the
+    // value. A re-run that still reads high stays high — that is a real
+    // regression, recorded as such. `rerun` names + original `spiked` values ride in the
     // record so BENCH_EXPECT rebasing (derive_expect.py) can trust rerun
     // values and band adjudication can see what was replaced.
     //
     // Wall discipline: the pass fits INSIDE the driver budget's slack —
-    // each rep checks the rerun wall (default 2050 s measured-wall; the
+    // each rep checks the rerun wall (RerunWallSec measured-wall; the
     // budget evidence is r8's 2138 s sbt-total passing and the gate's
     // 2400 s assumption, minus ~120 s JVM startup and teardown margin)
     // and the pass stops mid-query rather than overrun, keeping at least
@@ -318,12 +262,8 @@ object Bench {
     // crept (reading 10.29, expect 6.22 → 1.65×, unadjudicated); the
     // prior binding record is one committed measurement and cannot
     // creep, so `value > 1.5× prior + 0.75 s` fires exactly there.
-    // Predicates live in BenchRules (spec-pinned by BenchRulesSpec).
-    val spikeK = sys.env.getOrElse("SPARK_GRAFT_BENCH_SPIKE_K", "2.0").toDouble
-    val crossK = sys.env.getOrElse("SPARK_GRAFT_BENCH_CROSS_K", "1.5").toDouble
-    val spikeAbs = sys.env.getOrElse("SPARK_GRAFT_BENCH_SPIKE_ABS", "0.75").toDouble
-    val rerunWallSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_WALL", "2050").toDouble
+    // Predicates and constants live in BenchRules (spec-pinned by
+    // BenchRulesSpec). Failed queries have no value and are never re-run.
     val priorDriver = BenchRules.loadPriorDriver(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_records.jsonl"))
     val spiked = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -333,7 +273,7 @@ object Bench {
       val candidates = results
         .flatMap { case (name, v) =>
           if (BenchRules.spike(v, expect.get(name), priorDriver.get(name),
-              spikeK, crossK, spikeAbs))
+              BenchRules.SpikeK, BenchRules.CrossK, BenchRules.SpikeAbs))
             // rank by distortion vs the tightest reference we have
             Some((name, v, math.min(
               expect.getOrElse(name, Double.MaxValue),
@@ -343,34 +283,32 @@ object Bench {
         .sortBy { case (_, v, e) => -(v - e) } // worst distortion first
       val replaced = scala.collection.mutable.Map.empty[String, Double]
       candidates.foreach { case (name, v, _) =>
-        if (wallElapsed < rerunWallSec) {
+        if (wallElapsed < RerunWallSec) {
           val fn = byName(name)
-          val jitBefore = jitStatsPath.map(_ => BenchRules.sample())
-          val tallyBefore = tally.map(_.snap())
-          timed(fn) // warm (codegen/JIT at the bench SF)
-          val reps3 = scala.collection.mutable.ArrayBuffer.empty[Double]
-          // up to 3 settled reps, each gated on the rerun wall so one
-          // genuinely-slow query cannot blow the budget for the rest
-          while (reps3.size < 3 && (reps3.isEmpty || wallElapsed < rerunWallSec)) {
-            System.gc()
-            Thread.sleep(400)
-            reps3 += timed(fn)
-          }
-          val sortedReps = reps3.sorted
-          val n = sortedReps.size
-          val med =
-            if (n % 2 == 1) sortedReps(n / 2)
-            else (sortedReps(n / 2 - 1) + sortedReps(n / 2)) / 2
-          spiked(name) = v
-          reran += name
-          replaced(name) = med
-          jitStatsPath.foreach { p =>
-            val extra = tally.map(t => t.deltaJson(tallyBefore.get, t.snap())).getOrElse("")
-            appendLine(p, BenchRules.jitLine(name + "#rerun", med, jitBefore.get, BenchRules.sample(), extra))
-          }
+          try {
+            timed(fn) // warm (codegen/JIT at the bench SF)
+            val reps3 = scala.collection.mutable.ArrayBuffer.empty[Double]
+            // up to 3 settled reps, each gated on the rerun wall so one
+            // genuinely-slow query cannot blow the budget for the rest
+            while (reps3.size < 3 && (reps3.isEmpty || wallElapsed < RerunWallSec)) {
+              System.gc()
+              Thread.sleep(400)
+              reps3 += timed(fn)
+            }
+            val sortedReps = reps3.sorted
+            val n = sortedReps.size
+            val med =
+              if (n % 2 == 1) sortedReps(n / 2)
+              else (sortedReps(n / 2 - 1) + sortedReps(n / 2)) / 2
+            replaced(name) = med
+            spiked(name) = v
+            reran += name
+          } catch { case _: Throwable => failed += name } // a re-run that throws is a failure too
         }
       }
-      results.map { case (name, v) => name -> replaced.getOrElse(name, v) }
+      results.collect {
+        case (name, v) if !failed.contains(name) => name -> replaced.getOrElse(name, v)
+      }
     }
     val qs = adjudicated.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -414,21 +352,19 @@ object Bench {
     }
     val stamp = java.time.Instant.now().toString
     val (loadavg, cpu, nproc) = hostId()
-    // agg label: in adaptive mode the cheap bulk is a single warm-shot
-    // measurement, only the ≥thresh tail carries a settled median —
-    // "adaptive" tells band adjudication not to read one-shot values as
-    // settled medians (an "median_of_3" label there would mislabel ~190
-    // of 317 values).
-    val agg = if (adaptive) "adaptive" else s"median_of_$reps"
-    val degradedJson = degraded.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def jsonNames(names: Iterable[String]): String =
+      names.map("\"" + _ + "\"").mkString("[", ",", "]")
     // rerun = names whose values are spike-adjudicated settled medians
     // (trusted by derive_expect.py even when also in `degraded`);
-    // spiked = the original main-pass values they replaced.
-    val rerunJson = reran.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // spiked = the original main-pass values they replaced; failed =
+    // names that threw (no value, not in `total`; `nq` counts them).
+    // agg/isolate/adaptive are fixed labels that keep records comparable
+    // with earlier ones: "adaptive" says the cheap bulk is one warm-shot
+    // measurement and only the ≥HeavyThresh tail a settled median.
     val spikedJson = spiked
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","agg":"$agg","source":"$source","round":$round,"sha":"$sha","ts":"$stamp","isolate":$isolate,"adaptive":$adaptive,"nq":${results.size},"subset":${only.isDefined},"degraded":$degradedJson,"rerun":$rerunJson,"spiked":$spikedJson,"loadavg":"$loadavgStart","loadavg_preflight":"$loadavgPreflight","settle_waited":$settleWaited,"loadavg_end":"$loadavg","cpu":"$cpu","nproc":$nproc}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","agg":"adaptive","source":"$source","round":$round,"sha":"$sha","ts":"$stamp","isolate":true,"adaptive":true,"nq":${ordered.size},"subset":${only.isDefined},"degraded":${jsonNames(degraded)},"failed":${jsonNames(failed)},"rerun":${jsonNames(reran)},"spiked":$spikedJson,"loadavg":"$loadavgStart","loadavg_preflight":"$loadavgPreflight","settle_waited":$settleWaited,"loadavg_end":"$loadavg","cpu":"$cpu","nproc":$nproc}"""
     println(line)
     // ALSO persist the full record to a file: the driver's captured
     // stdout tail truncates past ~64 per-query medians; the file is

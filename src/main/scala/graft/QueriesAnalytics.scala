@@ -1724,7 +1724,8 @@ private[graft] trait QueriesAnalytics {
     // bounded_levenshtein(a,b,k) <= k ⟺ levenshtein(a,b) <= k
     // (BoundedLevenshteinSpec pins it) — the banded DP scores the
     // candidate pairs 3.7x faster than the full-matrix builtin
-    // (graft.ExprBench), and the oracle keeps the plain form
+    // (3.74x on 2M pairs, docs/BENCH_NOTES.md), and the oracle keeps
+    // the plain form
     val matches = cand
       .where(
         expr("bounded_levenshtein(concat(a_first, ' ', a_last), " +

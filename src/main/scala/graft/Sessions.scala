@@ -39,16 +39,15 @@ object Sessions {
       // sources per execution — slightly past 100, which under LRU is
       // FULL thrash: every rep of an identical query re-janinos its
       // whole working set and then HotSpot re-ramps it (r15, q109
-      // adjudication: janino_d ~72/rep steady at cache=100, wall
-      // 3.7-5.9 s; at 2000 janino_d=0 from rep 2 and wall settles
+      // adjudication: ~72 janino compiles/rep steady at cache=100, wall
+      // 3.7-5.9 s; at 2000 zero compiles from rep 2 and wall settles
       // 2.6-2.8 s — probed equal at 5000, so 2000 is not a cliff
       // edge). Bounded memory: entries are LRU-capped compiled
       // classes; 2000 is ~20x any observed per-query working set yet
       // small against the pinned 24 GiB heap. At cluster scale the
       // same cache exists per executor JVM, where repeated stages of
       // an iterative job hit it identically.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
 
   /** Local session for tests. */

@@ -170,9 +170,8 @@ object Similarity {
     * codegen'd [[graft.expr.LshBuckets]] (via the private `allBuckets`
     * below — q30/q31/q49/q54/q107, bucketIndex, StreamingAnn);
     * LshBucketsSpec pins the two bit-identical. Remaining callers of
-    * THIS composed Column form: graft.Profile's `one_table_buckets`
-    * stage and LshBucketsSpec's equivalence test — nothing on a query
-    * path. Keep it as the dependency-free reference implementation; do
+    * THIS composed Column form: LshBucketsSpec's equivalence test —
+    * nothing on a query path. Keep it as the dependency-free reference implementation; do
     * not add new call sites on query paths.
     *
     * Scale note: `nbits` must grow with the corpus — use `lshParams` to

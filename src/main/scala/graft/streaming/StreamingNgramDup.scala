@@ -29,7 +29,7 @@ object StreamingNgramDup {
   def index(corpus: DataFrame, textCol: String, w: Int): DataFrame =
     NgramDup.shingles(corpus, textCol, w, Seq.empty).distinct()
 
-  /** Profile `arrivals` (streaming OR static) against a frozen index:
+  /** Score `arrivals` (streaming OR static) against a frozen index:
     * per doc, total span positions and how many hit the index.
     */
   def profileAgainst(

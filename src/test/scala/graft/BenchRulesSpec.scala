@@ -1,19 +1,19 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{lit, raise_error}
 
-/** Pins the bench spike-adjudication predicates (BenchRules) — in
-  * particular the r14 driver-history trigger, whose reason to exist is
-  * the exact r13 shape this spec replays: q96_pagerank read 10.29 s in
-  * the binding record while its crept expectation (6.22) kept the
-  * 2×expect rule silent and the prior driver record (4.23) said the
-  * reading was 2.4× round-over-round.
+/** Pins the bench spike-adjudication predicates and failure accounting
+  * (BenchRules) — in particular the r14 driver-history trigger, whose
+  * reason to exist is the exact r13 shape this spec replays:
+  * q96_pagerank read 10.29 s in the binding record while its crept
+  * expectation (6.22) kept the 2×expect rule silent and the prior
+  * driver record (4.23) said the reading was 2.4× round-over-round.
   */
-class BenchRulesSpec extends AnyFunSuite {
+class BenchRulesSpec extends SparkSpec {
 
-  private val K = 2.0      // SPARK_GRAFT_BENCH_SPIKE_K default
-  private val CROSS = 1.5  // SPARK_GRAFT_BENCH_CROSS_K default
-  private val ABS = 0.75   // SPARK_GRAFT_BENCH_SPIKE_ABS default
+  private val K = BenchRules.SpikeK       // 2.0
+  private val CROSS = BenchRules.CrossK   // 1.5
+  private val ABS = BenchRules.SpikeAbs   // 0.75
 
   test("expectSpike fires on a clean 2x-with-margin breach") {
     assert(BenchRules.expectSpike(10.0, Some(4.0), K, ABS))
@@ -139,46 +139,18 @@ class BenchRulesSpec extends AnyFunSuite {
     assert(m.size > 300)
   }
 
-  // ------------------------------------------------------ jit sampler
+  // ------------------------------------------------ failure accounting
 
-  test("JIT sample reads sane absolute values") {
-    val s = BenchRules.sample()
-    assert(s.classes > 1000)             // a JVM running scalatest
-    assert(s.codeCacheUsedMb > 1.0)      // something is compiled
-    assert(s.codeCacheMaxMb >= s.codeCacheUsedMb)
-    assert(s.metaspaceMb > 1.0)
-    assert(s.gcMs >= 0)
-    val line = BenchRules.jitLine("q0_x", 1.23, s, BenchRules.sample())
-    assert(line.startsWith("""{"q":"q0_x","sec":1.23,"""))
-    assert(line.contains("\"codecache_mb\":"))
-  }
-
-  test("process-level kernel-time/fault counters read and move (Linux)") {
-    // The r14 q96 signature lives in these three fields: proc_sys_ms_d
-    // rivaling proc_user_ms_d with minflt_d in the millions while
-    // gc/jit/janino stay flat. Pin that they are real counters, not -1
-    // fallbacks, and that a page-faulting workload moves minflt.
-    val before = BenchRules.sample()
-    assume(before.procSysMs >= 0, "no /proc/self/stat on this platform")
-    assert(before.procUserMs > 0)   // this JVM has burned user CPU
-    assert(before.minorFaults > 0)
-    // touch ~64 MB of fresh pages via a direct buffer (its own mmap —
-    // heap allocations could land on already-faulted pages and show no
-    // minflt movement). Threshold is THP-safe: with transparent huge
-    // pages set to `always` the mmap can fault in 2 MiB pages, so 64 MB
-    // is only ~32 minor faults — assert >16 (one fault per 2 MiB, half
-    // margin) rather than the 4 KiB-granularity ~16k count.
-    val pages = 16384
-    val buf = java.nio.ByteBuffer.allocateDirect(pages * 4096)
-    var i = 0
-    while (i < pages) { buf.put(i * 4096, 1.toByte); i += 1 }
-    val after = BenchRules.sample()
-    assert(after.minorFaults - before.minorFaults > 16,
-      s"minflt_d=${after.minorFaults - before.minorFaults}")
-    assert(after.procUserMs >= before.procUserMs)
-    val line = BenchRules.jitLine("q0_x", 0.1, before, after)
-    assert(line.contains("\"proc_sys_ms_d\":"))
-    assert(line.contains("\"proc_user_ms_d\":"))
-    assert(line.contains("\"minflt_d\":"))
+  test("a throwing query yields a failure, not a time") {
+    val ok: Bench.Query = (s, _) => s.range(3).toDF()
+    // one query fails while it is built, one while it executes
+    val badBuild: Bench.Query = (_, _) => throw new IllegalStateException("boom")
+    val badRun: Bench.Query = (s, _) => s.range(3).toDF().where(raise_error(lit("boom")).isNull)
+    val (timed, failed) = BenchRules.measureAll(
+      Seq("q1_ok" -> ok, "q2_bad_build" -> badBuild, "q3_bad_run" -> badRun)) {
+      (_, fn) => Bench.timed(spark, "", fn)
+    }
+    assert(timed.map(_._1) == Seq("q1_ok"))
+    assert(failed == Seq("q2_bad_build", "q3_bad_run"))
   }
 }

@@ -184,7 +184,7 @@ class PlanContractSpec extends SparkSpec {
   test("recursive CTE emits no LogicalRDD attribute-mismatch warnings: q258") {
     // BENCH_r09's driver log drowned in `WARN LogicalRDD: The output
     // columns are expected to the same … (c_custkey, c_custkey, 0)` —
-    // hundreds of firings per full pass. WarnHunt attributed every one
+    // hundreds of firings per full pass. A per-query marker pass attributed every one
     // to q258's WITH RECURSIVE anchor, whose unaliased duplicate
     // projection let the optimizer collapse two attributes to one
     // exprId on every UnionLoop materialization. The anchor now aliases
