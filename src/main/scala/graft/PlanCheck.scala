@@ -114,6 +114,12 @@ object PlanCheck {
     val spark = Sessions
       .builder(s"local[$cpus]", cpus)
       .config("spark.sql.adaptive.enabled", "false")
+      // scan metadata (DataFilters, PushedFilters, ...) is otherwise cut
+      // at a RAW-string budget before the normalization below runs, so
+      // the cut lands mid-token and moves with the length of what it
+      // swallowed: a session-global lambda counter (q67) or an @addr
+      // (q103). Untruncated, every token is whole when normalized.
+      .config("spark.sql.maxMetadataStringLength", Int.MaxValue.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val entries = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -138,15 +144,6 @@ object PlanCheck {
             // with a 'deadbeef' substring) isn't collapsed, which would
             // make two genuinely different plans hash identical
             .replaceAll("\\br[0-9a-f]{8,}\\b", "r")
-            // Spark truncates long field lists (DataFilters etc.) at a
-            // RAW-string budget, so the cut can land mid-token — and the
-            // partial token leaks pre-normalization variance: a
-            // session-global lambda counter ("lambda x_65..." — depends
-            // on how many lambdas earlier queries registered, observed
-            // on q67) or a boundary shifted by the varying LENGTH of an
-            // @addr it swallowed (observed run-to-run on q103). Drop the
-            // partial token after the last comma of a truncated segment.
-            .replaceAll(",[^,\\n]*\\.\\.\\.", ", ...")
           // ALWAYS dump the normalized text alongside the hash: round 6
           // proved the hashes are stable within a container but NOT
           // across containers (105/107 differed between the r5-committed

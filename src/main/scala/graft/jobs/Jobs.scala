@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Normalize, Upsert}
 
@@ -16,7 +16,11 @@ import graft.ops.{Dedup, Normalize, Upsert}
   *    curated table (filter-and-overwrite; on Delta this is DELETE FROM).
   *
   * Snapshot persistence is read-merge-publish on parquet, keeping the
-  * harness dependency-free.
+  * harness dependency-free. The same contract covers the producer's
+  * cursor snapshot (the reference's `ingestion_cursors` table):
+  * ProducerLoop.processBatch writes the merged cursors to
+  * `<cursorDir>__tmp` and publishes them through [[publish]], and its
+  * `readCursors` runs [[recover]] first.
   *
   * CRASH-CONSISTENCY CONTRACT (vs the reference's transactional
   * `ON CONFLICT` upserts, app/main.py:633-648): snapshot maintenance
@@ -64,7 +68,7 @@ object Jobs {
     * in the object scaladoc). Both paths must live on one filesystem —
     * true by construction here (`__tmp` is a sibling).
     */
-  private def publish(tmpDir: String, targetDir: String): Unit = {
+  private[graft] def publish(tmpDir: String, targetDir: String): Unit = {
     recover(targetDir) // never sweep __old while the target name is absent
     val tmp = new java.io.File(tmpDir)
     val target = new java.io.File(targetDir)
@@ -79,6 +83,14 @@ object Jobs {
     rm(old)
   }
 
+  /** Overwrite `dir` with `df` and return the rows written, counted by an
+    * observation on the write itself rather than a read-back. */
+  private def writeCounted(df: DataFrame, dir: String): Long = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite).parquet(dir)
+    obs.get("n").asInstanceOf[Long]
+  }
+
   /** Retention: keep only rows with `tsCol` >= cutoff (the reference
     * deletes `observed_at < now() - interval Nd`, app/housekeeping.py:15-17).
     */
@@ -90,8 +102,7 @@ object Jobs {
     recover(tableDir) // a crashed publish left the table only under __old
     val kept = retention(spark.read.parquet(tableDir), tsCol, cutoff)
     val tmp = tableDir + "__tmp"
-    kept.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val n = spark.read.parquet(tmp).count()
+    val n = writeCounted(kept, tmp)
     publish(tmp, tableDir) // rename, not a second write — see contract above
     n
   }
@@ -140,8 +151,7 @@ object Jobs {
     // the same way every run (priority = the key alone would tie)
     val deduped = Dedup.firstWins(merged, Seq("station_id"), merged.columns.toSeq)
     val tmp = catalogDir + "__tmp"
-    deduped.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val n = spark.read.parquet(tmp).count()
+    val n = writeCounted(deduped, tmp)
     publish(tmp, catalogDir) // rename, not a second write — see contract above
     n
   }

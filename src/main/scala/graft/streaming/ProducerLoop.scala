@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
-import graft.ops.{Dedup, Rollup, Upsert, WatermarkDedup}
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
+import graft.jobs.Jobs
+import graft.ops.{Rollup, Upsert, WatermarkDedup}
 
 /** The reference's producer cycle (§3.1 of SURVEY.md) as a Structured
   * Streaming job with foreachBatch:
@@ -19,7 +19,12 @@ import graft.ops.{Dedup, Rollup, Upsert, WatermarkDedup}
   * (`value` = to_json(struct(*)), reference app/main.py:1161-1182); with
   * the Kafka connector on the classpath the same frame writes via
   * `.format("kafka")` unchanged. Cursors persist as a parquet snapshot
-  * (the Postgres `ingestion_cursors` table) via read-merge-overwrite.
+  * (the Postgres `ingestion_cursors` table): each batch reads it with its
+  * fixed schema supplied (no inference job), writes the merged cursors
+  * once to `<cursorDir>__tmp` and publishes them by rename under the
+  * [[graft.jobs.Jobs]] crash-consistency contract. The batch itself is
+  * computed once: the emit and the cursor roll-up both read one cached
+  * copy of the watermarked, deduplicated rows.
   *
   * Trigger mirrors T1: ProcessingTime for the continuous loop,
   * AvailableNow for the one-shot modules (reference app/de_measurements.py).
@@ -43,15 +48,20 @@ object ProducerLoop {
       ).as("value")
     )
 
-  /** Read the cursor snapshot if it exists, else an empty frame. */
-  def readCursors(spark: SparkSession, cursorDir: String, keys: Seq[String]): DataFrame =
-    if (Files.exists(Paths.get(cursorDir)) && new java.io.File(cursorDir).list().nonEmpty)
-      spark.read.parquet(cursorDir)
-    else {
-      import org.apache.spark.sql.types._
-      val fields = keys.map(StructField(_, StringType)) :+ StructField("last_observed_at", TimestampType)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(fields))
-    }
+  /** The cursor snapshot's schema, fixed by `processBatch`: the keys as
+    * strings plus `last_observed_at`. */
+  private def cursorSchema(keys: Seq[String]): StructType =
+    StructType(keys.map(StructField(_, StringType)) :+ StructField("last_observed_at", TimestampType))
+
+  /** Read the cursor snapshot if it exists, else an empty frame. A crash
+    * between the publish's two renames leaves the snapshot only under
+    * `__old`; it is restored first so it cannot read as an empty set. */
+  def readCursors(spark: SparkSession, cursorDir: String, keys: Seq[String]): DataFrame = {
+    Jobs.recover(cursorDir)
+    val dir = new java.io.File(cursorDir)
+    if (dir.exists() && dir.list().nonEmpty) spark.read.schema(cursorSchema(keys)).parquet(cursorDir)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], cursorSchema(keys))
+  }
 
   /** One micro-batch of the producer cycle. Visible for tests. */
   def processBatch(
@@ -62,26 +72,24 @@ object ProducerLoop {
       sinkDir: String,
       cursorDir: String
   ): Unit = {
-    val spark = batch.sparkSession
-    val cursors0 = readCursors(spark, cursorDir, keys)
-    val cursors = cursors0.select(
-      (keys.map(k => col(k).cast("string").as(k)) :+ col("last_observed_at")): _*
-    )
+    val cursors = readCursors(batch.sparkSession, cursorDir, keys)
     val keyed = batch.select(
       (batch.columns.map(col) ++ keys.map(k => col(k).cast("string").as(s"__k_$k"))).toIndexedSeq: _*
     )
     val kcols = keys.map(k => s"__k_$k")
+    // cached with its key columns: the emit and the cursor roll-up both
+    // read this one copy, so the chain behind `batch` runs once
     val fresh = WatermarkDedup.filterNewWithInBatch(
       keyed,
       cursors.toDF((kcols :+ "last_observed_at"): _*),
       kcols,
       tsCol,
       arrivalCol
-    )
-    val emitted = fresh.drop(kcols: _*).cache()
+    ).cache()
     try {
       // 1. EMIT first (Kafka envelope shape; micros timestampFormat so
       // the envelope preserves event-time precision) ...
+      val emitted = fresh.drop(kcols: _*)
       emitted
         .select(
           to_json(
@@ -95,19 +103,12 @@ object ProducerLoop {
       // 2. ... THEN advance cursors (commit-after-emit, T3). A crash
       // between 1 and 2 re-emits the batch next run: at-least-once with
       // downstream dedup, exactly the reference's contract.
-      val updates = Rollup
-        .maxTsPerKey(
-          fresh.select((kcols.map(col) :+ col(tsCol)).toIndexedSeq: _*),
-          kcols,
-          tsCol
-        )
-        .toDF((keys :+ "last_observed_at"): _*)
+      val updates = Rollup.maxTsPerKey(fresh, kcols, tsCol).toDF((keys :+ "last_observed_at"): _*)
       val merged = Upsert.greatestMerge(cursors, updates, keys, "last_observed_at")
       val tmp = cursorDir + "__tmp"
       merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      val spark2 = merged.sparkSession
-      spark2.read.parquet(tmp).write.mode(SaveMode.Overwrite).parquet(cursorDir)
-    } finally emitted.unpersist()
+      Jobs.publish(tmp, cursorDir) // rename, not a second write — see the Jobs contract
+    } finally fresh.unpersist()
   }
 
   /** Launch the continuous producer over a streaming source. */

@@ -18,6 +18,9 @@ class JobsSpec extends SparkSpec {
     assert(kept == 2)
     val out = spark.read.parquet(dir).select("k").as[String].collect().sorted.toSeq
     assert(out == Seq("b", "c"))
+    // a cutoff past every row keeps none, and the count says so
+    assert(Jobs.housekeeping(spark, dir, "observed_at", Timestamp.valueOf("2024-02-01 00:00:00")) == 0)
+    assert(spark.read.parquet(dir).count() == 0)
   }
 
   test("catalogRefresh: bootstrap then coalesce-merge update") {

@@ -3,7 +3,11 @@ package graft.streaming
 import java.sql.Timestamp
 import java.nio.file.Files
 import graft.SparkSpec
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming semantics (SURVEY.md §2.9): per-key watermark state across
@@ -105,6 +109,125 @@ class StreamingSpec extends SparkSpec {
     val cur2 = spark.read.parquet(cursors).collect().map(r => (r.getString(0), r.getString(1)) -> r.getTimestamp(2)).toMap
     assert(cur2(("st1", "pm25")) == ts("2024-01-01 13:00:00"))
     assert(cur2(("st2", "o3")) == ts("2024-01-01 10:00:00")) // untouched key survives merge
+  }
+
+  private val producerKeys = Seq("station_id", "pollutant")
+
+  private def cursorMap(dir: String): Map[(String, String), Timestamp] =
+    spark.read.parquet(dir).collect().map(r => (r.getString(0), r.getString(1)) -> r.getTimestamp(2)).toMap
+
+  /** The batch as a parquet scan, so no optimizer rule can fold its rows
+    * on the driver: every evaluation of the chain is a real scan. */
+  private def parquetBatch(dir: String, rows: (String, String, String, Double, Long)*): org.apache.spark.sql.DataFrame = {
+    rows.map(r => (r._1, r._2, ts(r._3), r._4, r._5)).toDF("station_id", "pollutant", "ts", "value", "arrival")
+      .write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive in
+    * order, so once a marker job run afterwards is seen, every start from
+    * `body` has been delivered too. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "graft.test.marker"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties).exists(_.getProperty(marker) != null))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
+      Iterator.continually(starts.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(m => { assert(m != null, "marker job start not seen"); !m }).size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ProducerLoop.readCursors: an existing snapshot is read with its schema supplied, starting no job") {
+    val dir = Files.createTempDirectory("producer_read").toString
+    val cursors = s"$dir/cursors"
+    ProducerLoop.processBatch(
+      parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
+      producerKeys, "ts", "arrival", s"$dir/sink", cursors)
+    assert(jobsDuring(ProducerLoop.readCursors(spark, cursors, producerKeys)) == 0)
+  }
+
+  test("ProducerLoop.processBatch: the batch is computed once for the emit and the cursor roll-up") {
+    val dir = Files.createTempDirectory("producer_once").toString
+    val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
+    ProducerLoop.processBatch(
+      parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
+      producerKeys, "ts", "arrival", sink, cursors)
+
+    // every evaluation of the batch's chain bumps the accumulator once per
+    // row: emit and cursor roll-up must share one evaluation
+    val evals = spark.sparkContext.longAccumulator("batch_evals")
+    val bump = udf { (v: Double) => evals.add(1); v }.asNondeterministic()
+    val b2 = parquetBatch(s"$dir/b2",
+      ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 2L), // replay → watermark drop
+      ("st1", "pm25", "2024-01-01 13:00:00", 2.0, 3L),
+      ("st1", "pm25", "2024-01-01 13:00:00", 9.0, 4L), // in-batch dup → dropped
+      ("st2", "o3", "2024-01-01 10:00:00", 3.0, 5L))
+    ProducerLoop.processBatch(b2.withColumn("value", bump(col("value"))),
+      producerKeys, "ts", "arrival", sink, cursors)
+    assert(evals.value == 4L, s"batch evaluated ${evals.value / 4.0} times")
+    assert(spark.read.parquet(sink).count() == 3)
+    assert(cursorMap(cursors) == Map(
+      ("st1", "pm25") -> ts("2024-01-01 13:00:00"), ("st2", "o3") -> ts("2024-01-01 10:00:00")))
+  }
+
+  test("ProducerLoop.processBatch: a failed cursor write after the emit keeps the cursors; a rerun re-emits that batch") {
+    val dir = Files.createTempDirectory("producer_fault").toString
+    val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
+    ProducerLoop.processBatch(
+      parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
+      producerKeys, "ts", "arrival", sink, cursors)
+    val cursors0 = cursorMap(cursors)
+    val b2 = parquetBatch(s"$dir/b2",
+      ("st1", "pm25", "2024-01-01 13:00:00", 2.0, 2L),
+      ("st2", "o3", "2024-01-01 10:00:00", 3.0, 3L))
+
+    def sinkValues() = spark.read.parquet(sink).select("value").as[String].collect().toSeq
+    val before = sinkValues()
+    val conf = "spark.sql.sources.commitProtocolClass"
+    spark.conf.set(conf, classOf[FailingCommitProtocol].getName)
+    FailingCommitProtocol.failPath = Some(new java.io.File(cursors + "__tmp").getAbsolutePath)
+    val thrown =
+      try intercept[Exception](ProducerLoop.processBatch(b2, producerKeys, "ts", "arrival", sink, cursors))
+      finally { FailingCommitProtocol.failPath = None; spark.conf.unset(conf) }
+    assert(Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected fault")), thrown.toString)
+    // the emit landed, the cursor commit did not
+    val afterFault = sinkValues()
+    val batchRows = afterFault.diff(before)
+    assert(batchRows.size == 2)
+    assert(cursorMap(cursors) == cursors0)
+
+    // the rerun re-emits exactly that batch, then commits it
+    ProducerLoop.processBatch(b2, producerKeys, "ts", "arrival", sink, cursors)
+    assert(sinkValues().diff(afterFault).sorted == batchRows.sorted)
+    assert(cursorMap(cursors) == Map(
+      ("st1", "pm25") -> ts("2024-01-01 13:00:00"), ("st2", "o3") -> ts("2024-01-01 10:00:00")))
+  }
+
+  test("ProducerLoop.processBatch: cursors stranded under __old are restored before the watermark") {
+    val dir = Files.createTempDirectory("producer_crash").toString
+    val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
+    val b1 = parquetBatch(s"$dir/b1",
+      ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L),
+      ("st2", "o3", "2024-01-01 10:00:00", 2.0, 2L))
+    ProducerLoop.processBatch(b1, producerKeys, "ts", "arrival", sink, cursors)
+    val cursors0 = cursorMap(cursors)
+
+    // the crash window between publish's two renames: the snapshot was
+    // staged aside, the new one never renamed in — __old is the only copy
+    assert(new java.io.File(cursors).renameTo(new java.io.File(cursors + "__old")))
+    ProducerLoop.processBatch(b1, producerKeys, "ts", "arrival", sink, cursors)
+    assert(spark.read.parquet(sink).count() == 2) // the replay emitted 0 rows
+    assert(cursorMap(cursors) == cursors0)
+    assert(!new java.io.File(cursors + "__old").exists())
   }
 
   test("custom sketch aggregates run in streaming aggregations (hll_distinct)") {
@@ -230,4 +353,19 @@ class StreamingSpec extends SparkSpec {
       assert(v == Seq("value"))
     } finally q.stop()
   }
+}
+
+/** Commit protocol that fails the job set-up of a write into `failPath`,
+  * standing in for a crash of the cursor commit after the emit landed. */
+class FailingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def setupJob(jobContext: JobContext): Unit = {
+    if (FailingCommitProtocol.failPath.exists(path.endsWith))
+      throw new java.io.IOException(s"injected fault: commit into $path blocked")
+    super.setupJob(jobContext)
+  }
+}
+
+object FailingCommitProtocol {
+  @volatile var failPath: Option[String] = None
 }
