@@ -11,6 +11,12 @@ import graft.ops._
   *  - aliases in the Spark plan and the oracle SQL are identical;
   *  - doubles aggregated via decimal(38,6) for order-independence;
   *  - stable trailing ORDER BY on a unique key.
+  *
+  * The traits initialize their vals in the order mixed in below. The
+  * sections of q174 and q184 (QueriesAnalytics) and q277 (QueriesExact)
+  * must stay in their files: they define `BlockGraphSql` and
+  * `DirectedBlockGraphSql`, which oracle vals initialized earlier
+  * interpolate. Moving a section to a later trait nulls those oracles.
   */
 object Queries extends QueriesCore
   with QueriesCuration

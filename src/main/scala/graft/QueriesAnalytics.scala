@@ -52,8 +52,7 @@ private[graft] trait QueriesAnalytics {
       ),
       "pert"
     )
-    val both = orig.unionByName(pert).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    both.count() // eager: self and cross pairings share this cache
+    val both = Place.materialized(orig.unionByName(pert)) // eager: self and cross pairings share this cache
     def ham(
         lo1: org.apache.spark.sql.Column,
         hi1: org.apache.spark.sql.Column,
@@ -79,8 +78,7 @@ private[graft] trait QueriesAnalytics {
       )
     val allPairs = self
       .unionByName(crossP)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    allPairs.count() // eager: bucket histogram + separation riders share this cache
+      .transform(Place.materialized) // eager: bucket histogram + separation riders share this cache
     val sm = allPairs.agg(
       max(when(col("pair_kind") === "self", col("hamming"))).as("max_self_hamming"),
       min(when(col("pair_kind") === "cross", col("hamming"))).as("min_cross_hamming")
@@ -189,8 +187,7 @@ private[graft] trait QueriesAnalytics {
         pmod(col("doc_id"), lit(8L)).as("mod8"),
         pmod(col("doc_id"), lit(9L)).as("mod9")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // eager: riders + two occupancy aggregates share this cache
+      .transform(Place.materialized) // eager: riders + two occupancy aggregates share this cache
     val riders = assigned.agg(
       count(lit(1)).as("n_docs"),
       sum((col("hrw8") =!= col("hrw9")).cast("long")).as("hrw_moved"),
@@ -274,8 +271,7 @@ private[graft] trait QueriesAnalytics {
         Rendezvous.assign(col("doc_id"), 8).as("old_shard"),
         Rendezvous.assign(col("doc_id"), 9).as("new_shard")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // eager: five aggregates share this cache
+      .transform(Place.materialized) // eager: five aggregates share this cache
     val P = ExportPlan.DigestModulus
     def digestAgg(df: DataFrame, key: org.apache.spark.sql.Column, suffix: String): DataFrame =
       df.groupBy(key.as("shard"))
@@ -473,31 +469,22 @@ private[graft] trait QueriesAnalytics {
     * counts the overlap of the two policies.
     */
   def q153SourceFairFilter(s: SparkSession, dir: String): DataFrame = {
-    // r15 note: input spread tried, measured slower (2.1 -> 3.8 s) — many
-    // small jobs (two rank passes); see q35
     val scored = TextStats
       .withQuality(Tables.documents(s, dir), "text")
       .select(col("doc_id"), col("source"), col("quality_score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager (r15): each rankWithin pass reads its input from THREE
-    // subtrees (span aggregate, the binned window, the offset
-    // histogram), and the second rank's input nests the first — uncached,
-    // the tokenize+quality map re-ran per subtree (traced as ~10
-    // sequential 0.14 s single-task scans; the readers of a lazy persist
-    // race and serialize, the r12 finding)
-    scored.count()
+      // eager (r15): each rankWithin pass reads its input from three subtrees,
+      // and the lazy form re-ran the tokenize+quality map as ~10 0.14 s scans
+      .transform(Place.materialized)
     val perSrc = Rank
       .rankWithin(
         scored, Seq("source"), negate(col("quality_score")), col("doc_id"), "rs", bins = 64)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    perSrc.count()
+      .transform(Place.materialized)
     val global = Rank
       .rankWithin(
         perSrc.withColumn("__g", lit(1)),
         Seq("__g"), negate(col("quality_score")), col("doc_id"), "rg", bins = 64)
       .drop("__g")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    global.count() // eager: sizes, total and the census all read it
+      .transform(Place.materialized) // eager: sizes, total and the census all read it
     val sizes = global.groupBy(col("source")).agg(count(lit(1)).as("ns"))
     val total = global.agg(count(lit(1)).as("nt"))
     global
@@ -1643,12 +1630,8 @@ private[graft] trait QueriesAnalytics {
     val base = Tables
       .customer(s, dir)
       .select(col("c_custkey").as("k"))
-      // spread the per-row synthesis (two md5+conv, lpad, regex) before
-      // deriving: the customer scan is 1-2 input partitions, and both
-      // source systems re-run this derivation on it (r15: measured as a
-      // 2-task 1.8 s stage). Explicit count — AQE would coalesce a bare
-      // keyed repartition of a sub-MB frame right back to one partition.
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("k"))
+      // spread: the per-row synthesis both sources re-run was a 2-task 1.8 s stage (r15)
+      .transform(Place.spread(_, col("k")))
       .withColumn(
         "fi",
         expr("cast(conv(substring(md5(concat('fn:', cast(k as string))),1,1),16,10) as int)"))
@@ -1720,7 +1703,7 @@ private[graft] trait QueriesAnalytics {
            concat(col("b_last"), substring(col("b_digits"), 1, 2)))
         )
       )
-      .persist()
+      .transform(Place.persisted)
     // bounded_levenshtein(a,b,k) <= k ⟺ levenshtein(a,b) <= k
     // (BoundedLevenshteinSpec pins it) — the banded DP scores the
     // candidate pairs 3.7x faster than the full-matrix builtin
@@ -1732,7 +1715,7 @@ private[graft] trait QueriesAnalytics {
           "concat(b_first, ' ', b_last), 2) <= 2") &&
           expr("bounded_levenshtein(a_digits, b_digits, 1) <= 1")
       )
-      .persist()
+      .transform(Place.persisted)
     val cl = graft.ops.EntityRes.clusters(matches, "a_id", "b_id")
     val clStats = cl
       .select(col("component"), col("cluster_size"))
@@ -2800,10 +2783,10 @@ private[graft] trait QueriesAnalytics {
     * instead of silently passing.
     */
   def q184KCore(s: SparkSession, dir: String): DataFrame = {
-    val edges = blockGraph(s, dir).persist()
+    val edges = Place.persisted(blockGraph(s, dir))
     val allBuckets = edges.select(expr("u div 500").as("bucket")).distinct()
     val perK = Seq(3, 4).map { k =>
-      val ce = graft.ops.KCore.coreEdges(edges, k).persist()
+      val ce = Place.persisted(graft.ops.KCore.coreEdges(edges, k))
       val nodes = ce
         .select(col("u").as("id"))
         .unionByName(ce.select(col("v").as("id")))

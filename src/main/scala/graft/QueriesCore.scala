@@ -857,8 +857,7 @@ private[graft] trait QueriesCore {
       // second select so simhash reads the materialized toks attribute —
       // one tokenization per row, and both columns provably share it
       .select(col("doc_id"), col("toks"), TextDedup.simhash64(col("toks")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    slice.count() // eager: both cross-join sides race to fill this cache
+      .transform(Place.materialized) // eager: both cross-join sides race to fill this cache
     val a = slice.select(col("doc_id").as("id_a"), col("toks").as("toks_a"), col("sh").as("sh_a"))
     val b = slice.select(col("doc_id").as("id_b"), col("toks").as("toks_b"), col("sh").as("sh_b"))
     val audit = a
@@ -939,11 +938,9 @@ private[graft] trait QueriesCore {
     val (nbits, tables) =
       Similarity.lshParams(e.count(), targetCosine = 0.35, probeHamming = 1)
     Similarity
-      // r15: spread the sketch pass off the single-partition embeddings
-      // scan (tables×nbits×64 mults per vector ran as one task — the
-      // q107 mechanism; explicit count or AQE coalesces it back)
+      // spread: the sketch pass (tables×nbits×64 mults per vector) ran as one task (r15)
       .nearDupsEmbedding(
-        e.repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("vec_id")),
+        Place.spread(e, col("vec_id")),
         threshold = 0.35, nbits = nbits, tables = tables, probes = 1)
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -1284,7 +1281,7 @@ private[graft] trait QueriesCore {
     val feats = Multimodal
       .decodeImage(media)
       .select(col("media_id").as("vec_id"), col("features").as("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Place.persisted)
     val n = feats.count() // eager (exact + LSH consumers share this cache) AND the corpus size
     val (nbits, tables) = Similarity.lshParams(n, targetCosine = 0.9, probeHamming = 1)
     val a = feats.select(col("vec_id").as("id_a"), col("embedding").as("va"))
@@ -1602,8 +1599,7 @@ private[graft] trait QueriesCore {
         count(lit(1)).as("n_docs"),
         sum(size(TextStats.tokens(col("text"))).cast("long")).as("n_tokens")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bySource.count() // eager: both normalizer consumers share this cache
+      .transform(Place.materialized) // eager: both normalizer consumers share this cache
     val total = bySource.agg(sum(col("n_tokens")).as("total_tokens"))
     val powed = bySource
       .crossJoin(broadcast(total))
@@ -2231,17 +2227,13 @@ private[graft] trait QueriesCore {
     * irreproducible even run to run.
     */
   def q35Ivf(s: SparkSession, dir: String): DataFrame = {
-    // r15 note: an input spread (the q91 mechanism) was tried and measured
-    // SLOWER (2.1 -> 4.0 s settled): this pipeline is many small jobs, and
-    // a 32-block frame makes each of them pay full-width task scheduling
     val e = Tables.embeddings(s, dir)
     val cents = Ivf.fitCentroids(e, k = 16, iters = 2)
     val queries = e.filter(col("vec_id") < 10)
     val ivf = Ivf
       .topK(e, queries, cents, k = 5, nprobe = 2)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ivf.count() // eager: result + audit consumers share this cache
+      .transform(Place.materialized) // eager: result + audit consumers share this cache
     val exact = Similarity
       .bruteTopK(e, queries, k = 5)
       .select(col("query_id"), col("neighbor_id"))
@@ -2403,8 +2395,7 @@ private[graft] trait QueriesCore {
     val docs = Tables.documents(s, dir)
     val assign = TextDedup
       .dedupAssignments(docs, "doc_id", "text")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assign.count() // eager: audit consumers share this cache
+      .transform(Place.materialized) // eager: audit consumers share this cache
     val repOrder = assign.agg(
       coalesce(sum(when(col("rep_id") > col("doc_id"), 1).otherwise(0)), lit(0))
         .as("audit_rep_gt_id")
@@ -3112,8 +3103,7 @@ private[graft] trait QueriesCore {
     val d = Tables
       .documents(s, dir)
       .select(col("source"), col("doc_id"), TextStats.fingerprint(col("text")).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    d.count() // eager: three consumers share this cache
+      .transform(Place.materialized) // eager: three consumers share this cache
     val perSrc = d
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), countDistinct(col("fp")).as("n_distinct"))
@@ -3259,8 +3249,7 @@ private[graft] trait QueriesCore {
         col("source"),
         size(TextStats.tokens(col("text"))).cast("long").as("n_toks")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.count() // eager: the per-source agg and the final join share this
+      .transform(Place.materialized) // eager: the per-source agg and the final join share this
     val bySource = docs
       .groupBy(col("source"))
       .agg(sum(col("n_toks")).as("n_tokens"))
@@ -3356,8 +3345,7 @@ private[graft] trait QueriesCore {
     val d = Tables
       .documents(s, dir)
       .select(col("doc_id"), fp.as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    d.count() // eager: the Bloom build, the anti join, and both bypass
+      .transform(Place.materialized) // eager: the Bloom build, the anti join, and both bypass
     // branches all read the fingerprint frame — one tokenize+md5 pass,
     // not four
     val history = d.filter(col("doc_id") >= 100).select(col("fp").as("hfp"))
@@ -3666,8 +3654,6 @@ private[graft] trait QueriesCore {
     */
   def q78SemanticDedup(s: SparkSession, dir: String): DataFrame = {
     val tau = 0.35
-    // r15 note: input spread tried, measured slower (2.5 -> 4.3 s) — many
-    // small jobs; see q35
     val e = Tables.embeddings(s, dir)
     // 2 Lloyd rounds (round 5; was 4): the quantizer only has to bound
     // the cell-confined pair work and hold co-cluster recall — both
@@ -3677,8 +3663,7 @@ private[graft] trait QueriesCore {
     val cents = Ivf.fitCentroids(e, k = 8, iters = 2)
     val assigned = Ivf
       .assignTopM(e, cents, m = 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // eager: dedup + three audit consumers share this cache
+      .transform(Place.materialized) // eager: dedup + three audit consumers share this cache
     // hotCellThreshold stays at the 1<<16 default: forcing fixture-sized
     // cells hot (threshold 512) was measured SLOWER here (+0.4 s — the
     // ×16 build-side replication costs more than the extra parallelism
@@ -3686,8 +3671,7 @@ private[graft] trait QueriesCore {
     // parallelism knob.
     val deduped = SemanticDedup
       .assignReps(assigned, tau)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    deduped.count()
+      .transform(Place.materialized)
     val keptViol = SemanticDedup
       .keptViolations(assigned, deduped, tau)
       .select(col("violations").as("audit_kept_violations"))
@@ -3813,16 +3797,14 @@ private[graft] trait QueriesCore {
       .documents(s, dir)
       .groupBy(col("source"))
       .agg(sum(size(TextStats.tokens(col("text"))).cast("long")).as("n_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bySource.count() // eager: normalizer consumers share this cache
+      .transform(Place.materialized) // eager: normalizer consumers share this cache
     val total = bySource.agg(sum(col("n_tokens")).as("total_tokens"))
     val powed = bySource
       .crossJoin(broadcast(total))
       .withColumn("alpha", explode(array(Seq(0.3, 0.5, 0.7, 1.0).map(lit): _*)))
       .withColumn("share", col("n_tokens").cast("double") / col("total_tokens").cast("double"))
       .withColumn("powed", pow(col("share"), col("alpha")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    powed.count()
+      .transform(Place.materialized)
     // powed carries total_tokens as a column, so nothing downstream
     // reads bySource again — release at the barrier that supersedes it
     // (r15, the SparseSim postingsReleasable discipline)
@@ -4007,8 +3989,7 @@ private[graft] trait QueriesCore {
         sum(when(col("label"), 1L).otherwise(0L)).as("n_pos"),
         sum(when(!col("label"), 1L).otherwise(0L)).as("n_neg")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    dist.count() // eager: both sides of the pair join share this cache
+      .transform(Place.materialized) // eager: both sides of the pair join share this cache
     val totals = dist
       .groupBy(col("signal"))
       .agg(sum(col("n_pos")).as("n_pos"), sum(col("n_neg")).as("n_neg"))
@@ -4091,8 +4072,7 @@ private[graft] trait QueriesCore {
       .documents(s, dir)
       .select(col("source"), TextStats.tokenSetFingerprint(col("text")).as("fp"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fps.count() // eager: both join sides share this cache
+      .transform(Place.materialized) // eager: both join sides share this cache
     val a = fps.select(col("source").as("src_a"), col("fp"))
     val b = fps.select(col("source").as("src_b"), col("fp"))
     a.join(b, Seq("fp"))
@@ -4127,8 +4107,7 @@ private[graft] trait QueriesCore {
     val scored = TextStats
       .withQuality(Tables.documents(s, dir), "text")
       .select(col("doc_id"), col("quality_score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scored.count() // eager: cuts + binning consumers share this cache
+      .transform(Place.materialized) // eager: cuts + binning consumers share this cache
     val cuts = scored.agg(
       expr(
         "percentile(quality_score, array(0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9))"
@@ -4195,8 +4174,7 @@ private[graft] trait QueriesCore {
       .select(col("doc_id").as("id"), col("quality_score"))
     val joined = comps
       .join(quality, Seq("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    joined.count() // eager: best-score + canonical consumers share this cache
+      .transform(Place.materialized) // eager: best-score + canonical consumers share this cache
     val best = joined
       .groupBy(col("component"))
       .agg(max(col("quality_score")).as("best_score"))
@@ -4277,8 +4255,7 @@ private[graft] trait QueriesCore {
         TextStats.tokenSetFingerprint(col("text")).as("fp"),
         when(h < 800000, "train").when(h < 900000, "val").otherwise("test").as("split")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    d.count() // eager: profile + leakage consumers share this cache
+      .transform(Place.materialized) // eager: profile + leakage consumers share this cache
     val leaky = d
       .groupBy(col("fp"))
       .agg(countDistinct(col("split")).as("n_splits"))
@@ -4381,14 +4358,12 @@ private[graft] trait QueriesCore {
     val base = Tables
       .documents(s, dir)
       .select(col("doc_id"), toksX.as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // eager: gram, token-position, and output consumers share it
+      .transform(Place.materialized) // eager: gram, token-position, and output consumers share it
     val grams = base
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"), posexplode(TextStats.ngrams(col("toks"), n)))
       .select(col("doc_id"), col("pos"), col("col").as("gram"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grams.count() // eager: count + join consumers share this cache
+      .transform(Place.materialized) // eager: count + join consumers share this cache
     val counts = grams.groupBy(col("gram")).agg(count(lit(1)).as("n_total"))
     val covered = grams
       .join(counts.filter(col("n_total") >= 2), Seq("gram"))

@@ -34,8 +34,7 @@ private[graft] trait QueriesCuration {
         "sq",
         aggregate(col("ed"), lit(0.0), (acc, x) => acc + x * x)
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ed.count() // eager: both sufficient-stat consumers share this cache
+      .transform(Place.materialized) // eager: both sufficient-stat consumers share this cache
     val norms = ed
       .groupBy(col("label"))
       .agg(
@@ -126,8 +125,7 @@ private[graft] trait QueriesCuration {
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
       .withColumn("file_z", floor(z / lit(zWidth)))
       .withColumn("file_lin", floor((col("l_orderkey") - lit(oLo)) / lit(linWidth)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // eager: both layout aggregates share this cache
+      .transform(Place.materialized) // eager: both layout aggregates share this cache
     def scanFrac(fileCol: String): DataFrame = base
       .groupBy(col(fileCol))
       .agg(
@@ -219,8 +217,7 @@ private[graft] trait QueriesCuration {
       .agg(count(lit(1)).as("size_rows"))
     val planned = Layout
       .compactionPlan(files, Seq("part"), "file_day", "size_rows", target)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    planned.count() // eager: manifest + census consumers share this cache
+      .transform(Place.materialized) // eager: manifest + census consumers share this cache
     val census = planned
       .agg(
         sum(when(col("size_rows") < target, 1L).otherwise(0L)).as("small_files_before"),
@@ -278,15 +275,11 @@ private[graft] trait QueriesCuration {
     */
   def q91HardNegatives(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    // r15: the corpus scans as ONE partition (single parquet row group),
-    // which streamed the whole n² cosine pass through one task (measured
-    // achieved-parallelism ≈ 1 at sf0.1). Hash-repartitioning the anchor
-    // side spreads the nested-loop scoring across the shuffle partitions
-    // AND pre-clusters by the aggregate key, so the per-anchor argmax
-    // needs no second exchange. Per-pair values are partitioning-blind.
+    // spread: the n² cosine pass ran as one task at sf0.1 (r15); keyed on
+    // the anchor, it also pre-clusters the per-anchor argmax (no 2nd exchange)
     val a = e
       .select(col("vec_id").as("anchor"), col("embedding").as("va"), col("label").as("la"))
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("anchor"))
+      .transform(Place.spread(_, col("anchor")))
     val b = e.select(col("vec_id").as("other"), col("embedding").as("vb"), col("label").as("lb"))
     a.join(b, col("anchor") =!= col("other"))
       .select(
@@ -513,10 +506,7 @@ private[graft] trait QueriesCuration {
         col("embedding"), // raw floats for the codegen'd exact scorer
         Pq.normalize(col("embedding")).as("vec")
       )
-      // r15 note: input spread tried, measured slower (2.1 -> 3.3 s) —
-      // many small jobs; see q35
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count() // eager: fit + encode + exact baseline share this cache
+      .transform(Place.materialized) // eager: fit + encode + exact baseline share this cache
     val dim = 64
     // codebooks fit on a quarter SAMPLE — the production shape (the
     // fit never needs the full corpus; only encode does), and the
@@ -526,8 +516,7 @@ private[graft] trait QueriesCuration {
     val queries = e.filter(col("vec_id") < nQ)
     val pq = Pq
       .adcTopK(queries, encoded, codebooks, shortlist)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pq.count() // eager: recall + rerank + score-error consumers share this cache
+      .transform(Place.materialized) // eager: recall + rerank + score-error consumers share this cache
     // exact baseline: native codegen'd cosine on the raw floats — the
     // same ranking as normalized dot (and the same value), without the
     // interpreted HOF fold in the hot 100k-pair loop
@@ -556,8 +545,7 @@ private[graft] trait QueriesCuration {
       .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("nemb")), Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
       .withColumn("rscore", Similarity.cosine(col("qemb"), col("nemb")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scoredShortlist.count() // eager: rerank + score-error consumers share this cache
+      .transform(Place.materialized) // eager: rerank + score-error consumers share this cache
     val reranked = scoredShortlist
       .select(col("query_id"), col("neighbor_id"), col("rscore"))
       .withColumn("rrank", row_number().over(wr))
@@ -888,14 +876,8 @@ private[graft] trait QueriesCuration {
     * end-to-end.
     */
   def q112SparseAllPairs(s: SparkSession, dir: String): DataFrame = {
-    // explicit-width spread of the corpus before the postings build
-    // (r15, the q114-probe mechanism): the documents scan is one
-    // partition, so the tokenize + 3-gram explode + partial tf
-    // aggregate ran as ONE 0.54 s task before the first exchange
-    // (traced). Call-site spread, not in the op: at real scale the scan
-    // arrives wide and the raw-text shuffle would be pure cost.
-    val docs = Tables.documents(s, dir)
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
+    // spread: tokenize + 3-gram explode + partial tf ran as one 0.54 s task (r15)
+    val docs = Place.spread(Tables.documents(s, dir), col("doc_id"))
     val (post, releaseTf) = SparseSim.postingsReleasable(
       docs, "doc_id", "text", n = 3,
       dfCap = lit(64.0)
@@ -1005,17 +987,11 @@ private[graft] trait QueriesCuration {
     val idx = SparseSim.coverageIndex(
       docs.filter(col("doc_id") % 10 === 7), "doc_id", "text", n = 3,
       dfCap = lit(64.0)
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    idx.count()
+    ).transform(Place.materialized)
     val probes = SparseSim
       .distinctFeatures(
-        // explicit-width spread of the probe corpus (r15, the q91/q107
-        // mechanism): 90% of the documents flow through tokenize +
-        // 3-gram explode as ONE scan partition otherwise — the heaviest
-        // map of the query serialized on one task. Row-local derivation;
-        // partitioning cannot change the aggregate downstream.
-        docs.filter(col("doc_id") % 10 =!= 7)
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id")),
+        // spread: the probe side's tokenize + explode, the heaviest map here, ran as one task (r15)
+        Place.spread(docs.filter(col("doc_id") % 10 =!= 7), col("doc_id")),
         "doc_id", "text", n = 3)
       .withColumnRenamed("doc_id", "probe_id")
     SparseSim
@@ -1160,14 +1136,7 @@ private[graft] trait QueriesCuration {
     */
   def q117CcnetBuckets(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    // r15 note: input spread tried, measured slower (1.8 -> 2.8 s) — many
-    // small jobs; see q35
     val scored = LmScore.scoreHeldOut(docs, "doc_id", "text", refPred = col("doc_id") % 10 === 0)
-    // r15 note: a persist+count of withLang (the q153/Bm25 rankWithin
-    // discipline) was tried and measured SLOWER here (2.04 vs 1.73 s
-    // same-window A/B): the racing subtree recomputes of the LM chain
-    // run CONCURRENTLY and hide behind each other on idle cores, while
-    // the materialization serializes them behind a barrier. Kept lazy.
     val withLang = scored.join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
     val ranked = Rank.rankWithin(withLang, Seq("lang"), col("avg_nll"), col("doc_id"), "rn", bins = 64)
     val sizes = ranked.groupBy(col("lang")).agg(count(lit(1)).as("nl"))
@@ -1298,8 +1267,6 @@ private[graft] trait QueriesCuration {
     */
   def q120CurationPipeline(s: SparkSession, dir: String): DataFrame = {
     val budget = 2048L
-    // r15 note: input spread tried, measured slower (1.9 -> 3.6 s) — many
-    // small jobs; see q35
     val docs = Tables.documents(s, dir)
     // 1. quality gate (corpus side only — the eval slice is not curated)
     val scored = TextStats
@@ -1329,8 +1296,7 @@ private[graft] trait QueriesCuration {
     // recomputed per subtree.
     val curated = deduped
       .join(contaminated, Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    curated.count()
+      .transform(Place.materialized)
     // 4.+5. shard plan + manifest + digests over the curated survivors
     val assigned = ExportPlan.assignShards(
       curated, "doc_id",
@@ -1339,8 +1305,7 @@ private[graft] trait QueriesCuration {
     )
       // assigned is read by shardManifest AND shardDigests below; one
       // materialization instead of two rank-pipeline replays
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count()
+      .transform(Place.materialized)
     val digests = curated.select(
       col("doc_id").as("id"),
       TextStats.contentDigest60(col("text")).as("digest")
@@ -1859,8 +1824,7 @@ private[graft] trait QueriesCuration {
         .repartition(col("id_a")))
     val assigned = Splits
       .componentSplit(slice, pairs, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // eager: audit + profile consumers share this cache
+      .transform(Place.materialized) // eager: audit + profile consumers share this cache
     val leaky = pairs
       .join(assigned.select(col("doc_id").as("id_a"), col("split").as("split_a")), Seq("id_a"))
       .join(assigned.select(col("doc_id").as("id_b"), col("split").as("split_b")), Seq("id_b"))
@@ -1939,8 +1903,7 @@ private[graft] trait QueriesCuration {
   def q128TrainClassifier(s: SparkSession, dir: String): DataFrame = {
     val feats = Classifier
       .features(Tables.documents(s, dir), "text", "lang")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    feats.count() // eager: 6 GD iterations + 2 Brier sums + scoring share this cache
+      .transform(Place.materialized) // eager: 6 GD iterations + 2 Brier sums + scoring share this cache
     val w = Classifier.fit(feats, iters = 6)
     val brier0 = Classifier.brierQSum(feats, Array(0.0, 0.0, 0.0, 0.0))
     val brierT = Classifier.brierQSum(feats, w)
@@ -2051,8 +2014,7 @@ private[graft] trait QueriesCuration {
       .filter(col("d2_orig") > 0.0)
       .withColumn("ratio", col("d2_proj") / col("d2_orig"))
       .withColumn("within", col("ratio") >= 0.25 && col("ratio") <= 2.5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // eager: summary + row output share this cache
+      .transform(Place.materialized) // eager: summary + row output share this cache
     val summary = pairs.agg(
       count(lit(1)).as("n_pairs"),
       sum(col("within").cast("long")).as("n_within")
@@ -2145,8 +2107,7 @@ private[graft] trait QueriesCuration {
         Tables.embeddings(s, dir).filter(col("vec_id") < 200),
         "embedding", outDim = 16, inDim = 64)
       .select(col("vec_id"), col("embedding"), col("proj"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pr.count() // eager: query side + corpus side share this cache
+      .transform(Place.materialized) // eager: query side + corpus side share this cache
     val q = pr
       .filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("proj").as("qp"))
@@ -2155,8 +2116,7 @@ private[graft] trait QueriesCuration {
       .filter(col("id") =!= col("qid"))
       .withColumn("d2o", RandomProjection.sqDistExpr(col("qv"), col("cv")))
       .withColumn("d2p", RandomProjection.sqDistExpr(col("qp"), col("cp")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // eager: two rankings share this cache
+      .transform(Place.materialized) // eager: two rankings share this cache
     val we = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("d2o").asc, col("id").asc)
     val wp = org.apache.spark.sql.expressions.Window
@@ -2168,8 +2128,7 @@ private[graft] trait QueriesCuration {
       .select(col("qid"))
       .join(hits, Seq("qid"), "left")
       .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    perQ.count() // eager: summary + row output share this cache
+      .transform(Place.materialized) // eager: summary + row output share this cache
     // the materialized perQ supersedes both upstream caches: the final
     // frame reads perQ only (r15, the postingsReleasable discipline)
     pr.unpersist()
@@ -2268,8 +2227,7 @@ private[graft] trait QueriesCuration {
     val toks = Tables
       .documents(s, dir)
       .select(explode(TextStats.tokens(col("text"))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    toks.count() // eager: sketch build + exact counts share this cache
+      .transform(Place.materialized) // eager: sketch build + exact counts share this cache
     val matrix: Seq[Seq[Long]] = toks
       .agg(
         GraftShim
@@ -2557,8 +2515,7 @@ private[graft] trait QueriesCuration {
     val pred = TextStats
       .withLangId(Tables.documents(s, dir), "text")
       .select(col("lang"), col("lang_pred"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pred.count() // eager: cell counts + per-lang totals share this cache
+      .transform(Place.materialized) // eager: cell counts + per-lang totals share this cache
     val cells = pred.groupBy(col("lang"), col("lang_pred")).agg(count(lit(1)).as("n"))
     val totals = pred.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
     cells
@@ -2626,12 +2583,10 @@ private[graft] trait QueriesCuration {
         size(TextStats.tokens(col("text"))).cast("long").as("wt"),
         TextStats.contentDigest60(col("text")).as("digest")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.count() // eager: assignment + digest sides share this cache
+      .transform(Place.materialized) // eager: assignment + digest sides share this cache
     val assigned = ExportPlan
       .assignShards(docs, "doc_id", col("wt"), budget = 2048L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // eager: before/delta/after digest passes share this cache
+      .transform(Place.materialized) // eager: before/delta/after digest passes share this cache
     val digests = docs.select(col("doc_id").as("id"), col("digest"))
     val before = ExportPlan
       .shardDigests(assigned, digests)
@@ -2750,8 +2705,7 @@ private[graft] trait QueriesCuration {
     val ev = Tables
       .events(s, dir)
       .select(col("user_id"), expr("ts_ns div 1000000000").as("sec"), col("value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ev.count() // eager: corpus-start min + per-user stats share this cache
+      .transform(Place.materialized) // eager: corpus-start min + per-user stats share this cache
     val mn = ev.agg(min(col("sec")).as("min_sec"))
     val d = ev
       .crossJoin(broadcast(mn))
@@ -2844,8 +2798,7 @@ private[graft] trait QueriesCuration {
     val toks = TextStats.tokens(col("text"))
     val uni = docs
       .select(explode(toks).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    uni.count() // eager: unigram counts + corpus total share this cache
+      .transform(Place.materialized) // eager: unigram counts + corpus total share this cache
     val uc = uni.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val m = uni.agg(count(lit(1)).as("m"))
     val n1 = size(toks) - 1
@@ -2860,8 +2813,7 @@ private[graft] trait QueriesCuration {
         ).as("p")
       )
       .select(col("p.wa").as("wa"), col("p.wb").as("wb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // eager: pair counts + pair total share this cache
+      .transform(Place.materialized) // eager: pair counts + pair total share this cache
     val pc = pairs.groupBy(col("wa"), col("wb")).agg(count(lit(1)).as("c_ab"))
     val n = pairs.agg(count(lit(1)).as("n"))
     val lift = (col("c_ab") * col("m") * col("m")).cast("double") /
@@ -2934,8 +2886,7 @@ private[graft] trait QueriesCuration {
     val feats = Classifier
       .features(Tables.documents(s, dir), "text", "lang")
       .withColumn("fold", TextStats.portableHash(col("doc_id")) % folds)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    feats.count() // eager: 3 folds × (fit + eval) share this cache
+      .transform(Place.materialized) // eager: 3 folds × (fit + eval) share this cache
     val rows = (0 until folds).map { f =>
       val train = feats.filter(col("fold") =!= f)
       val test = feats.filter(col("fold") === f)
@@ -3097,8 +3048,7 @@ private[graft] trait QueriesCuration {
     val ev = Tables
       .events(s, dir)
       .select(col("event_type"), col("value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ev.count() // eager: median + MAD + census consumers share this cache
+      .transform(Place.materialized) // eager: median + MAD + census consumers share this cache
     val med = rankSel(ev, "value", "med")
     val devs = ev
       .join(broadcast(med), Seq("event_type"))
@@ -3224,13 +3174,9 @@ private[graft] trait QueriesCuration {
         col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v")
       )
-      // r15: the corpus scans as one partition; without this both the
-      // centroid fit's explode and the 11-dots-per-row assignment pass
-      // run on a single task (measured parallelism ≈ 1). Decimal sums
-      // and per-row argmax are partitioning-blind.
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count() // eager: centroid fit + assignment share this cache
+      // spread: the centroid fit and the assignment pass ran at parallelism ≈ 1 (r15)
+      .transform(Place.spread(_, col("vec_id")))
+      .transform(Place.materialized) // eager: centroid fit + assignment share this cache
     val cents = e
       .select(col("label"), posexplode(col("v")))
       .groupBy(col("label"), col("pos"))
@@ -3272,8 +3218,7 @@ private[graft] trait QueriesCuration {
         col("label"),
         (-array_max(scored).getField("neg_lbl")).cast("int").as("assigned")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count() // eager: confusion + accuracy share this cache
+      .transform(Place.materialized) // eager: confusion + accuracy share this cache
     val acc = assigned
       .agg((sum(when(col("label") === col("assigned"), 1L).otherwise(0L)) /
         count(lit(1)).cast("double")).as("a"))
@@ -3347,8 +3292,7 @@ private[graft] trait QueriesCuration {
         TextStats.tokenSetFingerprint(col("text")).as("fp"),
         col("quality_score")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    d.count() // eager: card aggregate + modal language share this cache
+      .transform(Place.materialized) // eager: card aggregate + modal language share this cache
     val base = d
       .groupBy(col("source"))
       .agg(
@@ -3499,8 +3443,7 @@ private[graft] trait QueriesCuration {
         col("doc_id"), col("quality_score"),
         size(TextStats.tokens(col("text"))).cast("long").as("n_tokens")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    d.count() // eager: split scalar + histogram share this cache
+      .transform(Place.materialized) // eager: split scalar + histogram share this cache
     val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
     val split = maxId / 2
     val binned = d.select(
@@ -3658,13 +3601,11 @@ private[graft] trait QueriesCuration {
     val exact = Similarity
       .bruteTopK(e, queries, k)
       .select(col("query_id"), col("neighbor_id"), col("rank").as("xrank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    exact.count() // eager: mrr + ndcg + recall consumers share this cache
+      .transform(Place.materialized) // eager: mrr + ndcg + recall consumers share this cache
     val approx = Similarity
       .annTopK(e, queries, k, nbits = nbits, tables = tables, probes = 1)
       .select(col("query_id"), col("neighbor_id"), col("rank").as("arank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    approx.count()
+      .transform(Place.materialized)
     val joined = approx.join(exact, Seq("query_id", "neighbor_id"))
     // MRR: reciprocal ANN rank of each query's exact top-1 (0 if missed);
     // decimal-staged sums keep every aggregate order-independent (the
@@ -3832,8 +3773,7 @@ private[graft] trait QueriesCuration {
     val d = Tables
       .documents(s, dir)
       .select(col("doc_id"), TextStats.tokenSetFingerprint(col("text")).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    d.count() // eager: split scalar + both snapshots share this cache
+      .transform(Place.materialized) // eager: split scalar + both snapshots share this cache
     val maxId = d.agg(max(col("doc_id"))).head().getLong(0)
     val split = maxId / 2
     val prev = d.filter(col("doc_id") <= split).select(col("fp")).distinct()
@@ -3889,8 +3829,7 @@ private[graft] trait QueriesCuration {
     val ev = Tables
       .events(s, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ev.count() // eager: cutoff scalar + census share this cache
+      .transform(Place.materialized) // eager: cutoff scalar + census share this cache
     val days = ev.select(col("day")).distinct()
     val nDays = days.count()
     val cutIdx = (0.8 * (nDays - 1)).floor.toLong + 1
@@ -4074,8 +4013,7 @@ private[graft] trait QueriesCuration {
   def q143Calibration(s: SparkSession, dir: String): DataFrame = {
     val feats = Classifier
       .features(Tables.documents(s, dir), "text", "lang")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    feats.count() // eager: fit's 13 scans + the binning pass share this cache
+      .transform(Place.materialized) // eager: fit's 13 scans + the binning pass share this cache
     val w = Classifier.fit(feats, iters = 12)
     val trained = feats.select(
       lit("trained_lang").as("scorer"),
@@ -4450,8 +4388,7 @@ private[graft] trait QueriesCuration {
       )
       .withColumn("ntk", size(col("tk")))
       .withColumn("nsh", size(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count() // eager: both cross-join sides share this cache
+      .transform(Place.materialized) // eager: both cross-join sides share this cache
     val a = sets.select(col("doc_id").as("ia"), col("tk").as("tka"), col("sh").as("sha"), col("ntk").as("na"), col("nsh").as("ma"))
     val b = sets.select(col("doc_id").as("ib"), col("tk").as("tkb"), col("sh").as("shb"), col("ntk").as("nb"), col("nsh").as("mb"))
     val ti = size(array_intersect(col("tka"), col("tkb"))).cast("double")

@@ -1157,9 +1157,8 @@ private[graft] trait QueriesExact {
   def q230PpJoin(s: SparkSession, dir: String): DataFrame =
     graft.ops.PrefixJoin
       .jaccardSelfJoin(
-        // r15: spread the single-partition slice (the q91 mechanism)
-        Tables.documents(s, dir).filter(col("doc_id") < 600)
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id")),
+        // spread: the prefix-join slice scans as one partition (r15)
+        Place.spread(Tables.documents(s, dir).filter(col("doc_id") < 600), col("doc_id")),
         "doc_id", "text", 3, 5)
       .orderBy(col("id_a"), col("id_b"))
 
@@ -1293,8 +1292,8 @@ private[graft] trait QueriesExact {
       .withColumn("dig", digest(col("key"), col("payload")))
       .withColumn("r1", expr("key div 512"))
       .withColumn("r2", expr("key div 64"))
-    val da = digested(a).persist()
-    val db = digested(b).persist()
+    val da = Place.persisted(digested(a))
+    val db = Place.persisted(digested(b))
     def level(t: DataFrame, rc: String) = t
       .groupBy(col(rc))
       .agg(sum(col("dig")).as("sd"), count(lit(1)).as("cnt"))
@@ -1731,7 +1730,7 @@ private[graft] trait QueriesExact {
       .agg(
         count(lit(1)).as("k"),
         countDistinct(expr("cast(floor(c_acctbal * 100 + 0.5) as bigint)")).as("l"))
-      .persist()
+      .transform(Place.persisted)
     val total = classes.agg(sum(col("k")).as("n_rows"))
     val ks = s.range(0, 3).select(element_at(array(lit(2), lit(5), lit(10)), (col("id") + 1).cast("int")).as("k_min"))
     ks
@@ -1918,7 +1917,7 @@ private[graft] trait QueriesExact {
     val negatives = docs.filter(col("doc_id") >= 50)
       .select(explode(ngrams).as("g")).distinct()
       .join(members.withColumnRenamed("g", "mg"), col("g") === col("mg"), "left_anti")
-      .persist()
+      .transform(Place.persisted)
     def bitsOf(t: DataFrame): DataFrame = t
       .withColumn("i", explode(sequence(lit(0), lit(6))))
       .select(col("g"), col("i"),
@@ -2206,7 +2205,7 @@ private[graft] trait QueriesExact {
     val pres = Tables.events(s, dir)
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .distinct()
-      .persist()
+      .transform(Place.persisted)
     val days = pres.select(col("day").as("d")).distinct()
     val rolling = days
       .join(pres, col("day").between(date_sub(col("d"), 6), col("d")))
@@ -2259,10 +2258,8 @@ private[graft] trait QueriesExact {
     */
   def q245GramMatrix(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
-      // r15: single-row-group scan = one task for the whole 2080-cell
-      // per-row explode + partial decimal sums; spread it first (the
-      // decimal-staged sums are order-independent by construction)
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("vec_id"))
+      // spread: the 2080-cell explode + partial decimal sums ran as one task (r15)
+      .transform(Place.spread(_, col("vec_id")))
       .select(expr("transform(embedding, x -> cast(floor(x * 1000 + 0.5) as long))").as("qv"))
       .select(explode(expr(
         """flatten(transform(qv, (x, i) ->
@@ -2772,7 +2769,7 @@ private[graft] trait QueriesExact {
         col("o_orderkey") === col("l_orderkey"))
       .select(col("c"), col("p"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Place.persisted)
     val a1 = edges.groupBy(col("p")).agg(count(lit(1)).as("a1"))
     val h1 = edges
       .join(a1, Seq("p"))
@@ -2833,7 +2830,7 @@ private[graft] trait QueriesExact {
         col("o_orderkey") === col("l_orderkey"))
       .select(col("c"), col("p"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Place.persisted)
     val feat = Tables
       .orders(s, dir)
       .groupBy(col("o_custkey").as("c"))

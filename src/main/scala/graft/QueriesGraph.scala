@@ -706,10 +706,9 @@ private[graft] trait QueriesGraph {
     */
   def q286CdcChunking(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    // r15: the per-position rolling-hash map is the whole cost and ran
-    // on the single scan partition — spread the chunking input
+    // spread: the per-position rolling-hash map, the whole cost, ran on one scan partition (r15)
     val ch = graft.ops.Cdc.chunks(
-      docs.repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id")),
+      Place.spread(docs, col("doc_id")),
       "doc_id", "text", w = 8, modulus = 32)
     val bySrc = ch
       .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
@@ -1262,7 +1261,7 @@ private[graft] trait QueriesGraph {
       .agg(count(lit(1)).as("n_instances"))
       .withColumn("words", split(col("phrase"), " "))
       .withColumn("plen", size(col("words")).cast("long"))
-    byPhrase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Place.persisted(byPhrase)
     val wordStats = byPhrase
       .select(col("plen"), col("n_instances"), explode(col("words")).as("word"))
       .groupBy(col("word"))
@@ -1937,7 +1936,7 @@ private[graft] trait QueriesGraph {
       .documents(s, dir)
       .select(col("doc_id"), posexplode(split(lower(col("text")), " ")).as(Seq("pos", "word")))
       .where(length(col("word")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Place.persisted)
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val pairs = toks
       .withColumn("prev", lag(col("word"), 1).over(byDoc))
@@ -1950,7 +1949,7 @@ private[graft] trait QueriesGraph {
     val dirEdges = pairs
       .select(col("a").as("u"), col("b").as("v"), col("w"))
       .unionByName(pairs.select(col("b").as("u"), col("a").as("v"), col("w")))
-    dirEdges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Place.persisted(dirEdges)
     // wdeg is referenced twice per round plus init and the final
     // projection — ~10 subtree scans inside the ONE lazy evaluation —
     // so cut it eagerly (r11; uncut it re-aggregated the edge frame per
@@ -1958,11 +1957,9 @@ private[graft] trait QueriesGraph {
     // round does one join, not two (the PageRank `ed` discipline)
     val wdeg = graft.ops.Checkpoints.cut(
       dirEdges.groupBy(col("u")).agg(sum(col("w")).as("wdeg")))
+    // eager: the four lazy rounds would each recompute the join
     val ew = dirEdges.join(wdeg, Seq("u"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize NOW: the four lazy-round subtree scans of an
-    // unmaterialized cache would race and recompute the join per round
-    ew.count()
+      .transform(Place.materialized)
     // wdeg's eager cut and the ew materialization are the last reads of
     // the raw edge frame — release it (r15, the postingsReleasable
     // discipline); the rounds and the final join read ew/wdeg/freq only
@@ -2375,7 +2372,7 @@ private[graft] trait QueriesGraph {
       .where(length(col("word")) > 0)
       .groupBy(col("source"), col("word"))
       .agg(count(lit(1)).as("c"))
-    vec.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Place.persisted(vec)
     val pairs = vec
       .select(col("source").as("a"), col("word"), col("c").as("ca"))
       .join(vec.select(col("source").as("b"), col("word"), col("c").as("cb")), Seq("word"))
@@ -2764,7 +2761,7 @@ private[graft] trait QueriesGraph {
     val ranked = graft.ops.Rank.rankWithin(
       graft.ops.Rank.rankWithin(base, Seq("g"), -col("sa"), col("key"), "ra"),
       Seq("g"), -col("sb"), col("key"), "rb")
-    ranked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Place.persisted(ranked)
     // d_eff = min(d, n): a table smaller than the read depth makes the
     // depth-d row nonexistent and tau NULL - clamp to the last rank
     val tau = ranked
@@ -2942,7 +2939,7 @@ private[graft] trait QueriesGraph {
       .withColumn("yhat", expr("cast(sum(y) over (order by day rows between 7 preceding and 1 preceding) div nprev as bigint)"))
       .where(col("nprev") === 7)
       .withColumn("r", abs(col("y") - col("yhat")))
-    scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Place.persisted(scored)
     val nAll = scored.agg(count(lit(1)).as("n")).collect()(0).getLong(0)
     val nCal = nAll / 2
     val cal = scored.where(col("i") <= lit(nCal) + 7)
@@ -3163,7 +3160,7 @@ private[graft] trait QueriesGraph {
         sum(when(col("variant") === 1, 1L).otherwise(0L)).as("d1"))
     // the bounded cent grid feeds the windows AND the totals aggregate
     // — persist or the events scan re-runs per consumer
-    per.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Place.persisted(per)
     import org.apache.spark.sql.expressions.Window
     val byCents = Window.orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3176,7 +3173,7 @@ private[graft] trait QueriesGraph {
       // first factor decimal(38,0): c·n products wrap int64 at ~3e9
       // rows per variant (q170 discipline)
       .withColumn("gap", expr("abs(cast(c0 as decimal(38,0)) * n1 - cast(c1 as decimal(38,0)) * n0)"))
-    gaps.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Place.persisted(gaps)
     val mx = gaps.agg(max(col("gap")).as("max_gap"))
     gaps
       .crossJoin(broadcast(mx))
@@ -3249,7 +3246,7 @@ private[graft] trait QueriesGraph {
         sum(when(col("variant") === 0, 1L).otherwise(0L)).as("t0"),
         sum(when(col("variant") === 1, 1L).otherwise(0L)).as("t1"))
       .withColumn("t", col("t0") + col("t1"))
-    per.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Place.persisted(per)
     import org.apache.spark.sql.expressions.Window
     val byCents = Window.orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3330,7 +3327,7 @@ private[graft] trait QueriesGraph {
       .documents(s, dir)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_s"))
-    per.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Place.persisted(per)
     val tot = per.agg(
       sum(col("n_s")).as("n"),
       count(lit(1)).as("k"),
@@ -3702,21 +3699,15 @@ private[graft] trait QueriesGraph {
     * exact hardest negatives survive the candidate cut.
     */
   def q107HardNegativesAnn(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = Tables.embeddings(s, dir)
     val (nbits, tables) =
       Similarity.lshParams(e.count(), targetCosine = 0.4, probeHamming = 1)
     val idx = Similarity
-      // r15: the embeddings scan is ONE input partition, so the sketch
-      // pass (tables×nbits×64 mults per vector) ran as a single 2.3 s
-      // task — spread it before sketching (explicit count: AQE would
-      // coalesce a bare keyed repartition of this sub-MB frame back to
-      // one partition)
+      // spread: the sketch pass ran as a single 2.3 s task (r15)
       .bucketIndex(
-        e.repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("vec_id")),
+        Place.spread(e, col("vec_id")),
         "vec_id", "embedding", nbits, tables)
-      .persist(MEMORY_AND_DISK)
-    idx.count() // eager: both self-join sides share this cache
+      .transform(Place.materialized) // eager: both self-join sides share this cache
     // radius-1 multiprobe on the anchor side: a pair whose sketches
     // differ by <= 1 bit collides in some probed bucket (see
     // Similarity.nearDupsEmbedding's orientation argument)
@@ -3730,8 +3721,7 @@ private[graft] trait QueriesGraph {
       .filter(col("anchor") =!= col("other"))
       .select(col("anchor"), col("other"))
       .distinct()
-      .persist(MEMORY_AND_DISK)
-    cands.count() // eager: mining + candidate-recall audit share this cache
+      .transform(Place.materialized) // eager: mining + candidate-recall audit share this cache
     // both bucket-join sides are folded into the materialized cands —
     // the index cache is dead from here (r15, the postingsReleasable
     // discipline)
@@ -3759,16 +3749,13 @@ private[graft] trait QueriesGraph {
         col("neg.sim").as("neg_sim"),
         round(col("pos.sim") - col("neg.sim"), 6).as("margin")
       )
-      .persist(MEMORY_AND_DISK)
-    mined.count() // eager: output + agreement audit share this cache
+      .transform(Place.materialized) // eager: output + agreement audit share this cache
     // exact hardest negative on the bounded anchor slice (slice×corpus)
     val exactNeg = e
       .filter(col("vec_id") < 500)
       .select(col("vec_id").as("anchor"), col("embedding").as("va"), col("label").as("la"))
-      // r15: the 500-anchor slice scans as one partition, serializing the
-      // slice×corpus exact pass through one task — spread it (the q91
-      // mechanism; per-pair cosines are partitioning-blind)
-      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("anchor"))
+      // spread: the slice×corpus exact pass ran as one task (r15)
+      .transform(Place.spread(_, col("anchor")))
       .join(vb, col("anchor") =!= col("other"))
       .select(
         col("anchor"), col("la"), col("other"), col("lb"),
@@ -3778,8 +3765,7 @@ private[graft] trait QueriesGraph {
       .groupBy(col("anchor"))
       .agg(max(struct(col("sim"), (-col("other")).as("nid"))).as("xneg"))
       .select(col("anchor"), (-col("xneg.nid")).as("xneg_id"))
-      .persist(MEMORY_AND_DISK)
-    exactNeg.count() // eager: both audit consumers share this cache
+      .transform(Place.materialized) // eager: both audit consumers share this cache
     val agree = exactNeg
       .join(mined.select(col("anchor"), col("neg_id")), Seq("anchor"), "left")
       .agg(
@@ -3841,9 +3827,7 @@ private[graft] trait QueriesGraph {
         col("embedding"), // raw floats: centroid scoring + exact rerank/baseline
         Pq.normalize(col("embedding")).as("vec") // normalized: PQ fit/encode/LUT
       )
-      // r15 note: input spread tried, measured slower (3.1 -> 5.3 s) —
-      // many small jobs; see q35
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Place.persisted)
     val n = e.count() // eager: fit + encode + probe + baseline share this cache
     val cents = Ivf.fitCentroids(e, kc, ivfIters)
     val assigned = Ivf.assign(e, cents)
@@ -3869,8 +3853,7 @@ private[graft] trait QueriesGraph {
       .join(broadcast(probes), Seq("cluster_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("qvec"), col("codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cands.count() // eager: scanned-fraction + ADC consumers share this cache
+      .transform(Place.materialized) // eager: scanned-fraction + ADC consumers share this cache
     val scanned = cands
       .groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_cand"))
@@ -4211,23 +4194,15 @@ private[graft] trait QueriesGraph {
     */
   def q207CcAgreement(s: SparkSession, dir: String): DataFrame = {
     val edges = blockGraph(s, dir)
-    // the two implementations are independent sequential eager loops —
-    // overlap them on two driver threads (guide §2.6, the Scc.fwbwLabels
-    // pattern): each one's tiny per-round stages back-fill the cores the
-    // other leaves idle, and the per-round driver latencies overlap
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fa = Future(
+    // the two implementations are independent sequential eager loops:
+    // overlap them on two driver threads (Place.overlap)
+    val (a, b) = Place.overlap(
       graft.ops.Components
         .connectedComponents(edges, "u", "v")
-        .withColumnsRenamed(Map("component" -> "ca")))
-    val fb = Future(
+        .withColumnsRenamed(Map("component" -> "ca")),
       graft.ops.Components
         .largeStarSmallStar(edges, "u", "v")
         .withColumnsRenamed(Map("component" -> "cb")))
-    val a = Await.result(fa, Duration.Inf)
-    val b = Await.result(fb, Duration.Inf)
     val joined = a.join(b, Seq("id"), "full_outer")
     val dis = joined
       .agg(

@@ -4,7 +4,8 @@ import java.sql.{Connection, DriverManager, SQLException}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.{Dedup, Rollup, WatermarkDedup}
+import graft.ops.{Dedup, Place, Rollup, WatermarkDedup}
+import graft.streaming.ProducerLoop
 
 /** EXECUTED JDBC transport for the reference's Postgres state — the
   * relational twin of the parquet-snapshot seam in [[Jobs]] /
@@ -469,18 +470,11 @@ object JdbcStore {
     val spark = batch.sparkSession
     val cursors = readCursors(spark, url, cursorTable, keys)
       .select((keys.map(k => col(k).cast("string").as(k)) :+ col("last_observed_at")): _*)
-    val fresh = WatermarkDedup
-      .filterNewWithInBatch(batch, cursors, keys, tsCol, arrivalCol)
-      .cache()
+    val fresh = Place.persisted(WatermarkDedup.filterNewWithInBatch(batch, cursors, keys, tsCol, arrivalCol))
     try {
-      // 1. EMIT first (Kafka envelope shape, micros precision) ...
+      // 1. EMIT first (the Kafka envelope) ...
       fresh
-        .select(
-          to_json(
-            struct(fresh.columns.map(col).toIndexedSeq: _*),
-            Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-          ).as("value")
-        )
+        .select(ProducerLoop.envelope(fresh).as("value"))
         .write
         .mode(SaveMode.Append)
         .parquet(sinkDir)

@@ -107,8 +107,7 @@ object Bm25 {
     import s.implicits._
     val terms = queries.flatMap(_._2).distinct
     val post = postings(docs, idCol, textCol, terms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    post.count() // eager: stats pass + scoring pass share one tokenize
+      .transform(Place.materialized) // eager: stats pass + scoring pass share one tokenize
     val st = fitStats(docs, idCol, textCol, terms, post)
     val qframe = broadcast(
       queries
@@ -132,15 +131,10 @@ object Bm25 {
           "aggregate(sort_array(collect_list(struct(term, comp))), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.comp)"
         ).as("score")
       )
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager (r15, the q153 rankWithin discipline): rankWithin reads its
-    // input from THREE subtrees — the stream side, the spans broadcast
-    // build and the offsets build — which otherwise run as CONCURRENT
-    // broadcast futures each recomputing the whole scoring fold (traced
-    // on q122 as four racing 4-7 s-task_ms jobs). One materialization,
-    // three cache reads. `post` is superseded the moment this is filled.
-    scored.count()
-    post.unpersist(false)
+      // eager (r15): rankWithin's three input subtrees each recomputed the
+      // scoring fold (q122: four racing 4-7 s-task_ms jobs)
+      .transform(Place.materialized)
+    post.unpersist(false) // superseded by the filled `scored`
     Rank
       .rankWithin(scored, Seq("qid"), -col("score"), col("doc_id"), "rank", bins = 64)
       .filter(col("rank") <= k)

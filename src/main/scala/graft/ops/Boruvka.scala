@@ -91,7 +91,7 @@ object Boruvka {
           explode(array(col("ca"), col("cb"))).as("comp"))
         .groupBy(col("comp"))
         .agg(min(col("e")).as("e"))
-      sel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Place.persisted(sel)
       // materialize the cache NOW (one scalar job): hookLabels reads
       // sel from two subtrees of one join — on an unmaterialized cache
       // both sides recompute the cross join + aggregate (measured 2.5×
@@ -206,12 +206,8 @@ object Boruvka {
         col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst")))).as("es"))
       .select(expr(fold).as("res"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager: forest and labels can be read as two subtrees of ONE
-    // downstream job (q292's final join), and a lazy persist's readers
-    // race to fill the cache and serialize on block locks (the r12
-    // nearDupsMinhash finding)
-    folded.count()
+      // eager: forest and labels can be two subtrees of one job (q292's final join)
+      .transform(Place.materialized)
     val forest = folded
       .select(explode(col("res.kept")).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))

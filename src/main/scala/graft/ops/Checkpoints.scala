@@ -59,7 +59,7 @@ object Checkpoints {
   }
 
   /** Syntax: `df.cutLineage()` reads like the `localCheckpoint` call it
-    * replaces at the 19 iterative call sites. */
+    * replaces at the iterative call sites. */
   implicit class CutOps(private val df: DataFrame) {
     def cutLineage(): DataFrame = cut(df)
   }

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Checkpoints.CutOps
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over an undirected edge list — the exact closure
   * that [[TextDedup.dedupAssignments]] approximates in one hop. Used to
@@ -69,7 +68,7 @@ object Components {
     val sym = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Place.persisted)
 
     // localCheckpoint, not persist: every round's frame is derived from
     // the previous round's, so the LOGICAL plan doubles per iteration —
@@ -277,8 +276,7 @@ object Components {
       .distinct()
     val affected = oldLabels
       .join(touchedComps, Seq("component"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    affected.count() // eager: star edges + merge-back share this cache
+      .transform(Place.materialized) // eager: star edges + merge-back share this cache
     val starEdges = affected
       .filter(col("id") =!= col("component")) // label's self-star is a no-op
       .select(col("id").as("id_a"), col("component").as("id_b"))

@@ -60,8 +60,7 @@ object CorpusDelta {
     val a = after.select(col(idCol).as("id"), col(groupCol).as("ga"), col(digestCol).as("da"))
     val j = b
       .join(a, Seq("id"), "full_outer")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    j.count() // eager: events + three count aggregates share the diff
+      .transform(Place.materialized) // eager: events + three count aggregates share the diff
 
     val moved = col("db").isNotNull && col("da").isNotNull && col("ga") =!= col("gb")
     val changed = col("db").isNotNull && col("da").isNotNull &&

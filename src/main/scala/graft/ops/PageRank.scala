@@ -52,24 +52,12 @@ object PageRank {
     // metadata), so each round's ranks join plans no edge-side
     // exchange — the local stand-in for bucketing edges by src on a
     // cluster. Degrees fold into the same pre-join (src, dst, deg)
-    // shape so rounds do one join, not two.
-    //
-    // The repartition carries an EXPLICIT partition count (r15): a bare
-    // keyed repartition on a sub-MB edge frame is AQE-coalesced to ONE
-    // partition at checkpoint time — size-based coalescing is blind to
-    // the downstream per-round join+aggregate compute — and since the
-    // checkpointed partitioning is what every round's join aligns to,
-    // the WHOLE iteration then runs single-task (measured on q96: round
-    // jobs of 1.78 s in one task; spread, the same rounds run at full
-    // width). The count comes from spark.sql.shuffle.partitions — core
-    // count locally, AQE-managed/deployment-set at cluster scale —
-    // never a hard-coded constant.
-    val nPart = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val e = edges
-      .repartition(nPart, col("src"))
-      .cutLineage()
+    // shape so rounds do one join, not two. Spread, because every round
+    // aligns to the checkpointed partitioning: unspread, q96's round jobs
+    // ran as one 1.78 s task (r15).
+    val e = Place.spread(edges, col("src")).cutLineage()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // deg aggregates on e's own hash(src, nPart) partitioning and the
+    // deg aggregates on e's own hash(src) partitioning and the
     // join keys match it, so ed inherits that partitioning without a
     // second exchange — the cut stores it for every round to align to
     val ed = e
@@ -123,14 +111,9 @@ object PageRank {
                 lit(damping) * (coalesce(col("csum"), lit(0.0)) + col("dm") / lit(n.toDouble))).as("r"))
         }
       )
-        // pin the round output's width too (r15): the cut otherwise
-        // stores ranks at whatever AQE coalesced the last stage to
-        // (1 partition at harness scale), and the NEXT round's join
-        // pipelines its whole 940k-edge probe + partial aggregate into
-        // that single stored partition (measured: 1-task 1.9 s round
-        // jobs). hash(node) at conf width keeps every round's stream
-        // side as wide as the edge side it joins.
-        .repartition(nPart, col("node"))
+        // spread the round output too: the cut otherwise stores ranks at
+        // the AQE-coalesced width and the next round ran as one 1.9 s task (r15)
+        .transform(Place.spread(_, col("node")))
         .cutLineage()
       // free the superseded round's checkpoint blocks (executor storage
       // otherwise grows linearly with iters for library callers)

@@ -88,21 +88,13 @@ object Scc {
       }
       lab
     }
-    // the two directions are INDEPENDENT dataflows until the final
-    // join, but each is a sequential eager loop (cut + probe per
-    // round) — run them on two driver threads so one direction's
-    // tiny stages back-fill the other's idle cores and the per-round
-    // driver latencies overlap (guide §2.6; actions are only
-    // sequential because a single thread calls them sequentially)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fF = Future(propagate(flip = false))
-    val fB = Future(propagate(flip = true))
-    Await
-      .result(fF, Duration.Inf)
+    // the two directions are independent dataflows until the final
+    // join, each a sequential eager loop (cut + probe per round):
+    // overlap them on two driver threads (Place.overlap)
+    val (fwd, bwd) = Place.overlap(propagate(flip = false), propagate(flip = true))
+    fwd
       .withColumnRenamed("lbl", "f")
-      .join(Await.result(fB, Duration.Inf).withColumnRenamed("lbl", "b"), Seq("node"))
+      .join(bwd.withColumnRenamed("lbl", "b"), Seq("node"))
   }
 
   /** Component rollup: one row per (f, b) class with size and min id. */

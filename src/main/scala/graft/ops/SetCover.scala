@@ -61,7 +61,7 @@ object SetCover {
         Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
         s"SetCover.greedy: id column '$idCol' must be an integral type, got $dt")
     }
-    val cached = sets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = Place.persisted(sets)
     // eager fill (single reader — no concurrent-fill race) doubling as
     // the vocab census callers report coverage against
     val vocabTotal = cached.select(explode(col("toks")).as("tok")).distinct().count()

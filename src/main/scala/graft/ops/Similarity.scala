@@ -360,8 +360,7 @@ object Similarity {
     // narrow candidate generation (ids only through the bucket self-join
     // and the distinct), vectors attached once per surviving pair
     val banded = bucketRows(corpus, idCol, vecCol, nbits, tables, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    banded.count() // eager: the self-join's sides race to fill this cache
+      .transform(Place.materialized) // eager: the self-join's sides race to fill this cache
     val a =
       if (probes == 0) banded.select(col("tbl"), col("bucket"), col(idCol).as("id_a"))
       else

@@ -81,14 +81,9 @@ object SparseSim {
       .select(col(idCol), explode(TextStats.ngrams(col("toks"), n)).as("feature"))
       .groupBy(col(idCol), col("feature"))
       .agg(count(lit(1)).as("tc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager (r13, the q27 template): tf is read by THREE subtrees — the
-    // dfreq broadcast build, the n_docs census, and the main join's
-    // stream side. Unmaterialized, the broadcast-build future and the
-    // main stage each re-run the scan→tokenize→explode→agg lineage AND
-    // race to fill this cache, serializing on block locks — the q112
-    // variance shape (2.0–5.9 s across records on identical code).
-    tf.count()
+      // eager (r13): the dfreq build, the n_docs census and the main join all
+      // read tf; lazy, q112 swung 2.0–5.9 s on identical code
+      .transform(Place.materialized)
     val dfreq = tf.groupBy(col("feature")).agg(count(lit(1)).as("df"))
     // corpus size from the cached tf, not a third scan of `docs`: every
     // doc that survives the >= n-token filter contributes >= 1 feature
@@ -118,8 +113,7 @@ object SparseSim {
     */
   def allPairs(post: DataFrame, idCol: String, threshold: Double,
                afterMaterialize: () => Unit = () => ()): DataFrame = {
-    val p = post.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count() // eager: norms + both self-join sides share this cache
+    val p = Place.materialized(post) // eager: norms + both self-join sides share this cache
     afterMaterialize()
 
     // a doc whose kept features ALL have idf 0 (df = N) has zero norm

@@ -123,15 +123,9 @@ object TextDedup {
       seed: Long = 1337L,
       sizeRatio: Double = 0.0
   ): DataFrame = {
-    // persist: the self-join consumes `banded` twice; without a
-    // materialization barrier the whole signature lineage runs once per
-    // side. n×bands narrow rows — MEMORY_AND_DISK is safe at any scale.
+    // eager: both self-join sides read `banded` (lazy: random 2-6x stalls)
     val banded = bandedSigs(df, idCol, setCol, bands, rows, seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager: AQE materializes the self-join's two shuffle stages
-    // concurrently; unmaterialized, both race to fill this cache and
-    // serialize on block locks (observed as random 2-6x stalls)
-    banded.count()
+      .transform(Place.materialized)
     val l = banded.select(col("band"), col("bsig"), col(idCol).as("id_a"), col("sz").as("sz_a"))
     val r = banded.select(col("band"), col("bsig"), col(idCol).as("id_b"), col("sz").as("sz_b"))
     l.join(r, Seq("band", "bsig"))
@@ -160,7 +154,6 @@ object TextDedup {
       rows: Int = 8,
       shingleSize: Int = 1
   ): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // set unit: distinct tokens (shingleSize=1, right for tiny-vocab
     // corpora) or word n-gram shingles (order-sensitive near-dup)
     val setExpr = if (shingleSize <= 1) tokenSet(col(textCol)) else shingles(col(textCol), shingleSize)
@@ -171,21 +164,15 @@ object TextDedup {
     // pairs that need no LSH at all (identical sets ⇒ jac = 1.0 by
     // construction, recall 1.0 guaranteed). Classes are keyed by the
     // sorted set itself (no hash, no collision risk).
-    val sets = df.select(col(idCol), sort_array(setExpr).as("toks")).persist(MEMORY_AND_DISK)
-    // eager: broadcast-build futures and main stages otherwise race to
-    // fill this cache concurrently and serialize on block locks
-    sets.count()
+    // eager: broadcast builds and main stages both read `sets`
+    val sets = Place.materialized(df.select(col(idCol), sort_array(setExpr).as("toks")))
     val reps = sets.groupBy(col("toks")).agg(min(col(idCol)).as("__rep"))
     val members = sets
       .join(reps, "toks")
       .select(col("__rep"), col(idCol))
-      .persist(MEMORY_AND_DISK)
-    // eager (r12): members is read by TWO subtrees of the intra join
-    // below AND twice more in the rep-pair expansion — unmaterialized,
-    // the readers race to fill the cache and serialize on block locks
-    // (nearDupsNgram always counted here; this path's missing count was
-    // the q27 variance source — same-code isolated reps swung 3.0–14.0 s)
-    members.count()
+      // eager (r12): read by both intra-join sides and twice in the rep-pair
+      // expansion; lazy, q27's same-code reps swung 3.0–14.0 s
+      .transform(Place.materialized)
     // (a) intra-class pairs: identity, exact, complete
     val ma = members.select(col("__rep"), col(idCol).as("id_a"))
     val mb = members.select(col("__rep"), col(idCol).as("id_b"))
@@ -196,21 +183,11 @@ object TextDedup {
     // (b) inter-class pairs: the LSH pipeline over DISTINCT sets only
     val repSets = reps
       .select(col("__rep").as(idCol), col("toks"))
-      .persist(MEMORY_AND_DISK)
-    // eager (r12): read by lshCandidates' signature build and by both
-    // verification sides (a, b) — same race as members above
-    repSets.count()
+      // eager (r12): read by lshCandidates and both verification sides
+      .transform(Place.materialized)
     val cands = lshCandidates(repSets, idCol, "toks", bands, rows, sizeRatio = threshold)
-      // explicit-width spread (r15, the nearDupsExact mechanism): the
-      // candidate frame leaves its distinct as a few AQE-coalesced
-      // sub-MB partitions, but every row below costs an array_intersect
-      // over two full token sets — measured on q27 as a 5-task / 1.2 s
-      // verification straggler stage. Pair-keyed; the per-pair jaccard
-      // is a row-local function, so partitioning cannot change results.
-      .repartition(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("id_a"),
-        col("id_b"))
+      // spread: q27's array_intersect verification was a 5-task 1.2 s straggler stage (r15)
+      .transform(Place.spread(_, col("id_a"), col("id_b")))
     val a = repSets.select(col(idCol).as("id_a"), col("toks").as("toks_a"))
     val b = repSets.select(col(idCol).as("id_b"), col("toks").as("toks_b"))
     val repPairs = cands
@@ -251,7 +228,6 @@ object TextDedup {
       rows: Int = 16,
       seed: Long = 1337L
   ): DataFrame = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Exact-duplicate collapse (same as nearDupsMinhash): all members of
     // an identical-set class share every bucket, so banding runs over
     // one representative (the class min id) per distinct set. The
@@ -260,14 +236,12 @@ object TextDedup {
     // which is that class's rep — so the output is identical to the
     // uncollapsed form, minus the g²·bands bucket blowup.
     val sets = df.select(col(idCol), sort_array(tokenSet(col(textCol))).as("toks"))
-      .persist(MEMORY_AND_DISK)
-    sets.count() // eager: see nearDupsMinhash
+      .transform(Place.materialized) // eager: see nearDupsMinhash
     val reps = sets.groupBy(col("toks")).agg(min(col(idCol)).as("__rep"))
     val members = sets.join(reps, "toks").select(col("__rep"), col(idCol))
     val repSets = reps.select(col("__rep").as(idCol), col("toks"))
     val banded = bandedSigs(repSets, idCol, "toks", bands, rows, seed)
-      .persist(MEMORY_AND_DISK)
-    banded.count() // eager: see lshCandidates
+      .transform(Place.materialized) // eager: see lshCandidates
     val bucketMin = banded
       .groupBy(col("band"), col("bsig"))
       .agg(min(col(idCol)).as("bucket_min"))
@@ -318,23 +292,12 @@ object TextDedup {
       textCol: String,
       threshold: Double
   ): DataFrame = {
-    // persist: both cross-join sides share this lineage. The id-keyed
-    // repartition spreads the stream side of the nested-loop pair scan
-    // across the session's shuffle partitions (r15): the corpora this
-    // runs on arrive as a single scan partition, which put the whole
-    // O(n²/2) intersect pass on ONE task (measured: q146/q147's 12.5M
-    // pairs single-threaded). Pair values are per-row functions of the
-    // two sides, so partitioning cannot change the result.
+    // spread: q146/q147's 12.5M intersect pairs ran single-threaded on one scan partition (r15)
     val sets = df
       .select(col(idCol), tokenSet(col(textCol)).as("toks"))
       .withColumn("sz", size(col("toks")))
-      // explicit count (the session conf, AQE-managed at cluster scale):
-      // a keyed repartition without one is AQE-coalesced back to a single
-      // partition on this sub-MB frame — size-based coalescing is blind to
-      // the O(n²) compute downstream of it
-      .repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count() // eager: both cross-join sides race to fill this cache
+      .transform(Place.spread(_, col(idCol)))
+      .transform(Place.materialized) // eager: both cross-join sides race to fill this cache
     val a = sets.select(col(idCol).as("id_a"), col("toks").as("toks_a"), col("sz").as("sz_a"))
     val b = sets.select(col(idCol).as("id_b"), col("toks").as("toks_b"), col("sz").as("sz_b"))
     a.crossJoin(b)
@@ -398,14 +361,12 @@ object TextDedup {
       col(idCol),
       sort_array(shingles(col(textCol), n)).as("sh")
     ).withColumn("sz", size(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count() // eager: the consumers below race to fill this cache
+      .transform(Place.materialized) // eager: the consumers below race to fill this cache
     val reps = sets.groupBy(col(blockCol), col("sh")).agg(min(col(idCol)).as("__rep"))
     val members = sets
       .join(reps, Seq(blockCol, "sh"))
       .select(col(blockCol), col("__rep"), col(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    members.count() // eager
+      .transform(Place.materialized)
     // (a) intra-class pairs: identical shingle sets, jac = 1.0 exactly
     val ia = members.select(col(blockCol), col("__rep"), col(idCol).as("id_a"))
     val ib = members.select(col(blockCol), col("__rep"), col(idCol).as("id_b"))
@@ -419,8 +380,7 @@ object TextDedup {
     // forces min/max size >= t) rejects most pairs here.
     val repSets = reps
       .select(col(blockCol), col("__rep"), col("sh"), size(col("sh")).as("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    repSets.count() // eager
+      .transform(Place.materialized)
     val na = repSets.select(col(blockCol), col("__rep").as("rep_a"), col("sz").as("sz_a"))
     val nb = repSets.select(col(blockCol), col("__rep").as("rep_b"), col("sz").as("sz_b"))
     val pairs = na

@@ -83,7 +83,9 @@ object PerKeyWatermark {
       .select("r.*")
   }
 
-  private val jsonOpts = Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
+  /** Record-envelope options: micros timestamps (the default JSON
+    * format writes millis). Shared with [[ProducerLoop.envelope]]. */
+  private[streaming] val jsonOpts = Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
 
   /** Key-envelope options: null fields must be serialized, or tuples
     * differing only in WHICH part is null would collide.

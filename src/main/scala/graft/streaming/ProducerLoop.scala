@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import graft.jobs.Jobs
-import graft.ops.{Rollup, Upsert, WatermarkDedup}
+import graft.ops.{Place, Rollup, Upsert, WatermarkDedup}
 
 /** The reference's producer cycle (§3.1 of SURVEY.md) as a Structured
   * Streaming job with foreachBatch:
@@ -42,11 +42,14 @@ object ProducerLoop {
   def kafkaFrame(df: DataFrame, keys: Seq[String]): DataFrame =
     df.select(
       to_json(struct(keys.map(col).toIndexedSeq: _*), PerKeyWatermark.keyJsonOpts).as("key"),
-      to_json(
-        struct(df.columns.map(col).toIndexedSeq: _*),
-        Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-      ).as("value")
+      envelope(df).as("value")
     )
+
+  /** The Kafka `value` envelope: every column of `df` as one JSON record,
+    * timestamps in micros so event times survive the round trip. Both
+    * producer loops emit exactly this column. */
+  def envelope(df: DataFrame): Column =
+    to_json(struct(df.columns.map(col).toIndexedSeq: _*), PerKeyWatermark.jsonOpts)
 
   /** The cursor snapshot's schema, fixed by `processBatch`: the keys as
     * strings plus `last_observed_at`. */
@@ -79,24 +82,18 @@ object ProducerLoop {
     val kcols = keys.map(k => s"__k_$k")
     // cached with its key columns: the emit and the cursor roll-up both
     // read this one copy, so the chain behind `batch` runs once
-    val fresh = WatermarkDedup.filterNewWithInBatch(
+    val fresh = Place.persisted(WatermarkDedup.filterNewWithInBatch(
       keyed,
       cursors.toDF((kcols :+ "last_observed_at"): _*),
       kcols,
       tsCol,
       arrivalCol
-    ).cache()
+    ))
     try {
-      // 1. EMIT first (Kafka envelope shape; micros timestampFormat so
-      // the envelope preserves event-time precision) ...
+      // 1. EMIT first (the Kafka envelope) ...
       val emitted = fresh.drop(kcols: _*)
       emitted
-        .select(
-          to_json(
-            struct(emitted.columns.map(col).toIndexedSeq: _*),
-            Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
-          ).as("value")
-        )
+        .select(envelope(emitted).as("value"))
         .write
         .mode(SaveMode.Append)
         .parquet(sinkDir)

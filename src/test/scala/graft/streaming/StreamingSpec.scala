@@ -4,7 +4,6 @@ import java.sql.Timestamp
 import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.hadoop.mapreduce.JobContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, udf}
@@ -122,27 +121,6 @@ class StreamingSpec extends SparkSpec {
     rows.map(r => (r._1, r._2, ts(r._3), r._4, r._5)).toDF("station_id", "pollutant", "ts", "value", "arrival")
       .write.parquet(dir)
     spark.read.parquet(dir)
-  }
-
-  /** Spark jobs started while `body` runs. Listener events arrive in
-    * order, so once a marker job run afterwards is seen, every start from
-    * `body` has been delivered too. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val marker = "graft.test.marker"
-    val starts = new java.util.concurrent.LinkedBlockingQueue[Boolean]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.put(Option(e.properties).exists(_.getProperty(marker) != null))
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(marker, null)
-      Iterator.continually(starts.poll(30, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile(m => { assert(m != null, "marker job start not seen"); !m }).size
-    } finally sc.removeSparkListener(listener)
   }
 
   test("ProducerLoop.readCursors: an existing snapshot is read with its schema supplied, starting no job") {
