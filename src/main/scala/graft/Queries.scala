@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.ops._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The operator-inventory query registry (SURVEY.md §2 → SparkEntry).
   *
@@ -12,11 +10,8 @@ import graft.ops._
   *  - doubles aggregated via decimal(38,6) for order-independence;
   *  - stable trailing ORDER BY on a unique key.
   *
-  * The traits initialize their vals in the order mixed in below. The
-  * sections of q174 and q184 (QueriesAnalytics) and q277 (QueriesExact)
-  * must stay in their files: they define `BlockGraphSql` and
-  * `DirectedBlockGraphSql`, which oracle vals initialized earlier
-  * interpolate. Moving a section to a later trait nulls those oracles.
+  * Each query section ends with one `query(name, builder, oracle)` line;
+  * `all` and `oracles` derive from those declarations.
   */
 object Queries extends QueriesCore
   with QueriesCuration
@@ -25,3 +20,35 @@ object Queries extends QueriesCore
   with QueriesGraph
   with QueriesJdbc
   with QueriesRegistry
+
+/** One registered query: its driver-facing name, its plan builder and its
+  * static DuckDB oracle — `None` when Verify generates the oracle
+  * (`QueriesRegistry.dynamicOracles`).
+  */
+private[graft] final case class Q(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: Option[String])
+
+/** The declaration list the query traits share. The buffer is lazy, so a
+  * declaration works whichever trait initializes first.
+  */
+private[graft] trait QueryRegistration {
+  private lazy val declared = scala.collection.mutable.ArrayBuffer.empty[Q]
+
+  /** Declares one query; its oracle val must already be initialized. */
+  protected final def query(
+      name: String,
+      build: (SparkSession, String) => DataFrame,
+      oracle: Option[String]): Unit = {
+    require(!oracle.contains(null), s"$name: oracle read before its val was initialized")
+    declared += Q(name, build, oracle)
+  }
+
+  /** Every declared query by name; throws when a name is declared twice. */
+  private[graft] final lazy val registered: Map[String, Q] = {
+    val twice = declared.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(twice.isEmpty, s"query names declared more than once: ${twice.toSeq.sorted.mkString(", ")}")
+    declared.map(q => q.name -> q).toMap
+  }
+}

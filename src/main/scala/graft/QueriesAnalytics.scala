@@ -4,14 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** windows, certificates, OLAP analytics
-  *
-  * Mechanical split of the former single-object registry (r11):
-  * statement order across the trait linearization in Queries.scala
-  * is the original file order, so val-initialization semantics are
-  * unchanged. See object Queries for the assembly.
-  */
-private[graft] trait QueriesAnalytics {
+/** windows, certificates, OLAP analytics */
+private[graft] trait QueriesAnalytics extends QueryRegistration {
   this: QueriesCore with QueriesCuration with QueriesAnalytics with QueriesExact with QueriesGraph =>
   // ---------------------------------------------------------------- q149
   /** IMAGE perceptual near-dup (Multimodal.dhashBytes) — dHash over the
@@ -165,6 +159,7 @@ private[graft] trait QueriesAnalytics {
       |FROM allp p, sm
       |GROUP BY 1, 2, sm.max_self_hamming, sm.min_cross_hamming
       |ORDER BY pair_kind, hamming_bucket""".stripMargin
+  query("q149_image_dhash", q149ImageDhash, Some(q149Oracle))
 
   // ---------------------------------------------------------------- q150
   /** RENDEZVOUS-HASH shard stability (ops/Rendezvous) — the
@@ -249,6 +244,7 @@ private[graft] trait QueriesAnalytics {
       |  (r.hrw_moved = r.hrw_to_new) AS moved_law_ok
       |FROM per p LEFT JOIN perm m USING (shard), r
       |ORDER BY shard""".stripMargin
+  query("q150_rendezvous_shards", q150RendezvousShards, Some(q150Oracle))
 
   // ---------------------------------------------------------------- q151
   /** RE-SHARD DELTA PLAN — the incremental-export composition of q150's
@@ -370,6 +366,7 @@ private[graft] trait QueriesAnalytics {
       |LEFT JOIN ar USING (shard)
       |LEFT JOIN st USING (shard)
       |ORDER BY shard""".stripMargin
+  query("q151_reshard_plan", q151ReshardPlan, Some(q151Oracle))
 
   // ---------------------------------------------------------------- q152
   /** DUP-SPAN WIDTH LADDER — how LONG is the verbatim copying: q141's
@@ -451,6 +448,7 @@ private[graft] trait QueriesAnalytics {
        |${rung(20)}
        |ORDER BY w""".stripMargin
   }
+  query("q152_span_width_ladder", q152SpanWidthLadder, Some(q152Oracle))
 
   // ---------------------------------------------------------------- q153
   /** SOURCE-FAIR QUALITY FILTER — CCNet-style per-source quantile
@@ -544,6 +542,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST(g_kept * 1000000 // n_docs AS BIGINT) AS g_keep_ppm,
       |  (q_kept = n_docs * 3 // 10) AS fair_law_ok
       |FROM agg ORDER BY source""".stripMargin
+  query("q153_source_fair_filter", q153SourceFairFilter, Some(q153Oracle))
 
   // ---------------------------------------------------------------- q154
   /** EPOCH PLAN — the step after q144's UniMax token-budget allocation:
@@ -712,6 +711,7 @@ private[graft] trait QueriesAnalytics {
       |  COALESCE(g.order_digest_e2, 0) AS order_digest_e2
       |FROM alloc a LEFT JOIN agg g USING (source)
       |ORDER BY a.source""".stripMargin
+  query("q154_epoch_plan", q154EpochPlan, Some(q154Oracle))
 
   // ---------------------------------------------------------------- q155
   /** LABEL-PROPAGATION COMMUNITIES (ops/LabelProp) — deterministic
@@ -812,6 +812,7 @@ private[graft] trait QueriesAnalytics {
        |  (substr(min(node), 1, 1) = substr(max(node), 1, 1)) AS side_pure
        |FROM l3 GROUP BY label ORDER BY community""".stripMargin
   }
+  query("q155_label_prop", q155LabelProp, Some(q155Oracle))
 
   // ---------------------------------------------------------------- q156
   /** EPOCH SAMPLING-DRIFT AUDIT — did q154's hash-order token-budget
@@ -972,6 +973,7 @@ private[graft] trait QueriesAnalytics {
       |  (SELECT min(g.token) FROM grid g
       |   WHERE g.source = a.source AND g.dev = a.max_dev_ppm) AS worst_token
       |FROM agg a ORDER BY a.source""".stripMargin
+  query("q156_epoch_drift", q156EpochDrift, Some(q156Oracle))
 
   // ---------------------------------------------------------------- q157
   /** BANDED RANGE SELF-JOIN (ops/RangeJoin) — per customer, all pairs
@@ -1024,6 +1026,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST(min(gap) AS BIGINT) AS min_gap,
       |  CAST(max(gap) AS BIGINT) AS max_gap
       |FROM pairs GROUP BY 1 ORDER BY gap_week""".stripMargin
+  query("q157_range_join", q157RangeJoin, Some(q157Oracle))
 
   // ---------------------------------------------------------------- q158
   /** RETENTION COHORT MATRIX — the classic product-analytics rollup
@@ -1082,6 +1085,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST(m.n_active * 1000000 // s.cohort_size AS BIGINT) AS retention_ppm
       |FROM m JOIN s USING (cohort_day)
       |ORDER BY cohort_day, k""".stripMargin
+  query("q158_retention", q158Retention, Some(q158Oracle))
 
   // ---------------------------------------------------------------- q159
   /** PIVOT — the wide-format rollup surface: events per day × event
@@ -1137,6 +1141,7 @@ private[graft] trait QueriesAnalytics {
        |  ($argmax).t AS top_type
        |FROM w ORDER BY day""".stripMargin
   }
+  query("q159_pivot", q159Pivot, Some(q159Oracle))
 
   // ---------------------------------------------------------------- q160
   /** BLOCKED EDIT-DISTANCE FUZZY MATCH — the record-linkage dedup
@@ -1198,6 +1203,7 @@ private[graft] trait QueriesAnalytics {
       |  (min(struct_pack(d := dist, a := a_name, b := b_name))).a AS closest_a,
       |  (min(struct_pack(d := dist, a := a_name, b := b_name))).b AS closest_b
       |FROM pr GROUP BY 1 ORDER BY bucket""".stripMargin
+  query("q160_fuzzy_match", q160FuzzyMatch, Some(q160Oracle))
 
   // ---------------------------------------------------------------- q161
   /** ROLLUP + GROUPING_ID — the subtotal-report surface (CUBE's
@@ -1230,6 +1236,7 @@ private[graft] trait QueriesAnalytics {
       |FROM lineitem
       |GROUP BY ROLLUP (l_returnflag, l_linestatus)
       |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin
+  query("q161_rollup", q161Rollup, Some(q161Oracle))
 
   // ---------------------------------------------------------------- q162
   /** SIX-WAY JOIN (TPC-H Q5 shape) — local-supplier revenue by nation
@@ -1277,6 +1284,7 @@ private[graft] trait QueriesAnalytics {
       |JOIN region ON n_regionkey = r_regionkey
       |WHERE r_name = 'ASIA'
       |GROUP BY n_name ORDER BY n_name""".stripMargin
+  query("q162_six_way_join", q162SixWayJoin, Some(q162Oracle))
 
   // ---------------------------------------------------------------- q163
   /** EXISTS → SEMI JOIN (TPC-H Q4 shape) — orders per priority that
@@ -1307,6 +1315,7 @@ private[graft] trait QueriesAnalytics {
       |  SELECT 1 FROM lineitem l
       |  WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
+  query("q163_exists_late", q163ExistsLate, Some(q163Oracle))
 
   // ---------------------------------------------------------------- q164
   /** PER-GROUP SCALAR AVERAGE FILTER (TPC-H Q17 shape) — lineitems
@@ -1340,6 +1349,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS small_revenue
       |FROM lineitem JOIN a USING (l_partkey)
       |WHERE l_quantity * 5 * cnt < sum_qty""".stripMargin
+  query("q164_scalar_avg", q164ScalarAvg, Some(q164Oracle))
 
   // ---------------------------------------------------------------- q165
   /** NOT IN vs NOT EXISTS under NULLs — the three-valued-logic trap
@@ -1395,6 +1405,7 @@ private[graft] trait QueriesAnalytics {
       |                               WHERE nullif(n_nationkey, 3) IS NOT NULL))
       |      AS cnt_not_in_filtered
       |)""".stripMargin
+  query("q165_not_in_nulls", q165NotInNulls, Some(q165Oracle))
 
   // ---------------------------------------------------------------- q166
   /** NULL-SAFE JOIN SEMANTICS (`<=>` vs `=`) — the other 3VL join
@@ -1444,6 +1455,7 @@ private[graft] trait QueriesAnalytics {
       |SELECT e.n_equi, n.n_null_safe, z.c_nulls, y.s_nulls,
       |  (n.n_null_safe = e.n_equi + z.c_nulls * y.s_nulls) AS null_block_law_ok
       |FROM e, n, z, y""".stripMargin
+  query("q166_null_safe_join", q166NullSafeJoin, Some(q166Oracle))
 
   // ---------------------------------------------------------------- q167
   /** SWEEP-LINE PEAK CONCURRENCY — daily maximum number of
@@ -1530,6 +1542,7 @@ private[graft] trait QueriesAnalytics {
       |FROM dd JOIN p ON dd.day = p.day AND dd.level = p.peak
       |GROUP BY p.day, p.peak
       |ORDER BY day""".stripMargin
+  query("q167_peak_concurrency", q167PeakConcurrency, Some(q167Oracle))
 
   // ---------------------------------------------------------------- q168
   /** SKYLINE (Pareto frontier) — parts not dominated on (size ↑,
@@ -1590,6 +1603,7 @@ private[graft] trait QueriesAnalytics {
       |FROM f JOIN part p ON p.p_size = f.p_size AND p.p_retailprice = f.best_price
       |GROUP BY f.p_size, f.best_price
       |ORDER BY f.p_size""".stripMargin
+  query("q168_skyline", q168Skyline, Some(q168Oracle))
 
   // ---------------------------------------------------------------- q169
   // shared between the Spark query and its oracle so the two synthesized
@@ -1820,6 +1834,7 @@ private[graft] trait QueriesAnalytics {
        |  cstat.n_clusters, cstat.max_cluster
        |FROM cnts, cstat""".stripMargin
   }
+  query("q169_entity_resolution", q169EntityResolution, Some(q169Oracle))
 
   // ---------------------------------------------------------------- q170
   /** EXACT higher statistical moments — per-type stddev, time↔value
@@ -1917,6 +1932,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST(floor(m3p / (m2p * sqrt(m2p)) * 1000000000.0 + 0.5) AS BIGINT) AS skew_e9
       |FROM d2
       |ORDER BY event_type""".stripMargin
+  query("q170_exact_moments", q170ExactMoments, Some(q170Oracle))
 
   // ---------------------------------------------------------------- q171
   /** WINDOW-FUNCTION CERTIFICATE — the full analytic-function surface
@@ -1977,6 +1993,7 @@ private[graft] trait QueriesAnalytics {
       |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
       |  wp AS (PARTITION BY o_custkey ORDER BY o_orderpriority)
       |ORDER BY o_custkey, o_orderkey""".stripMargin
+  query("q171_window_functions", q171WindowFunctions, Some(q171Oracle))
 
   // ---------------------------------------------------------------- q172
   /** GROUPING SETS — arbitrary subtotal combinations in ONE
@@ -2013,6 +2030,7 @@ private[graft] trait QueriesAnalytics {
       |FROM lineitem
       |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus), ())
       |ORDER BY gid, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin
+  query("q172_grouping_sets", q172GroupingSets, Some(q172Oracle))
 
   // ---------------------------------------------------------------- q173
   /** VIDEO KEYFRAME PIPELINE — the video member of the multimodal fleet
@@ -2115,6 +2133,7 @@ private[graft] trait QueriesAnalytics {
       |FROM km
       |GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin
+  query("q173_video_keyframes", q173VideoKeyframes, Some(q173Oracle))
 
   // ---------------------------------------------------------------- q174
   /** TRIANGLE COUNTING ([[graft.ops.Triangles]]) — degree-ordered
@@ -2146,7 +2165,7 @@ private[graft] trait QueriesAnalytics {
   }
 
   // the same graph as a DuckDB CTE body (shared by the q174/q184 oracles)
-  private[graft] val BlockGraphSql: String =
+  private[graft] def BlockGraphSql: String =
     """SELECT cand.k AS u, cand.v
       |  FROM (SELECT k.c_custkey AS k, k.c_custkey + d.d AS v
       |        FROM customer k, (SELECT unnest([1, 2, 5]) AS d) d
@@ -2189,6 +2208,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST(COALESCE(tb.n_triangles, 0) AS BIGINT) AS n_triangles
       |FROM eb LEFT JOIN tb ON eb.bucket = tb.bucket
       |ORDER BY bucket""".stripMargin
+  query("q174_triangles", q174Triangles, Some(q174Oracle))
 
   // ---------------------------------------------------------------- q175
   /** TPC-H Q21 SHAPE — "sole late supplier": suppliers whose line was
@@ -2244,6 +2264,7 @@ private[graft] trait QueriesAnalytics {
       |GROUP BY s.s_name
       |ORDER BY numwait DESC, s_name
       |LIMIT 20""".stripMargin
+  query("q175_sole_late_supplier", q175SoleLateSupplier, Some(q175Oracle))
 
   // ---------------------------------------------------------------- q176
   /** TPC-H Q22 SHAPE — customers with above-average balance and no
@@ -2299,6 +2320,7 @@ private[graft] trait QueriesAnalytics {
       |      AND o.o_orderdate >= (SELECT max(o_orderdate) FROM orders) - INTERVAL 60 DAY)
       |GROUP BY c.c_mktsegment
       |ORDER BY c.c_mktsegment""".stripMargin
+  query("q176_global_avg_anti", q176GlobalAvgAnti, Some(q176Oracle))
 
   // ---------------------------------------------------------------- q177
   /** SET-OPERATION CERTIFICATE — bag (ALL) vs set semantics across
@@ -2344,6 +2366,7 @@ private[graft] trait QueriesAnalytics {
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM (SELECT * FROM a UNION SELECT * FROM b)) AS n_union_distinct,
       |  (SELECT CAST(COALESCE(SUM(x), 0) AS BIGINT) FROM ia) AS sum_intersect_all,
       |  (SELECT CAST(COALESCE(SUM(x), 0) AS BIGINT) FROM ea) AS sum_except_all""".stripMargin
+  query("q177_set_ops", q177SetOps, Some(q177Oracle))
 
   // ---------------------------------------------------------------- q178
   /** EXPLODE vs EXPLODE_OUTER CERTIFICATE — generator null/empty
@@ -2430,6 +2453,7 @@ private[graft] trait QueriesAnalytics {
       |  sum_pos_closed AS sum_pos,
       |  TRUE AS pos_zero_based_ok
       |FROM stats""".stripMargin
+  query("q178_explode_outer", q178ExplodeOuter, Some(q178Oracle))
 
   // ---------------------------------------------------------------- q179
   /** ARRAY HIGHER-ORDER-FUNCTION CERTIFICATE — the lambda surface
@@ -2471,6 +2495,7 @@ private[graft] trait QueriesAnalytics {
       |  SELECT doc_id, list_slice(string_split_regex(trim(text), '\s+'), 1, 8) AS tk
       |  FROM documents WHERE doc_id < 300)
       |ORDER BY doc_id""".stripMargin
+  query("q179_array_hof", q179ArrayHof, Some(q179Oracle))
 
   // ---------------------------------------------------------------- q180
   /** INCREMENTAL VIEW MAINTENANCE ([[graft.ops.Ivm]]) — a per-key
@@ -2564,6 +2589,7 @@ private[graft] trait QueriesAnalytics {
       |  (kept.m_sm IS NOT DISTINCT FROM recomputed.r_sm) AS sum_law_ok
       |FROM kept FULL OUTER JOIN recomputed ON kept.k = recomputed.k
       |ORDER BY k""".stripMargin
+  query("q180_ivm", q180Ivm, Some(q180Oracle))
 
   // ---------------------------------------------------------------- q181
   /** MULTI-TOUCH ATTRIBUTION — for every purchase, the view/click
@@ -2643,6 +2669,7 @@ private[graft] trait QueriesAnalytics {
       |FROM pr
       |GROUP BY channel
       |ORDER BY channel""".stripMargin
+  query("q181_attribution", q181Attribution, Some(q181Oracle))
 
   // ---------------------------------------------------------------- q182
   /** TIME-WEIGHTED AVERAGE (TWAP) — per user, the step-function
@@ -2698,6 +2725,7 @@ private[graft] trait QueriesAnalytics {
       |GROUP BY user_id
       |HAVING SUM(dur) > 0
       |ORDER BY user_id""".stripMargin
+  query("q182_twap", q182Twap, Some(q182Oracle))
 
   // ---------------------------------------------------------------- q183
   /** OHLC BARS — per (event_type, UTC day): open/close via
@@ -2768,6 +2796,7 @@ private[graft] trait QueriesAnalytics {
       |    (PARTITION BY event_type ORDER BY day), 0) AS BIGINT) AS gap_cents
       |FROM bars
       |ORDER BY event_type, day""".stripMargin
+  query("q183_ohlc", q183Ohlc, Some(q183Oracle))
 
   // ---------------------------------------------------------------- q184
   /** K-CORE DECOMPOSITION ([[graft.ops.KCore]]) — iterative peeling to
@@ -2880,6 +2909,7 @@ private[graft] trait QueriesAnalytics {
        |)
        |ORDER BY k, bucket""".stripMargin
   }
+  query("q184_kcore", q184KCore, Some(q184Oracle))
 
   // ---------------------------------------------------------------- q185
   /** TRENDING VALUES — day-over-day frequency lift with +1 smoothing:
@@ -2962,6 +2992,7 @@ private[graft] trait QueriesAnalytics {
       |SELECT CAST(day AS VARCHAR) AS day, CAST(rnk AS INT) AS rnk, kv, cnt, lift_ppm
       |FROM rk WHERE rnk <= 3
       |ORDER BY day, rnk""".stripMargin
+  query("q185_trending", q185Trending, Some(q185Oracle))
 
   // ---------------------------------------------------------------- q186
   /** RATIO-TO-REPORT CERTIFICATE — the percent-of-total analytic
@@ -3020,6 +3051,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST((type_total * 1000000) // grand AS BIGINT) AS type_share_ppm
       |FROM w
       |ORDER BY event_type, day""".stripMargin
+  query("q186_ratio_report", q186RatioReport, Some(q186Oracle))
 
   // ---------------------------------------------------------------- q187
   /** MOVING MEDIAN — 7-day discrete sliding median of daily event
@@ -3086,6 +3118,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST(n_win AS BIGINT) AS n_win, wcnt AS med7
       |FROM rk WHERE rn = (n_win + 1) // 2
       |ORDER BY event_type, day""".stripMargin
+  query("q187_moving_median", q187MovingMedian, Some(q187Oracle))
 
   // ---------------------------------------------------------------- q189
   /** WEIGHTED MEDIAN via the distributed prefix sum
@@ -3139,6 +3172,7 @@ private[graft] trait QueriesAnalytics {
       |WHERE c.cumw * 2 >= t.wtot
       |GROUP BY c.flag, t.wtot
       |ORDER BY c.flag""".stripMargin
+  query("q189_weighted_median", q189WeightedMedian, Some(q189Oracle))
 
   // ---------------------------------------------------------------- q190
   /** JOURNEY PATTERN MINING — each user's event history collapses to an
@@ -3193,6 +3227,7 @@ private[graft] trait QueriesAnalytics {
       |FROM pats CROSS JOIN j
       |GROUP BY pattern
       |ORDER BY pattern""".stripMargin
+  query("q190_journey_patterns", q190JourneyPatterns, Some(q190Oracle))
 
   // ---------------------------------------------------------------- q191
   /** CLAMPED RUNNING BALANCE ([[graft.ops.Sweep.clampedRunningSum]]) —
@@ -3259,6 +3294,7 @@ private[graft] trait QueriesAnalytics {
       |FROM r
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin
+  query("q191_clamped_balance", q191ClampedBalance, Some(q191Oracle))
 
   // ---------------------------------------------------------------- q192
   /** EXACT MERGEABLE DISTINCT — the bitmap-rollup law HLL only
@@ -3331,6 +3367,7 @@ private[graft] trait QueriesAnalytics {
       |  w.sum_daily - d.n_direct AS naive_overcount
       |FROM direct d JOIN weekly w ON d.event_type = w.event_type AND d.wk = w.wk
       |ORDER BY d.event_type, d.wk""".stripMargin
+  query("q192_mergeable_distinct", q192MergeableDistinct, Some(q192Oracle))
 
   // ---------------------------------------------------------------- q193
   /** FUNNEL TIME-TO-CONVERT — users whose first purchase follows their
@@ -3390,6 +3427,7 @@ private[graft] trait QueriesAnalytics {
       |FROM r
       |WHERE rn = (n + 1) // 2 OR rn = (n * 9) // 10 + 1
       |GROUP BY n""".stripMargin
+  query("q193_time_to_convert", q193TimeToConvert, Some(q193Oracle))
 
   // ---------------------------------------------------------------- q194
   /** RFM SEGMENTATION — the classic marketing cube: per user, Recency
@@ -3442,6 +3480,7 @@ private[graft] trait QueriesAnalytics {
       |FROM q
       |GROUP BY r_q, f_q, m_q
       |ORDER BY r_q, f_q, m_q""".stripMargin
+  query("q194_rfm", q194Rfm, Some(q194Oracle))
 
   // ---------------------------------------------------------------- q195
   /** FIFO LOT DEPLETION — first-in-first-out inventory matching made
@@ -3542,6 +3581,7 @@ private[graft] trait QueriesAnalytics {
       |FROM pp
       |GROUP BY 1
       |ORDER BY bucket""".stripMargin
+  query("q195_fifo", q195Fifo, Some(q195Oracle))
 
   // ---------------------------------------------------------------- q196
   /** ISO WEEKDAY CERTIFICATE — day-of-week semantics differ per engine
@@ -3583,6 +3623,7 @@ private[graft] trait QueriesAnalytics {
       |FROM e
       |GROUP BY isodow(day), dayname(day)
       |ORDER BY isodow""".stripMargin
+  query("q196_iso_weekday", q196IsoWeekday, Some(q196Oracle))
 
   // ---------------------------------------------------------------- q197
   /** UNICODE STRING CERTIFICATE — code-point vs byte semantics across
@@ -3636,6 +3677,7 @@ private[graft] trait QueriesAnalytics {
       |  split_part(t, ',', 2) AS csv2
       |FROM s
       |ORDER BY t""".stripMargin
+  query("q197_unicode", q197Unicode, Some(q197Oracle))
 
   // ---------------------------------------------------------------- q198
   /** NEGATIVE INTEGER DIVISION CERTIFICATE — `div` / `%` / `pmod` on a
@@ -3687,6 +3729,7 @@ private[graft] trait QueriesAnalytics {
       |  (b < 0 OR CASE WHEN (a % b) < 0 THEN ((a % b) + b) % b ELSE a % b END >= 0) AS pmod_nonneg_ok
       |FROM g
       |ORDER BY a, b""".stripMargin
+  query("q198_int_division", q198IntDivision, Some(q198Oracle))
 
   // ---------------------------------------------------------------- q199
   /** LOG₂-BUCKETED HISTOGRAM (HdrHistogram-style) — latency/value
@@ -3749,6 +3792,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST((cum * 1000000) // total AS BIGINT) AS cum_ppm
       |FROM w
       |ORDER BY event_type, bucket""".stripMargin
+  query("q199_log_histogram", q199LogHistogram, Some(q199Oracle))
 
   // ---------------------------------------------------------------- q200
   /** DAILY OPERATIONS DASHBOARD — the analytics-family capstone (the
@@ -3890,6 +3934,7 @@ private[graft] trait QueriesAnalytics {
       |LEFT JOIN st ON st.day = core.day
       |LEFT JOIN pk ON pk.day = core.day
       |ORDER BY day""".stripMargin
+  query("q200_daily_dashboard", q200DailyDashboard, Some(q200Oracle))
 
   // ---------------------------------------------------------------- q201
   /** GEO GRID INDEX ([[graft.ops.Geo]]) — stations (synthetic
@@ -3950,6 +3995,7 @@ private[graft] trait QueriesAnalytics {
       |FROM rk
       |GROUP BY cr, cc
       |ORDER BY cr, cc""".stripMargin
+  query("q201_geo_grid", q201GeoGrid, Some(q201Oracle))
 
   // ---------------------------------------------------------------- q202
   /** SPATIAL RADIUS JOIN ([[graft.ops.Geo.radiusJoin]]) — every
@@ -4038,6 +4084,7 @@ private[graft] trait QueriesAnalytics {
       |FROM b
       |GROUP BY bucket
       |ORDER BY bucket""".stripMargin
+  query("q202_spatial_join", q202SpatialJoin, Some(q202Oracle))
 
   // ---------------------------------------------------------------- q204
   /** SPATIAL k-NN — top-3 nearest stations per point among the 5°
@@ -4107,6 +4154,7 @@ private[graft] trait QueriesAnalytics {
       |FROM t3
       |GROUP BY 1
       |ORDER BY bucket""".stripMargin
+  query("q204_spatial_knn", q204SpatialKnn, Some(q204Oracle))
 
   // ---------------------------------------------------------------- q205
   /** WATERMARK LATE-ARRIVAL ACCOUNTING — streaming semantics certified
@@ -4163,6 +4211,7 @@ private[graft] trait QueriesAnalytics {
       |FROM l
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
+  query("q205_late_arrivals", q205LateArrivals, Some(q205Oracle))
 
   // ---------------------------------------------------------------- q206
   /** DEDUP IDEMPOTENCE — pipeline re-run safety as a law: applying
@@ -4209,6 +4258,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST(bit_xor(event_id) AS BIGINT) AS a_xor,
       |  TRUE AS n_stable, TRUE AS sum_stable, TRUE AS xor_stable
       |FROM d1""".stripMargin
+  query("q206_dedup_idempotence", q206DedupIdempotence, Some(q206Oracle))
 
   // ---------------------------------------------------------------- q208
   /** Z-ORDER EFFECTIVENESS, MEASURED — q89 computes the layout; this
@@ -4270,6 +4320,7 @@ private[graft] trait QueriesAnalytics {
        |GROUP BY q.qid
        |ORDER BY q.qid""".stripMargin
   }
+  query("q208_zorder_effect", q208ZorderEffect, Some(q208Oracle))
 
   // ---------------------------------------------------------------- q209
   /** NULL-SEMANTICS AGGREGATE TRUTH TABLE — the exact rules every
@@ -4324,6 +4375,7 @@ private[graft] trait QueriesAnalytics {
       |FROM ev
       |GROUP BY g
       |ORDER BY g ASC NULLS FIRST""".stripMargin
+  query("q209_null_aggregates", q209NullAggregates, Some(q209Oracle))
 
   // ---------------------------------------------------------------- q210
   /** NULL-ORDERING CERTIFICATE — the DEFAULTS differ (Spark ASC puts
@@ -4380,6 +4432,7 @@ private[graft] trait QueriesAnalytics {
       |  CAST(SUM(CASE WHEN v IS NULL THEN rdf ELSE 0 END) AS BIGINT) AS nullpos_desc_first,
       |  CAST(SUM(CASE WHEN v IS NULL THEN rdl ELSE 0 END) AS BIGINT) AS nullpos_desc_last
       |FROM r""".stripMargin
+  query("q210_null_ordering", q210NullOrdering, Some(q210Oracle))
 
   // ---------------------------------------------------------------- q211
   /** JOIN-MULTIPLICITY MATRIX — every join type on one planted pair of
@@ -4430,6 +4483,7 @@ private[graft] trait QueriesAnalytics {
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM a CROSS JOIN b) AS n_cross,
       |  TRUE AS left_law_ok,
       |  TRUE AS full_law_ok""".stripMargin
+  query("q211_join_matrix", q211JoinMatrix, Some(q211Oracle))
 
   // ---------------------------------------------------------------- q212
   /** CAST / COERCION TRUTH TABLE — ANSI-off cast semantics pinned on
@@ -4504,5 +4558,6 @@ private[graft] trait QueriesAnalytics {
       |  (SELECT CAST(COALESCE(SUM(s_to_double), 0.0) AS DOUBLE) FROM sc) AS sum_str_dbl,
       |  (SELECT CAST(SUM(d_to_int) AS BIGINT) FROM dc) AS sum_dbl_int,
       |  (SELECT CAST(SUM(d_to_long) AS BIGINT) FROM dc) AS sum_dbl_long""".stripMargin
+  query("q212_cast_table", q212CastTable, Some(q212Oracle))
 
 }

@@ -4,14 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** core relational pipeline, dedup, text & ANN foundations
-  *
-  * Mechanical split of the former single-object registry (r11):
-  * statement order across the trait linearization in Queries.scala
-  * is the original file order, so val-initialization semantics are
-  * unchanged. See object Queries for the assembly.
-  */
-private[graft] trait QueriesCore {
+/** core relational pipeline, dedup, text & ANN foundations */
+private[graft] trait QueriesCore extends QueryRegistration {
   this: QueriesCore with QueriesCuration with QueriesAnalytics with QueriesExact with QueriesGraph =>
 
   /** Decimal-accumulated, order-independent sum of a double column,
@@ -48,6 +42,7 @@ private[graft] trait QueriesCore {
       |WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
+  query("q1_agg", q1Agg, Some(q1Oracle))
 
   // ---------------------------------------------------------------- q2
   /** P4/P5/P6: filter battery — null guards + allowlist + range predicate,
@@ -75,6 +70,7 @@ private[graft] trait QueriesCore {
       |WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
       |  AND l_returnflag IN ('A','R') AND l_quantity > 45.0
       |ORDER BY l_orderkey, l_linenumber, l_returnflag, l_quantity""".stripMargin
+  query("q2_filter", q2Filter, Some(q2Oracle))
 
   // ---------------------------------------------------------------- q3
   /** J1: broadcast dimension enrichment — customer⋈nation⋈region with both
@@ -99,6 +95,7 @@ private[graft] trait QueriesCore {
       |JOIN region ON n_regionkey = r_regionkey
       |GROUP BY r_name, n_name
       |ORDER BY r_name, n_name""".stripMargin
+  query("q3_enrich", q3Enrich, Some(q3Oracle))
 
   // ---------------------------------------------------------------- q4
   /** J2: batch watermark anti-join. A cursor snapshot (max ts per key over
@@ -127,6 +124,7 @@ private[graft] trait QueriesCore {
       |WHERE e.event_id >= 5000
       |  AND (c.last_observed_at IS NULL OR e.ts > c.last_observed_at)
       |ORDER BY e.event_id""".stripMargin
+  query("q4_watermark", q4Watermark, Some(q4Oracle))
 
   // ---------------------------------------------------------------- q5
   /** A3: deterministic first-wins exact dedup on the natural key
@@ -146,6 +144,7 @@ private[graft] trait QueriesCore {
       |  FROM events) t
       |WHERE rn = 1
       |ORDER BY event_id""".stripMargin
+  query("q5_dedup", q5Dedup, Some(q5Oracle))
 
   // ---------------------------------------------------------------- q6
   /** §2.5: latest value per key (ranking window, desc). */
@@ -162,6 +161,7 @@ private[graft] trait QueriesCore {
       |  FROM events) t
       |WHERE rn = 1
       |ORDER BY user_id, event_type""".stripMargin
+  query("q6_latest", q6Latest, Some(q6Oracle))
 
   // ---------------------------------------------------------------- q7
   /** T5: hourly tumbling rollup on event time. Hour emitted as a formatted
@@ -188,6 +188,7 @@ private[graft] trait QueriesCore {
       |FROM events
       |GROUP BY 1, 2
       |ORDER BY hour, event_type""".stripMargin
+  query("q7_hourly", q7Hourly, Some(q7Oracle))
 
   // ---------------------------------------------------------------- q8
   /** U1/U2: schema-reconciling union of three "source" slices; one slice
@@ -212,6 +213,7 @@ private[graft] trait QueriesCore {
       |UNION ALL
       |SELECT c_custkey, c_name, NULL AS c_acctbal, 'm' AS src FROM customer WHERE c_mktsegment = 'MACHINERY'
       |ORDER BY c_custkey, src""".stripMargin
+  query("q8_union", q8Union, Some(q8Oracle))
 
   // ---------------------------------------------------------------- q9
   /** L1: top-k — Spark plans TakeOrderedAndProject (no global sort of the
@@ -230,6 +232,7 @@ private[graft] trait QueriesCore {
       |FROM lineitem
       |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber, l_quantity
       |LIMIT 100""".stripMargin
+  query("q9_topk", q9Topk, Some(q9Oracle))
 
   // ---------------------------------------------------------------- q10
   /** A5: COALESCE-upsert — catalog merge where a new non-null value wins
@@ -264,6 +267,7 @@ private[graft] trait QueriesCore {
       |       COALESCE(u.c_mktsegment, b.c_mktsegment) AS c_mktsegment
       |FROM upd u FULL OUTER JOIN base b ON u.c_custkey = b.c_custkey
       |ORDER BY c_custkey""".stripMargin
+  query("q10_upsert", q10Upsert, Some(q10Oracle))
 
   // ---------------------------------------------------------------- q11
   /** A4/A6: GREATEST-merge of two cursor snapshots — the watermark only
@@ -299,6 +303,7 @@ private[graft] trait QueriesCore {
       |FROM newc n FULL OUTER JOIN oldc o
       |  ON n.user_id = o.user_id AND n.event_type = o.event_type
       |ORDER BY user_id, event_type""".stripMargin
+  query("q11_greatest", q11Greatest, Some(q11Oracle))
 
   // ---------------------------------------------------------------- q12
   /** F15/F16: JSON field access on the events.props payload (the
@@ -319,6 +324,7 @@ private[graft] trait QueriesCore {
       |FROM events
       |WHERE TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) IS NOT NULL
       |ORDER BY event_id""".stripMargin
+  query("q12_json", q12Json, Some(q12Oracle))
 
   // ---------------------------------------------------------------- q13
   /** S7-analogue: the one nested→flat generator (explode) — word counts
@@ -339,6 +345,7 @@ private[graft] trait QueriesCore {
       |GROUP BY word
       |ORDER BY n DESC, word
       |LIMIT 50""".stripMargin
+  query("q13_explode", q13Explode, Some(q13Oracle))
 
   // ---------------------------------------------------------------- q14
   /** F7-F10: timestamp battery — calendar truncation, field extraction,
@@ -364,6 +371,7 @@ private[graft] trait QueriesCore {
       |  strftime(ts + INTERVAL 6 HOUR, '%Y-%m-%d %H:%M:%S') AS plus6h
       |FROM events
       |ORDER BY event_id""".stripMargin
+  query("q14_timestamps", q14Timestamps, Some(q14Oracle))
 
   // ---------------------------------------------------------------- q15
   /** F1-F6, F11, F17: scalar string battery (lower/upper/trim/substring/
@@ -400,6 +408,7 @@ private[graft] trait QueriesCore {
       |  round(p_retailprice * 1.1, 2) AS inflated
       |FROM part
       |ORDER BY p_partkey, p_name""".stripMargin
+  query("q15_strings", q15Strings, Some(q15Oracle))
 
   // ---------------------------------------------------------------- q16
   /** J1 (fact side): lineitem ⋈ part ⋈ supplier, both dims broadcast;
@@ -423,6 +432,7 @@ private[graft] trait QueriesCore {
       |JOIN supplier ON l_suppkey = s_suppkey
       |GROUP BY p_brand
       |ORDER BY p_brand""".stripMargin
+  query("q16_join_parts", q16JoinParts, Some(q16Oracle))
 
   // ---------------------------------------------------------------- q17
   /** A2: count by source/group (reference app/main.py:1205-1209). */
@@ -438,6 +448,7 @@ private[graft] trait QueriesCore {
       |FROM documents
       |GROUP BY source, lang
       |ORDER BY source, lang""".stripMargin
+  query("q17_count_by", q17CountBy, Some(q17Oracle))
 
   // ---------------------------------------------------------------- q18
   /** F7: lenient multi-format timestamp parsing round-trip. Raw strings in
@@ -480,6 +491,7 @@ private[graft] trait QueriesCore {
       |    TRY_STRPTIME(ts_raw, '%Y-%m-%d %H:%M:%S')), '%Y-%m-%d %H:%M:%S') AS parsed
       |FROM raw
       |ORDER BY event_id""".stripMargin
+  query("q18_parse_ts", q18ParseTs, Some(q18Oracle))
 
   // ---------------------------------------------------------------- q19
   /** P1/P3/P5/P6/F13: the full measurement normalization pipeline — raw
@@ -583,6 +595,7 @@ private[graft] trait QueriesCore {
       |  AND regexp_replace(lower(trim(pollutant)), 'pm2\.5', 'pm25') IN
       |      ('pm25','pm10','no2','o3','nox','no','co','so2')
       |ORDER BY station_id, pollutant, ts, "value", location_name""".stripMargin
+  query("q19_normalize", q19Normalize, Some(q19Oracle))
 
   // ---------------------------------------------------------------- q20
   /** P2/P4/P7: station-catalog normalization — coordinate null-island drop
@@ -624,6 +637,7 @@ private[graft] trait QueriesCore {
       |WHERE lat IS NOT NULL AND lon IS NOT NULL
       |  AND contains(lower(station_type), 'automat')
       |ORDER BY station_id""".stripMargin
+  query("q20_stations", q20Stations, Some(q20Oracle))
 
   // ---------------------------------------------------------------- q21
   /** Text quality scoring: per-doc token/uniqueness/stopword features and
@@ -664,6 +678,7 @@ private[graft] trait QueriesCore {
       |  0.3 * least(CAST(n_tokens AS DOUBLE) / 200.0, 1.0) AS quality_score
       |FROM f
       |ORDER BY doc_id""".stripMargin
+  query("q21_text_quality", q21TextQuality, Some(q21Oracle))
 
   // ---------------------------------------------------------------- q22
   /** Language-ID heuristic: marker-token counts with fixed-precedence
@@ -692,6 +707,7 @@ private[graft] trait QueriesCore {
       |       ELSE 'unknown' END AS lang_pred
       |FROM c
       |ORDER BY doc_id""".stripMargin
+  query("q22_lang_id", q22LangId, Some(q22Oracle))
 
   // ---------------------------------------------------------------- q23
   /** Document fingerprinting: whitespace-normalized md5 (engine-portable;
@@ -707,6 +723,7 @@ private[graft] trait QueriesCore {
     """SELECT doc_id, md5(regexp_replace(trim(text), '\s+', ' ', 'g')) AS fp
       |FROM documents
       |ORDER BY doc_id""".stripMargin
+  query("q23_fingerprint", q23Fingerprint, Some(q23Oracle))
 
   // ---------------------------------------------------------------- q24
   /** Exact text dedup at scale: hash-groupBy on the fingerprint, keep the
@@ -726,6 +743,7 @@ private[graft] trait QueriesCore {
       |FROM documents
       |GROUP BY 1
       |ORDER BY keeper""".stripMargin
+  query("q24_dedup_text", q24DedupText, Some(q24Oracle))
 
   // ---------------------------------------------------------------- q25
   /** Similarity search, exact baseline: cosine top-5 for 10 query vectors
@@ -752,6 +770,7 @@ private[graft] trait QueriesCore {
       |  WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id
       |) WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin
+  query("q25_knn_brute", q25KnnBrute, Some(q25Oracle))
 
   // ---------------------------------------------------------------- q26
   /** Token counting: whitespace tokens vs BPE-ish regex pre-tokenization. */
@@ -773,6 +792,7 @@ private[graft] trait QueriesCore {
       |  n_chars
       |FROM documents
       |ORDER BY doc_id""".stripMargin
+  query("q26_token_counts", q26TokenCounts, Some(q26Oracle))
 
   // ---------------------------------------------------------------- q27
   /** MinHash+LSH near-dup detection — the TIMED production path over the
@@ -820,6 +840,8 @@ private[graft] trait QueriesCore {
           .as("mean_jac"),
         when(count(lit(1)) > 0, round(min(col("jac")), 6)).as("min_jac")
       )
+
+  query("q27_minhash_dedup", q27MinhashDedup, None)
 
   // ---------------------------------------------------------------- q28
   /** SimHash signatures.
@@ -870,6 +892,7 @@ private[graft] trait QueriesCore {
       .agg(round(corr(col("ham"), col("jac")), 4).as("audit_ham_jac_corr"))
     sigs.crossJoin(broadcast(audit)).orderBy(col("doc_id"))
   }
+  query("q28_simhash", q28Simhash, None)
 
   // ---------------------------------------------------------------- q29
   /** Bigram-shingle Jaccard near-dups with source-blocked pairing. */
@@ -894,6 +917,7 @@ private[graft] trait QueriesCore {
       |WHERE CAST(len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE) /
       |      CAST(len(a.sh) + len(b.sh) - len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS DOUBLE) >= 0.5
       |ORDER BY 1, id_a, id_b""".stripMargin
+  query("q29_ngram_jaccard", q29NgramJaccard, Some(q29Oracle))
 
   // ---------------------------------------------------------------- q30
   /** ANN top-k via random-hyperplane LSH (approximate scale path;
@@ -918,6 +942,7 @@ private[graft] trait QueriesCore {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
       .orderBy(col("query_id"), col("rank"))
   }
+  query("q30_ann_lsh", q30AnnLsh, None)
 
   // ---------------------------------------------------------------- q31
   /** Embedding near-duplicate pairs at cosine ≥ 0.35 via shared LSH
@@ -944,6 +969,7 @@ private[graft] trait QueriesCore {
         threshold = 0.35, nbits = nbits, tables = tables, probes = 1)
       .orderBy(col("id_a"), col("id_b"))
   }
+  query("q31_embed_neardups", q31EmbedNearDups, None)
 
   // ---------------------------------------------------------------- q45
   /** Exact embedding near-dup pairs (cosine >= 0.35) — the brute-force
@@ -969,6 +995,7 @@ private[graft] trait QueriesCore {
       |WHERE a.vec_id < b.vec_id
       |  AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) >= 0.35
       |ORDER BY id_a, id_b""".stripMargin
+  query("q45_embed_neardups_exact", q45EmbedNearDupsExact, Some(q45Oracle))
 
   // ---------------------------------------------------------------- q46
   /** Exact token-set Jaccard >= 0.9 pairs on a BOUNDED slice (doc_id <
@@ -1000,6 +1027,7 @@ private[graft] trait QueriesCore {
       |WHERE CAST(len(list_filter(a.tk, x -> list_contains(b.tk, x))) AS DOUBLE) /
       |      CAST(len(a.tk) + len(b.tk) - len(list_filter(a.tk, x -> list_contains(b.tk, x))) AS DOUBLE) >= 0.9
       |ORDER BY id_a, id_b""".stripMargin
+  query("q46_text_neardups_exact", q46TextNearDupsExact, Some(q46Oracle))
 
   // ---------------------------------------------------------------- q48
   /** In-registry recall of the LSH minhash path (q27's 16×16 banding at
@@ -1036,6 +1064,7 @@ private[graft] trait QueriesCore {
         round(col("n_found").cast("double") / col("n_exact").cast("double"), 4).as("recall")
       )
   }
+  query("q48_minhash_recall", q48MinhashRecall, None)
 
   // ---------------------------------------------------------------- q55
   /** SCD2 dimension history: collapse each user's event stream into
@@ -1093,6 +1122,7 @@ private[graft] trait QueriesCore {
       |  COALESCE(lead(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id), -1) AS valid_to_us
       |FROM changes
       |ORDER BY user_id, version""".stripMargin
+  query("q55_scd2", q55Scd2, Some(q55Oracle))
 
   // ---------------------------------------------------------------- q58
   /** Gopher-style repetition quality signals per document: duplicated
@@ -1129,6 +1159,7 @@ private[graft] trait QueriesCore {
       |        CAST(len(toks) AS DOUBLE), 6) AS top_token_ratio
       |FROM g
       |ORDER BY doc_id""".stripMargin
+  query("q58_repetition", q58Repetition, Some(q58Oracle))
 
   // ---------------------------------------------------------------- q57
   /** Training sequence PACKING: lay each source's documents end-to-end
@@ -1186,6 +1217,7 @@ private[graft] trait QueriesCore {
       |  CAST((tok_end - 1) // 512 AS BIGINT) AS pack_last
       |FROM c
       |ORDER BY source, doc_id""".stripMargin
+  query("q57_seq_pack", q57SeqPack, Some(q57Oracle))
 
   // ---------------------------------------------------------------- q56
   /** Data-quality expectation battery — the constraint checks a
@@ -1240,6 +1272,7 @@ private[graft] trait QueriesCore {
       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem
       |     WHERE l_orderkey IS NOT NULL
       |       AND l_orderkey NOT IN (SELECT o_orderkey FROM orders WHERE o_orderkey IS NOT NULL)) AS li_orphan_orderkeys""".stripMargin
+  query("q56_dq_checks", q56DqChecks, Some(q56Oracle))
 
   // ---------------------------------------------------------------- q54
   /** End-to-end MEDIA DEDUP, REAL codec since round 6: binary payloads
@@ -1404,6 +1437,7 @@ private[graft] trait QueriesCore {
        |  round(CAST(n_identical_found AS DOUBLE) / CAST(n_identical AS DOUBLE), 4) AS recall_identical
        |FROM ra, ia""".stripMargin
   }
+  query("q54_media_dedup", q54MediaDedup, None)
 
   // ---------------------------------------------------------------- q52
   /** Deterministic stratified sampling: 10 docs per source in a
@@ -1432,6 +1466,7 @@ private[graft] trait QueriesCore {
       |  FROM documents
       |) WHERE rn <= 10
       |ORDER BY source, rn""".stripMargin
+  query("q52_stratified_sample", q52StratifiedSample, Some(q52Oracle))
 
   // ---------------------------------------------------------------- q53
   /** Text cleaning battery: deterministic dirty text (synthetic email +
@@ -1465,6 +1500,7 @@ private[graft] trait QueriesCore {
       |    '\s+', ' ', 'g')) AS clean
       |FROM documents
       |ORDER BY doc_id""".stripMargin
+  query("q53_text_clean", q53TextClean, Some(q53Oracle))
 
   // ---------------------------------------------------------------- q51
   /** Near-dup CLUSTERS: connected components over the exact-pair graph
@@ -1482,6 +1518,27 @@ private[graft] trait QueriesCore {
     )
     Components.connectedComponents(pairs).orderBy(col("id"))
   }
+
+  val q51Oracle: String =
+    """WITH RECURSIVE t AS (
+      |  SELECT doc_id, list_distinct(string_split_regex(trim(text), '\s+')) AS tk
+      |  FROM documents WHERE doc_id < 500
+      |), edges AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM t a JOIN t b ON a.doc_id < b.doc_id
+      |  WHERE CAST(len(list_filter(a.tk, x -> list_contains(b.tk, x))) AS DOUBLE) /
+      |        CAST(len(a.tk) + len(b.tk) - len(list_filter(a.tk, x -> list_contains(b.tk, x))) AS DOUBLE) >= 0.9
+      |), sym AS (
+      |  SELECT id_a AS src, id_b AS dst FROM edges
+      |  UNION ALL
+      |  SELECT id_b, id_a FROM edges
+      |), reach(id, comp) AS (
+      |  SELECT DISTINCT src, src FROM sym
+      |  UNION
+      |  SELECT s.dst, r.comp FROM reach r JOIN sym s ON s.src = r.id
+      |)
+      |SELECT id, MIN(comp) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin
+  query("q51_connected_components", q51ConnectedComponents, Some(q51Oracle))
 
   // ---------------------------------------------------------------- q61
   /** Benchmark DECONTAMINATION — the n-gram collision check every LLM
@@ -1543,6 +1600,7 @@ private[graft] trait QueriesCore {
       |FROM d LEFT JOIN hits h ON d.doc_id = h.doc_id
       |WHERE d.doc_id >= 50
       |ORDER BY d.doc_id""".stripMargin
+  query("q61_decontaminate", q61Decontaminate, Some(q61Oracle))
 
   // ---------------------------------------------------------------- q64
   /** q61's decontamination with a BLOOM-PREFILTERED probe — the shape
@@ -1581,6 +1639,7 @@ private[graft] trait QueriesCore {
       )
       .orderBy(col("doc_id"))
   }
+  query("q64_decontaminate_bloom", q64DecontaminateBloom, Some(q61Oracle))
 
   // ---------------------------------------------------------------- q62
   /** Data-MIXTURE weights: per-source token counts → temperature-scaled
@@ -1637,6 +1696,7 @@ private[graft] trait QueriesCore {
       |  round(share, 6) AS share,
       |  round(powed / z.z, 6) AS weight
       |FROM p, z ORDER BY source""".stripMargin
+  query("q62_mixture_weights", q62MixtureWeights, Some(q62Oracle))
 
   // ---------------------------------------------------------------- q63
   /** Context-window CHUNKING with overlap (window 16 tokens, stride 12)
@@ -1694,6 +1754,7 @@ private[graft] trait QueriesCore {
       |  array_to_string(toks[i*12+1 : i*12+16], ' ') AS chunk_text
       |FROM e
       |ORDER BY doc_id, chunk_idx""".stripMargin
+  query("q63_chunking", q63Chunk, Some(q63Oracle))
 
   // ---------------------------------------------------------------- q60
   /** The SAME component closure as q51, computed by the O(log n)
@@ -1713,26 +1774,7 @@ private[graft] trait QueriesCore {
     )
     Components.largeStarSmallStar(pairs).orderBy(col("id"))
   }
-
-  val q51Oracle: String =
-    """WITH RECURSIVE t AS (
-      |  SELECT doc_id, list_distinct(string_split_regex(trim(text), '\s+')) AS tk
-      |  FROM documents WHERE doc_id < 500
-      |), edges AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM t a JOIN t b ON a.doc_id < b.doc_id
-      |  WHERE CAST(len(list_filter(a.tk, x -> list_contains(b.tk, x))) AS DOUBLE) /
-      |        CAST(len(a.tk) + len(b.tk) - len(list_filter(a.tk, x -> list_contains(b.tk, x))) AS DOUBLE) >= 0.9
-      |), sym AS (
-      |  SELECT id_a AS src, id_b AS dst FROM edges
-      |  UNION ALL
-      |  SELECT id_b, id_a FROM edges
-      |), reach(id, comp) AS (
-      |  SELECT DISTINCT src, src FROM sym
-      |  UNION
-      |  SELECT s.dst, r.comp FROM reach r JOIN sym s ON s.src = r.id
-      |)
-      |SELECT id, MIN(comp) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin
+  query("q60_cc_log_rounds", q60ConnectedComponentsLogRounds, Some(q51Oracle))
 
   // ---------------------------------------------------------------- q50
   /** Bloom-prefiltered fact×dim join (ops.BloomJoin): a 2^16-bit Bloom
@@ -1760,6 +1802,7 @@ private[graft] trait QueriesCore {
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE p_size = 1
       |ORDER BY l_orderkey, l_partkey, l_quantity, p_brand, p_retailprice""".stripMargin
+  query("q50_bloom_join", q50BloomJoin, Some(q50Oracle))
 
   // ---------------------------------------------------------------- q49
   /** ANN with ADAPTIVE LSH parameters: (nbits, tables) derived from the
@@ -1792,6 +1835,7 @@ private[graft] trait QueriesCore {
         col("recall")
       )
   }
+  query("q49_ann_adaptive", q49AnnAdaptiveRecall, None)
 
   // ---------------------------------------------------------------- q47
   /** F8 DST path: naive local timestamps interpreted in Europe/Berlin and
@@ -1853,6 +1897,7 @@ private[graft] trait QueriesCore {
       |    '%Y-%m-%d %H:%M:%S') AS utc
       |FROM raw
       |ORDER BY event_id""".stripMargin
+  query("q47_tz", q47Tz, Some(q47Oracle))
 
   // ---------------------------------------------------------------- q44
   /** HLL distinct sketch (graft.expr.HllSketch, TypedImperativeAggregate,
@@ -1894,6 +1939,7 @@ private[graft] trait QueriesCore {
         |) ORDER BY l_returnflag""".stripMargin
     )
   }
+  query("q44_hll_sketch", q44HllSketch, None)
 
   // ---------------------------------------------------------------- q43
   /** Interval join: events vs per-user 3-day activity windows (derived
@@ -1933,6 +1979,7 @@ private[graft] trait QueriesCore {
       |      AND e.ts <= r.start_ts + INTERVAL 2 DAY
       |GROUP BY e.event_id
       |ORDER BY e.event_id""".stripMargin
+  query("q43_range_join", q43RangeJoin, Some(q43Oracle))
 
   // ---------------------------------------------------------------- q42
   /** As-of join: each event picks up the most recent order state
@@ -1970,6 +2017,7 @@ private[graft] trait QueriesCore {
       |FROM events e ASOF LEFT JOIN ord o
       |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
       |ORDER BY event_id""".stripMargin
+  query("q42_asof_join", q42AsofJoin, Some(q42Oracle))
 
   // ---------------------------------------------------------------- q41
   /** Exact percentiles (linear interpolation): Spark `percentile` vs
@@ -1994,6 +2042,7 @@ private[graft] trait QueriesCore {
       |FROM lineitem
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
+  query("q41_percentiles", q41Percentiles, Some(q41Oracle))
 
   // ---------------------------------------------------------------- q59
   /** t-digest percentile SKETCH (graft.expr.TDigestQuantile,
@@ -2051,6 +2100,7 @@ private[graft] trait QueriesCore {
       |FROM lineitem
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
+  query("q59_tdigest", q59TdigestPercentiles, Some(q59Oracle))
 
   // ---------------------------------------------------------------- q39
   /** Native session windows (Spark's session_window generator) — the
@@ -2093,6 +2143,7 @@ private[graft] trait QueriesCore {
       |FROM sess
       |GROUP BY user_id, sid
       |ORDER BY user_id, session_start""".stripMargin
+  query("q39_session_window", q39SessionWindow, Some(q39Oracle))
 
   // ---------------------------------------------------------------- q40
   /** Custom typed Aggregator: bounded top-k per group (a k-element
@@ -2122,6 +2173,7 @@ private[graft] trait QueriesCore {
       |  FROM events) t
       |WHERE rank <= 3
       |ORDER BY event_type, rank""".stripMargin
+  query("q40_topk_per_group", q40TopkPerGroup, Some(q40Oracle))
 
   // ---------------------------------------------------------------- q36
   /** Grouping-set rollup + exact distinct aggregate: subtotal/grand-total
@@ -2147,6 +2199,7 @@ private[graft] trait QueriesCore {
       |FROM lineitem
       |GROUP BY ROLLUP (l_returnflag, l_linestatus)
       |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin
+  query("q36_rollup", q36Rollup, Some(q36Oracle))
 
   // ---------------------------------------------------------------- q37
   /** Sessionization: a new session starts when the gap to the previous
@@ -2180,6 +2233,7 @@ private[graft] trait QueriesCore {
       |FROM g
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin
+  query("q37_sessionize", q37Sessionize, Some(q37Oracle))
 
   // ---------------------------------------------------------------- q38
   /** Pivot: event counts per user wide by event type (groupBy.pivot with
@@ -2205,6 +2259,7 @@ private[graft] trait QueriesCore {
       |FROM events
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin
+  query("q38_pivot", q38Pivot, Some(q38Oracle))
 
   // ---------------------------------------------------------------- q35
   /** IVF approximate nearest-neighbor: k-means coarse quantizer (fit as
@@ -2361,6 +2416,7 @@ private[graft] trait QueriesCore {
        |FROM ivf, aud
        |ORDER BY ivf.query_id, ivf.rank""".stripMargin
   }
+  query("q35_ivf", q35Ivf, Some(q35Oracle))
 
   // ---------------------------------------------------------------- q34
   /** Housekeeping retention predicate (reference app/housekeeping.py:15-17)
@@ -2378,6 +2434,7 @@ private[graft] trait QueriesCore {
       |FROM events
       |WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'
       |ORDER BY event_id""".stripMargin
+  query("q34_retention", q34Retention, Some(q34Oracle))
 
   // ---------------------------------------------------------------- q33
   /** The linear-output dedup shape for 100 TB: per-doc KEEP/DROP
@@ -2681,6 +2738,7 @@ private[graft] trait QueriesCore {
        |FROM exact e
        |LEFT JOIN pairs p ON e.id_a = p.id_a AND e.id_b = p.id_b""".stripMargin
   }
+  query("q33_dedup_assign", q33DedupAssign, None)
 
   // ---------------------------------------------------------------- q32
   /** Multimodal pipeline, REAL codec since round 6: documents →
@@ -2790,6 +2848,7 @@ private[graft] trait QueriesCore {
       |  0 AS audit_bad_features
       |FROM documents
       |ORDER BY media_id""".stripMargin
+  query("q32_multimodal", q32Multimodal, Some(q32Oracle))
 
   // ---------------------------------------------------------------- q108
   /** Audio pipeline, REAL codec (round 6): documents →
@@ -2849,6 +2908,7 @@ private[graft] trait QueriesCore {
        |FROM documents
        |ORDER BY media_id""".stripMargin
   }
+  query("q108_audio_decode", q108AudioDecode, Some(q108Oracle))
 
   // ---------------------------------------------------------------- q110
   /** CCNet-style statistical LM quality scoring (ops/LmScore): a
@@ -2884,7 +2944,7 @@ private[graft] trait QueriesCore {
     * the LM definition by construction (the q96 unrolled-rounds
     * precedent).
     */
-  private[graft] val lmScoredChainSql: String =
+  private[graft] def lmScoredChainSql: String =
     """WITH toks AS (
       |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk FROM documents
       |), bi AS (
@@ -2920,6 +2980,7 @@ private[graft] trait QueriesCore {
       """
         |SELECT doc_id, n_bigrams, avg_nll, oov_bigram_rate
         |FROM scored ORDER BY doc_id""".stripMargin
+  query("q110_lm_score", q110LmScore, Some(q110Oracle))
 
   // ---------------------------------------------------------------- q65
   /** Salted equi-join in-registry (ops.Skew spec-only until now): the
@@ -2955,6 +3016,7 @@ private[graft] trait QueriesCore {
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |WHERE l_quantity > 45
       |ORDER BY l_orderkey, l_linenumber, l_partkey, l_quantity, p_name""".stripMargin
+  query("q65_salted_join", q65SaltedJoin, Some(q65Oracle))
 
   // ---------------------------------------------------------------- q66
   /** TF-IDF top-3 terms per document — the classic text-weighting shape:
@@ -3017,6 +3079,7 @@ private[graft] trait QueriesCore {
       |SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tc, tfidf
       |FROM r WHERE rank <= 3
       |ORDER BY doc_id, rank""".stripMargin
+  query("q66_tfidf", q66Tfidf, Some(q66Oracle))
 
   // ---------------------------------------------------------------- q67
   /** End-to-end C4-style CLEANING PIPELINE — the composition the whole
@@ -3089,6 +3152,7 @@ private[graft] trait QueriesCore {
       |    '\s+', ' ', 'g')) AS clean_text
       |FROM dedup WHERE rn = 1
       |ORDER BY doc_id""".stripMargin
+  query("q67_clean_pipeline", q67CleanPipeline, Some(q67Oracle))
 
   // ---------------------------------------------------------------- q68
   /** Per-source DEDUPLICATION STATS — the corpus-curation dashboard
@@ -3149,6 +3213,7 @@ private[graft] trait QueriesCore {
       |  COALESCE(c.n_cross_docs, CAST(0 AS BIGINT)) AS n_cross_docs
       |FROM per_src p LEFT JOIN cross_docs c ON p.source = c.source
       |ORDER BY p.source""".stripMargin
+  query("q68_source_dedup_stats", q68SourceDedupStats, Some(q68Oracle))
 
   // ---------------------------------------------------------------- q69
   /** CUBE analytics over events: all four grouping sets of (event_type,
@@ -3190,6 +3255,7 @@ private[graft] trait QueriesCore {
       |)
       |GROUP BY CUBE (event_type, day_s)
       |ORDER BY gid, event_type, day""".stripMargin
+  query("q69_cube", q69Cube, Some(q69Oracle))
 
   // ---------------------------------------------------------------- q70
   /** Corpus token frequencies via the Misra–Gries HEAVY-HITTERS sketch
@@ -3228,6 +3294,7 @@ private[graft] trait QueriesCore {
       |)
       |GROUP BY tok
       |ORDER BY tok""".stripMargin
+  query("q70_heavy_hitters", q70HeavyHitters, Some(q70Oracle))
 
   // ---------------------------------------------------------------- q71
   /** MIXTURE MATERIALIZATION — the step after q62's weights: given a
@@ -3324,6 +3391,7 @@ private[graft] trait QueriesCore {
       |  CAST(unnest(range(1, n_repeats + 1)) AS BIGINT) AS copy_idx
       |FROM r WHERE n_repeats > 0
       |ORDER BY doc_id, copy_idx""".stripMargin
+  query("q71_mixture_expand", q71MixtureExpand, Some(q71Oracle))
 
   // ---------------------------------------------------------------- q72
   /** INCREMENTAL-INGEST dedup: a new batch (docs 0-99) checked against
@@ -3366,6 +3434,7 @@ private[graft] trait QueriesCore {
       |WHERE n.doc_id < 100
       |  AND NOT EXISTS (SELECT 1 FROM d h WHERE h.doc_id >= 100 AND h.fp = n.fp)
       |ORDER BY n.doc_id""".stripMargin
+  query("q72_incremental_dedup", q72IncrementalDedup, Some(q72Oracle))
 
   // ---------------------------------------------------------------- q73
   /** COMPRESSIBILITY quality signal (expr.DeflateRatio): compressed/raw
@@ -3433,6 +3502,7 @@ private[graft] trait QueriesCore {
       |  CAST(0 AS BIGINT) AS bad_range_count,
       |  TRUE AS spam_separated
       |FROM documents""".stripMargin
+  query("q73_compress_quality", q73CompressQuality, Some(q73Oracle))
 
   // ---------------------------------------------------------------- q74
   /** CDC APPLY (ops.Upsert.applyCdc): fold an I/U/D change batch into a
@@ -3493,6 +3563,7 @@ private[graft] trait QueriesCore {
       |  SELECT c_custkey, c_name, c_acctbal FROM changes WHERE op IN ('I', 'U')
       |)
       |ORDER BY c_custkey, c_name, c_acctbal""".stripMargin
+  query("q74_cdc_apply", q74CdcApply, Some(q74Oracle))
 
   // ---------------------------------------------------------------- q75
   /** BPE FIRST-MERGE candidates: corpus-wide adjacent-token-pair counts,
@@ -3530,6 +3601,7 @@ private[graft] trait QueriesCore {
       |FROM p GROUP BY pair
       |ORDER BY n DESC, pair
       |LIMIT 10""".stripMargin
+  query("q75_bpe_pairs", q75BpePairs, Some(q75Oracle))
 
   // ---------------------------------------------------------------- q76
   /** WINDOW-FRAME feature engineering over the event stream: per-user
@@ -3578,6 +3650,7 @@ private[graft] trait QueriesCore {
       |  w_range AS (PARTITION BY user_id ORDER BY ts
       |              RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
       |ORDER BY event_id""".stripMargin
+  query("q76_moving_features", q76MovingFeatures, Some(q76Oracle))
 
   // ---------------------------------------------------------------- q77
   /** Embedding QUANTIZATION for vector storage at scale: per-vector
@@ -3629,6 +3702,7 @@ private[graft] trait QueriesCore {
       |  max_err <= scale / 254 * 1.0000001 AS within_bound
       |FROM err
       |ORDER BY vec_id""".stripMargin
+  query("q77_quantize", q77Quantize, Some(q77Oracle))
 
   // ---------------------------------------------------------------- q78
   /** SEMANTIC dedup (ops.SemanticDedup — the SemDeDup shape): IVF
@@ -3781,6 +3855,7 @@ private[graft] trait QueriesCore {
        |FROM ded, kv, rv, cc
        |ORDER BY ded.vec_id""".stripMargin
   }
+  query("q78_semantic_dedup", q78SemanticDedup, Some(q78Oracle))
 
   // ---------------------------------------------------------------- q79
   /** Token-budget ALPHA SWEEP: the data-mixture temperature curve. For
@@ -3853,6 +3928,7 @@ private[graft] trait QueriesCore {
       |        CAST(p.n_tokens AS DOUBLE), 6) AS eff_epochs
       |FROM p JOIN z USING (alpha)
       |ORDER BY source, alpha""".stripMargin
+  query("q79_alpha_sweep", q79AlphaSweep, Some(q79Oracle))
 
   // ---------------------------------------------------------------- q80
   /** DUPLICATED-SPAN coverage — the scalable proxy for suffix-array
@@ -3937,6 +4013,7 @@ private[graft] trait QueriesCore {
       |FROM g JOIN c USING (gram)
       |GROUP BY g.doc_id
       |ORDER BY g.doc_id""".stripMargin
+  query("q80_dup_spans", q80DupSpans, Some(q80Oracle))
 
   // ---------------------------------------------------------------- q81
   /** Quality-signal AUC against a PLANTED spam class (the q73 planting
@@ -4057,6 +4134,7 @@ private[graft] trait QueriesCore {
       |  round(n.num / (CAST(t.n_pos AS DOUBLE) * CAST(t.n_neg AS DOUBLE)), 6) AS auc
       |FROM num n JOIN totals t USING (signal)
       |ORDER BY signal""".stripMargin
+  query("q81_quality_auc", q81QualityAuc, Some(q81Oracle))
 
   // ---------------------------------------------------------------- q82
   /** CROSS-SOURCE duplicate-overlap matrix: for every source pair, how
@@ -4093,6 +4171,7 @@ private[graft] trait QueriesCore {
       |FROM fp a JOIN fp b ON a.fp = b.fp AND a.source < b.source
       |GROUP BY a.source, b.source
       |ORDER BY src_a, src_b""".stripMargin
+  query("q82_source_overlap", q82SourceOverlap, Some(q82Oracle))
 
   // ---------------------------------------------------------------- q83
   /** Quality DECILE binning — the curriculum/filter-threshold step: exact
@@ -4152,6 +4231,7 @@ private[graft] trait QueriesCore {
       |  round(min(quality_score), 6) AS min_score,
       |  round(max(quality_score), 6) AS max_score
       |FROM b GROUP BY bin ORDER BY bin""".stripMargin
+  query("q83_quality_bins", q83QualityBins, Some(q83Oracle))
 
   // ---------------------------------------------------------------- q84
   /** Quality-aware CANONICAL selection: near-dup clusters (the q51
@@ -4234,6 +4314,7 @@ private[graft] trait QueriesCore {
       |  j.id = c.canon_id AS is_canonical
       |FROM j JOIN canon c USING (component)
       |ORDER BY j.id""".stripMargin
+  query("q84_canonical_pick", q84CanonicalPick, Some(q84Oracle))
 
   // ---------------------------------------------------------------- q85
   /** Deterministic TRAIN/VAL/TEST split + LEAKAGE census. The split is
@@ -4285,6 +4366,7 @@ private[graft] trait QueriesCore {
       |FROM d, l
       |GROUP BY d.source, d.split, l.n_leaky_classes
       |ORDER BY source, split""".stripMargin
+  query("q85_hash_split", q85HashSplit, Some(q85Oracle))
 
   // ---------------------------------------------------------------- q86
   /** Vocabulary COVERAGE / OOV rate: derive the top-16 corpus vocabulary
@@ -4336,6 +4418,7 @@ private[graft] trait QueriesCore {
       |  round(CAST(SUM(CASE WHEN tok.t IN (SELECT t FROM vocab) THEN 0 ELSE 1 END) AS DOUBLE) /
       |        CAST(count(*) AS DOUBLE), 6) AS oov_rate
       |FROM tok GROUP BY doc_id ORDER BY doc_id""".stripMargin
+  query("q86_oov_rate", q86OovRate, Some(q86Oracle))
 
   // ---------------------------------------------------------------- q87
   /** Exact duplicated-substring REMOVAL — q80 detects, this one edits:
@@ -4426,5 +4509,6 @@ private[graft] trait QueriesCore {
       |  COALESCE(cl.clean_text, '') AS clean_text
       |FROM d LEFT JOIN cl USING (doc_id)
       |ORDER BY d.doc_id""".stripMargin
+  query("q87_dup_span_removal", q87DupSpanRemoval, Some(q87Oracle))
 
 }

@@ -4,14 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** corpus curation, export/shard planning, profiling
-  *
-  * Mechanical split of the former single-object registry (r11):
-  * statement order across the trait linearization in Queries.scala
-  * is the original file order, so val-initialization semantics are
-  * unchanged. See object Queries for the assembly.
-  */
-private[graft] trait QueriesCuration {
+/** corpus curation, export/shard planning, profiling */
+private[graft] trait QueriesCuration extends QueryRegistration {
   this: QueriesCore with QueriesCuration with QueriesAnalytics with QueriesExact with QueriesGraph =>
   // ---------------------------------------------------------------- q88
   /** Per-cluster embedding DISPERSION from sufficient statistics — the
@@ -84,6 +78,7 @@ private[graft] trait QueriesCuration {
       |  round(norms.qq / CAST(norms.n AS DOUBLE), 6) AS mean_sq_norm
       |FROM norms JOIN comps USING (label)
       |ORDER BY label""".stripMargin
+  query("q88_dispersion", q88Dispersion, Some(q88Oracle))
 
   // ---------------------------------------------------------------- q89
   /** Z-ORDER data layout (ops/Layout.zValue) with a pruning-effectiveness
@@ -193,6 +188,7 @@ private[graft] trait QueriesCuration {
        |         lf.lin_scan_frac_pk, lf.lin_scan_frac_sk
        |ORDER BY file_id""".stripMargin
   }
+  query("q89_zorder_layout", q89ZorderLayout, Some(q89Oracle))
 
   // ---------------------------------------------------------------- q90
   /** Small-file COMPACTION planning (ops/Layout.compactionPlan) — the
@@ -259,6 +255,7 @@ private[graft] trait QueriesCuration {
       |FROM planned, census
       |GROUP BY part, bin, census.small_files_before, census.files_before
       |ORDER BY part, bin""".stripMargin
+  query("q90_compaction_plan", q90CompactionPlan, Some(q90Oracle))
 
   // ---------------------------------------------------------------- q91
   /** HARD-NEGATIVE mining for contrastive training: for every anchor
@@ -324,6 +321,7 @@ private[graft] trait QueriesCuration {
       |  round(p.pos_sim - n.neg_sim, 6) AS margin
       |FROM pos p JOIN neg n ON p.anchor = n.anchor AND p.rn = 1 AND n.rn = 1
       |ORDER BY p.anchor""".stripMargin
+  query("q91_hard_negatives", q91HardNegatives, Some(q91Oracle))
 
   // ---------------------------------------------------------------- q92
   /** Ingest FRESHNESS / inter-arrival profile — the lag-monitoring
@@ -393,6 +391,7 @@ private[graft] trait QueriesCuration {
       |FROM r
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
+  query("q92_freshness", q92Freshness, Some(q92Oracle))
 
   // ---------------------------------------------------------------- q93
   /** Ordered FUNNEL: users who viewed, then clicked AFTER their first
@@ -466,6 +465,7 @@ private[graft] trait QueriesCuration {
       |  round(count(p.t_purchase) / CAST(count(c.t_click) AS DOUBLE), 6) AS click_to_purchase
       |FROM v LEFT JOIN c ON v.user_id = c.user_id
       |LEFT JOIN p ON v.user_id = p.user_id""".stripMargin
+  query("q93_funnel", q93Funnel, Some(q93Oracle))
 
   // ---------------------------------------------------------------- q94
   /** PQ-ADC approximate similarity search (ops/Pq) with an in-registry
@@ -490,11 +490,11 @@ private[graft] trait QueriesCuration {
     */
   /** q94's fixed geometry — shared by the query and [[q94OracleFor]]
     * (the generated oracle must replay exactly these constants). */
-  private[graft] val q94M = 16
-  private[graft] val q94Ksub = 16
-  private[graft] val q94Iters = 2
-  private[graft] val q94NQ = 50
-  private[graft] val q94K = 10
+  private[graft] final val q94M = 16
+  private[graft] final val q94Ksub = 16
+  private[graft] final val q94Iters = 2
+  private[graft] final val q94NQ = 50
+  private[graft] final val q94K = 10
 
   def q94PqAdc(s: SparkSession, dir: String): DataFrame = {
     val (m, ksub, iters, nQ, k) = (q94M, q94Ksub, q94Iters, q94NQ, q94K)
@@ -680,6 +680,7 @@ private[graft] trait QueriesCuration {
        |  ${(dim * 4) / (m / 2)} AS compression_x
        |FROM ra, rb, er""".stripMargin
   }
+  query("q94_pq_adc", q94PqAdc, None)
 
   // ---------------------------------------------------------------- q95
   /** BPE tokenizer TRAINING (ops/Bpe) — the full greedy merge loop, not
@@ -789,6 +790,7 @@ private[graft] trait QueriesCuration {
        |FROM ($mergeRows) m, resid
        |ORDER BY m.step""".stripMargin
   }
+  query("q95_bpe_train", q95BpeTrain, Some(q95Oracle))
 
   // ---------------------------------------------------------------- q111
   /** BPE tokenizer APPLY (encode) — the half of the tokenizer story
@@ -858,6 +860,7 @@ private[graft] trait QueriesCuration {
        |WHERE len(word) > 0
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
+  query("q111_bpe_encode", q111BpeEncode, Some(q111Oracle))
 
   // ---------------------------------------------------------------- q112
   /** Sparse all-pairs TF-IDF cosine over word 3-grams (ops/SparseSim) —
@@ -919,6 +922,7 @@ private[graft] trait QueriesCuration {
       |FROM p JOIN nrm na ON p.id_a = na.doc_id JOIN nrm nb ON p.id_b = nb.doc_id
       |WHERE round(p.dot / (na.nm * nb.nm), 6) >= 0.5
       |ORDER BY id_a, id_b""".stripMargin
+  query("q112_sparse_allpairs", q112SparseAllPairs, Some(q112Oracle))
 
   // ---------------------------------------------------------------- q113
   /** Training-export shard plan (ops/ExportPlan): deterministic global
@@ -960,6 +964,7 @@ private[graft] trait QueriesCuration {
       |  CAST(SUM(wt) * 1000000 // 2048 AS BIGINT) AS fill_ppm
       |FROM s GROUP BY shard_id
       |ORDER BY shard_id""".stripMargin
+  query("q113_shard_plan", q113ShardPlan, Some(q113Oracle))
 
   // ---------------------------------------------------------------- q114
   /** Decontamination COVERAGE report (ops/SparseSim coverage law): the
@@ -1035,6 +1040,7 @@ private[graft] trait QueriesCuration {
       |SELECT probe_id, ref_id, n_shared, coverage FROM cov
       |WHERE coverage >= 0.5
       |ORDER BY probe_id, ref_id""".stripMargin
+  query("q114_decontam_coverage", q114DecontamCoverage, Some(q114Oracle))
 
   // ---------------------------------------------------------------- q115
   /** Weighted sampling without replacement (ops/WeightedSample,
@@ -1075,6 +1081,7 @@ private[graft] trait QueriesCuration {
       |SELECT source, rn, doc_id, n_tokens, es_key FROM r
       |WHERE rn <= 12
       |ORDER BY source, rn""".stripMargin
+  query("q115_weighted_sample", q115WeightedSample, Some(q115Oracle))
 
   // ---------------------------------------------------------------- q116
   /** Reproducible-export INTEGRITY digest (ops/ExportPlan.shardDigests):
@@ -1119,6 +1126,7 @@ private[graft] trait QueriesCuration {
       |  bit_xor(digest) AS digest_xor
       |FROM s GROUP BY shard_id
       |ORDER BY shard_id""".stripMargin
+  query("q116_export_digest", q116ExportDigest, Some(q116Oracle))
 
   // ---------------------------------------------------------------- q117
   /** CCNet head/middle/tail perplexity bucketing per language (Wenzek
@@ -1171,6 +1179,7 @@ private[graft] trait QueriesCuration {
         |  MIN(avg_nll) AS nll_lo, MAX(avg_nll) AS nll_hi
         |FROM rk GROUP BY lang, (rn - 1) * 3 // nl
         |ORDER BY lang, bucket""".stripMargin
+  query("q117_ccnet_buckets", q117CcnetBuckets, Some(q117Oracle))
 
   // ---------------------------------------------------------------- q118
   /** Per-source corpus integrity digest — the INCREMENTAL-ingest end of
@@ -1198,6 +1207,7 @@ private[graft] trait QueriesCuration {
       |  bit_xor(digest) AS digest_xor
       |FROM d GROUP BY source
       |ORDER BY source""".stripMargin
+  query("q118_source_digest", q118SourceDigest, Some(q118Oracle))
 
   // ---------------------------------------------------------------- q119
   /** One-pass column profiler (ANALYZE-style): per numeric lineitem
@@ -1244,6 +1254,7 @@ private[graft] trait QueriesCuration {
        |FROM u GROUP BY col_name
        |ORDER BY col_name""".stripMargin
   }
+  query("q119_column_profile", q119ColumnProfile, Some(q119Oracle))
 
   // ---------------------------------------------------------------- q120
   /** The CURATION PIPELINE end-to-end — the capstone composition the
@@ -1370,6 +1381,7 @@ private[graft] trait QueriesCuration {
       |  bit_xor(digest) AS digest_xor
       |FROM s GROUP BY shard_id
       |ORDER BY shard_id""".stripMargin
+  query("q120_curation_pipeline", q120CurationPipeline, Some(q120Oracle))
 
   // ---------------------------------------------------------------- q121
   /** S4 DE positional-payload decode end-to-end (ops/Normalize
@@ -1452,6 +1464,7 @@ private[graft] trait QueriesCuration {
       |)
       |SELECT * FROM dec WHERE "value" IS NOT NULL
       |ORDER BY event_id""".stripMargin
+  query("q121_de_payload_decode", q121DePayloadDecode, Some(q121Oracle))
 
   // ---------------------------------------------------------------- q122
   /** BM25 ranked retrieval (ops.Bm25): inverted-index top-k search over
@@ -1470,7 +1483,7 @@ private[graft] trait QueriesCuration {
     * bit-exact); DuckDB then replays the identical +,*,/ arithmetic,
     * the ordered list_reduce fold, and the (score desc, doc_id) rank.
     */
-  val q122Queries: Seq[(Int, Seq[String])] = Seq(
+  def q122Queries: Seq[(Int, Seq[String])] = Seq(
     1 -> Seq("hash", "join"),
     2 -> Seq("window", "merge", "batch"),
     3 -> Seq("vector", "scan", "slow"),
@@ -1528,6 +1541,7 @@ private[graft] trait QueriesCuration {
        |FROM ranked WHERE rnk <= 10
        |ORDER BY qid, rnk""".stripMargin
   }
+  query("q122_bm25", q122Bm25, None)
 
   // ---------------------------------------------------------------- q123
   /** Per-shard ORDER digest (ExportPlan.shardOrderDigests): certifies
@@ -1553,6 +1567,28 @@ private[graft] trait QueriesCuration {
     )
     ExportPlan.shardOrderDigests(assigned, digests).orderBy(col("shard_id"))
   }
+
+  val q123Oracle: String =
+    """WITH d AS (
+      |  SELECT doc_id, (doc_id * 2654435761) % 1000003 AS h,
+      |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS wt,
+      |    ('0x' || substr(md5(regexp_replace(trim(text), '\s+', ' ', 'g')), 1, 15))::BIGINT AS digest
+      |  FROM documents
+      |), c AS (
+      |  SELECT *, SUM(wt) OVER (ORDER BY h, doc_id ROWS UNBOUNDED PRECEDING) - wt AS cum_before
+      |  FROM d
+      |), s AS (SELECT *, CAST(cum_before // 2048 AS BIGINT) AS shard_id FROM c
+      |), p AS (
+      |  SELECT shard_id, digest,
+      |    row_number() OVER (PARTITION BY shard_id ORDER BY h, doc_id) AS pos
+      |  FROM s
+      |)
+      |SELECT shard_id, CAST(count(*) AS BIGINT) AS n_docs,
+      |  CAST(SUM((CAST(pos AS HUGEINT) * digest) % 2305843009213693951)
+      |       % 2305843009213693951 AS BIGINT) AS order_digest
+      |FROM p GROUP BY shard_id
+      |ORDER BY shard_id""".stripMargin
+  query("q123_order_digest", q123OrderDigest, Some(q123Oracle))
 
   // ---------------------------------------------------------------- q124
   /** Incremental corpus-digest maintenance law (ops.CorpusDelta): two
@@ -1661,6 +1697,7 @@ private[graft] trait QueriesCuration {
       |FULL OUTER JOIN delta USING (g)
       |FULL OUTER JOIN cnt USING (g)
       |ORDER BY g""".stripMargin
+  query("q124_delta_digest", q124DeltaDigest, Some(q124Oracle))
 
   // ---------------------------------------------------------------- q125
   /** Stratified mixture-balanced sharding (ExportPlan.stratifiedShards):
@@ -1704,6 +1741,7 @@ private[graft] trait QueriesCuration {
       |SELECT shard_id, src, n_docs, src_balanced
       |FROM c JOIN b USING (src)
       |ORDER BY shard_id, src""".stripMargin
+  query("q125_stratified_shards", q125StratifiedShards, Some(q125Oracle))
 
   // ---------------------------------------------------------------- q126
   /** The GOPHER RULE SET (TextStats.withGopherRules): word-count and
@@ -1793,6 +1831,7 @@ private[graft] trait QueriesCuration {
       |   AND f5 <= 0.15) AS keep
       |FROM f
       |ORDER BY doc_id""".stripMargin
+  query("q126_gopher_rules", q126GopherRules, Some(q126Oracle))
 
   // ---------------------------------------------------------------- q127
   /** LEAKAGE-SAFE train/val/test split (ops/Splits.componentSplit): the
@@ -1883,6 +1922,7 @@ private[graft] trait QueriesCuration {
       |FROM sp, lk
       |GROUP BY sp.source, sp.split, lk.leaky_pairs
       |ORDER BY source, split""".stripMargin
+  query("q127_leak_safe_split", q127LeakSafeSplit, Some(q127Oracle))
 
   // ---------------------------------------------------------------- q128
   /** Distributed CLASSIFIER TRAINING (ops/Classifier): 6 full-batch
@@ -1984,6 +2024,7 @@ private[graft] trait QueriesCuration {
        |FROM (${zFrom("w6")}) f, b0, bt
        |ORDER BY f.doc_id""".stripMargin
   }
+  query("q128_train_classifier", q128TrainClassifier, Some(q128Oracle))
 
   // ---------------------------------------------------------------- q129
   /** Johnson–Lindenstrauss ±1 RANDOM PROJECTION (ops/RandomProjection,
@@ -2076,6 +2117,7 @@ private[graft] trait QueriesCuration {
       |  s.n_pairs, s.n_within
       |FROM r2, s
       |ORDER BY id_a""".stripMargin
+  query("q129_jl_projection", q129JlProjection, Some(q129Oracle))
 
   // ---------------------------------------------------------------- q130
   /** JL-ACCELERATED nearest-neighbor RANKING AGREEMENT: top-10 by
@@ -2200,6 +2242,7 @@ private[graft] trait QueriesCuration {
       |  round(s.mean_recall, 6) AS mean_recall
       |FROM pq, s
       |ORDER BY query_id""".stripMargin
+  query("q130_jl_ann_recall", q130JlAnnRecall, Some(q130Oracle))
 
   // ---------------------------------------------------------------- q131
   /** COUNT-MIN sketch (expr.CountMinSketch, Cormode–Muthukrishnan
@@ -2258,6 +2301,33 @@ private[graft] trait QueriesCuration {
       .withColumn("never_under", col("cm_est") >= col("exact_count"))
       .orderBy(col("tok"))
   }
+
+  val q131Oracle: String =
+    """WITH toks AS MATERIALIZED (
+      |  SELECT unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents
+      |), cells AS MATERIALIZED (
+      |  SELECT r.i,
+      |    ('0x' || substr(md5(CAST(r.i AS VARCHAR) || ':' || tok), 1, 15))::BIGINT % 16 AS c,
+      |    CAST(count(*) AS BIGINT) AS cnt
+      |  FROM toks, range(0, 4) r(i)
+      |  GROUP BY r.i, c
+      |), vocab AS MATERIALIZED (
+      |  SELECT tok, CAST(count(*) AS BIGINT) AS exact_count FROM toks GROUP BY tok
+      |), est AS (
+      |  SELECT v.tok, min(cl.cnt) AS cm_est
+      |  FROM vocab v
+      |  JOIN range(0, 4) r(i) ON true
+      |  JOIN cells cl ON cl.i = r.i
+      |    AND cl.c = ('0x' || substr(md5(CAST(r.i AS VARCHAR) || ':' || v.tok), 1, 15))::BIGINT % 16
+      |  GROUP BY v.tok
+      |)
+      |SELECT v.tok, v.exact_count,
+      |  CAST(e.cm_est AS BIGINT) AS cm_est,
+      |  CAST(e.cm_est - v.exact_count AS BIGINT) AS overcount,
+      |  (e.cm_est >= v.exact_count) AS never_under
+      |FROM vocab v JOIN est e USING (tok)
+      |ORDER BY tok""".stripMargin
+  query("q131_count_min", q131CountMin, Some(q131Oracle))
 
   // ---------------------------------------------------------------- q140
   /** INCREMENTAL connected components (Components.incrementalUpdate):
@@ -2334,6 +2404,7 @@ private[graft] trait QueriesCuration {
       |FROM comps
       |GROUP BY component
       |ORDER BY component""".stripMargin
+  query("q140_incremental_cc", q140IncrementalCc, Some(q140Oracle))
 
   // ---------------------------------------------------------------- q139
   /** NATIVE whole-operator top-k (plans.AnnTopKJoin) — the §2.10
@@ -2371,6 +2442,7 @@ private[graft] trait QueriesCuration {
       |  WHERE q.vec_id >= 10 AND q.vec_id < 20 AND c.vec_id <> q.vec_id
       |) WHERE rank <= 10
       |ORDER BY query_id, rank""".stripMargin
+  query("q139_native_topk", q139NativeTopK, Some(q139Oracle))
 
   // ---------------------------------------------------------------- q136
   /** Per-source GOPHER ADOPTION REPORT — the rollout view a curation
@@ -2452,6 +2524,7 @@ private[graft] trait QueriesCuration {
       |FROM v
       |GROUP BY source
       |ORDER BY source""".stripMargin
+  query("q136_gopher_report", q136GopherReport, Some(q136Oracle))
 
   // ---------------------------------------------------------------- q137
   /** Per-source VOCABULARY statistics — the corpus-linguistics panel
@@ -2499,6 +2572,7 @@ private[graft] trait QueriesCuration {
       |FROM pt
       |GROUP BY source
       |ORDER BY source""".stripMargin
+  query("q137_vocab_stats", q137VocabStats, Some(q137Oracle))
 
   // ---------------------------------------------------------------- q138
   /** Language-ID CONFUSION MATRIX — the evaluation harness for q22's
@@ -2557,6 +2631,7 @@ private[graft] trait QueriesCuration {
       |  (c.lang = c.lang_pred) AS is_correct
       |FROM cells c JOIN tot t USING (lang)
       |ORDER BY lang, lang_pred""".stripMargin
+  query("q138_lang_confusion", q138LangConfusion, Some(q138Oracle))
 
   // ---------------------------------------------------------------- q135
   /** DELETION-PROPAGATION PLAN — the right-to-be-forgotten governance
@@ -2685,6 +2760,7 @@ private[graft] trait QueriesCuration {
       |  (xor(xor_before, xor_delta) = xor_after) AS xor_law_holds
       |FROM j
       |ORDER BY shard_id""".stripMargin
+  query("q135_deletion_plan", q135DeletionPlan, Some(q135Oracle))
 
   // ---------------------------------------------------------------- q134
   /** Per-user value TREND — distributed ordinary least squares via
@@ -2779,6 +2855,7 @@ private[graft] trait QueriesCuration {
       |  round((numd*numd)/(dend*synd), 6) + 0.0 AS r2
       |FROM g
       |ORDER BY user_id""".stripMargin
+  query("q134_event_trends", q134EventTrends, Some(q134Oracle))
 
   // ---------------------------------------------------------------- q133
   /** PMI COLLOCATIONS — the phrase-mining preprocessing step (Mikolov
@@ -2868,6 +2945,7 @@ private[graft] trait QueriesCuration {
       |FROM scored
       |ORDER BY lift DESC, bigram
       |LIMIT 20""".stripMargin
+  query("q133_pmi_collocations", q133PmiCollocations, Some(q133Oracle))
 
   // ---------------------------------------------------------------- q132
   /** 3-FOLD CROSS-VALIDATION of the q128 classifier — the model-
@@ -2983,53 +3061,7 @@ private[graft] trait QueriesCuration {
        |FROM (SELECT * FROM evf0 UNION ALL SELECT * FROM evf1 UNION ALL SELECT * FROM evf2)
        |ORDER BY fold""".stripMargin
   }
-
-  val q131Oracle: String =
-    """WITH toks AS MATERIALIZED (
-      |  SELECT unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents
-      |), cells AS MATERIALIZED (
-      |  SELECT r.i,
-      |    ('0x' || substr(md5(CAST(r.i AS VARCHAR) || ':' || tok), 1, 15))::BIGINT % 16 AS c,
-      |    CAST(count(*) AS BIGINT) AS cnt
-      |  FROM toks, range(0, 4) r(i)
-      |  GROUP BY r.i, c
-      |), vocab AS MATERIALIZED (
-      |  SELECT tok, CAST(count(*) AS BIGINT) AS exact_count FROM toks GROUP BY tok
-      |), est AS (
-      |  SELECT v.tok, min(cl.cnt) AS cm_est
-      |  FROM vocab v
-      |  JOIN range(0, 4) r(i) ON true
-      |  JOIN cells cl ON cl.i = r.i
-      |    AND cl.c = ('0x' || substr(md5(CAST(r.i AS VARCHAR) || ':' || v.tok), 1, 15))::BIGINT % 16
-      |  GROUP BY v.tok
-      |)
-      |SELECT v.tok, v.exact_count,
-      |  CAST(e.cm_est AS BIGINT) AS cm_est,
-      |  CAST(e.cm_est - v.exact_count AS BIGINT) AS overcount,
-      |  (e.cm_est >= v.exact_count) AS never_under
-      |FROM vocab v JOIN est e USING (tok)
-      |ORDER BY tok""".stripMargin
-
-  val q123Oracle: String =
-    """WITH d AS (
-      |  SELECT doc_id, (doc_id * 2654435761) % 1000003 AS h,
-      |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS wt,
-      |    ('0x' || substr(md5(regexp_replace(trim(text), '\s+', ' ', 'g')), 1, 15))::BIGINT AS digest
-      |  FROM documents
-      |), c AS (
-      |  SELECT *, SUM(wt) OVER (ORDER BY h, doc_id ROWS UNBOUNDED PRECEDING) - wt AS cum_before
-      |  FROM d
-      |), s AS (SELECT *, CAST(cum_before // 2048 AS BIGINT) AS shard_id FROM c
-      |), p AS (
-      |  SELECT shard_id, digest,
-      |    row_number() OVER (PARTITION BY shard_id ORDER BY h, doc_id) AS pos
-      |  FROM s
-      |)
-      |SELECT shard_id, CAST(count(*) AS BIGINT) AS n_docs,
-      |  CAST(SUM((CAST(pos AS HUGEINT) * digest) % 2305843009213693951)
-      |       % 2305843009213693951 AS BIGINT) AS order_digest
-      |FROM p GROUP BY shard_id
-      |ORDER BY shard_id""".stripMargin
+  query("q132_cv_classifier", q132CvClassifier, Some(q132Oracle))
 
   // ---------------------------------------------------------------- q97
   /** Robust ANOMALY detection: per event type, flag values beyond
@@ -3100,6 +3132,7 @@ private[graft] trait QueriesCuration {
       |FROM dr JOIN mad ON dr.event_type = mad.event_type
       |GROUP BY dr.event_type
       |ORDER BY dr.event_type""".stripMargin
+  query("q97_anomaly", q97Anomaly, Some(q97Oracle))
 
   // ---------------------------------------------------------------- q98
   /** Event-type TRANSITION matrix: per user in exact ns order, count
@@ -3154,6 +3187,7 @@ private[graft] trait QueriesCuration {
       |  round(c.n / CAST(t.total AS DOUBLE), 6) AS p
       |FROM c JOIN t ON c.from_type = t.from_type
       |ORDER BY c.from_type, c.to_type""".stripMargin
+  query("q98_transitions", q98Transitions, Some(q98Oracle))
 
   // ---------------------------------------------------------------- q99
   /** Nearest-centroid EVAL: per-label mean embedding (the class
@@ -3271,6 +3305,7 @@ private[graft] trait QueriesCuration {
       |WHERE p.rn = 1
       |GROUP BY p.label, p.assigned, a.acc
       |ORDER BY p.label, p.assigned""".stripMargin
+  query("q99_nearest_centroid", q99NearestCentroid, Some(q99Oracle))
 
   // ---------------------------------------------------------------- q100
   /** Per-source DATA CARD: the one-pass corpus documentation roll-up a
@@ -3349,6 +3384,7 @@ private[graft] trait QueriesCuration {
       |  base.mean_quality, tl.top_lang
       |FROM base JOIN tl USING (source)
       |ORDER BY base.source""".stripMargin
+  query("q100_data_card", q100DataCard, Some(q100Oracle))
 
   // ---------------------------------------------------------------- q101
   /** Corpus NOVELTY scoring: per document (in doc_id = arrival order),
@@ -3421,6 +3457,7 @@ private[graft] trait QueriesCuration {
       |FROM g JOIN fo USING (gram)
       |GROUP BY g.doc_id
       |ORDER BY g.doc_id""".stripMargin
+  query("q101_novelty", q101Novelty, Some(q101Oracle))
 
   // ---------------------------------------------------------------- q102
   /** Distribution DRIFT between corpus windows (PSI — population
@@ -3556,6 +3593,7 @@ private[graft] trait QueriesCuration {
       |FROM p
       |GROUP BY feature
       |ORDER BY feature""".stripMargin
+  query("q102_psi_drift", q102PsiDrift, Some(q102Oracle))
 
   // ---------------------------------------------------------------- q103
   /** RANKING-quality audit for the multiprobe ANN — recall (q49) says
@@ -3758,6 +3796,7 @@ private[graft] trait QueriesCuration {
        |  round(nd.ndcg, 4) AS ndcg_at_k
        |FROM rc, mrr, nd""".stripMargin
   }
+  query("q103_ann_ranking", q103AnnRankingQuality, Some(q103Oracle))
 
   // ---------------------------------------------------------------- q104
   /** Dataset SNAPSHOT DIFF — the release-to-release census a versioned
@@ -3814,6 +3853,7 @@ private[graft] trait QueriesCuration {
       |  round(SUM(CASE WHEN pfp IS NULL AND cfp IS NOT NULL THEN 1 ELSE 0 END) /
       |        CAST(SUM(CASE WHEN cfp IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE), 6) AS growth_frac
       |FROM j""".stripMargin
+  query("q104_snapshot_diff", q104SnapshotDiff, Some(q104Oracle))
 
   // ---------------------------------------------------------------- q105
   /** TEMPORAL split with an EMBARGO gap — time-based train/eval
@@ -3870,6 +3910,7 @@ private[graft] trait QueriesCuration {
       |FROM d, cut
       |GROUP BY 1, 2
       |ORDER BY 1, 2""".stripMargin
+  query("q105_temporal_split", q105TemporalSplit, Some(q105Oracle))
 
   // ---------------------------------------------------------------- q141
   /** Repeated n-gram SPAN census (ops/NgramDup) — the exact-substring
@@ -3928,6 +3969,7 @@ private[graft] trait QueriesCuration {
       |  COALESCE(p.n_high_dup_docs, 0) AS n_high_dup_docs
       |FROM alldocs a LEFT JOIN per_source p USING (source)
       |ORDER BY a.source""".stripMargin
+  query("q141_ngram_span_dup", q141NgramSpanDup, Some(q141Oracle))
 
   // ---------------------------------------------------------------- q142
   /** Temperature-scaled source mixture (ops/Mixture.temperaturePlan) —
@@ -3993,6 +4035,7 @@ private[graft] trait QueriesCuration {
       |  COALESCE(s.id_sum, 0) AS id_sum
       |FROM plan p LEFT JOIN samp s USING (source)
       |ORDER BY p.source""".stripMargin
+  query("q142_temperature_mix", q142TemperatureMix, Some(q142Oracle))
 
   // ---------------------------------------------------------------- q143
   /** CALIBRATION AUDIT — the reliability diagram + expected-calibration-
@@ -4131,6 +4174,7 @@ private[graft] trait QueriesCuration {
        |FROM g JOIN tot USING (scorer)
        |ORDER BY g.scorer, g.bin""".stripMargin
   }
+  query("q143_calibration", q143Calibration, Some(q143Oracle))
 
   // ---------------------------------------------------------------- q144
   /** UniMax token-budget WATER-FILLING (ops/Mixture.tokenBudgetPlan) —
@@ -4192,6 +4236,7 @@ private[graft] trait QueriesCuration {
       |  CAST(allocated * 1000000 // n_tokens AS BIGINT) AS epochs_ppm
       |FROM alloc
       |ORDER BY source""".stripMargin
+  query("q144_token_budget", q144TokenBudget, Some(q144Oracle))
 
   // ---------------------------------------------------------------- q145
   /** Exact-substring span REMOVAL rewrite (NgramDup.removalProfile) —
@@ -4243,6 +4288,7 @@ private[graft] trait QueriesCuration {
       |    AS n_gutted_docs
       |FROM prof GROUP BY source
       |ORDER BY source""".stripMargin
+  query("q145_span_removal", q145SpanRemoval, Some(q145Oracle))
 
   // ---------------------------------------------------------------- q146
   /** Canonical-doc selection (ops/Canonical): near-dup clusters from
@@ -4320,6 +4366,7 @@ private[graft] trait QueriesCuration {
       |  CAST(sum(CASE WHEN rk = 1 AND doc_id <> comp_min THEN 1 ELSE 0 END) AS BIGINT) AS n_upgrades
       |FROM ranked GROUP BY source
       |ORDER BY source""".stripMargin
+  query("q146_canonical_dedup", q146CanonicalDedup, Some(q146Oracle))
 
   // ---------------------------------------------------------------- q147
   /** CROSS-SOURCE duplication matrix — who copies whom: near-dup pairs
@@ -4365,6 +4412,7 @@ private[graft] trait QueriesCuration {
       |  (least(sa, sb) = greatest(sa, sb)) AS is_within
       |FROM e GROUP BY 1, 2
       |ORDER BY source_lo, source_hi""".stripMargin
+  query("q147_cross_source_dup", q147CrossSourceDup, Some(q147Oracle))
 
   // ---------------------------------------------------------------- q148
   /** DEDUP-METHOD AGREEMENT audit — how sensitive is "the duplicate
@@ -4477,6 +4525,7 @@ private[graft] trait QueriesCuration {
       |  CASE WHEN n_tok80 + n_sh50 - i_80_sh > 0
       |       THEN CAST(floor(i_80_sh * 1000000 / (n_tok80 + n_sh50 - i_80_sh)) AS BIGINT) ELSE 0 END AS j_80_sh_ppm
       |FROM agg""".stripMargin
+  query("q148_method_agreement", q148MethodAgreement, Some(q148Oracle))
 
   // ---------------------------------------------------------------- q324
   /** CONTEXT-WINDOW CHUNKING census (ops/Chunker, r13): each document
@@ -4526,5 +4575,6 @@ private[graft] trait QueriesCuration {
       |  CAST(SUM((ci + 1) * clen) AS BIGINT) AS pos_digest,
       |  CAST(SUM(cchars) AS BIGINT) AS chunk_chars
       |FROM ch GROUP BY doc_id ORDER BY doc_id""".stripMargin
+  query("q324_token_chunks", q324TokenChunks, Some(q324Oracle))
 
 }

@@ -4,14 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** exact-arithmetic laws, sketches, geometry
-  *
-  * Mechanical split of the former single-object registry (r11):
-  * statement order across the trait linearization in Queries.scala
-  * is the original file order, so val-initialization semantics are
-  * unchanged. See object Queries for the assembly.
-  */
-private[graft] trait QueriesExact {
+/** exact-arithmetic laws, sketches, geometry */
+private[graft] trait QueriesExact extends QueryRegistration {
   this: QueriesCore with QueriesCuration with QueriesAnalytics with QueriesExact with QueriesGraph =>
   // ---------------------------------------------------------------- q213
   /** CALENDAR ARITHMETIC CERTIFICATE — month addition clamps to
@@ -57,6 +51,7 @@ private[graft] trait QueriesExact {
       |  CAST(datediff('day', DATE '2024-01-01', CAST(ds AS DATE)) AS INT) AS days_since_anchor
       |FROM d
       |ORDER BY ds""".stripMargin
+  query("q213_calendar", q213Calendar, Some(q213Oracle))
 
   // ---------------------------------------------------------------- q214
   /** WINDOW FRAME SEMANTICS (RANGE vs ROWS) — with DUPLICATE order
@@ -142,6 +137,7 @@ private[graft] trait QueriesExact {
       |SELECT g.*, p.n_single, p.n_pr_zero
       |FROM g, p
       |ORDER BY event_type""".stripMargin
+  query("q214_frame_semantics", q214FrameSemantics, Some(q214Oracle))
 
   // ---------------------------------------------------------------- q215
   /** EMPTY-INPUT AGGREGATE CERTIFICATE — the zero-rows edge every
@@ -194,6 +190,7 @@ private[graft] trait QueriesExact {
       |SELECT g.n, g.n_vals, g.nd_users, g.sum_is_null, g.min_is_null,
       |  g.avg_is_null, gr.n_groups
       |FROM g, gr""".stripMargin
+  query("q215_empty_input", q215EmptyInput, Some(q215Oracle))
 
   // ---------------------------------------------------------------- q216
   /** THREE-VALUED LOGIC COMPLEMENTS — the positive-IN and
@@ -257,6 +254,7 @@ private[graft] trait QueriesExact {
       |  (SUM(CASE WHEN greatest(nv, CAST(NULL AS BIGINT)) IS NULL THEN 1 ELSE 0 END)
       |    = SUM(CASE WHEN nv IS NULL THEN 1 ELSE 0 END)) AS greatest_allnull_law_ok
       |FROM ev""".stripMargin
+  query("q216_three_valued", q216ThreeValued, Some(q216Oracle))
 
   // ---------------------------------------------------------------- q217
   /** INTERVAL UNION (gaps-and-islands over OVERLAPPING intervals) —
@@ -333,6 +331,7 @@ private[graft] trait QueriesExact {
       |FROM pi
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin
+  query("q217_interval_union", q217IntervalUnion, Some(q217Oracle))
 
   // ---------------------------------------------------------------- q218
   /** LONGEST STREAK (gaps-and-islands on the day grid) — per user, the
@@ -383,6 +382,7 @@ private[graft] trait QueriesExact {
       |FROM mu
       |GROUP BY max_streak
       |ORDER BY max_streak""".stripMargin
+  query("q218_longest_streak", q218LongestStreak, Some(q218Oracle))
 
   // ---------------------------------------------------------------- q219
   /** AS-OF ENRICHMENT WITH BOUNDED STALENESS — the production as-of
@@ -457,6 +457,7 @@ private[graft] trait QueriesExact {
       |FROM st
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
+  query("q219_asof_tolerance", q219AsofTolerance, Some(q219Oracle))
 
   // ---------------------------------------------------------------- q220
   /** TOP-K UNDER TIES — the rank/dense_rank/row_number contract that
@@ -517,6 +518,7 @@ private[graft] trait QueriesExact {
       |FROM r
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
+  query("q220_topk_ties", q220TopkTies, Some(q220Oracle))
 
   // ---------------------------------------------------------------- q221
   /** DETERMINISTIC NESTED SAMPLING — reproducible Bernoulli sampling
@@ -560,6 +562,7 @@ private[graft] trait QueriesExact {
       |  CAST(COALESCE(SUM(CASE WHEN h < 5 THEN event_id END), 0) AS BIGINT) AS s5_id_sum,
       |  CAST(COALESCE(SUM(CASE WHEN h < 10 THEN event_id END), 0) AS BIGINT) AS s10_id_sum
       |FROM e""".stripMargin
+  query("q221_nested_sampling", q221NestedSampling, Some(q221Oracle))
 
   // ---------------------------------------------------------------- q222
   /** EQUI-DEPTH QUARTILE BOUNDARIES — per type, the discrete
@@ -653,6 +656,7 @@ private[graft] trait QueriesExact {
       |  CAST(GREATEST(c1, c2, c3, c4) - LEAST(c1, c2, c3, c4) AS BIGINT) AS bucket_spread
       |FROM agg
       |ORDER BY event_type""".stripMargin
+  query("q222_equidepth", q222Equidepth, Some(q222Oracle))
 
   // ---------------------------------------------------------------- q223
   /** NEW vs RETURNING — per day: users seen for the FIRST time
@@ -706,6 +710,7 @@ private[graft] trait QueriesExact {
       |  CAST(SUM(n_new) OVER (ORDER BY eday ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_unique
       |FROM d
       |ORDER BY eday""".stripMargin
+  query("q223_new_vs_returning", q223NewVsReturning, Some(q223Oracle))
 
   // ---------------------------------------------------------------- q224
   /** WEEK-OVER-WEEK GROWTH — weekly event counts per type with
@@ -753,6 +758,7 @@ private[graft] trait QueriesExact {
       |       ELSE CAST((cnt * 1000000) // prev - 1000000 AS BIGINT) END AS growth_ppm
       |FROM l
       |ORDER BY event_type, wk""".stripMargin
+  query("q224_wow_growth", q224WowGrowth, Some(q224Oracle))
 
 
   // ---------------------------------------------------------------- q225
@@ -815,6 +821,7 @@ private[graft] trait QueriesExact {
        |GROUP BY 1, 2
        |ORDER BY bucket, dist""".stripMargin
   }
+  query("q225_bfs_layers", q225BfsLayers, Some(q225Oracle))
 
 
   // ---------------------------------------------------------------- q226
@@ -907,6 +914,7 @@ private[graft] trait QueriesExact {
        |GROUP BY source
        |ORDER BY source"""
   }.stripMargin
+  query("q226_pii_scan", q226PiiScan, Some(q226Oracle))
 
 
   // ---------------------------------------------------------------- q227
@@ -998,6 +1006,7 @@ private[graft] trait QueriesExact {
       |       // (t.n_keys * CAST(t.n_rows AS HUGEINT)) AS BIGINT) AS gini_ppm
       |FROM tot t JOIN t10 ON t10.rel = t.rel
       |ORDER BY t.rel""".stripMargin
+  query("q227_skew_gini", q227SkewGini, Some(q227Oracle))
 
 
   // ---------------------------------------------------------------- q228
@@ -1071,6 +1080,7 @@ private[graft] trait QueriesExact {
       |FROM ranked
       |WHERE neg_rank <= 3
       |ORDER BY anchor_id, neg_rank""".stripMargin
+  query("q228_negative_sampling", q228NegativeSampling, Some(q228Oracle))
 
 
   // ---------------------------------------------------------------- q229
@@ -1129,6 +1139,7 @@ private[graft] trait QueriesExact {
       |FROM f
       |GROUP BY 1
       |ORDER BY mask""".stripMargin
+  query("q229_filter_ablation", q229FilterAblation, Some(q229Oracle))
 
 
   // ---------------------------------------------------------------- q230
@@ -1194,6 +1205,7 @@ private[graft] trait QueriesExact {
       |FROM v
       |WHERE inter * 5 >= (nsum - inter) * 3
       |ORDER BY id_a, id_b""".stripMargin
+  query("q230_ppjoin", q230PpJoin, Some(q230Oracle))
 
 
   // ---------------------------------------------------------------- q231
@@ -1254,6 +1266,7 @@ private[graft] trait QueriesExact {
       |WHERE occ > 0
       |GROUP BY source, phrase
       |ORDER BY source""".stripMargin
+  query("q231_phrase_search", q231PhraseSearch, Some(q231Oracle))
 
 
   // ---------------------------------------------------------------- q232
@@ -1416,6 +1429,7 @@ private[graft] trait QueriesExact {
       |       rd.n_del = direct.d_del AS del_ok,
       |       rd.n_add = direct.d_add AS add_ok
       |FROM c1, c2, rd, direct""".stripMargin
+  query("q232_merkle_diff", q232MerkleDiff, Some(q232Oracle))
 
 
   // ---------------------------------------------------------------- q233
@@ -1510,6 +1524,7 @@ private[graft] trait QueriesExact {
       |        * (CAST(a AS HUGEINT) + c) * (b + CAST(d AS HUGEINT))) AS BIGINT)
       |    >= 3841459 AS significant
       |FROM cells""".stripMargin
+  query("q233_chi_square_ab", q233ChiSquareAb, Some(q233Oracle))
 
   // ---------------------------------------------------------------- q234
   /** DISCRETE SURVIVAL / HAZARD TABLE over return gaps — retention
@@ -1566,6 +1581,7 @@ private[graft] trait QueriesExact {
       |FROM lags l LEFT JOIN gaps ON gaps.gap >= l.lag
       |GROUP BY l.lag
       |ORDER BY l.lag""".stripMargin
+  query("q234_survival_hazard", q234SurvivalHazard, Some(q234Oracle))
 
 
   // ---------------------------------------------------------------- q235
@@ -1629,6 +1645,7 @@ private[graft] trait QueriesExact {
        |GROUP BY seed
        |ORDER BY seed""".stripMargin
   }
+  query("q235_eccentricity", q235Eccentricity, Some(q235Oracle))
 
 
   // ---------------------------------------------------------------- q236
@@ -1710,6 +1727,7 @@ private[graft] trait QueriesExact {
        |GROUP BY seed
        |ORDER BY seed""".stripMargin
   }
+  query("q236_sssp", q236Sssp, Some(q236Oracle))
 
   // ---------------------------------------------------------------- q237
   /** K-ANONYMITY / L-DIVERSITY AUDIT — the privacy-risk census run
@@ -1766,6 +1784,7 @@ private[graft] trait QueriesExact {
       |FROM ks LEFT JOIN classes c ON c.k < ks.k_min
       |GROUP BY ks.k_min
       |ORDER BY ks.k_min""".stripMargin
+  query("q237_k_anonymity", q237KAnonymity, Some(q237Oracle))
 
 
   // ---------------------------------------------------------------- q238
@@ -1821,6 +1840,7 @@ private[graft] trait QueriesExact {
       |       // (CAST(t.grand_total AS HUGEINT) * b.n_days) AS BIGINT) AS seasonal_index_ppm
       |FROM bydow b, tot t
       |ORDER BY b.isodow""".stripMargin
+  query("q238_seasonality", q238Seasonality, Some(q238Oracle))
 
   // ---------------------------------------------------------------- q239
   /** HIERARCHY SUBTREE ROLLUP via ALGEBRAIC ANCESTOR CLOSURE — the
@@ -1891,6 +1911,7 @@ private[graft] trait QueriesExact {
       |GROUP BY a
       |HAVING COUNT(*) >= 5
       |ORDER BY node""".stripMargin
+  query("q239_hierarchy_rollup", q239HierarchyRollup, Some(q239Oracle))
 
 
   // ---------------------------------------------------------------- q240
@@ -1966,6 +1987,7 @@ private[graft] trait QueriesExact {
       |SELECT n_members, n_bits_set, n_probes, n_false_pos,
       |       CAST((n_false_pos * 1000000) // n_probes AS BIGINT) AS fpr_ppm
       |FROM c""".stripMargin
+  query("q240_bloom_fpr", q240BloomFpr, Some(q240Oracle))
 
 
   // ---------------------------------------------------------------- q241
@@ -2057,6 +2079,7 @@ private[graft] trait QueriesExact {
       |  FROM flows WHERE NOT EXISTS (SELECT 1 FROM best b WHERE b.event_id = flows.event_id))
       |SELECT * FROM matched UNION ALL SELECT * FROM unmatched
       |ORDER BY len""".stripMargin
+  query("q241_lpm_join", q241LpmJoin, Some(q241Oracle))
 
   // ---------------------------------------------------------------- q242
   /** TOKEN-BUCKET RATE-LIMITER REPLAY — the two-sided clamped
@@ -2130,6 +2153,7 @@ private[graft] trait QueriesExact {
       |SELECT s.user_id, s.t AS final_tokens, s.a AS accepted, s.r AS rejected
       |FROM st s JOIN n ON n.user_id = s.user_id AND s.rn = n.mx
       |ORDER BY s.user_id""".stripMargin
+  query("q242_token_bucket", q242TokenBucket, Some(q242Oracle))
 
 
   // ---------------------------------------------------------------- q243
@@ -2187,6 +2211,7 @@ private[graft] trait QueriesExact {
       |JOIN pc cb ON cb.p = pr.pb
       |CROSS JOIN n
       |ORDER BY pr.pa, pr.pb""".stripMargin
+  query("q243_market_basket", q243MarketBasket, Some(q243Oracle))
 
 
   // ---------------------------------------------------------------- q244
@@ -2240,6 +2265,7 @@ private[graft] trait QueriesExact {
       |       CAST((dl.day_users * 1000000) // r.rolling_7d_users AS BIGINT) AS concentration_ppm
       |FROM rolling r JOIN daily dl ON dl.d = r.d
       |ORDER BY day""".stripMargin
+  query("q244_sliding_distinct", q244SlidingDistinct, Some(q244Oracle))
 
   // ---------------------------------------------------------------- q245
   /** DISTRIBUTED GRAM MATRIX (Xᵀ X) over the embedding corpus — the
@@ -2285,6 +2311,7 @@ private[graft] trait QueriesExact {
       |FROM cells
       |GROUP BY 1, 2
       |ORDER BY i, j""".stripMargin
+  query("q245_gram_matrix", q245GramMatrix, Some(q245Oracle))
 
 
   // ---------------------------------------------------------------- q246
@@ -2370,6 +2397,7 @@ private[graft] trait QueriesExact {
       |  END AS BIGINT) AS lerp_cents
       |FROM filled
       |ORDER BY day""".stripMargin
+  query("q246_gap_fill", q246GapFill, Some(q246Oracle))
 
   // ---------------------------------------------------------------- q247
   /** MIX-SHIFT DECOMPOSITION (Oaxaca-lite) — why did total purchase
@@ -2426,6 +2454,7 @@ private[graft] trait QueriesExact {
       |       - ((n2 * v2) // n2 - (n2 * v1) // n1) AS BIGINT) AS residual_cents
       |FROM halves
       |ORDER BY event_type""".stripMargin
+  query("q247_mix_shift", q247MixShift, Some(q247Oracle))
 
 
   // ---------------------------------------------------------------- q248
@@ -2493,6 +2522,7 @@ private[graft] trait QueriesExact {
        |GROUP BY 1, rem.n_remaining
        |ORDER BY bucket""".stripMargin
   }
+  query("q248_maximal_matching", q248MaximalMatching, Some(q248Oracle))
 
   // ---------------------------------------------------------------- q249
   /** DETERMINISTIC TOKENIZATION with REFERENTIAL-INTEGRITY
@@ -2563,6 +2593,7 @@ private[graft] trait QueriesExact {
       |       coll.n_collisions,
       |       coll.n_collisions = 0 AS collision_free
       |FROM par, coll""".stripMargin
+  query("q249_tokenization", q249Tokenization, Some(q249Oracle))
 
 
   // ---------------------------------------------------------------- q250
@@ -2626,6 +2657,7 @@ private[graft] trait QueriesExact {
       |FROM v
       |GROUP BY day
       |ORDER BY day""".stripMargin
+  query("q250_abandonment", q250Abandonment, Some(q250Oracle))
 
   // ---------------------------------------------------------------- q251
   /** QUANTILE NORMALIZATION across sources — the ML-preprocessing step
@@ -2691,6 +2723,7 @@ private[graft] trait QueriesExact {
       |FROM m
       |GROUP BY source
       |ORDER BY source""".stripMargin
+  query("q251_quantile_norm", q251QuantileNorm, Some(q251Oracle))
 
 
   // ---------------------------------------------------------------- q252
@@ -2743,6 +2776,7 @@ private[graft] trait QueriesExact {
       |WHERE d.cnt * b.n_days * 20 > b.dow_total * 21
       |   OR d.cnt * b.n_days * 21 < b.dow_total * 20
       |ORDER BY day""".stripMargin
+  query("q252_seasonal_anomaly", q252SeasonalAnomaly, Some(q252Oracle))
 
   // ---------------------------------------------------------------- q253
   /** HITS HUB/AUTHORITY (Kleinberg JACM'99) over the customer→supplier
@@ -2808,6 +2842,7 @@ private[graft] trait QueriesExact {
       |       p AS s_suppkey, a1 AS auth_r1, a2 AS auth_r2
       |FROM top
       |ORDER BY rank""".stripMargin
+  query("q253_hits", q253Hits, Some(q253Oracle))
 
   // ---------------------------------------------------------------- q254
   /** 2-HOP GRAPH FEATURE AGGREGATION — the GraphSAGE-style message-
@@ -2865,6 +2900,7 @@ private[graft] trait QueriesExact {
       |FROM l2 JOIN feat USING (c)
       |ORDER BY l2_sum DESC, c_custkey
       |LIMIT 50""".stripMargin
+  query("q254_graph_features", q254GraphFeatures, Some(q254Oracle))
 
   // ---------------------------------------------------------------- q255
   /** RECIPROCAL-RANK-FUSION HYBRID RETRIEVAL (Cormack SIGIR'09) — the
@@ -2974,6 +3010,7 @@ private[graft] trait QueriesExact {
        |WHERE rnk <= 10
        |ORDER BY qid, rank""".stripMargin
   }
+  query("q255_rrf_fusion", q255Rrf, None)
 
   // ---------------------------------------------------------------- q256
   /** CUSUM CHANGE-POINT DETECTION (Page 1954) over per-type daily
@@ -3038,6 +3075,7 @@ private[graft] trait QueriesExact {
       |  (s_cum - s_min) > 2 * k AS alarm
       |FROM sm
       |ORDER BY event_type, day""".stripMargin
+  query("q256_cusum", q256Cusum, Some(q256Oracle))
 
   // ---------------------------------------------------------------- q257
   /** EXACT DYADIC EWMA — exponential smoothing with α = 1/2 truncated
@@ -3086,6 +3124,7 @@ private[graft] trait QueriesExact {
        |WINDOW w AS (PARTITION BY event_type ORDER BY day)
        |ORDER BY event_type, day""".stripMargin
   }
+  query("q257_ewma", q257Ewma, Some(q257Oracle))
 
   // ---------------------------------------------------------------- q258
   /** RECURSIVE CTE HIERARCHY CERTIFICATE — Spark 4's WITH RECURSIVE
@@ -3147,6 +3186,7 @@ private[graft] trait QueriesExact {
       |FROM depths
       |GROUP BY depth
       |ORDER BY depth""".stripMargin
+  query("q258_recursive_cte", q258RecursiveCte, Some(q258Oracle))
 
   // ---------------------------------------------------------------- q259
   /** VARIANT INGESTION CERTIFICATE — Spark 4's VARIANT type
@@ -3212,6 +3252,7 @@ private[graft] trait QueriesExact {
       |FROM x
       |GROUP BY 1
       |ORDER BY vtype""".stripMargin
+  query("q259_variant", q259Variant, Some(q259Oracle))
 
   // ---------------------------------------------------------------- q260
   /** COLLATION CERTIFICATE — Spark 4 string collations: grouping under
@@ -3268,6 +3309,7 @@ private[graft] trait QueriesExact {
       |FROM noisy
       |GROUP BY 1
       |ORDER BY seg""".stripMargin
+  query("q260_collation", q260Collation, Some(q260Oracle))
 
   // ---------------------------------------------------------------- q261
   /** NATIVE JARO-WINKLER SCORING (expr/JaroWinkler: codegen'd Catalyst
@@ -3302,6 +3344,7 @@ private[graft] trait QueriesExact {
       |WHERE a.p_name < b.p_name
       |  AND round(jaro_winkler_similarity(a.p_name, b.p_name), 6) >= 0.5
       |ORDER BY jw DESC, name_a, name_b""".stripMargin
+  query("q261_jaro_winkler", q261JaroWinkler, Some(q261Oracle))
 
   // ---------------------------------------------------------------- q262
   /** INVERTED-INDEX CONSTRUCTION with delta-encoded postings — the
@@ -3377,6 +3420,7 @@ private[graft] trait QueriesExact {
       |FROM d
       |GROUP BY term
       |ORDER BY term""".stripMargin
+  query("q262_inverted_index", q262InvertedIndex, Some(q262Oracle))
 
   // ---------------------------------------------------------------- q263
   /** HLL SET ALGEBRA — the MERGEABILITY certificate that makes sketches
@@ -3465,6 +3509,7 @@ private[graft] trait QueriesExact {
       |JOIN ex ea ON ea.event_type = p.type_a
       |JOIN ex eb ON eb.event_type = p.type_b
       |ORDER BY p.type_a, p.type_b""".stripMargin
+  query("q263_hll_algebra", q263HllAlgebra, Some(q263Oracle))
 
   // ---------------------------------------------------------------- q264
   /** AMS "TUG-OF-WAR" SECOND-MOMENT SKETCH (Alon-Matias-Szegedy
@@ -3519,6 +3564,7 @@ private[graft] trait QueriesExact {
       |  (sketch * sketch * 1000000) // f2.f2_exact AS ratio_ppm
       |FROM perr, f2
       |ORDER BY r""".stripMargin
+  query("q264_ams_f2", q264AmsF2, Some(q264Oracle))
 
   // ---------------------------------------------------------------- q266
   /** EXACT AUTOCORRELATION FUNCTION (ACF, lags 0–7) of the zero-filled
@@ -3599,6 +3645,7 @@ private[graft] trait QueriesExact {
       |  CAST((num * 1000000) // den.den AS BIGINT) AS acf_ppm
       |FROM perk, den
       |ORDER BY k""".stripMargin
+  query("q266_acf", q266Acf, Some(q266Oracle))
 
   // ---------------------------------------------------------------- q267
   /** JUMP CONSISTENT HASH ROUTING (expr/JumpHash — native codegen'd
@@ -3676,6 +3723,7 @@ private[graft] trait QueriesExact {
       |LEFT JOIN o ON o.bucket = c17.bucket
       |LEFT JOIN i ON i.bucket = c17.bucket
       |ORDER BY c17.bucket""".stripMargin
+  query("q267_jump_hash", q267JumpHash, Some(q267Oracle))
 
   // ---------------------------------------------------------------- q268
   /** UNPIVOT / MELT CERTIFICATE — the wide→long reshape every feature
@@ -3744,6 +3792,7 @@ private[graft] trait QueriesExact {
       |FROM longf l JOIN wide w ON w.p_brand = l.p_brand
       |GROUP BY l.p_brand
       |ORDER BY l.p_brand""".stripMargin
+  query("q268_unpivot", q268Unpivot, Some(q268Oracle))
 
   // ---------------------------------------------------------------- q270
   /** AGGREGATE FILTER-CLAUSE CERTIFICATE — `agg(x) FILTER (WHERE p)`
@@ -3792,6 +3841,7 @@ private[graft] trait QueriesExact {
       |FROM lineitem
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
+  query("q270_filter_clause", q270FilterClause, Some(q270Oracle))
 
   // ---------------------------------------------------------------- q271
   /** LATERAL JOIN CERTIFICATE — the correlated top-N-per-row shape
@@ -3878,6 +3928,7 @@ private[graft] trait QueriesExact {
       |  l.cents_lat = w.cents_win AS cents_eq
       |FROM lat_b l JOIN win_b w ON w.bucket = l.bucket
       |ORDER BY l.bucket""".stripMargin
+  query("q271_lateral", q271Lateral, Some(q271Oracle))
 
   // ---------------------------------------------------------------- q272
   /** THEIL–SEN ROBUST TREND (Sen 1968): per event type, the median of
@@ -3939,6 +3990,7 @@ private[graft] trait QueriesExact {
       |FROM ranked
       |GROUP BY t
       |ORDER BY t""".stripMargin
+  query("q272_theil_sen", q272TheilSen, Some(q272Oracle))
 
   // ---------------------------------------------------------------- q273
   /** MANN–WHITNEY U (Wilcoxon rank-sum, 1947) — the nonparametric A/B
@@ -4005,6 +4057,7 @@ private[graft] trait QueriesExact {
       |  (r2_a - n_a * (n_a + 1)) + (r2_b - n_b * (n_b + 1)) = 2 * n_a * n_b AS partition_ok,
       |  (r2_a - n_a * (n_a + 1)) > (r2_b - n_b * (n_b + 1)) AS a_dominates
       |FROM agg""".stripMargin
+  query("q273_mann_whitney", q273MannWhitney, Some(q273Oracle))
 
   // ---------------------------------------------------------------- q274
   /** BITMAP-INDEX SET ALGEBRA — hour-presence bitmaps per (event type,
@@ -4098,6 +4151,7 @@ private[graft] trait QueriesExact {
       |JOIN totals y ON y.t = p.tb
       |GROUP BY p.ta, p.tb, x.hours, y.hours
       |ORDER BY p.ta, p.tb""".stripMargin
+  query("q274_bitmap", q274Bitmap, Some(q274Oracle))
 
   // ---------------------------------------------------------------- q275
   /** DAG LONGEST PATH (critical path) over the q174 block graph —
@@ -4155,6 +4209,7 @@ private[graft] trait QueriesExact {
       |FROM lp
       |GROUP BY len
       |ORDER BY len""".stripMargin
+  query("q275_critical_path", q275CriticalPath, Some(q275Oracle))
 
   // ---------------------------------------------------------------- q276
   /** GREEDY SET COVER for VOCABULARY CURATION — "which 6 documents
@@ -4244,6 +4299,7 @@ private[graft] trait QueriesExact {
        |FROM allp, vocab
        |ORDER BY round""".stripMargin
   }
+  query("q276_set_cover", q276SetCover, Some(q276Oracle))
 
   // ---------------------------------------------------------------- q277
   /** STRONGLY CONNECTED COMPONENTS (ops/Scc — forward/backward
@@ -4279,7 +4335,7 @@ private[graft] trait QueriesExact {
     fwd.unionByName(back)
   }
 
-  private[graft] val DirectedBlockGraphSql: String =
+  private[graft] def DirectedBlockGraphSql: String =
     """SELECT cand.k AS src, cand.v AS dst
       |  FROM (SELECT k.c_custkey AS k, k.c_custkey + d.d AS v
       |        FROM customer k, (SELECT unnest([1, 2]) AS d) d
@@ -4330,6 +4386,7 @@ private[graft] trait QueriesExact {
       |FROM sizes
       |GROUP BY bucket
       |ORDER BY bucket""".stripMargin
+  query("q277_scc", q277Scc, Some(q277Oracle))
 
   // ---------------------------------------------------------------- q278
   /** CMS JOIN-SIZE ESTIMATION (Cormode–Muthukrishnan §4.2): the inner
@@ -4428,5 +4485,6 @@ private[graft] trait QueriesExact {
        |    * 1000000) // ex.exact_join_size AS overcount_ppm
        |FROM wide, ex, ns""".stripMargin
   }
+  query("q278_cms_join_size", q278CmsJoinSize, Some(q278Oracle))
 
 }

@@ -4,14 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** graph algorithms & distributional statistics
-  *
-  * Mechanical split of the former single-object registry (r11):
-  * statement order across the trait linearization in Queries.scala
-  * is the original file order, so val-initialization semantics are
-  * unchanged. See object Queries for the assembly.
-  */
-private[graft] trait QueriesGraph {
+/** graph algorithms & distributional statistics */
+private[graft] trait QueriesGraph extends QueryRegistration {
   this: QueriesCore with QueriesCuration with QueriesAnalytics with QueriesExact with QueriesGraph =>
   // ---------------------------------------------------------------- q279
   /** CONSISTENT-ROUTER SHOOTOUT — the three placement schemes a 100 TB
@@ -169,6 +163,7 @@ private[graft] trait QueriesGraph {
       |JOIN l17 ON l17.router = l16.router
       |JOIN mv ON mv.router = l16.router
       |ORDER BY l16.router""".stripMargin
+  query("q279_router_shootout", q279RouterShootout, Some(q279Oracle))
 
   // ---------------------------------------------------------------- q280
   /** L1 (LEAST-ABSOLUTE-DEVIATIONS) REGRESSION BY GRID SWEEP — the
@@ -265,6 +260,7 @@ private[graft] trait QueriesGraph {
       |FROM best b JOIN theil th ON th.t = b.t
       |WHERE b.rk = 1
       |ORDER BY b.t""".stripMargin
+  query("q280_l1_regression", q280L1Regression, Some(q280Oracle))
 
   // ---------------------------------------------------------------- q281
   /** GEOHASH ENCODE/DECODE (Niemeyer 2008, public domain) over q201's
@@ -381,6 +377,7 @@ private[graft] trait QueriesGraph {
        |GROUP BY prefix
        |ORDER BY prefix""".stripMargin
   }
+  query("q281_geohash", q281Geohash, Some(q281Oracle))
 
   // ---------------------------------------------------------------- q282
   /** MARKOV STATIONARY DISTRIBUTION of the event-type transition chain
@@ -464,6 +461,7 @@ private[graft] trait QueriesGraph {
        |FROM v6 JOIN rs ON rs.i = v6.i JOIN emp ON emp.i = v6.i
        |ORDER BY event_type""".stripMargin
   }
+  query("q282_markov_stationary", q282MarkovStationary, Some(q282Oracle))
 
   // ---------------------------------------------------------------- q283
   /** BORŮVKA MINIMUM SPANNING FOREST (ops/Boruvka — per-component
@@ -492,7 +490,7 @@ private[graft] trait QueriesGraph {
         expr("CAST(conv(substr(md5(concat(CAST(src AS STRING), '-', CAST(dst AS STRING))), 1, 12), 16, 10) AS BIGINT)"))
   }
 
-  private[graft] val WeightedBlockGraphSql: String =
+  private[graft] def WeightedBlockGraphSql: String =
     """SELECT cand.k AS src, cand.v AS dst,
       |  CAST(('0x' || substr(md5(cand.k || '-' || cand.v), 1, 12)) AS BIGINT) AS w
       |FROM (SELECT k.c_custkey AS k, k.c_custkey + d.d AS v
@@ -562,6 +560,7 @@ private[graft] trait QueriesGraph {
        |  COALESCE(e2.n_edges, 0) = n.n_nodes - n.n_blocks AS tree_ok
        |FROM noderoll n LEFT JOIN edgeroll e2 ON e2.bucket = n.bucket
        |ORDER BY n.bucket""".stripMargin
+  query("q283_boruvka_msf", q283BoruvkaMsf, Some(q283Oracle))
 
   // ---------------------------------------------------------------- q284
   /** TEMPORAL (TIME-RESPECTING) REACHABILITY (ops/Temporal —
@@ -624,6 +623,7 @@ private[graft] trait QueriesGraph {
        |FROM customer c LEFT JOIN arr a ON a.node = c.c_custkey
        |GROUP BY 1
        |ORDER BY 1""".stripMargin
+  query("q284_temporal_reach", q284TemporalReach, Some(q284Oracle))
 
   // ---------------------------------------------------------------- q285
   /** DETERMINISTIC RANDOM-WALK CORPUS (ops/Walks — the DeepWalk/
@@ -690,6 +690,7 @@ private[graft] trait QueriesGraph {
        |GROUP BY 1
        |ORDER BY 1""".stripMargin
   }
+  query("q285_random_walks", q285RandomWalks, Some(q285Oracle))
 
   // ---------------------------------------------------------------- q286
   /** CONTENT-DEFINED CHUNKING + CHUNK-LEVEL DEDUP (ops/Cdc — the
@@ -759,6 +760,7 @@ private[graft] trait QueriesGraph {
       |  len_sum = text_len AS len_ok
       |FROM roll JOIN txt USING (source)
       |ORDER BY roll.source""".stripMargin
+  query("q286_cdc_chunking", q286CdcChunking, Some(q286Oracle))
 
   // ---------------------------------------------------------------- q287
   /** POINT-IN-POLYGON via ray casting (the even–odd crossing rule,
@@ -850,6 +852,7 @@ private[graft] trait QueriesGraph {
        |GROUP BY poly_id
        |ORDER BY poly_id""".stripMargin
   }
+  query("q287_point_in_polygon", q287PointInPolygon, Some(q287Oracle))
 
   // ---------------------------------------------------------------- q288
   /** RESOURCE-ALLOCATION LINK PREDICTION (Zhou–Lü–Zhang EPJ B 2009 —
@@ -904,6 +907,7 @@ private[graft] trait QueriesGraph {
       |GROUP BY 1, 2
       |ORDER BY ra_score DESC, ca, cb
       |LIMIT 50""".stripMargin
+  query("q288_link_prediction", q288LinkPrediction, Some(q288Oracle))
 
   // ---------------------------------------------------------------- q289
   /** PERSONALIZED PAGERANK with restart (Jeh–Widom WWW'03 — random
@@ -993,6 +997,7 @@ private[graft] trait QueriesGraph {
        |GROUP BY 1
        |ORDER BY 1""".stripMargin
   }
+  query("q289_ppr", q289Ppr, Some(q289Oracle))
 
   // ---------------------------------------------------------------- q290
   /** LARGEST-REMAINDER (Hamilton) STRATIFIED ALLOCATION — split a fixed
@@ -1060,6 +1065,7 @@ private[graft] trait QueriesGraph {
       |  ABS(alloc * total - 10000 * cnt) < total AS quota_ok
       |FROM a
       |ORDER BY nation, segment""".stripMargin
+  query("q290_allocation", q290Allocation, Some(q290Oracle))
 
   // ---------------------------------------------------------------- q291
   /** DECISION-STUMP TRAINING (the 1R / single-split learner — Holte
@@ -1158,6 +1164,7 @@ private[graft] trait QueriesGraph {
       |  CAST(((n_total - err) * 1000000) // n_total AS BIGINT) AS acc_ppm
       |FROM best WHERE rk = 1
       |ORDER BY status""".stripMargin
+  query("q291_decision_stump", q291DecisionStump, Some(q291Oracle))
 
   // ---------------------------------------------------------------- q292
   /** SINGLE-LINK CLUSTERING VIA THE MINIMUM SPANNING FOREST — the
@@ -1233,6 +1240,7 @@ private[graft] trait QueriesGraph {
        |FROM customer c LEFT JOIN lab ON lab.node = c.c_custkey
        |GROUP BY 1
        |ORDER BY 1""".stripMargin
+  query("q292_single_link", q292SingleLink, Some(q292Oracle))
 
   // ---------------------------------------------------------------- q293
   /** RAKE KEYWORD EXTRACTION (Rose et al. 2010 — Rapid Automatic
@@ -1308,6 +1316,7 @@ private[graft] trait QueriesGraph {
       |FROM scored
       |ORDER BY score DESC, phrase
       |LIMIT 20""".stripMargin
+  query("q293_rake", q293Rake, Some(q293Oracle))
 
   // ---------------------------------------------------------------- q294
   /** L-DIVERSITY AND T-CLOSENESS AUDIT (Machanavajjhala et al. ICDE'06;
@@ -1389,6 +1398,7 @@ private[graft] trait QueriesGraph {
       |FROM cls JOIN l1 USING (ub, wd)
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
+  query("q294_l_diversity", q294LDiversity, Some(q294Oracle))
 
   // ---------------------------------------------------------------- q295
   /** Z-ORDER RANGE PRUNING CERTIFICATE — q208 measured that z-layout
@@ -1494,6 +1504,7 @@ private[graft] trait QueriesGraph {
        |  CAST(65536 AS BIGINT) AS domain
        |FROM flagged""".stripMargin
   }
+  query("q295_z_range_pruning", q295ZRangePruning, Some(q295Oracle))
 
   // ---------------------------------------------------------------- q296
   /** EXACT DISTRIBUTED SPEARMAN RANK CORRELATION between account
@@ -1560,6 +1571,7 @@ private[graft] trait QueriesGraph {
       |    AS rho_ppm
       |FROM agg
       |ORDER BY segment""".stripMargin
+  query("q296_spearman", q296Spearman, Some(q296Oracle))
 
   // ---------------------------------------------------------------- q297
   /** MORAN'S I SPATIAL AUTOCORRELATION (Moran 1950; the diagnostic a
@@ -1653,6 +1665,7 @@ private[graft] trait QueriesGraph {
       |  CAST((den.n * pairs.num1 * 1000000) // (pairs.w_pairs * den.den1) AS BIGINT) AS i1_ppm,
       |  CAST((den.n * pairs.num2 * 1000000) // (pairs.w_pairs * den.den2) AS BIGINT) AS i2_ppm
       |FROM pairs, den""".stripMargin
+  query("q297_morans_i", q297MoransI, Some(q297Oracle))
 
   // ---------------------------------------------------------------- q298
   /** ROBUST OUTLIER DETECTION via MEDIAN/MAD (Hampel's rule — the
@@ -1735,6 +1748,7 @@ private[graft] trait QueriesGraph {
       |FROM dev JOIN mad USING (segment)
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
+  query("q298_robust_outliers", q298RobustOutliers, Some(q298Oracle))
 
   // ---------------------------------------------------------------- q299
   /** GREEDY INTERVAL SCHEDULING (the exchange-argument classic:
@@ -1818,6 +1832,7 @@ private[graft] trait QueriesGraph {
       |FROM folded
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
+  query("q299_interval_schedule", q299IntervalSchedule, Some(q299Oracle))
 
   // ---------------------------------------------------------------- q300
   /** CUPED VARIANCE REDUCTION for A/B readouts (Deng et al. WSDM'13 —
@@ -1914,6 +1929,7 @@ private[graft] trait QueriesGraph {
       |FROM per, theta
       |GROUP BY variant, n, sx, num_t, den_t, den_y
       |ORDER BY variant""".stripMargin
+  query("q300_cuped", q300Cuped, Some(q300Oracle))
 
   // ---------------------------------------------------------------- q301
   /** TEXTRANK KEYWORD SCORING (Mihalcea-Tarau EMNLP'04 - PageRank on
@@ -2035,6 +2051,7 @@ private[graft] trait QueriesGraph {
        |ORDER BY score DESC, v4.word
        |LIMIT 10""".stripMargin
   }
+  query("q301_textrank", q301TextRank, Some(q301Oracle))
 
   // ---------------------------------------------------------------- q302
   /** ABSORBING MARKOV CHAIN FUNNEL ANALYSIS (Kemeny-Snell fundamental-
@@ -2127,6 +2144,7 @@ private[graft] trait QueriesGraph {
        |FROM s12 JOIN rowsum ON rowsum.i = s12.state
        |ORDER BY s12.state""".stripMargin
   }
+  query("q302_absorbing_chain", q302AbsorbingChain, Some(q302Oracle))
 
   // ---------------------------------------------------------------- q303
   /** HEAPS'-LAW VOCABULARY GROWTH (Herdan-Heaps: V(n) ~ K*n^beta - the
@@ -2198,6 +2216,7 @@ private[graft] trait QueriesGraph {
       |    // SUM(toks) OVER (ORDER BY k ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ttr_ppm
       |FROM base
       |ORDER BY k""".stripMargin
+  query("q303_heaps_law", q303HeapsLaw, Some(q303Oracle))
 
   // ---------------------------------------------------------------- q304
   /** TEMPERATURE-SCALED MIXTURE ALLOCATION (the multilingual-sampling
@@ -2285,6 +2304,7 @@ private[graft] trait QueriesGraph {
       |  CAST(SUM(alloc) OVER () AS BIGINT) = 100000 AS sum_ok
       |FROM a
       |ORDER BY source""".stripMargin
+  query("q304_temperature_mix", q304TemperatureMix, Some(q304Oracle))
 
   // ---------------------------------------------------------------- q305
   /** MAXIMUM SUBARRAY AND MAXIMUM DRAWDOWN (Kadane's recurrence made
@@ -2351,6 +2371,7 @@ private[graft] trait QueriesGraph {
       |FROM scored
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
+  query("q305_kadane", q305Kadane, Some(q305Oracle))
 
   // ---------------------------------------------------------------- q306
   /** SOURCE SIMILARITY MATRIX, SQRT-FREE — pairwise cosine between
@@ -2424,6 +2445,7 @@ private[graft] trait QueriesGraph {
       |WHERE a < b
       |ORDER BY cos2_ppm DESC, a, b
       |LIMIT 10""".stripMargin
+  query("q306_source_similarity", q306SourceSimilarity, Some(q306Oracle))
 
   // ---------------------------------------------------------------- q307
   /** WILSON SCORE INTERVALS, EXACT-INTEGER (Wilson 1927 - the interval
@@ -2513,6 +2535,7 @@ private[graft] trait QueriesGraph {
       |    AS law_ok
       |FROM b
       |ORDER BY variant, segment""".stripMargin
+  query("q307_wilson", q307Wilson, Some(q307Oracle))
 
   // ---------------------------------------------------------------- q308
   /** HASH COLLISION CENSUS vs THE BIRTHDAY BOUND - the quality audit a
@@ -2566,6 +2589,7 @@ private[graft] trait QueriesGraph {
       |  CAST((CAST(obs_pairs AS HUGEINT) * 2 * 65536 * 1000000) // (n * (n - 1)) AS BIGINT)
       |    AS ratio_ppm
       |FROM agg""".stripMargin
+  query("q308_hash_collisions", q308HashCollisions, Some(q308Oracle))
 
   // ---------------------------------------------------------------- q309
   /** REFERENTIAL INTEGRITY AUDIT - the cross-table foreign-key census
@@ -2683,6 +2707,7 @@ private[graft] trait QueriesGraph {
       |      THEN s_nationkey ELSE 0 END), 0) AS BIGINT)
       |  FROM supplier)
       |ORDER BY fk_edge""".stripMargin
+  query("q309_ref_integrity", q309RefIntegrity, Some(q309Oracle))
 
   // ---------------------------------------------------------------- q310
   /** BURSTINESS (FANO FACTOR) PER EVENT TYPE - the dispersion index
@@ -2727,6 +2752,7 @@ private[graft] trait QueriesGraph {
       |    AS fano_ppm
       |FROM agg
       |ORDER BY event_type""".stripMargin
+  query("q310_burstiness", q310Burstiness, Some(q310Oracle))
 
   // ---------------------------------------------------------------- q311
   /** THRESHOLD-ALGORITHM TOP-K RANK JOIN CERTIFICATE (Fagin-Lotem-Naor
@@ -2840,6 +2866,7 @@ private[graft] trait QueriesGraph {
       |    AND ca.k_cand = fa.k_full) AS sets_equal,
       |  fa.full_idsum AS topk_idsum
       |FROM ca, fa, tau""".stripMargin
+  query("q311_ta_topk", q311TaTopk, Some(q311Oracle))
 
   // ---------------------------------------------------------------- q312
   /** DICTIONARY-ENCODING ADVISOR - the storage-planning census a
@@ -2908,6 +2935,7 @@ private[graft] trait QueriesGraph {
       one("part.p_name", "part", "p_name")
     ).mkString("SELECT * FROM (\n", "\n  UNION ALL\n", ")\nORDER BY column_name")
   }
+  query("q312_dict_advisor", q312DictAdvisor, Some(q312Oracle))
 
   // ---------------------------------------------------------------- q313
   /** SPLIT-CONFORMAL PREDICTION COVERAGE (Vovk; Lei et al. JASA'18 -
@@ -3000,6 +3028,7 @@ private[graft] trait QueriesGraph {
       |    AS BIGINT) AS coverage_ppm
       |FROM ev, qh, n
       |GROUP BY n.n_cal""".stripMargin
+  query("q313_conformal", q313Conformal, Some(q313Oracle))
 
   // ---------------------------------------------------------------- q314
   /** GINI COEFFICIENT + LORENZ CURVE of token mass across sources —
@@ -3065,6 +3094,7 @@ private[graft] trait QueriesGraph {
       |    // (n_sources * CAST(s_total AS HUGEINT)) AS BIGINT) AS gini_ppm
       |FROM ranked, tot
       |ORDER BY rnk""".stripMargin
+  query("q314_gini_lorenz", q314GiniLorenz, Some(q314Oracle))
 
   // ---------------------------------------------------------------- q315
   /** CHAO1 RICHNESS + GOOD–TURING UNSEEN MASS — the vocabulary
@@ -3119,6 +3149,7 @@ private[graft] trait QueriesGraph {
       |    AS chao1_scaled,
       |  CAST((CAST(f1 AS HUGEINT) * 1000000) // n_tokens AS BIGINT) AS p0_ppm
       |FROM census""".stripMargin
+  query("q315_chao1_richness", q315Chao1, Some(q315Oracle))
 
   // ---------------------------------------------------------------- q316
   /** EXACT TWO-SAMPLE KOLMOGOROV–SMIRNOV DISTANCE between the event
@@ -3211,6 +3242,7 @@ private[graft] trait QueriesGraph {
       |FROM gaps, mx, tot
       |WHERE gap = max_gap
       |GROUP BY tot.n0, tot.n1, tot.n_grid""".stripMargin
+  query("q316_ks_distance", q316KsDistance, Some(q316Oracle))
 
   // ---------------------------------------------------------------- q317
   /** MANN–WHITNEY U WITH MIDRANKS — the nonparametric A/B test
@@ -3301,6 +3333,7 @@ private[graft] trait QueriesGraph {
       |  (u0_x2 + u1_x2 = 2 * CAST(n0 AS HUGEINT) * n1) AS law_ok,
       |  CAST((u0_x2 * 1000000) // (2 * CAST(n0 AS HUGEINT) * n1) AS BIGINT) AS auc_ppm
       |FROM u""".stripMargin
+  query("q317_mann_whitney", q317MannWhitney, Some(q317Oracle))
 
   // ---------------------------------------------------------------- q318
   /** IMPORTANCE-WEIGHT ESS DIAGNOSTIC (Kong 1992's effective sample
@@ -3366,6 +3399,7 @@ private[graft] trait QueriesGraph {
       |  (CAST(k AS HUGEINT) * k * 1000000000000) // inv_sum <= n AS ess_le_n
       |FROM per, tot
       |ORDER BY per.source""".stripMargin
+  query("q318_importance_ess", q318ImportanceEss, Some(q318Oracle))
 
   // ---------------------------------------------------------------- q319
   /** ZIPF RANK-FREQUENCY SLOPE, integer-exact (Zipf's law: freq ∝
@@ -3440,6 +3474,7 @@ private[graft] trait QueriesGraph {
       |  ((CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy) * 1000000)
       |    // (CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx) < 0 AS zipf_like
       |FROM stats""".stripMargin
+  query("q319_zipf_slope", q319ZipfSlope, Some(q319Oracle))
 
   // ---------------------------------------------------------------- q320
   /** COHEN'S KAPPA ANNOTATOR AGREEMENT (Cohen 1960 — the label-noise
@@ -3521,6 +3556,7 @@ private[graft] trait QueriesGraph {
       |    <= CAST(((n11 + n00) * 1000000) // n AS BIGINT) AS kappa_le_po
       |FROM c""".stripMargin
   }
+  query("q320_cohens_kappa", q320CohensKappa, Some(q320Oracle))
   // ---------------------------------------------------------------- q96
   /** PageRank (ops/PageRank) over the part↔supplier co-occurrence graph
     * — the canonical iterative-graph workload, 3 power-iteration rounds
@@ -3590,6 +3626,7 @@ private[graft] trait QueriesGraph {
        |SELECT node, round(r, 10) AS r FROM r3
        |ORDER BY node""".stripMargin
   }
+  query("q96_pagerank", q96PageRank, Some(q96Oracle))
 
   // ---------------------------------------------------------------- q106
   /** PageRank on a DIRECTED graph with dangling nodes — exercises the
@@ -3663,6 +3700,7 @@ private[graft] trait QueriesGraph {
        |SELECT node, round(r, 10) AS r FROM r3
        |ORDER BY node""".stripMargin
   }
+  query("q106_pagerank_directed", q106PagerankDirected, Some(q106Oracle))
 
   // ---------------------------------------------------------------- q107
   /** HARD-NEGATIVE mining at PRODUCTION shape — q91's contract served
@@ -3787,6 +3825,7 @@ private[graft] trait QueriesGraph {
       .crossJoin(broadcast(inCands))
       .orderBy(col("anchor"))
   }
+  query("q107_hard_negatives_ann", q107HardNegativesAnn, None)
 
   // ---------------------------------------------------------------- q109
   /** IVF-PQ two-stage ANN serving (round 6) — the PRODUCTION vector
@@ -4014,6 +4053,7 @@ private[graft] trait QueriesGraph {
        |  ${(64 * 4) / (m / 2)} AS compression_x
        |FROM rc, sf""".stripMargin
   }
+  query("q109_ivf_pq", q109IvfPq, None)
 
   // ---------------------------------------------------------------- q188
   /** BENFORD FIRST-DIGIT AUDIT — the data-quality screen for fabricated
@@ -4096,6 +4136,7 @@ private[graft] trait QueriesGraph {
       |FROM chi
       |GROUP BY event_type, n
       |ORDER BY event_type""".stripMargin
+  query("q188_benford", q188Benford, Some(q188Oracle))
 
   // ---------------------------------------------------------------- q203
   /** IDW INTERPOLATION — the reference domain's actual spatial use
@@ -4179,6 +4220,7 @@ private[graft] trait QueriesGraph {
       |FROM pts LEFT JOIN est ON est.pk = pts.pk
       |GROUP BY 1
       |ORDER BY bucket""".stripMargin
+  query("q203_idw_interpolation", q203IdwInterpolation, Some(q203Oracle))
 
   // ---------------------------------------------------------------- q207
   /** CC CROSS-IMPLEMENTATION AGREEMENT — the two connected-components
@@ -4238,6 +4280,7 @@ private[graft] trait QueriesGraph {
        |  CAST(0 AS BIGINT) AS n_disagreements,
        |  CAST(SUM(component) AS BIGINT) AS label_sum
        |FROM lab""".stripMargin
+  query("q207_cc_agreement", q207CcAgreement, Some(q207Oracle))
 
   // ---------------------------------------------------------------- q265
   /** LOCAL CLUSTERING COEFFICIENT — the per-node closure of q174's
@@ -4326,6 +4369,7 @@ private[graft] trait QueriesGraph {
       |FROM pn
       |GROUP BY bucket
       |ORDER BY bucket""".stripMargin
+  query("q265_clustering_coeff", q265ClusteringCoeff, Some(q265Oracle))
 
   // ---------------------------------------------------------------- q269
   /** HILBERT vs Z-ORDER, MEASURED — q208's rectangle probe plus the
@@ -4463,5 +4507,6 @@ private[graft] trait QueriesGraph {
        |FROM files f JOIN clusters c ON c.qid = f.qid
        |ORDER BY f.qid""".stripMargin
   }
+  query("q269_hilbert", q269Hilbert, Some(q269Oracle))
 
 }

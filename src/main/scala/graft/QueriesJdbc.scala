@@ -15,7 +15,7 @@ import graft.jobs.JdbcStore
   * relation. In production the URL swaps to Postgres; the statements are
   * already ANSI (see [[graft.jobs.JdbcStore]]).
   */
-private[graft] trait QueriesJdbc {
+private[graft] trait QueriesJdbc extends QueryRegistration {
   this: QueriesCore =>
 
   private def freshDerby(tag: String): String =
@@ -57,10 +57,8 @@ private[graft] trait QueriesJdbc {
     back.orderBy(col("c_custkey"))
   }
 
-  /** Same relation as q10 — the oracle is shared on purpose: the JDBC
-    * transport must be invisible in the result.
-    */
-  val q321Oracle: String = q10Oracle
+  // same relation as q10: the JDBC transport must be invisible in the result
+  query("q321_jdbc_upsert", q321JdbcUpsert, Some(q10Oracle))
 
   // ---------------------------------------------------------------- q322
   /** A4/A6 over the wire: q11's GREATEST cursor merge executed as
@@ -91,10 +89,8 @@ private[graft] trait QueriesJdbc {
     back.orderBy(col("user_id"), col("event_type"))
   }
 
-  /** Same relation as q11 (the merge of the two half-cursors) — shared
-    * oracle for the same reason as q321.
-    */
-  val q322Oracle: String = q11Oracle
+  // same relation as q11 (the merge of the two half-cursors), as for q321
+  query("q322_jdbc_cursor", q322JdbcCursor, Some(q11Oracle))
 
   // ---------------------------------------------------------------- q323
   /** S9's BIG-TABLE re-entry shape EXECUTED and oracle-certified (r13,
@@ -135,8 +131,6 @@ private[graft] trait QueriesJdbc {
     back.orderBy(col("c_custkey"))
   }
 
-  /** Same relation as q10/q321 — the partition split must be invisible
-    * in the result.
-    */
-  val q323Oracle: String = q10Oracle
+  // same relation as q10/q321: the partition split must be invisible in the result
+  query("q323_jdbc_partitioned_scan", q323JdbcPartitionedScan, Some(q10Oracle))
 }

@@ -4,662 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** the single registry map (`all`), the oracle map, and the dynamic (verify-time-generated) oracles
-  *
-  * Mechanical split of the former single-object registry (r11):
-  * statement order across the trait linearization in Queries.scala
-  * is the original file order, so val-initialization semantics are
-  * unchanged. See object Queries for the assembly.
+/** The registry as the driver contract reads it (`all`, `oracles`),
+  * derived from the `query(...)` declarations, and the oracles Verify
+  * generates from corpus statistics.
   */
-private[graft] trait QueriesRegistry {
+private[graft] trait QueriesRegistry extends QueryRegistration {
   this: QueriesCore with QueriesCuration with QueriesAnalytics with QueriesExact with QueriesGraph with QueriesJdbc =>
-  // ---------------------------------------------------------------------
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg _),
-    "q2_filter" -> (q2Filter _),
-    "q3_enrich" -> (q3Enrich _),
-    "q4_watermark" -> (q4Watermark _),
-    "q5_dedup" -> (q5Dedup _),
-    "q6_latest" -> (q6Latest _),
-    "q7_hourly" -> (q7Hourly _),
-    "q8_union" -> (q8Union _),
-    "q9_topk" -> (q9Topk _),
-    "q10_upsert" -> (q10Upsert _),
-    "q11_greatest" -> (q11Greatest _),
-    "q12_json" -> (q12Json _),
-    "q13_explode" -> (q13Explode _),
-    "q14_timestamps" -> (q14Timestamps _),
-    "q15_strings" -> (q15Strings _),
-    "q16_join_parts" -> (q16JoinParts _),
-    "q17_count_by" -> (q17CountBy _),
-    "q18_parse_ts" -> (q18ParseTs _),
-    "q19_normalize" -> (q19Normalize _),
-    "q20_stations" -> (q20Stations _),
-    "q21_text_quality" -> (q21TextQuality _),
-    "q22_lang_id" -> (q22LangId _),
-    "q23_fingerprint" -> (q23Fingerprint _),
-    "q24_dedup_text" -> (q24DedupText _),
-    "q25_knn_brute" -> (q25KnnBrute _),
-    "q26_token_counts" -> (q26TokenCounts _),
-    "q27_minhash_dedup" -> (q27MinhashDedup _),
-    "q28_simhash" -> (q28Simhash _),
-    "q29_ngram_jaccard" -> (q29NgramJaccard _),
-    "q30_ann_lsh" -> (q30AnnLsh _),
-    "q31_embed_neardups" -> (q31EmbedNearDups _),
-    "q32_multimodal" -> (q32Multimodal _),
-    "q33_dedup_assign" -> (q33DedupAssign _),
-    "q34_retention" -> (q34Retention _),
-    "q35_ivf" -> (q35Ivf _),
-    "q36_rollup" -> (q36Rollup _),
-    "q37_sessionize" -> (q37Sessionize _),
-    "q38_pivot" -> (q38Pivot _),
-    "q39_session_window" -> (q39SessionWindow _),
-    "q40_topk_per_group" -> (q40TopkPerGroup _),
-    "q41_percentiles" -> (q41Percentiles _),
-    "q42_asof_join" -> (q42AsofJoin _),
-    "q43_range_join" -> (q43RangeJoin _),
-    "q44_hll_sketch" -> (q44HllSketch _),
-    "q45_embed_neardups_exact" -> (q45EmbedNearDupsExact _),
-    "q46_text_neardups_exact" -> (q46TextNearDupsExact _),
-    "q47_tz" -> (q47Tz _),
-    "q48_minhash_recall" -> (q48MinhashRecall _),
-    "q49_ann_adaptive" -> (q49AnnAdaptiveRecall _),
-    "q50_bloom_join" -> (q50BloomJoin _),
-    "q51_connected_components" -> (q51ConnectedComponents _),
-    "q52_stratified_sample" -> (q52StratifiedSample _),
-    "q53_text_clean" -> (q53TextClean _),
-    "q54_media_dedup" -> (q54MediaDedup _),
-    "q55_scd2" -> (q55Scd2 _),
-    "q56_dq_checks" -> (q56DqChecks _),
-    "q57_seq_pack" -> (q57SeqPack _),
-    "q58_repetition" -> (q58Repetition _),
-    "q59_tdigest" -> (q59TdigestPercentiles _),
-    "q60_cc_log_rounds" -> (q60ConnectedComponentsLogRounds _),
-    "q61_decontaminate" -> (q61Decontaminate _),
-    "q62_mixture_weights" -> (q62MixtureWeights _),
-    "q63_chunking" -> (q63Chunk _),
-    "q64_decontaminate_bloom" -> (q64DecontaminateBloom _),
-    "q65_salted_join" -> (q65SaltedJoin _),
-    "q66_tfidf" -> (q66Tfidf _),
-    "q67_clean_pipeline" -> (q67CleanPipeline _),
-    "q68_source_dedup_stats" -> (q68SourceDedupStats _),
-    "q69_cube" -> (q69Cube _),
-    "q70_heavy_hitters" -> (q70HeavyHitters _),
-    "q71_mixture_expand" -> (q71MixtureExpand _),
-    "q72_incremental_dedup" -> (q72IncrementalDedup _),
-    "q73_compress_quality" -> (q73CompressQuality _),
-    "q74_cdc_apply" -> (q74CdcApply _),
-    "q75_bpe_pairs" -> (q75BpePairs _),
-    "q76_moving_features" -> (q76MovingFeatures _),
-    "q77_quantize" -> (q77Quantize _),
-    "q78_semantic_dedup" -> (q78SemanticDedup _),
-    "q79_alpha_sweep" -> (q79AlphaSweep _),
-    "q80_dup_spans" -> (q80DupSpans _),
-    "q81_quality_auc" -> (q81QualityAuc _),
-    "q82_source_overlap" -> (q82SourceOverlap _),
-    "q83_quality_bins" -> (q83QualityBins _),
-    "q84_canonical_pick" -> (q84CanonicalPick _),
-    "q85_hash_split" -> (q85HashSplit _),
-    "q86_oov_rate" -> (q86OovRate _),
-    "q87_dup_span_removal" -> (q87DupSpanRemoval _),
-    "q88_dispersion" -> (q88Dispersion _),
-    "q89_zorder_layout" -> (q89ZorderLayout _),
-    "q90_compaction_plan" -> (q90CompactionPlan _),
-    "q91_hard_negatives" -> (q91HardNegatives _),
-    "q92_freshness" -> (q92Freshness _),
-    "q93_funnel" -> (q93Funnel _),
-    "q94_pq_adc" -> (q94PqAdc _),
-    "q95_bpe_train" -> (q95BpeTrain _),
-    "q96_pagerank" -> (q96PageRank _),
-    "q97_anomaly" -> (q97Anomaly _),
-    "q98_transitions" -> (q98Transitions _),
-    "q99_nearest_centroid" -> (q99NearestCentroid _),
-    "q100_data_card" -> (q100DataCard _),
-    "q101_novelty" -> (q101Novelty _),
-    "q102_psi_drift" -> (q102PsiDrift _),
-    "q103_ann_ranking" -> (q103AnnRankingQuality _),
-    "q104_snapshot_diff" -> (q104SnapshotDiff _),
-    "q105_temporal_split" -> (q105TemporalSplit _),
-    "q106_pagerank_directed" -> (q106PagerankDirected _),
-    "q107_hard_negatives_ann" -> (q107HardNegativesAnn _),
-    "q108_audio_decode" -> (q108AudioDecode _),
-    "q109_ivf_pq" -> (q109IvfPq _),
-    "q110_lm_score" -> (q110LmScore _),
-    "q111_bpe_encode" -> (q111BpeEncode _),
-    "q112_sparse_allpairs" -> (q112SparseAllPairs _),
-    "q113_shard_plan" -> (q113ShardPlan _),
-    "q114_decontam_coverage" -> (q114DecontamCoverage _),
-    "q115_weighted_sample" -> (q115WeightedSample _),
-    "q116_export_digest" -> (q116ExportDigest _),
-    "q117_ccnet_buckets" -> (q117CcnetBuckets _),
-    "q118_source_digest" -> (q118SourceDigest _),
-    "q119_column_profile" -> (q119ColumnProfile _),
-    "q120_curation_pipeline" -> (q120CurationPipeline _),
-    "q121_de_payload_decode" -> (q121DePayloadDecode _),
-    "q122_bm25" -> (q122Bm25 _),
-    "q123_order_digest" -> (q123OrderDigest _),
-    "q124_delta_digest" -> (q124DeltaDigest _),
-    "q125_stratified_shards" -> (q125StratifiedShards _),
-    "q126_gopher_rules" -> (q126GopherRules _),
-    "q127_leak_safe_split" -> (q127LeakSafeSplit _),
-    "q128_train_classifier" -> (q128TrainClassifier _),
-    "q129_jl_projection" -> (q129JlProjection _),
-    "q130_jl_ann_recall" -> (q130JlAnnRecall _),
-    "q131_count_min" -> (q131CountMin _),
-    "q132_cv_classifier" -> (q132CvClassifier _),
-    "q133_pmi_collocations" -> (q133PmiCollocations _),
-    "q134_event_trends" -> (q134EventTrends _),
-    "q135_deletion_plan" -> (q135DeletionPlan _),
-    "q136_gopher_report" -> (q136GopherReport _),
-    "q137_vocab_stats" -> (q137VocabStats _),
-    "q138_lang_confusion" -> (q138LangConfusion _),
-    "q139_native_topk" -> (q139NativeTopK _),
-    "q140_incremental_cc" -> (q140IncrementalCc _),
-    "q141_ngram_span_dup" -> (q141NgramSpanDup _),
-    "q142_temperature_mix" -> (q142TemperatureMix _),
-    "q143_calibration" -> (q143Calibration _),
-    "q144_token_budget" -> (q144TokenBudget _),
-    "q145_span_removal" -> (q145SpanRemoval _),
-    "q146_canonical_dedup" -> (q146CanonicalDedup _),
-    "q147_cross_source_dup" -> (q147CrossSourceDup _),
-    "q148_method_agreement" -> (q148MethodAgreement _),
-    "q149_image_dhash" -> (q149ImageDhash _),
-    "q150_rendezvous_shards" -> (q150RendezvousShards _),
-    "q151_reshard_plan" -> (q151ReshardPlan _),
-    "q152_span_width_ladder" -> (q152SpanWidthLadder _),
-    "q153_source_fair_filter" -> (q153SourceFairFilter _),
-    "q154_epoch_plan" -> (q154EpochPlan _),
-    "q155_label_prop" -> (q155LabelProp _),
-    "q156_epoch_drift" -> (q156EpochDrift _),
-    "q157_range_join" -> (q157RangeJoin _),
-    "q158_retention" -> (q158Retention _),
-    "q159_pivot" -> (q159Pivot _),
-    "q160_fuzzy_match" -> (q160FuzzyMatch _),
-    "q161_rollup" -> (q161Rollup _),
-    "q162_six_way_join" -> (q162SixWayJoin _),
-    "q163_exists_late" -> (q163ExistsLate _),
-    "q164_scalar_avg" -> (q164ScalarAvg _),
-    "q165_not_in_nulls" -> (q165NotInNulls _),
-    "q166_null_safe_join" -> (q166NullSafeJoin _),
-    "q167_peak_concurrency" -> (q167PeakConcurrency _),
-    "q168_skyline" -> (q168Skyline _),
-    "q169_entity_resolution" -> (q169EntityResolution _),
-    "q170_exact_moments" -> (q170ExactMoments _),
-    "q171_window_functions" -> (q171WindowFunctions _),
-    "q172_grouping_sets" -> (q172GroupingSets _),
-    "q173_video_keyframes" -> (q173VideoKeyframes _),
-    "q174_triangles" -> (q174Triangles _),
-    "q175_sole_late_supplier" -> (q175SoleLateSupplier _),
-    "q176_global_avg_anti" -> (q176GlobalAvgAnti _),
-    "q177_set_ops" -> (q177SetOps _),
-    "q178_explode_outer" -> (q178ExplodeOuter _),
-    "q179_array_hof" -> (q179ArrayHof _),
-    "q180_ivm" -> (q180Ivm _),
-    "q181_attribution" -> (q181Attribution _),
-    "q182_twap" -> (q182Twap _),
-    "q183_ohlc" -> (q183Ohlc _),
-    "q184_kcore" -> (q184KCore _),
-    "q185_trending" -> (q185Trending _),
-    "q186_ratio_report" -> (q186RatioReport _),
-    "q187_moving_median" -> (q187MovingMedian _),
-    "q188_benford" -> (q188Benford _),
-    "q189_weighted_median" -> (q189WeightedMedian _),
-    "q190_journey_patterns" -> (q190JourneyPatterns _),
-    "q191_clamped_balance" -> (q191ClampedBalance _),
-    "q192_mergeable_distinct" -> (q192MergeableDistinct _),
-    "q193_time_to_convert" -> (q193TimeToConvert _),
-    "q194_rfm" -> (q194Rfm _),
-    "q195_fifo" -> (q195Fifo _),
-    "q196_iso_weekday" -> (q196IsoWeekday _),
-    "q197_unicode" -> (q197Unicode _),
-    "q198_int_division" -> (q198IntDivision _),
-    "q199_log_histogram" -> (q199LogHistogram _),
-    "q200_daily_dashboard" -> (q200DailyDashboard _),
-    "q201_geo_grid" -> (q201GeoGrid _),
-    "q202_spatial_join" -> (q202SpatialJoin _),
-    "q203_idw_interpolation" -> (q203IdwInterpolation _),
-    "q204_spatial_knn" -> (q204SpatialKnn _),
-    "q205_late_arrivals" -> (q205LateArrivals _),
-    "q206_dedup_idempotence" -> (q206DedupIdempotence _),
-    "q207_cc_agreement" -> (q207CcAgreement _),
-    "q208_zorder_effect" -> (q208ZorderEffect _),
-    "q209_null_aggregates" -> (q209NullAggregates _),
-    "q210_null_ordering" -> (q210NullOrdering _),
-    "q211_join_matrix" -> (q211JoinMatrix _),
-    "q212_cast_table" -> (q212CastTable _),
-    "q213_calendar" -> (q213Calendar _),
-    "q214_frame_semantics" -> (q214FrameSemantics _),
-    "q215_empty_input" -> (q215EmptyInput _),
-    "q216_three_valued" -> (q216ThreeValued _),
-    "q217_interval_union" -> (q217IntervalUnion _),
-    "q218_longest_streak" -> (q218LongestStreak _),
-    "q219_asof_tolerance" -> (q219AsofTolerance _),
-    "q220_topk_ties" -> (q220TopkTies _),
-    "q221_nested_sampling" -> (q221NestedSampling _),
-    "q222_equidepth" -> (q222Equidepth _),
-    "q223_new_vs_returning" -> (q223NewVsReturning _),
-    "q224_wow_growth" -> (q224WowGrowth _),
-    "q225_bfs_layers" -> (q225BfsLayers _),
-    "q226_pii_scan" -> (q226PiiScan _),
-    "q227_skew_gini" -> (q227SkewGini _),
-    "q228_negative_sampling" -> (q228NegativeSampling _),
-    "q229_filter_ablation" -> (q229FilterAblation _),
-    "q230_ppjoin" -> (q230PpJoin _),
-    "q231_phrase_search" -> (q231PhraseSearch _),
-    "q232_merkle_diff" -> (q232MerkleDiff _),
-    "q233_chi_square_ab" -> (q233ChiSquareAb _),
-    "q234_survival_hazard" -> (q234SurvivalHazard _),
-    "q235_eccentricity" -> (q235Eccentricity _),
-    "q236_sssp" -> (q236Sssp _),
-    "q237_k_anonymity" -> (q237KAnonymity _),
-    "q238_seasonality" -> (q238Seasonality _),
-    "q239_hierarchy_rollup" -> (q239HierarchyRollup _),
-    "q240_bloom_fpr" -> (q240BloomFpr _),
-    "q241_lpm_join" -> (q241LpmJoin _),
-    "q242_token_bucket" -> (q242TokenBucket _),
-    "q243_market_basket" -> (q243MarketBasket _),
-    "q244_sliding_distinct" -> (q244SlidingDistinct _),
-    "q245_gram_matrix" -> (q245GramMatrix _),
-    "q246_gap_fill" -> (q246GapFill _),
-    "q247_mix_shift" -> (q247MixShift _),
-    "q248_maximal_matching" -> (q248MaximalMatching _),
-    "q249_tokenization" -> (q249Tokenization _),
-    "q250_abandonment" -> (q250Abandonment _),
-    "q251_quantile_norm" -> (q251QuantileNorm _),
-    "q252_seasonal_anomaly" -> (q252SeasonalAnomaly _),
-    "q253_hits" -> (q253Hits _),
-    "q254_graph_features" -> (q254GraphFeatures _),
-    "q255_rrf_fusion" -> (q255Rrf _),
-    "q256_cusum" -> (q256Cusum _),
-    "q257_ewma" -> (q257Ewma _),
-    "q258_recursive_cte" -> (q258RecursiveCte _),
-    "q259_variant" -> (q259Variant _),
-    "q260_collation" -> (q260Collation _),
-    "q261_jaro_winkler" -> (q261JaroWinkler _),
-    "q262_inverted_index" -> (q262InvertedIndex _),
-    "q263_hll_algebra" -> (q263HllAlgebra _),
-    "q264_ams_f2" -> (q264AmsF2 _),
-    "q265_clustering_coeff" -> (q265ClusteringCoeff _),
-    "q266_acf" -> (q266Acf _),
-    "q267_jump_hash" -> (q267JumpHash _),
-    "q268_unpivot" -> (q268Unpivot _),
-    "q269_hilbert" -> (q269Hilbert _),
-    "q270_filter_clause" -> (q270FilterClause _),
-    "q271_lateral" -> (q271Lateral _),
-    "q272_theil_sen" -> (q272TheilSen _),
-    "q273_mann_whitney" -> (q273MannWhitney _),
-    "q274_bitmap" -> (q274Bitmap _),
-    "q275_critical_path" -> (q275CriticalPath _),
-    "q276_set_cover" -> (q276SetCover _),
-    "q277_scc" -> (q277Scc _),
-    "q278_cms_join_size" -> (q278CmsJoinSize _),
-    "q279_router_shootout" -> (q279RouterShootout _),
-    "q280_l1_regression" -> (q280L1Regression _),
-    "q281_geohash" -> (q281Geohash _),
-    "q282_markov_stationary" -> (q282MarkovStationary _),
-    "q283_boruvka_msf" -> (q283BoruvkaMsf _),
-    "q284_temporal_reach" -> (q284TemporalReach _),
-    "q285_random_walks" -> (q285RandomWalks _),
-    "q286_cdc_chunking" -> (q286CdcChunking _),
-    "q287_point_in_polygon" -> (q287PointInPolygon _),
-    "q288_link_prediction" -> (q288LinkPrediction _),
-    "q289_ppr" -> (q289Ppr _),
-    "q290_allocation" -> (q290Allocation _),
-    "q291_decision_stump" -> (q291DecisionStump _),
-    "q292_single_link" -> (q292SingleLink _),
-    "q293_rake" -> (q293Rake _),
-    "q294_l_diversity" -> (q294LDiversity _),
-    "q295_z_range_pruning" -> (q295ZRangePruning _),
-    "q296_spearman" -> (q296Spearman _),
-    "q297_morans_i" -> (q297MoransI _),
-    "q298_robust_outliers" -> (q298RobustOutliers _),
-    "q299_interval_schedule" -> (q299IntervalSchedule _),
-    "q300_cuped" -> (q300Cuped _),
-    "q301_textrank" -> (q301TextRank _),
-    "q302_absorbing_chain" -> (q302AbsorbingChain _),
-    "q303_heaps_law" -> (q303HeapsLaw _),
-    "q304_temperature_mix" -> (q304TemperatureMix _),
-    "q305_kadane" -> (q305Kadane _),
-    "q306_source_similarity" -> (q306SourceSimilarity _),
-    "q307_wilson" -> (q307Wilson _),
-    "q308_hash_collisions" -> (q308HashCollisions _),
-    "q309_ref_integrity" -> (q309RefIntegrity _),
-    "q310_burstiness" -> (q310Burstiness _),
-    "q311_ta_topk" -> (q311TaTopk _),
-    "q312_dict_advisor" -> (q312DictAdvisor _),
-    "q313_conformal" -> (q313Conformal _),
-    "q314_gini_lorenz" -> (q314GiniLorenz _),
-    "q315_chao1_richness" -> (q315Chao1 _),
-    "q316_ks_distance" -> (q316KsDistance _),
-    "q317_mann_whitney" -> (q317MannWhitney _),
-    "q318_importance_ess" -> (q318ImportanceEss _),
-    "q319_zipf_slope" -> (q319ZipfSlope _),
-    "q320_cohens_kappa" -> (q320CohensKappa _),
-    "q321_jdbc_upsert" -> (q321JdbcUpsert _),
-    "q322_jdbc_cursor" -> (q322JdbcCursor _),
-    "q323_jdbc_partitioned_scan" -> (q323JdbcPartitionedScan _),
-    "q324_token_chunks" -> (q324TokenChunks _)
-  )
 
-  // lazy: oracle-string vals may be DECLARED below this map in the file;
-  // a strict val would capture null for those forward references (object
-  // vals initialize in declaration order)
-  lazy val oracles: Map[String, String] = Map(
-    "q1_agg" -> q1Oracle,
-    "q2_filter" -> q2Oracle,
-    "q3_enrich" -> q3Oracle,
-    "q4_watermark" -> q4Oracle,
-    "q5_dedup" -> q5Oracle,
-    "q6_latest" -> q6Oracle,
-    "q7_hourly" -> q7Oracle,
-    "q8_union" -> q8Oracle,
-    "q9_topk" -> q9Oracle,
-    "q10_upsert" -> q10Oracle,
-    "q11_greatest" -> q11Oracle,
-    "q12_json" -> q12Oracle,
-    "q13_explode" -> q13Oracle,
-    "q14_timestamps" -> q14Oracle,
-    "q15_strings" -> q15Oracle,
-    "q16_join_parts" -> q16Oracle,
-    "q17_count_by" -> q17Oracle,
-    "q18_parse_ts" -> q18Oracle,
-    "q19_normalize" -> q19Oracle,
-    "q20_stations" -> q20Oracle,
-    "q21_text_quality" -> q21Oracle,
-    "q22_lang_id" -> q22Oracle,
-    "q23_fingerprint" -> q23Oracle,
-    "q24_dedup_text" -> q24Oracle,
-    "q25_knn_brute" -> q25Oracle,
-    "q26_token_counts" -> q26Oracle,
-    "q29_ngram_jaccard" -> q29Oracle,
-    "q32_multimodal" -> q32Oracle,
-    "q34_retention" -> q34Oracle,
-    "q108_audio_decode" -> q108Oracle,
-    "q35_ivf" -> q35Oracle,
-    "q36_rollup" -> q36Oracle,
-    "q37_sessionize" -> q37Oracle,
-    "q38_pivot" -> q38Oracle,
-    "q39_session_window" -> q39Oracle,
-    "q40_topk_per_group" -> q40Oracle,
-    "q41_percentiles" -> q41Oracle,
-    "q42_asof_join" -> q42Oracle,
-    "q43_range_join" -> q43Oracle,
-    "q45_embed_neardups_exact" -> q45Oracle,
-    "q46_text_neardups_exact" -> q46Oracle,
-    "q47_tz" -> q47Oracle,
-    "q59_tdigest" -> q59Oracle,
-    "q73_compress_quality" -> q73Oracle,
-    "q50_bloom_join" -> q50Oracle,
-    "q51_connected_components" -> q51Oracle,
-    "q52_stratified_sample" -> q52Oracle,
-    "q53_text_clean" -> q53Oracle,
-    "q55_scd2" -> q55Oracle,
-    "q56_dq_checks" -> q56Oracle,
-    "q57_seq_pack" -> q57Oracle,
-    "q58_repetition" -> q58Oracle,
-    // q60 runs a different algorithm to the same answer — q51's oracle
-    "q60_cc_log_rounds" -> q51Oracle,
-    "q61_decontaminate" -> q61Oracle,
-    "q62_mixture_weights" -> q62Oracle,
-    "q63_chunking" -> q63Oracle,
-    // q64 is q61 with a Bloom-prefiltered probe — identical output
-    "q64_decontaminate_bloom" -> q61Oracle,
-    "q65_salted_join" -> q65Oracle,
-    "q66_tfidf" -> q66Oracle,
-    "q67_clean_pipeline" -> q67Oracle,
-    "q68_source_dedup_stats" -> q68Oracle,
-    "q69_cube" -> q69Oracle,
-    // q70's k=64 exceeds the corpus vocabulary, so the MG estimates are
-    // provably exact — a plain GROUP BY count is a valid oracle
-    "q70_heavy_hitters" -> q70Oracle,
-    "q71_mixture_expand" -> q71Oracle,
-    "q72_incremental_dedup" -> q72Oracle,
-    "q74_cdc_apply" -> q74Oracle,
-    "q75_bpe_pairs" -> q75Oracle,
-    "q76_moving_features" -> q76Oracle,
-    "q77_quantize" -> q77Oracle,
-    "q78_semantic_dedup" -> q78Oracle,
-    "q79_alpha_sweep" -> q79Oracle,
-    "q80_dup_spans" -> q80Oracle,
-    "q81_quality_auc" -> q81Oracle,
-    "q82_source_overlap" -> q82Oracle,
-    "q83_quality_bins" -> q83Oracle,
-    "q84_canonical_pick" -> q84Oracle,
-    "q85_hash_split" -> q85Oracle,
-    "q86_oov_rate" -> q86Oracle,
-    "q87_dup_span_removal" -> q87Oracle,
-    "q88_dispersion" -> q88Oracle,
-    "q89_zorder_layout" -> q89Oracle,
-    "q90_compaction_plan" -> q90Oracle,
-    "q91_hard_negatives" -> q91Oracle,
-    "q92_freshness" -> q92Oracle,
-    "q93_funnel" -> q93Oracle,
-    "q95_bpe_train" -> q95Oracle,
-    "q96_pagerank" -> q96Oracle,
-    "q97_anomaly" -> q97Oracle,
-    "q98_transitions" -> q98Oracle,
-    "q99_nearest_centroid" -> q99Oracle,
-    "q100_data_card" -> q100Oracle,
-    "q101_novelty" -> q101Oracle,
-    "q102_psi_drift" -> q102Oracle,
-    "q103_ann_ranking" -> q103Oracle,
-    "q104_snapshot_diff" -> q104Oracle,
-    "q105_temporal_split" -> q105Oracle,
-    "q106_pagerank_directed" -> q106Oracle,
-    "q110_lm_score" -> q110Oracle,
-    "q111_bpe_encode" -> q111Oracle,
-    "q112_sparse_allpairs" -> q112Oracle,
-    "q113_shard_plan" -> q113Oracle,
-    "q114_decontam_coverage" -> q114Oracle,
-    "q115_weighted_sample" -> q115Oracle,
-    "q116_export_digest" -> q116Oracle,
-    "q117_ccnet_buckets" -> q117Oracle,
-    "q118_source_digest" -> q118Oracle,
-    "q119_column_profile" -> q119Oracle,
-    "q120_curation_pipeline" -> q120Oracle,
-    "q121_de_payload_decode" -> q121Oracle,
-    "q123_order_digest" -> q123Oracle,
-    "q124_delta_digest" -> q124Oracle,
-    "q125_stratified_shards" -> q125Oracle,
-    "q126_gopher_rules" -> q126Oracle,
-    "q127_leak_safe_split" -> q127Oracle,
-    "q128_train_classifier" -> q128Oracle,
-    "q129_jl_projection" -> q129Oracle,
-    "q130_jl_ann_recall" -> q130Oracle,
-    "q131_count_min" -> q131Oracle,
-    "q132_cv_classifier" -> q132Oracle,
-    "q133_pmi_collocations" -> q133Oracle,
-    "q134_event_trends" -> q134Oracle,
-    "q135_deletion_plan" -> q135Oracle,
-    "q136_gopher_report" -> q136Oracle,
-    "q137_vocab_stats" -> q137Oracle,
-    "q138_lang_confusion" -> q138Oracle,
-    "q139_native_topk" -> q139Oracle,
-    "q140_incremental_cc" -> q140Oracle,
-    "q141_ngram_span_dup" -> q141Oracle,
-    "q142_temperature_mix" -> q142Oracle,
-    "q143_calibration" -> q143Oracle,
-    "q144_token_budget" -> q144Oracle,
-    "q145_span_removal" -> q145Oracle,
-    "q146_canonical_dedup" -> q146Oracle,
-    "q147_cross_source_dup" -> q147Oracle,
-    "q148_method_agreement" -> q148Oracle,
-    "q149_image_dhash" -> q149Oracle,
-    "q150_rendezvous_shards" -> q150Oracle,
-    "q151_reshard_plan" -> q151Oracle,
-    "q152_span_width_ladder" -> q152Oracle,
-    "q153_source_fair_filter" -> q153Oracle,
-    "q154_epoch_plan" -> q154Oracle,
-    "q155_label_prop" -> q155Oracle,
-    "q156_epoch_drift" -> q156Oracle,
-    "q157_range_join" -> q157Oracle,
-    "q158_retention" -> q158Oracle,
-    "q159_pivot" -> q159Oracle,
-    "q160_fuzzy_match" -> q160Oracle,
-    "q161_rollup" -> q161Oracle,
-    "q162_six_way_join" -> q162Oracle,
-    "q163_exists_late" -> q163Oracle,
-    "q164_scalar_avg" -> q164Oracle,
-    "q165_not_in_nulls" -> q165Oracle,
-    "q166_null_safe_join" -> q166Oracle,
-    "q167_peak_concurrency" -> q167Oracle,
-    "q168_skyline" -> q168Oracle,
-    "q169_entity_resolution" -> q169Oracle,
-    "q170_exact_moments" -> q170Oracle,
-    "q171_window_functions" -> q171Oracle,
-    "q172_grouping_sets" -> q172Oracle,
-    "q173_video_keyframes" -> q173Oracle,
-    "q174_triangles" -> q174Oracle,
-    "q175_sole_late_supplier" -> q175Oracle,
-    "q176_global_avg_anti" -> q176Oracle,
-    "q177_set_ops" -> q177Oracle,
-    "q178_explode_outer" -> q178Oracle,
-    "q179_array_hof" -> q179Oracle,
-    "q180_ivm" -> q180Oracle,
-    "q181_attribution" -> q181Oracle,
-    "q182_twap" -> q182Oracle,
-    "q183_ohlc" -> q183Oracle,
-    "q184_kcore" -> q184Oracle,
-    "q185_trending" -> q185Oracle,
-    "q186_ratio_report" -> q186Oracle,
-    "q187_moving_median" -> q187Oracle,
-    "q188_benford" -> q188Oracle,
-    "q189_weighted_median" -> q189Oracle,
-    "q190_journey_patterns" -> q190Oracle,
-    "q191_clamped_balance" -> q191Oracle,
-    "q192_mergeable_distinct" -> q192Oracle,
-    "q193_time_to_convert" -> q193Oracle,
-    "q194_rfm" -> q194Oracle,
-    "q195_fifo" -> q195Oracle,
-    "q196_iso_weekday" -> q196Oracle,
-    "q197_unicode" -> q197Oracle,
-    "q198_int_division" -> q198Oracle,
-    "q199_log_histogram" -> q199Oracle,
-    "q200_daily_dashboard" -> q200Oracle,
-    "q201_geo_grid" -> q201Oracle,
-    "q202_spatial_join" -> q202Oracle,
-    "q203_idw_interpolation" -> q203Oracle,
-    "q204_spatial_knn" -> q204Oracle,
-    "q205_late_arrivals" -> q205Oracle,
-    "q206_dedup_idempotence" -> q206Oracle,
-    "q207_cc_agreement" -> q207Oracle,
-    "q208_zorder_effect" -> q208Oracle,
-    "q209_null_aggregates" -> q209Oracle,
-    "q210_null_ordering" -> q210Oracle,
-    "q211_join_matrix" -> q211Oracle,
-    "q212_cast_table" -> q212Oracle,
-    "q213_calendar" -> q213Oracle,
-    "q214_frame_semantics" -> q214Oracle,
-    "q215_empty_input" -> q215Oracle,
-    "q216_three_valued" -> q216Oracle,
-    "q217_interval_union" -> q217Oracle,
-    "q218_longest_streak" -> q218Oracle,
-    "q219_asof_tolerance" -> q219Oracle,
-    "q220_topk_ties" -> q220Oracle,
-    "q221_nested_sampling" -> q221Oracle,
-    "q222_equidepth" -> q222Oracle,
-    "q223_new_vs_returning" -> q223Oracle,
-    "q224_wow_growth" -> q224Oracle,
-    "q225_bfs_layers" -> q225Oracle,
-    "q226_pii_scan" -> q226Oracle,
-    "q227_skew_gini" -> q227Oracle,
-    "q228_negative_sampling" -> q228Oracle,
-    "q229_filter_ablation" -> q229Oracle,
-    "q230_ppjoin" -> q230Oracle,
-    "q231_phrase_search" -> q231Oracle,
-    "q232_merkle_diff" -> q232Oracle,
-    "q233_chi_square_ab" -> q233Oracle,
-    "q234_survival_hazard" -> q234Oracle,
-    "q235_eccentricity" -> q235Oracle,
-    "q236_sssp" -> q236Oracle,
-    "q237_k_anonymity" -> q237Oracle,
-    "q238_seasonality" -> q238Oracle,
-    "q239_hierarchy_rollup" -> q239Oracle,
-    "q240_bloom_fpr" -> q240Oracle,
-    "q241_lpm_join" -> q241Oracle,
-    "q242_token_bucket" -> q242Oracle,
-    "q243_market_basket" -> q243Oracle,
-    "q244_sliding_distinct" -> q244Oracle,
-    "q245_gram_matrix" -> q245Oracle,
-    "q246_gap_fill" -> q246Oracle,
-    "q247_mix_shift" -> q247Oracle,
-    "q248_maximal_matching" -> q248Oracle,
-    "q249_tokenization" -> q249Oracle,
-    "q250_abandonment" -> q250Oracle,
-    "q251_quantile_norm" -> q251Oracle,
-    "q252_seasonal_anomaly" -> q252Oracle,
-    "q253_hits" -> q253Oracle,
-    "q254_graph_features" -> q254Oracle,
-    "q256_cusum" -> q256Oracle,
-    "q257_ewma" -> q257Oracle,
-    "q258_recursive_cte" -> q258Oracle,
-    "q259_variant" -> q259Oracle,
-    "q260_collation" -> q260Oracle,
-    "q261_jaro_winkler" -> q261Oracle,
-    "q262_inverted_index" -> q262Oracle,
-    "q263_hll_algebra" -> q263Oracle,
-    "q264_ams_f2" -> q264Oracle,
-    "q265_clustering_coeff" -> q265Oracle,
-    "q266_acf" -> q266Oracle,
-    "q267_jump_hash" -> q267Oracle,
-    "q268_unpivot" -> q268Oracle,
-    "q269_hilbert" -> q269Oracle,
-    "q270_filter_clause" -> q270Oracle,
-    "q271_lateral" -> q271Oracle,
-    "q272_theil_sen" -> q272Oracle,
-    "q273_mann_whitney" -> q273Oracle,
-    "q274_bitmap" -> q274Oracle,
-    "q275_critical_path" -> q275Oracle,
-    "q276_set_cover" -> q276Oracle,
-    "q277_scc" -> q277Oracle,
-    "q278_cms_join_size" -> q278Oracle,
-    "q279_router_shootout" -> q279Oracle,
-    "q280_l1_regression" -> q280Oracle,
-    "q281_geohash" -> q281Oracle,
-    "q282_markov_stationary" -> q282Oracle,
-    "q283_boruvka_msf" -> q283Oracle,
-    "q284_temporal_reach" -> q284Oracle,
-    "q285_random_walks" -> q285Oracle,
-    "q286_cdc_chunking" -> q286Oracle,
-    "q287_point_in_polygon" -> q287Oracle,
-    "q288_link_prediction" -> q288Oracle,
-    "q289_ppr" -> q289Oracle,
-    "q290_allocation" -> q290Oracle,
-    "q291_decision_stump" -> q291Oracle,
-    "q292_single_link" -> q292Oracle,
-    "q293_rake" -> q293Oracle,
-    "q294_l_diversity" -> q294Oracle,
-    "q295_z_range_pruning" -> q295Oracle,
-    "q296_spearman" -> q296Oracle,
-    "q297_morans_i" -> q297Oracle,
-    "q298_robust_outliers" -> q298Oracle,
-    "q299_interval_schedule" -> q299Oracle,
-    "q300_cuped" -> q300Oracle,
-    "q301_textrank" -> q301Oracle,
-    "q302_absorbing_chain" -> q302Oracle,
-    "q303_heaps_law" -> q303Oracle,
-    "q304_temperature_mix" -> q304Oracle,
-    "q305_kadane" -> q305Oracle,
-    "q306_source_similarity" -> q306Oracle,
-    "q307_wilson" -> q307Oracle,
-    "q308_hash_collisions" -> q308Oracle,
-    "q309_ref_integrity" -> q309Oracle,
-    "q310_burstiness" -> q310Oracle,
-    "q311_ta_topk" -> q311Oracle,
-    "q312_dict_advisor" -> q312Oracle,
-    "q313_conformal" -> q313Oracle,
-    "q314_gini_lorenz" -> q314Oracle,
-    "q315_chao1_richness" -> q315Oracle,
-    "q316_ks_distance" -> q316Oracle,
-    "q317_mann_whitney" -> q317Oracle,
-    "q318_importance_ess" -> q318Oracle,
-    "q319_zipf_slope" -> q319Oracle,
-    "q320_cohens_kappa" -> q320Oracle,
-    "q321_jdbc_upsert" -> q321Oracle,
-    "q322_jdbc_cursor" -> q322Oracle,
-    "q323_jdbc_partitioned_scan" -> q323Oracle,
-    "q324_token_chunks" -> q324Oracle
-  )
+  lazy val all: Map[String, (SparkSession, String) => DataFrame] =
+    registered.map { case (name, q) => name -> q.build }
+
+  lazy val oracles: Map[String, String] =
+    registered.collect { case (name, Q(_, _, Some(sql))) => name -> sql }
 
   // ------------------------------------------------------- dynamic oracles
   /** Oracles GENERATED AT VERIFY TIME from the same corpus statistics
@@ -672,32 +28,13 @@ private[graft] trait QueriesRegistry {
     * Spark side derived. (The count is a parquet-footer metadata read,
     * the same one the queries themselves pay.)
     */
-  def dynamicOracles(s: SparkSession, dir: String): Map[String, String] = {
+  def dynamicOracles(s: SparkSession, dir: String): Map[String, String] =
     // PER-ENTRY fault isolation (T6): each generator runs in its own
     // try, so one failure (e.g. Pq.fit throwing during q94 generation)
     // costs only that query's oracle, never the whole dynamic set — the
     // all-in-one Map construction used through round 5 contradicted
-    // exactly that contract. The corpus count is shared lazily (one
-    // Spark job, not one per n-dependent entry; a failed count simply
-    // fails each n-dependent generator individually).
-    lazy val n = Tables.embeddings(s, dir).count()
-    val gens: Seq[(String, () => String)] = Seq(
-      "q30_ann_lsh" -> (() => q30OracleFor(n)),
-      "q31_embed_neardups" -> (() => q31OracleFor(n)),
-      "q107_hard_negatives_ann" -> (() => q107OracleFor(n)),
-      "q94_pq_adc" -> (() => q94OracleFor(s, dir)),
-      "q33_dedup_assign" -> (() => q33OracleFor(s, dir)),
-      "q49_ann_adaptive" -> (() => q49OracleFor(n)),
-      "q27_minhash_dedup" -> (() => q27OracleFor(s, dir)),
-      "q28_simhash" -> (() => q28OracleFor(s, dir)),
-      "q44_hll_sketch" -> (() => q44OracleFor(s, dir)),
-      "q48_minhash_recall" -> (() => q48OracleFor(s, dir)),
-      "q54_media_dedup" -> (() => q54OracleFor(s, dir)),
-      "q109_ivf_pq" -> (() => q109OracleFor(s, dir)),
-      "q122_bm25" -> (() => q122OracleFor(s, dir)),
-      "q255_rrf_fusion" -> (() => q255OracleFor(s, dir))
-    )
-    gens.flatMap { case (name, gen) =>
+    // exactly that contract.
+    dynamicOracleGenerators(s, dir).flatMap { case (name, gen) =>
       try Some(name -> gen())
       catch {
         // NonFatal only: an OOM/LinkageError means the JVM is already
@@ -709,6 +46,30 @@ private[graft] trait QueriesRegistry {
           None
       }
     }.toMap
+
+  /** One generator per query whose oracle is generated at Verify time;
+    * nothing runs until a generator is applied. The corpus count is
+    * shared lazily (one Spark job, not one per n-dependent entry; a
+    * failed count simply fails each n-dependent generator individually).
+    */
+  private[graft] def dynamicOracleGenerators(s: SparkSession, dir: String): Seq[(String, () => String)] = {
+    lazy val n = Tables.embeddings(s, dir).count()
+    Seq(
+      ("q30_ann_lsh", () => q30OracleFor(n)),
+      ("q31_embed_neardups", () => q31OracleFor(n)),
+      ("q107_hard_negatives_ann", () => q107OracleFor(n)),
+      ("q94_pq_adc", () => q94OracleFor(s, dir)),
+      ("q33_dedup_assign", () => q33OracleFor(s, dir)),
+      ("q49_ann_adaptive", () => q49OracleFor(n)),
+      ("q27_minhash_dedup", () => q27OracleFor(s, dir)),
+      ("q28_simhash", () => q28OracleFor(s, dir)),
+      ("q44_hll_sketch", () => q44OracleFor(s, dir)),
+      ("q48_minhash_recall", () => q48OracleFor(s, dir)),
+      ("q54_media_dedup", () => q54OracleFor(s, dir)),
+      ("q109_ivf_pq", () => q109OracleFor(s, dir)),
+      ("q122_bm25", () => q122OracleFor(s, dir)),
+      ("q255_rrf_fusion", () => q255OracleFor(s, dir))
+    )
   }
 
   /** q30 replay at corpus size `n`: same adaptive geometry, banding,

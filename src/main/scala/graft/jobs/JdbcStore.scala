@@ -4,7 +4,7 @@ import java.sql.{Connection, DriverManager, SQLException}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.{Dedup, Place, Rollup, WatermarkDedup}
+import graft.ops.Dedup
 import graft.streaming.ProducerLoop
 
 /** EXECUTED JDBC transport for the reference's Postgres state — the
@@ -448,10 +448,10 @@ object JdbcStore {
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
-  /** One producer micro-batch with the cursor state in the DATABASE —
-    * the executed twin of [[graft.streaming.ProducerLoop.processBatch]]
-    * (same watermark filter, same in-batch dedup, same envelope emit),
-    * with the cursor commit an ACID MERGE instead of a snapshot rewrite.
+  /** One producer micro-batch with the cursor state in the DATABASE:
+    * [[graft.streaming.ProducerLoop.processBatch]]'s cycle (same
+    * watermark filter, in-batch dedup and envelope emit), with the cursor
+    * commit an ACID MERGE instead of a snapshot rewrite.
     * Commit-after-emit (T3, reference app/main.py:1342-1347): the MERGE
     * runs only after the sink append returns, so a crash between the two
     * re-emits the batch next run — at-least-once with downstream dedup,
@@ -467,26 +467,10 @@ object JdbcStore {
       url: String,
       cursorTable: String = "ingestion_cursors"
   ): Unit = {
-    val spark = batch.sparkSession
-    val cursors = readCursors(spark, url, cursorTable, keys)
+    val cursors = readCursors(batch.sparkSession, url, cursorTable, keys)
       .select((keys.map(k => col(k).cast("string").as(k)) :+ col("last_observed_at")): _*)
-    val fresh = Place.persisted(WatermarkDedup.filterNewWithInBatch(batch, cursors, keys, tsCol, arrivalCol))
-    try {
-      // 1. EMIT first (the Kafka envelope) ...
-      fresh
-        .select(ProducerLoop.envelope(fresh).as("value"))
-        .write
-        .mode(SaveMode.Append)
-        .parquet(sinkDir)
-      // 2. ... THEN advance cursors, transactionally, in the database.
-      val updates = Rollup
-        .maxTsPerKey(fresh, keys, tsCol)
-        .select((keys.map(k => col(k).cast("string").as(k)) :+ col("last_observed_at")): _*)
+    ProducerLoop.cycle(batch, keys, tsCol, arrivalCol, sinkDir, cursors) { updates =>
       greatestUpsert(updates, url, cursorTable, keys, "last_observed_at")
-      ()
-    } finally {
-      fresh.unpersist()
-      ()
     }
   }
 }

@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Aggregation / rollup operators (SURVEY.md §2.4, §2.5, T5).
   *
-  * Mirrors the reference's per-key max (app/main.py:233-236), count-by-source
-  * (app/main.py:1205-1209), and exposes the hourly rollup the reference's
-  * downstream consumers would run. All are single hash-aggregates: Spark
-  * plans partial (map-side) + final aggregation automatically, which is the
-  * distributed generalization of the reference's in-batch `updates` dict.
+  * Mirrors the reference's per-key max (app/main.py:233-236) and exposes
+  * the hourly rollup the reference's downstream consumers would run. All
+  * are single hash-aggregates: Spark plans partial (map-side) + final
+  * aggregation automatically, which is the distributed generalization of
+  * the reference's in-batch `updates` dict.
   */
 object Rollup {
 
@@ -18,10 +18,6 @@ object Rollup {
     */
   def maxTsPerKey(df: DataFrame, keys: Seq[String], tsCol: String): DataFrame =
     df.groupBy(keys.map(col): _*).agg(max(col(tsCol)).as("last_observed_at"))
-
-  /** A2: count by source. reference app/main.py:1205-1209. */
-  def countBy(df: DataFrame, key: String): DataFrame =
-    df.groupBy(col(key)).agg(count(lit(1)).as("n"))
 
   /** T5: tumbling-window rollup on event time, expressed with date_trunc so
     * the result is calendar-aligned (reference fetches are calendar-day /

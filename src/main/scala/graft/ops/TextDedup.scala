@@ -36,18 +36,6 @@ object TextDedup {
     // slice form re-evaluates the tokenizer per element
     array_distinct(TextStats.ngrams(split(trim(c), "\\s+"), n))
 
-  /** MinHash signature: array of `numHashes` minima over the permuted
-    * murmur3 hashes of the elements of `setCol`.
-    */
-  def minhashSignature(setCol: Column, numHashes: Int = 64, seed: Long = 1337L): Column = {
-    val base = transform(setCol, t => hash(t).cast("long"))
-    array(
-      coeffs(numHashes, seed).map { case (a, b) =>
-        array_min(transform(base, h => pmod(lit(a) * h + lit(b), lit(PRIME))))
-      }.toIndexedSeq: _*
-    )
-  }
-
   /** Exact Jaccard between two array columns (on their distinct sets). */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")

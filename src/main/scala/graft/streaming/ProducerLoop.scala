@@ -76,6 +76,27 @@ object ProducerLoop {
       cursorDir: String
   ): Unit = {
     val cursors = readCursors(batch.sparkSession, cursorDir, keys)
+    cycle(batch, keys, tsCol, arrivalCol, sinkDir, cursors) { updates =>
+      val merged = Upsert.greatestMerge(cursors, updates, keys, "last_observed_at")
+      val tmp = cursorDir + "__tmp"
+      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
+      Jobs.publish(tmp, cursorDir) // rename, not a second write — see the Jobs contract
+    }
+  }
+
+  /** The producer cycle over any cursor store: watermark `batch` against
+    * `cursors` (the keys as strings, then `last_observed_at`), dedup it,
+    * emit the envelope to `sinkDir`, and only then pass the per-key max
+    * event times (same schema as `cursors`) to `commit`.
+    */
+  private[graft] def cycle(
+      batch: DataFrame,
+      keys: Seq[String],
+      tsCol: String,
+      arrivalCol: String,
+      sinkDir: String,
+      cursors: DataFrame
+  )(commit: DataFrame => Unit): Unit = {
     val keyed = batch.select(
       (batch.columns.map(col) ++ keys.map(k => col(k).cast("string").as(s"__k_$k"))).toIndexedSeq: _*
     )
@@ -100,11 +121,7 @@ object ProducerLoop {
       // 2. ... THEN advance cursors (commit-after-emit, T3). A crash
       // between 1 and 2 re-emits the batch next run: at-least-once with
       // downstream dedup, exactly the reference's contract.
-      val updates = Rollup.maxTsPerKey(fresh, kcols, tsCol).toDF((keys :+ "last_observed_at"): _*)
-      val merged = Upsert.greatestMerge(cursors, updates, keys, "last_observed_at")
-      val tmp = cursorDir + "__tmp"
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      Jobs.publish(tmp, cursorDir) // rename, not a second write — see the Jobs contract
+      commit(Rollup.maxTsPerKey(fresh, kcols, tsCol).toDF((keys :+ "last_observed_at"): _*))
     } finally fresh.unpersist()
   }
 
