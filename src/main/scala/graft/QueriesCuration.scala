@@ -816,7 +816,7 @@ private[graft] trait QueriesCuration extends QueryRegistration {
     val (merges, _) = Bpe.trainMerges(docs, "text", nMerges = 8)
     val seq = merges.map(m => (m._2, m._3))
     val wdoc = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("word"))
+      .select(col("doc_id"), explode(TextStats.tokens(col("text"))).as("word"))
       .filter(length(col("word")) > 0)
     val wdist = wdoc
       .select(col("word"))

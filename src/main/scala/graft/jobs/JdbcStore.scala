@@ -440,13 +440,9 @@ object JdbcStore {
     * cursor schema — mirrors [[graft.streaming.ProducerLoop.readCursors]]
     * over parquet.
     */
-  def readCursors(spark: SparkSession, url: String, table: String, keys: Seq[String]): DataFrame = {
-    val schema = StructType(
-      keys.map(StructField(_, StringType)) :+ StructField("last_observed_at", TimestampType)
-    )
+  def readCursors(spark: SparkSession, url: String, table: String, keys: Seq[String]): DataFrame =
     if (tableExists(url, table)) readTable(spark, url, table)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-  }
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ProducerLoop.cursorSchema(keys))
 
   /** One producer micro-batch with the cursor state in the DATABASE:
     * [[graft.streaming.ProducerLoop.processBatch]]'s cycle (same

@@ -47,7 +47,7 @@ object Bm25 {
     docs
       .select(
         col(idCol).as("doc_id"),
-        split(lower(trim(col(textCol))), "\\s+").as("toks")
+        TextStats.tokens(lower(col(textCol))).as("toks")
       )
       .select(col("doc_id"), col("toks"), size(col("toks")).as("dl"))
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
@@ -73,7 +73,7 @@ object Bm25 {
     val Array(nDocs, sumDl) = docs
       .select(
         count(lit(1)).cast("long"),
-        sum(size(split(lower(trim(col(textCol))), "\\s+"))).cast("long")
+        sum(size(TextStats.tokens(lower(col(textCol))))).cast("long")
       )
       .head()
       .toSeq

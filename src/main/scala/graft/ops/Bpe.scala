@@ -83,7 +83,7 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     var words = docs
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("word"))
+      .select(explode(TextStats.tokens(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word"))
       .agg(count(lit(1)).as("weight"))

@@ -37,7 +37,7 @@ object LmScore {
     */
   def docBigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
-      .select(col(idCol), split(trim(col(textCol)), "\\s+").as("toks"))
+      .select(col(idCol), TextStats.tokens(col(textCol)).as("toks"))
       .select(
         col(idCol),
         posexplode(slice(col("toks"), lit(1), size(col("toks")) - 1)),
@@ -71,7 +71,7 @@ object LmScore {
     // — the add-one event space is "any vocabulary word follows")
     val vdf = docs
       .filter(refPred)
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("tok"))
+      .select(explode(TextStats.tokens(col(textCol))).as("tok"))
       .agg(count_distinct(col("tok")).as("v"))
     bi.filter(!refPred)
       .join(broadcast(big), Seq("u", "w"), "left")

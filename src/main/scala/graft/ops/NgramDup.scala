@@ -39,46 +39,35 @@ import org.apache.spark.sql.functions._
   */
 object NgramDup {
 
-  /** Exploded positional shingles: one row per span position.
+  /** Exploded shingles: one row per width-`w` span position, the span
+    * as `shingle`. With `withPos`, each row also keeps the 1-based span
+    * start `pos` (before `shingle`) — the removal rewrite needs to know
+    * WHERE a duplicated span sits, not just that it exists.
     * Documents shorter than `w` tokens contribute no rows (they have no
     * width-`w` span) — callers wanting per-doc totals over ALL docs
     * must left-join from the document table (as [[sourceCensus]] does).
     */
-  def shingles(df: DataFrame, textCol: String, w: Int, keep: Seq[String]): DataFrame = {
+  def shingles(
+      df: DataFrame,
+      textCol: String,
+      w: Int,
+      keep: Seq[String],
+      withPos: Boolean = false
+  ): DataFrame = {
     val toks = TextStats.tokens(col(textCol))
-    df.select((keep.map(col) :+ toks.as("__toks")): _*)
+    val docs = df.select((keep.map(col) :+ toks.as("__toks")): _*)
       .withColumn("__n", size(col("__toks")))
       .filter(col("__n") >= w)
-      .select(
-        (keep.map(col) :+
-          explode(
-            transform(
-              sequence(lit(1), col("__n") - lit(w - 1)),
-              i => array_join(slice(col("__toks"), i, lit(w)), " ")
-            )
-          ).as("shingle")): _*
-      )
-  }
-
-  /** Positional shingles: like [[shingles]] but keeps the 1-based span
-    * start `pos` — the removal rewrite needs to know WHERE a duplicated
-    * span sits, not just that it exists.
-    */
-  def shinglesWithPos(df: DataFrame, textCol: String, w: Int, keep: Seq[String]): DataFrame = {
-    val toks = TextStats.tokens(col(textCol))
-    df.select((keep.map(col) :+ toks.as("__toks")): _*)
-      .withColumn("__n", size(col("__toks")))
-      .filter(col("__n") >= w)
-      .select(
-        (keep.map(col) :+
-          explode(
-            transform(
-              sequence(lit(1), col("__n") - lit(w - 1)),
-              i => struct(i.as("pos"), array_join(slice(col("__toks"), i, lit(w)), " ").as("shingle"))
-            )
-          ).as("__sp")): _*
-      )
-      .select((keep.map(col) :+ col("__sp.pos").as("pos") :+ col("__sp.shingle").as("shingle")): _*)
+    val starts = sequence(lit(1), col("__n") - lit(w - 1))
+    def span(i: Column): Column = array_join(slice(col("__toks"), i, lit(w)), " ")
+    if (!withPos) docs.select((keep.map(col) :+ explode(transform(starts, span(_))).as("shingle")): _*)
+    else
+      docs
+        .select(
+          (keep.map(col) :+
+            explode(transform(starts, i => struct(i.as("pos"), span(i).as("shingle")))).as("__sp")): _*
+        )
+        .select((keep.map(col) :+ col("__sp.pos").as("pos") :+ col("__sp.shingle").as("shingle")): _*)
   }
 
   /** The REMOVAL REWRITE of Lee et al. — which tokens an exact-substring
@@ -98,7 +87,7 @@ object NgramDup {
     * position) — everything keyed, nothing driver-side.
     */
   def removalProfile(docs: DataFrame, textCol: String, w: Int, idCol: String): DataFrame = {
-    val occ = shinglesWithPos(docs, textCol, w, Seq(idCol))
+    val occ = shingles(docs, textCol, w, Seq(idCol), withPos = true)
       .withColumn("__ok", col(idCol) * lit(1048576L) + col("pos"))
     // A window-min over shingle partitions was tried here (r15) and
     // measured ~2x SLOWER than this join form: `occ` is the RAW

@@ -28,13 +28,11 @@ object TextDedup {
   }
 
   /** Distinct-token set column (the near-dup unit for this corpus). */
-  def tokenSet(c: Column): Column = array_distinct(split(trim(c), "\\s+"))
+  def tokenSet(c: Column): Column = array_distinct(TextStats.tokens(c))
 
   /** Word n-gram shingles (distinct). */
   def shingles(c: Column, n: Int): Column =
-    // linear zip-of-shifts construction (TextStats.ngrams) — the lambda-
-    // slice form re-evaluates the tokenizer per element
-    array_distinct(TextStats.ngrams(split(trim(c), "\\s+"), n))
+    array_distinct(TextStats.ngrams(TextStats.tokens(c), n))
 
   /** Exact Jaccard between two array columns (on their distinct sets). */
   def jaccard(a: Column, b: Column): Column =
@@ -126,6 +124,54 @@ object TextDedup {
       .distinct()
   }
 
+  /** Exact-duplicate classes over a frame of sorted sets, per block
+    * (`Seq()` for one corpus-wide block): `reps` holds each distinct
+    * (block, set) with its representative, the class's smallest id, as
+    * `__rep`; `members` maps every id to its `__rep`. Classes are keyed
+    * by the sorted set itself (no hash, no collision risk).
+    */
+  private def classes(
+      sets: DataFrame,
+      block: Seq[String],
+      idCol: String,
+      setCol: String
+  ): (DataFrame, DataFrame) = {
+    val reps = sets.groupBy((block :+ setCol).map(col): _*).agg(min(col(idCol)).as("__rep"))
+    val members = sets.join(reps, block :+ setCol).select((block :+ "__rep" :+ idCol).map(col): _*)
+    (reps, members)
+  }
+
+  /** All member pairs of the near-dup relation: (a) the pairs inside
+    * each class — identical sets, jac = 1.0 exactly; (b) each verified
+    * rep pair of `repPairs` (block, rep_a, rep_b, jac) expanded to its
+    * classes' member pairs. Classes are disjoint, so there are no
+    * self-pairs; orientation is normalized since member ids interleave
+    * across classes.
+    */
+  private def memberPairs(
+      members: DataFrame,
+      repPairs: DataFrame,
+      block: Seq[String],
+      idCol: String
+  ): DataFrame = {
+    val bc = block.map(col)
+    def side(rep: Column, id: String) = members.select(bc ++ Seq(rep, col(idCol).as(id)): _*)
+    val intra = side(col("__rep"), "id_a")
+      .join(side(col("__rep"), "id_b"), block :+ "__rep")
+      .filter(col("id_a") < col("id_b"))
+      .select(bc ++ Seq(col("id_a"), col("id_b"), lit(1.0).as("jac")): _*)
+    val inter = repPairs
+      .join(side(col("__rep").as("rep_a"), "__da"), block :+ "rep_a")
+      .join(side(col("__rep").as("rep_b"), "__db"), block :+ "rep_b")
+      .select(
+        bc ++ Seq(
+          least(col("__da"), col("__db")).as("id_a"),
+          greatest(col("__da"), col("__db")).as("id_b"),
+          col("jac")): _*
+      )
+    intra.unionByName(inter)
+  }
+
   /** Full MinHash near-dup pipeline: candidates via LSH banding (with the
     * size-ratio prefilter), verified with exact token-set Jaccard >=
     * `threshold`, computed with ONE array_intersect
@@ -150,25 +196,14 @@ object TextDedup {
     // the corpus), and a g-doc identical class lands g rows in EVERY
     // band bucket it touches — a g²·bands blowup in the band join for
     // pairs that need no LSH at all (identical sets ⇒ jac = 1.0 by
-    // construction, recall 1.0 guaranteed). Classes are keyed by the
-    // sorted set itself (no hash, no collision risk).
+    // construction, recall 1.0 guaranteed).
     // eager: broadcast builds and main stages both read `sets`
     val sets = Place.materialized(df.select(col(idCol), sort_array(setExpr).as("toks")))
-    val reps = sets.groupBy(col("toks")).agg(min(col(idCol)).as("__rep"))
-    val members = sets
-      .join(reps, "toks")
-      .select(col("__rep"), col(idCol))
-      // eager (r12): read by both intra-join sides and twice in the rep-pair
-      // expansion; lazy, q27's same-code reps swung 3.0–14.0 s
-      .transform(Place.materialized)
-    // (a) intra-class pairs: identity, exact, complete
-    val ma = members.select(col("__rep"), col(idCol).as("id_a"))
-    val mb = members.select(col("__rep"), col(idCol).as("id_b"))
-    val intra = ma
-      .join(mb, "__rep")
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jac"))
-    // (b) inter-class pairs: the LSH pipeline over DISTINCT sets only
+    val (reps, classMembers) = classes(sets, Seq(), idCol, "toks")
+    // eager (r12): read by both intra-join sides and twice in the rep-pair
+    // expansion; lazy, q27's same-code reps swung 3.0–14.0 s
+    val members = Place.materialized(classMembers)
+    // inter-class pairs: the LSH pipeline over DISTINCT sets only
     val repSets = reps
       .select(col("__rep").as(idCol), col("toks"))
       // eager (r12): read by lshCandidates and both verification sides
@@ -188,17 +223,7 @@ object TextDedup {
         (col("inter") / (col("sz_a") + col("sz_b") - col("inter"))).as("jac")
       )
       .filter(col("jac") >= threshold)
-    // expand rep pairs to member pairs (classes are disjoint, so no
-    // self-pairs; normalize orientation since member ids interleave)
-    val inter = repPairs
-      .join(members.select(col("__rep").as("rep_a"), col(idCol).as("__da")), "rep_a")
-      .join(members.select(col("__rep").as("rep_b"), col(idCol).as("__db")), "rep_b")
-      .select(
-        least(col("__da"), col("__db")).as("id_a"),
-        greatest(col("__da"), col("__db")).as("id_b"),
-        col("jac")
-      )
-    intra.unionByName(inter)
+    memberPairs(members, repPairs, Seq(), idCol)
   }
 
   /** The 100 TB dedup shape: per-document KEEP/DROP assignment with
@@ -225,8 +250,7 @@ object TextDedup {
     // uncollapsed form, minus the g²·bands bucket blowup.
     val sets = df.select(col(idCol), sort_array(tokenSet(col(textCol))).as("toks"))
       .transform(Place.materialized) // eager: see nearDupsMinhash
-    val reps = sets.groupBy(col("toks")).agg(min(col(idCol)).as("__rep"))
-    val members = sets.join(reps, "toks").select(col("__rep"), col(idCol))
+    val (reps, members) = classes(sets, Seq(), idCol, "toks")
     val repSets = reps.select(col("__rep").as(idCol), col("toks"))
     val banded = bandedSigs(repSets, idCol, "toks", bands, rows, seed)
       .transform(Place.materialized) // eager: see lshCandidates
@@ -262,7 +286,7 @@ object TextDedup {
       seed: Long = 1337L
   ): DataFrame = {
     val sets = df.select(col(idCol), sort_array(tokenSet(col(textCol))).as("toks"))
-    val reps = sets.groupBy(col("toks")).agg(min(col(idCol)).as("__rep"))
+    val (reps, _) = classes(sets, Seq(), idCol, "toks")
     val repSets = reps.select(col("__rep").as(idCol), col("toks"))
     bandedSigs(repSets, idCol, "toks", bands, rows, seed)
       .select(col(idCol), col("band"), col("bsig"))
@@ -350,19 +374,9 @@ object TextDedup {
       sort_array(shingles(col(textCol), n)).as("sh")
     ).withColumn("sz", size(col("sh")))
       .transform(Place.materialized) // eager: the consumers below race to fill this cache
-    val reps = sets.groupBy(col(blockCol), col("sh")).agg(min(col(idCol)).as("__rep"))
-    val members = sets
-      .join(reps, Seq(blockCol, "sh"))
-      .select(col(blockCol), col("__rep"), col(idCol))
-      .transform(Place.materialized)
-    // (a) intra-class pairs: identical shingle sets, jac = 1.0 exactly
-    val ia = members.select(col(blockCol), col("__rep"), col(idCol).as("id_a"))
-    val ib = members.select(col(blockCol), col("__rep"), col(idCol).as("id_b"))
-    val intra = ia
-      .join(ib, Seq(blockCol, "__rep"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col(blockCol), col("id_a"), col("id_b"), lit(1.0).as("jac"))
-    // (b) inter-class pairs over representatives only.
+    val (reps, classMembers) = classes(sets, Seq(blockCol), idCol, "sh")
+    val members = Place.materialized(classMembers)
+    // inter-class pairs over representatives only.
     // Phase 1: pair NARROW rows (block, rep, size) — the shingle arrays
     // stay out of the O(pairs) join. The size-ratio prefilter (jac >= t
     // forces min/max size >= t) rejects most pairs here.
@@ -393,21 +407,6 @@ object TextDedup {
         (col("inter") / (col("sz_a") + col("sz_b") - col("inter"))).as("jac")
       )
       .filter(col("jac") >= threshold)
-    // expand rep pairs to member pairs (classes disjoint, orientation
-    // normalized since member ids interleave across classes)
-    val inter = repPairs
-      .join(
-        members.select(col(blockCol), col("__rep").as("rep_a"), col(idCol).as("__da")),
-        Seq(blockCol, "rep_a"))
-      .join(
-        members.select(col(blockCol), col("__rep").as("rep_b"), col(idCol).as("__db")),
-        Seq(blockCol, "rep_b"))
-      .select(
-        col(blockCol),
-        least(col("__da"), col("__db")).as("id_a"),
-        greatest(col("__da"), col("__db")).as("id_b"),
-        col("jac")
-      )
-    intra.unionByName(inter)
+    memberPairs(members, repPairs, Seq(blockCol), idCol)
   }
 }

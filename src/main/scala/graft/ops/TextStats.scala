@@ -14,7 +14,14 @@ import org.apache.spark.sql.functions._
   */
 object TextStats {
 
-  /** Whitespace tokenization (the corpus is space-separated). */
+  /** THE tokenize rule: trim, then split on whitespace runs. Every text
+    * feature — dedup token sets and shingles, BM25 terms, LM bigrams,
+    * BPE words, span census — tokenizes here; a case-folding caller
+    * passes `lower(...)` in (identical tokens: lower never makes or
+    * removes whitespace). The single-space `split(lower(text), " ")` of
+    * the graph queries is a different rule, which their oracles replay
+    * as written; TextStatsSpec fails on any other `"\\s+"` split.
+    */
   def tokens(c: Column): Column = split(trim(c), "\\s+")
 
   /** Overlapping word n-grams as strings. Built by zipping n SHIFTED
@@ -27,8 +34,9 @@ object TextStats {
     * entry. A doc shorter than n yields one truncated gram (arrays_zip
     * null-pads the short shifts and concat_ws skips nulls — same values
     * as the old slice form, which its oracles replay).
-    * Shared by the repetition signals (q58/q73), the shingles behind
-    * decontamination (q61/q64), and the BPE pair counts (q75).
+    * THE n-gram rule, shared by the repetition signals (q58/q73), the
+    * shingles behind decontamination (q61/q64), and the BPE pair counts
+    * (q75).
     */
   def ngrams(toks: Column, n: Int): Column = {
     val len = greatest(size(toks) - (n - 1), lit(1))

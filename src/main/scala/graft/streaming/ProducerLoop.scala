@@ -52,8 +52,9 @@ object ProducerLoop {
     to_json(struct(df.columns.map(col).toIndexedSeq: _*), PerKeyWatermark.jsonOpts)
 
   /** The cursor snapshot's schema, fixed by `processBatch`: the keys as
-    * strings plus `last_observed_at`. */
-  private def cursorSchema(keys: Seq[String]): StructType =
+    * strings plus `last_observed_at`. The JDBC cursor table reads back
+    * with the same schema. */
+  private[graft] def cursorSchema(keys: Seq[String]): StructType =
     StructType(keys.map(StructField(_, StringType)) :+ StructField("last_observed_at", TimestampType))
 
   /** Read the cursor snapshot if it exists, else an empty frame. A crash

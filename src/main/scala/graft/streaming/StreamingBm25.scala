@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.Bm25
+import graft.ops.{Bm25, TextStats}
 
 /** STREAMING BM25 retrieval gate: score every incoming document
   * against a FITTED query model and keep (doc, query, score) rows at
@@ -33,7 +33,7 @@ object StreamingBm25 {
       st: Bm25.Stats,
       minScore: Double
   ): DataFrame = {
-    val toks = split(lower(trim(col(textCol))), "\\s+")
+    val toks = TextStats.tokens(lower(col(textCol)))
     val dl = size(toks).cast("long")
     def tf(term: String): Column = {
       val lit = term.replace("\\", "\\\\").replace("'", "\\'")

@@ -23,6 +23,13 @@ class NgramDupSpec extends SparkSpec {
       .toSeq
       .sorted
     assert(got == Seq((1L, "a b c"), (1L, "b c d")))
+    val withPos = NgramDup
+      .shingles(df, "text", 3, Seq("doc_id"), withPos = true)
+      .as[(Long, Int, String)]
+      .collect()
+      .toSeq
+      .sorted
+    assert(withPos == Seq((1L, 1, "a b c"), (1L, 2, "b c d")))
   }
 
   test("docProfile: cross-doc and intra-doc repeats both count as duplicated") {

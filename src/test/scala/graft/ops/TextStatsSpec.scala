@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -77,5 +79,23 @@ class TextStatsSpec extends SparkSpec {
       .select("g", "id").as[(String, Long)].collect().sorted.toSeq
     assert(s1 == s2, "sample changed with partitioning")
     assert(s1.groupBy(_._1).forall(_._2.size == 7))
+  }
+
+  /** A Spark `split(x, "\\s+")` spells the tokenize rule out by hand;
+    * the single-space `split(x, " ")` and the SQL-string `'\\s+'` are
+    * other rules and do not match. */
+  private val tokenizeCopy = """\bsplit\(.*,\s*"\\\\s\+"\s*\)""".r
+
+  test("the tokenize rule lives only in ops/TextStats.scala") {
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 100, s"scanned ${files.size} files under ${root.toAbsolutePath}")
+    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
+    assert(files.exists(rel(_) == "graft/ops/TextStats.scala"))
+    val found = for {
+      f <- files if rel(f) != "graft/ops/TextStats.scala"
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex if tokenizeCopy.findFirstIn(line).isDefined
+    } yield s"${rel(f)}:${n + 1}: ${line.trim}"
+    assert(found.isEmpty, found.mkString(s"${found.size} copies; use TextStats.tokens instead:\n", "\n", ""))
   }
 }
