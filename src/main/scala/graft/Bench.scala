@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.BenchRules.jsonString
 
 object Bench {
 
@@ -310,7 +311,7 @@ object Bench {
         case (name, v) if !failed.contains(name) => name -> replaced.getOrElse(name, v)
       }
     }
-    val qs = adjudicated.map { case (k, v) => s"\"" + k + "\":" + v }
+    val qs = adjudicated.map { case (k, v) => s"${jsonString(k)}:$v" }
       .mkString("{", ",", "}")
     val total = if (adjudicated.nonEmpty) adjudicated.map(_._2).sum else 0.0
     // Record labels (round 6): `source` defaults to "driver" — the
@@ -353,7 +354,7 @@ object Bench {
     val stamp = java.time.Instant.now().toString
     val (loadavg, cpu, nproc) = hostId()
     def jsonNames(names: Iterable[String]): String =
-      names.map("\"" + _ + "\"").mkString("[", ",", "]")
+      names.map(jsonString).mkString("[", ",", "]")
     // rerun = names whose values are spike-adjudicated settled medians
     // (trusted by derive_expect.py even when also in `degraded`);
     // spiked = the original main-pass values they replaced; failed =
@@ -362,9 +363,10 @@ object Bench {
     // with earlier ones: "adaptive" says the cheap bulk is one warm-shot
     // measurement and only the ≥HeavyThresh tail a settled median.
     val spikedJson = spiked
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
+    // strings are escaped: sf and source come from the environment
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","agg":"adaptive","source":"$source","round":$round,"sha":"$sha","ts":"$stamp","isolate":true,"adaptive":true,"nq":${ordered.size},"subset":${only.isDefined},"degraded":${jsonNames(degraded)},"failed":${jsonNames(failed)},"rerun":${jsonNames(reran)},"spiked":$spikedJson,"loadavg":"$loadavgStart","loadavg_preflight":"$loadavgPreflight","settle_waited":$settleWaited,"loadavg_end":"$loadavg","cpu":"$cpu","nproc":$nproc}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${jsonString(sfDir)},"agg":"adaptive","source":${jsonString(source)},"round":$round,"sha":${jsonString(sha)},"ts":${jsonString(stamp)},"isolate":true,"adaptive":true,"nq":${ordered.size},"subset":${only.isDefined},"degraded":${jsonNames(degraded)},"failed":${jsonNames(failed)},"rerun":${jsonNames(reran)},"spiked":$spikedJson,"loadavg":${jsonString(loadavgStart)},"loadavg_preflight":${jsonString(loadavgPreflight)},"settle_waited":$settleWaited,"loadavg_end":${jsonString(loadavg)},"cpu":${jsonString(cpu)},"nproc":$nproc}"""
     println(line)
     // ALSO persist the full record to a file: the driver's captured
     // stdout tail truncates past ~64 per-query medians; the file is

@@ -25,6 +25,19 @@ package graft
   */
 object BenchRules {
 
+  /** `s` as a JSON string literal, with quote, backslash and ALL control
+    * characters (< 0x20) escaped: the one escaper of Verify's and Bench's
+    * JSON output. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Spike-trigger constants Bench runs with: the expect ratio, the
     * prior-driver ratio and the absolute-margin ceiling.
     */

@@ -240,6 +240,15 @@ private[graft] trait QueriesCore extends QueryRegistration {
     * app/main.py:636-645). Simulated with two customer snapshots.
     */
   def q10Upsert(s: SparkSession, dir: String): DataFrame = {
+    val (base, updates) = catalogSnapshots(s, dir)
+    Upsert.coalesceMerge(base, updates, "c_custkey").orderBy(col("c_custkey"))
+  }
+
+  /** The two customer catalog snapshots q10, q321 and q323 merge: the
+    * even keys as the base, and every third key as the update batch with
+    * `c_acctbal` raised by 100 and a null `c_mktsegment` (which the
+    * COALESCE rule must not let overwrite the base value). */
+  private[graft] def catalogSnapshots(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val c = Tables.customer(s, dir)
     val base = c.filter(col("c_custkey") % 2 === 0)
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
@@ -250,7 +259,7 @@ private[graft] trait QueriesCore extends QueryRegistration {
         (col("c_acctbal") + 100.0).as("c_acctbal"),
         lit(null).cast("string").as("c_mktsegment")
       )
-    Upsert.coalesceMerge(base, updates, "c_custkey").orderBy(col("c_custkey"))
+    (base, updates)
   }
 
   val q10Oracle: String =

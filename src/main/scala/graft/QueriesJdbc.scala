@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.jobs.JdbcStore
+import graft.ops.Rollup
 
 /** S9/S10/S12 EXECUTED: the relational state path run through a real
   * JDBC engine (embedded Derby — it ships on Spark's own classpath), not
@@ -21,41 +22,35 @@ private[graft] trait QueriesJdbc extends QueryRegistration {
   private def freshDerby(tag: String): String =
     s"jdbc:derby:memory:$tag${java.util.UUID.randomUUID().toString.replace("-", "")};create=true"
 
-  // ---------------------------------------------------------------- q321
-  /** A5 over the wire: q10's COALESCE catalog merge executed as
-    * stage + MERGE in Derby, then read back. The read-back is cast to
-    * the staged schema so the relation (values AND types) is
-    * bit-identical to the pure-Spark q10 plan the oracle certifies.
+  /** q10's two catalog snapshots COALESCE-upserted into a fresh Derby
+    * table, then read back by `read(url)` and cast to the staged schema,
+    * so the relation (values AND types) is bit-identical to the
+    * pure-Spark q10 plan the oracle certifies.
+    *
+    * The read-back is materialized and the in-memory database then
+    * FREED (r13, ADVICE fix — un-dropped memory DBs are heap leaks
+    * across Bench reps): Checkpoints.cut is eager, so the returned frame
+    * no longer touches Derby when the harness runs its actions. The
+    * state table is bounded (the reference's catalog dimension), so
+    * holding its blocks is the same contract as any cached dim.
     */
-  def q321JdbcUpsert(s: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(s, dir)
-    val base = c
-      .filter(col("c_custkey") % 2 === 0)
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-    val updates = c
-      .filter(col("c_custkey") % 3 === 0)
-      .select(
-        col("c_custkey"),
-        col("c_name"),
-        (col("c_acctbal") + 100.0).as("c_acctbal"),
-        lit(null).cast("string").as("c_mktsegment")
-      )
-    val url = freshDerby("q321")
+  private def upsertedCatalog(s: SparkSession, dir: String, tag: String)(read: String => DataFrame): DataFrame = {
+    val (base, updates) = catalogSnapshots(s, dir)
+    val url = freshDerby(tag)
     JdbcStore.coalesceUpsert(base, url, "catalog", Seq("c_custkey"))
     JdbcStore.coalesceUpsert(updates, url, "catalog", Seq("c_custkey"))
-    // materialize the read-back, then FREE the in-memory database (r13,
-    // ADVICE fix — un-dropped memory DBs are heap leaks across Bench
-    // reps): Checkpoints.cut is eager, so the frame below no longer
-    // touches Derby when the harness runs its actions. The state table
-    // is bounded (the reference's catalog dimension), so holding its
-    // blocks is the same contract as any cached dim.
     val back = graft.ops.Checkpoints.cut(
-      JdbcStore
-        .readTable(s, url, "catalog")
-        .select(base.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*))
+      read(url).select(base.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*))
     JdbcStore.dropInMemoryDerby(url)
     back.orderBy(col("c_custkey"))
   }
+
+  // ---------------------------------------------------------------- q321
+  /** A5 over the wire: q10's COALESCE catalog merge executed as
+    * stage + MERGE in Derby, then read back ([[upsertedCatalog]]).
+    */
+  def q321JdbcUpsert(s: SparkSession, dir: String): DataFrame =
+    upsertedCatalog(s, dir, "q321")(JdbcStore.readTable(s, _, "catalog"))
 
   // same relation as q10: the JDBC transport must be invisible in the result
   query("q321_jdbc_upsert", q321JdbcUpsert, Some(q10Oracle))
@@ -69,14 +64,13 @@ private[graft] trait QueriesJdbc extends QueryRegistration {
   def q322JdbcCursor(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
     val keys = Seq("user_id", "event_type")
-    def cursorOf(half: DataFrame): DataFrame =
-      half.groupBy(keys.map(col): _*).agg(max(col("ts")).as("last_observed_at"))
+    def cursorOf(half: DataFrame): DataFrame = Rollup.maxTsPerKey(half, keys, "ts")
     val oldCur = cursorOf(ev.filter(col("event_id") < 5000L))
     val newCur = cursorOf(ev.filter(col("event_id") >= 5000L))
     val url = freshDerby("q322")
     JdbcStore.greatestUpsert(oldCur, url, "ingestion_cursors", keys, "last_observed_at")
     JdbcStore.greatestUpsert(newCur, url, "ingestion_cursors", keys, "last_observed_at")
-    // eager read-back + drop: see q321
+    // eager read-back + drop: see upsertedCatalog
     val back = graft.ops.Checkpoints.cut(
       JdbcStore
         .readTable(s, url, "ingestion_cursors")
@@ -106,30 +100,11 @@ private[graft] trait QueriesJdbc extends QueryRegistration {
     * exactly the table — which is the thing the shared q10 oracle now
     * certifies: the PARTITIONED transport may not change the relation.
     */
-  def q323JdbcPartitionedScan(s: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(s, dir)
-    val base = c
-      .filter(col("c_custkey") % 2 === 0)
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-    val updates = c
-      .filter(col("c_custkey") % 3 === 0)
-      .select(
-        col("c_custkey"),
-        col("c_name"),
-        (col("c_acctbal") + 100.0).as("c_acctbal"),
-        lit(null).cast("string").as("c_mktsegment")
-      )
-    val url = freshDerby("q323")
-    JdbcStore.coalesceUpsert(base, url, "catalog", Seq("c_custkey"))
-    JdbcStore.coalesceUpsert(updates, url, "catalog", Seq("c_custkey"))
-    val (lo, hi) = JdbcStore.columnBounds(url, "catalog", "c_custkey")
-    val back = graft.ops.Checkpoints.cut(
-      JdbcStore
-        .readTablePartitioned(s, url, "catalog", "c_custkey", lo, hi, numParts = 4)
-        .select(base.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*))
-    JdbcStore.dropInMemoryDerby(url)
-    back.orderBy(col("c_custkey"))
-  }
+  def q323JdbcPartitionedScan(s: SparkSession, dir: String): DataFrame =
+    upsertedCatalog(s, dir, "q323") { url =>
+      val (lo, hi) = JdbcStore.columnBounds(url, "catalog", "c_custkey")
+      JdbcStore.readTablePartitioned(s, url, "catalog", "c_custkey", lo, hi, numParts = 4)
+    }
 
   // same relation as q10/q321: the partition split must be invisible in the result
   query("q323_jdbc_partitioned_scan", q323JdbcPartitionedScan, Some(q10Oracle))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.BenchRules.jsonString
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -46,18 +47,6 @@ object Verify {
       // cached blocks never outlive their query in either harness.
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // static oracles + the verify-corpus-generated ones (q30/q31/q49/
     // q94/q33/q107, and since round 6 q27/q48/q54 — replaying geometry/
     // codebooks/signatures derived from THIS corpus).
@@ -71,11 +60,13 @@ object Verify {
           System.err.println(s"[verify] dynamic oracle generation failed: ${e.getMessage}")
           Map.empty[String, String]
       }
+    // escaped: a tab or CR in an oracle's SQL text would otherwise make
+    // the file unparseable, and the oracle compare would check nothing
     val json = (SparkEntry.oracleSql ++ dynamic)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val failedJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_failed.json"), failedJson)
     spark.stop()
     // dev loop (explicit filter): a failed requested query must fail the

@@ -4,7 +4,7 @@ import java.sql.{Connection, DriverManager, SQLException}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.Dedup
+import graft.ops.{Dedup, Rollup}
 import graft.streaming.ProducerLoop
 
 /** EXECUTED JDBC transport for the reference's Postgres state — the
@@ -75,7 +75,7 @@ object JdbcStore {
     */
   private object GraftDerbyDialect extends org.apache.spark.sql.jdbc.JdbcDialect {
     override def canHandle(url: String): Boolean = url.startsWith("jdbc:derby")
-    override def quoteIdentifier(colName: String): String = "\"" + colName + "\""
+    override def quoteIdentifier(colName: String): String = q(colName)
     override def getJDBCType(dt: DataType): Option[org.apache.spark.sql.jdbc.JdbcType] =
       dt match {
         case StringType =>
@@ -129,11 +129,10 @@ object JdbcStore {
       throw new IllegalArgumentException(s"no JDBC mapping for $other")
   }
 
-  /** ANSI CREATE TABLE text — a named builder (not inlined in
-    * [[ensureTable]]) so the golden-SQL portability spec pins the DDL
-    * the same way it pins the MERGE statements.
+  /** ANSI CREATE TABLE text, shared by [[ensureTable]] and
+    * [[plannedUpsertSql]] (whose output the golden-SQL spec pins).
     */
-  private[graft] def createTableSql(table: String, schema: StructType, keys: Seq[String]): String = {
+  private def createTableSql(table: String, schema: StructType, keys: Seq[String]): String = {
     val cols = schema.fields
       .map { f =>
         val isKey = keys.contains(f.name)
@@ -145,24 +144,26 @@ object JdbcStore {
     s"CREATE TABLE ${q(table)} ($cols$pk)"
   }
 
-  /** CREATE TABLE if absent (neither Derby's DDL nor ANSI has IF NOT
-    * EXISTS; already-exists SQLStates are the desired state — the
-    * reference does the same dance with CREATE TABLE IF NOT EXISTS,
-    * app/main.py:104-115).
+  /** Run a CREATE TABLE, treating an existing table as success (neither
+    * Derby's DDL nor ANSI has IF NOT EXISTS; the reference does the same
+    * dance with CREATE TABLE IF NOT EXISTS, app/main.py:104-115).
+    * X0Y32 is Derby's already-exists SQLState, 42P07 Postgres's
+    * (duplicate_table) — the URL-swap claim covers this dance too.
     */
-  def ensureTable(url: String, table: String, schema: StructType, keys: Seq[String]): Unit =
-    withConnection(url) { conn =>
-      // already-exists is the desired state: X0Y32 is Derby's SQLState,
-      // 42P07 Postgres's (duplicate_table) — the URL-swap claim covers
-      // the create-if-absent dance too
-      try execute(conn, createTableSql(table, schema, keys))
-      catch {
-        case e: SQLException if e.getSQLState == "X0Y32" || e.getSQLState == "42P07" => ()
-      }
+  private def createIfAbsent(conn: Connection, createSql: String): Unit =
+    try execute(conn, createSql)
+    catch {
+      case e: SQLException if e.getSQLState == "X0Y32" || e.getSQLState == "42P07" => ()
     }
 
-  /** Every statement an upsert against `url` will send, in order —
-    * exposed for the golden-SQL portability spec. `url` is deliberately
+  /** CREATE TABLE if absent. */
+  def ensureTable(url: String, table: String, schema: StructType, keys: Seq[String]): Unit =
+    withConnection(url)(createIfAbsent(_, createTableSql(table, schema, keys)))
+
+  /** Every statement an upsert against `url` sends, in order — the list
+    * [[upsert]] executes, exposed for the golden-SQL portability spec.
+    * `advanceTsCol` picks the matched-row rule: None is the COALESCE
+    * catalog rule, Some(ts) the advance-only cursor rule. `url` is deliberately
     * UNUSED in construction: ONE ANSI statement set serves every
     * engine, which IS the Derby→Postgres "URL swap" claim, and the spec
     * asserts byte-identity of this output across both URL prefixes so a
@@ -226,36 +227,36 @@ object JdbcStore {
       .save()
   }
 
-  /** Stage `df` under a batch-unique table name, run `f`, DROP the stage
-    * (r13, ADVICE fix). The UUID suffix means two concurrent upserts
-    * into the same target cannot race on a shared stage — each MERGE
-    * sees exactly its own batch — and the finally-drop means no stage
-    * copy outlives its merge (the previous fixed `<table>_stage` name
-    * was both a concurrency hazard and a storage leak). The drop is
-    * best-effort: a failed drop must not mask the upsert's own outcome.
+  /** The one upsert path: stage `rows` (at most one per key) under a
+    * batch-unique table name, then execute exactly [[plannedUpsertSql]]
+    * — the target's CREATE (already-exists tolerated), the MERGE, whose
+    * affected-row count is returned, and the stage's DROP.
+    *
+    * The UUID stage suffix means two concurrent upserts into one target
+    * cannot race on a shared stage, and the finally-drop means no stage
+    * outlives its merge. The drop is best-effort: it swallows NonFatal,
+    * so a failed drop cannot mask the upsert's own outcome.
     */
-  private def withStage[A](df: DataFrame, url: String, table: String)(f: String => A): A = {
+  private def upsert(rows: DataFrame, url: String, table: String, keys: Seq[String], advanceTsCol: Option[String]): Long = {
     val stageTable = table + "_stage_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    stage(df, url, stageTable)
-    try f(stageTable)
-    finally {
-      // NonFatal, not just SQLException (r14, ADVICE fix): a driver
-      // RuntimeException or pool error during the best-effort drop must
-      // not mask the merge's own result/exception either.
-      try withConnection(url)(execute(_, s"DROP TABLE ${q(stageTable)}"))
-      catch { case scala.util.control.NonFatal(_) => () }
+    val Seq(create, merge, drop) = plannedUpsertSql(url, table, stageTable, rows.schema, keys, advanceTsCol)
+    stage(rows, url, stageTable)
+    withConnection(url) { conn =>
+      try {
+        createIfAbsent(conn, create)
+        execute(conn, merge).toLong
+      } finally {
+        try execute(conn, drop)
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
     }
   }
 
-  /** The exact MERGE an upsert executes — `private[graft]` so the
-    * golden-SQL dialect spec can pin the statement text. Everything in
-    * it is ANSI SQL:2003 (MERGE, COALESCE, CASE, quoted identifiers):
-    * the statement does NOT depend on the JDBC URL, which is precisely
-    * the Derby→Postgres "URL swap" claim, and the spec asserts
-    * byte-identity across both URL prefixes so a future engine-specific
-    * branch cannot land silently.
+  /** The MERGE of [[plannedUpsertSql]]. Everything in it is ANSI
+    * SQL:2003 (MERGE, COALESCE, CASE, quoted identifiers), so it does not
+    * depend on the JDBC URL.
     */
-  private[graft] def mergeSql(
+  private def mergeSql(
       table: String,
       stageTable: String,
       columns: Seq[String],
@@ -274,7 +275,7 @@ object JdbcStore {
   /** A5's matched-row rule: new non-null wins, null keeps the old value
     * — `COALESCE(s.c, t.c)` per value column, ANSI by construction.
     */
-  private[graft] def coalesceSetClause(columns: Seq[String], keys: Seq[String]): String =
+  private def coalesceSetClause(columns: Seq[String], keys: Seq[String]): String =
     columns
       .filterNot(keys.contains)
       .map(c => s"${q(c)} = COALESCE(s.${q(c)}, t.${q(c)})")
@@ -285,7 +286,7 @@ object JdbcStore {
     * the CASE form is ANSI everywhere (null-safe: a null incumbent is
     * always overtaken, a null update never overtakes).
     */
-  private[graft] def advanceSetClause(tsCol: String): String = {
+  private def advanceSetClause(tsCol: String): String = {
     val ts = q(tsCol)
     s"$ts = CASE WHEN t.$ts IS NULL OR s.$ts > t.$ts THEN s.$ts ELSE t.$ts END"
   }
@@ -296,17 +297,10 @@ object JdbcStore {
     * app/main.py:636-645, as stage + one server-side MERGE. Returns the
     * MERGE's affected-row count.
     */
-  def coalesceUpsert(updates: DataFrame, url: String, table: String, keys: Seq[String]): Long = {
-    ensureTable(url, table, updates.schema, keys)
+  def coalesceUpsert(updates: DataFrame, url: String, table: String, keys: Seq[String]): Long =
     // ≤1 source row per key (ANSI MERGE cardinality): deterministic
     // first-wins over all columns, same rule as Jobs.catalogRefresh
-    val deduped = Dedup.firstWins(updates, keys, updates.columns.toSeq)
-    withStage(deduped, url, table) { stageTable =>
-      val set = coalesceSetClause(updates.columns.toSeq, keys)
-      withConnection(url)(
-        execute(_, mergeSql(table, stageTable, updates.columns.toSeq, keys, set)).toLong)
-    }
-  }
+    upsert(Dedup.firstWins(updates, keys, updates.columns.toSeq), url, table, keys, None)
 
   /** A4/A6 EXECUTED: GREATEST-merge of per-key watermarks into the
     * relational `table` — the cursor only advances (reference
@@ -322,17 +316,11 @@ object JdbcStore {
       keys: Seq[String],
       tsCol: String
   ): Long = {
-    ensureTable(url, table, updates.schema, keys)
     // per-key max inside the batch (the reference's updates-dict rule)
-    val deduped = updates
-      .groupBy(keys.map(col): _*)
-      .agg(max(col(tsCol)).as(tsCol))
+    val deduped = Rollup.maxTsPerKey(updates, keys, tsCol)
+      .withColumnRenamed("last_observed_at", tsCol)
       .select(updates.columns.map(col).toIndexedSeq: _*)
-    withStage(deduped, url, table) { stageTable =>
-      val set = advanceSetClause(tsCol)
-      withConnection(url)(
-        execute(_, mergeSql(table, stageTable, updates.columns.toSeq, keys, set)).toLong)
-    }
+    upsert(deduped, url, table, keys, Some(tsCol))
   }
 
   /** Full-table read-back. For a big table add
@@ -464,7 +452,6 @@ object JdbcStore {
       cursorTable: String = "ingestion_cursors"
   ): Unit = {
     val cursors = readCursors(batch.sparkSession, url, cursorTable, keys)
-      .select((keys.map(k => col(k).cast("string").as(k)) :+ col("last_observed_at")): _*)
     ProducerLoop.cycle(batch, keys, tsCol, arrivalCol, sinkDir, cursors) { updates =>
       greatestUpsert(updates, url, cursorTable, keys, "last_observed_at")
     }

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.ops.{Dedup, Normalize, Upsert}
 
 /** The reference's job surface (SURVEY.md §3) as thin compositions of the
@@ -16,11 +17,11 @@ import graft.ops.{Dedup, Normalize, Upsert}
   *    curated table (filter-and-overwrite; on Delta this is DELETE FROM).
   *
   * Snapshot persistence is read-merge-publish on parquet, keeping the
-  * harness dependency-free. The same contract covers the producer's
-  * cursor snapshot (the reference's `ingestion_cursors` table):
-  * ProducerLoop.processBatch writes the merged cursors to
-  * `<cursorDir>__tmp` and publishes them through [[publish]], and its
-  * `readCursors` runs [[recover]] first.
+  * harness dependency-free. This object is the only reader and writer of
+  * a snapshot: [[readSnapshot]] recovers, then reads, and [[replace]]
+  * writes `<dir>__tmp` once and publishes it. The producer's cursor
+  * snapshot (the reference's `ingestion_cursors` table) goes through the
+  * same two calls from ProducerLoop.readCursors/processBatch.
   *
   * CRASH-CONSISTENCY CONTRACT (vs the reference's transactional
   * `ON CONFLICT` upserts, app/main.py:633-648): snapshot maintenance
@@ -52,11 +53,11 @@ object Jobs {
   /** Crash recovery for the rename-publish contract: a crash BETWEEN the
     * two renames leaves the target name absent with the prior snapshot
     * intact only under `__old` — in that state `__old` is the ONLY copy,
-    * so it must be renamed back before anything reads (or sweeps). Jobs
-    * call this before reading the snapshot; `publish` calls it again as
-    * a belt — `__old` is never deleted while the target name is absent.
+    * so it must be renamed back before anything reads (or sweeps).
+    * [[readSnapshot]] calls this before reading; `publish` calls it again
+    * as a belt — `__old` is never deleted while the target name is absent.
     */
-  def recover(targetDir: String): Unit = {
+  private def recover(targetDir: String): Unit = {
     val target = new java.io.File(targetDir)
     val old = new java.io.File(targetDir + "__old")
     if (!target.exists() && old.exists() && !old.renameTo(target))
@@ -68,7 +69,7 @@ object Jobs {
     * in the object scaladoc). Both paths must live on one filesystem —
     * true by construction here (`__tmp` is a sibling).
     */
-  private[graft] def publish(tmpDir: String, targetDir: String): Unit = {
+  private def publish(tmpDir: String, targetDir: String): Unit = {
     recover(targetDir) // never sweep __old while the target name is absent
     val tmp = new java.io.File(tmpDir)
     val target = new java.io.File(targetDir)
@@ -83,11 +84,26 @@ object Jobs {
     rm(old)
   }
 
-  /** Overwrite `dir` with `df` and return the rows written, counted by an
-    * observation on the write itself rather than a read-back. */
-  private def writeCounted(df: DataFrame, dir: String): Long = {
+  /** The snapshot at `dir` after [[recover]], or None when there is none.
+    * A caller that knows the schema passes it, so no inference job runs. */
+  private[graft] def readSnapshot(
+      spark: SparkSession,
+      dir: String,
+      schema: Option[StructType] = None
+  ): Option[DataFrame] = {
+    recover(dir) // a crashed publish left the snapshot only under __old
+    val d = new java.io.File(dir)
+    if (d.exists() && d.list().nonEmpty) Some(schema.fold(spark.read)(spark.read.schema).parquet(dir))
+    else None
+  }
+
+  /** Replace the snapshot at `dir` with `df`: write it once to `<dir>__tmp`,
+    * then [[publish]] by rename (never a second write). Returns the rows
+    * written, counted by an observation on the write, not a read-back. */
+  private[graft] def replace(df: DataFrame, dir: String): Long = {
     val obs = Observation()
-    df.observe(obs, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite).parquet(dir)
+    df.observe(obs, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite).parquet(dir + "__tmp")
+    publish(dir + "__tmp", dir)
     obs.get("n").asInstanceOf[Long]
   }
 
@@ -99,12 +115,9 @@ object Jobs {
 
   /** Run retention in place over a parquet snapshot dir. */
   def housekeeping(spark: SparkSession, tableDir: String, tsCol: String, cutoff: java.sql.Timestamp): Long = {
-    recover(tableDir) // a crashed publish left the table only under __old
-    val kept = retention(spark.read.parquet(tableDir), tsCol, cutoff)
-    val tmp = tableDir + "__tmp"
-    val n = writeCounted(kept, tmp)
-    publish(tmp, tableDir) // rename, not a second write — see contract above
-    n
+    val table = readSnapshot(spark, tableDir)
+      .getOrElse(throw new java.io.FileNotFoundException(s"housekeeping: no table at $tableDir"))
+    replace(retention(table, tsCol, cutoff), tableDir)
   }
 
   /** Curated-output writer with a BOUNDED file count per partition — the
@@ -136,23 +149,16 @@ object Jobs {
     * stations snapshot (new non-null wins; reference app/main.py:633-648).
     */
   def catalogRefresh(spark: SparkSession, rawStations: DataFrame, catalogDir: String): Long = {
-    // without this, a crash between publish's two renames would make the
-    // next refresh treat the catalog as fresh (exists() false), rebuild
-    // from the new batch alone, then sweep __old — silent data loss
-    recover(catalogDir)
     val normalized = Normalize.dropNullIsland(rawStations)
-    val merged =
-      if (new java.io.File(catalogDir).exists() && new java.io.File(catalogDir).list().nonEmpty) {
-        val existing = spark.read.parquet(catalogDir)
-        Upsert.coalesceMerge(existing, normalized.select(existing.columns.map(col).toIndexedSeq: _*), "station_id")
-      } else normalized
+    // readSnapshot recovers first: otherwise a crash between publish's two
+    // renames would read as a fresh catalog, rebuilt from the new batch
+    // alone, and the publish would then sweep __old — silent data loss
+    val merged = readSnapshot(spark, catalogDir).fold(normalized) { existing =>
+      Upsert.coalesceMerge(existing, normalized.select(existing.columns.map(col).toIndexedSeq: _*), "station_id")
+    }
     // deterministic within-batch dedup: priority over ALL columns so two
     // pages carrying the same station with different payloads resolve
     // the same way every run (priority = the key alone would tie)
-    val deduped = Dedup.firstWins(merged, Seq("station_id"), merged.columns.toSeq)
-    val tmp = catalogDir + "__tmp"
-    val n = writeCounted(deduped, tmp)
-    publish(tmp, catalogDir) // rename, not a second write — see contract above
-    n
+    replace(Dedup.firstWins(merged, Seq("station_id"), merged.columns.toSeq), catalogDir)
   }
 }

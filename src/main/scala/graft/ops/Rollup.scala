@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   */
 object Rollup {
 
-  /** A1: per-key max event-time — the cursor snapshot builder.
+  /** A1: per-key max event-time — the cursor snapshot builder, and the
+    * one per-key max rule (the producer's roll-up, the JDBC cursor
+    * upsert's pre-dedup and the cursor queries all call it).
     * reference app/main.py:233-236 (in-batch running max per key).
     */
   def maxTsPerKey(df: DataFrame, keys: Seq[String], tsCol: String): DataFrame =

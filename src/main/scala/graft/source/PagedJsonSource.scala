@@ -112,16 +112,20 @@ case class FetchConfig(
 }
 
 object FetchConfig {
-  def fromOptions(options: CaseInsensitiveStringMap): FetchConfig = FetchConfig(
-    requestBudget = options.getInt("requestBudget", Int.MaxValue),
-    maxRetries = options.getInt("maxRetries", 5),
-    backoffBaseMs = options.getLong("backoffBaseMs", 1000L),
-    backoffStepMs = options.getLong("backoffStepMs", 500L),
-    paceMs = options.getLong("paceMs", 0L),
-    transport = options.getOrDefault("transport", "file"),
-    connectTimeoutMs = options.getInt("connectTimeoutMs", 10000),
-    readTimeoutMs = options.getInt("readTimeoutMs", 30000)
-  )
+  /** An absent option keeps the case-class default. */
+  def fromOptions(options: CaseInsensitiveStringMap): FetchConfig = {
+    val d = FetchConfig()
+    FetchConfig(
+      requestBudget = options.getInt("requestBudget", d.requestBudget),
+      maxRetries = options.getInt("maxRetries", d.maxRetries),
+      backoffBaseMs = options.getLong("backoffBaseMs", d.backoffBaseMs),
+      backoffStepMs = options.getLong("backoffStepMs", d.backoffStepMs),
+      paceMs = options.getLong("paceMs", d.paceMs),
+      transport = options.getOrDefault("transport", d.transport),
+      connectTimeoutMs = options.getInt("connectTimeoutMs", d.connectTimeoutMs),
+      readTimeoutMs = options.getInt("readTimeoutMs", d.readTimeoutMs)
+    )
+  }
 }
 
 /** TRANSPORT SEAM (SURVEY S1–S6; reference app/main.py:438-562): the
@@ -202,8 +206,7 @@ class FilePageFetcher extends PageFetcher {
   * server speaks plain HTTP; a production deployment would extend
   * `open` with headers, which is the point of the seam.
   */
-class HttpPageFetcher(connectTimeoutMs: Int = 10000, readTimeoutMs: Int = 30000)
-    extends PageFetcher {
+class HttpPageFetcher(connectTimeoutMs: Int, readTimeoutMs: Int) extends PageFetcher {
   private def get(url: String): Either[Unit, scala.io.Source] = {
     val conn = new java.net.URL(url)
       .openConnection()

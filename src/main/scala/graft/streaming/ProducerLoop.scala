@@ -20,9 +20,9 @@ import graft.ops.{Place, Rollup, Upsert, WatermarkDedup}
   * the Kafka connector on the classpath the same frame writes via
   * `.format("kafka")` unchanged. Cursors persist as a parquet snapshot
   * (the Postgres `ingestion_cursors` table): each batch reads it with its
-  * fixed schema supplied (no inference job), writes the merged cursors
-  * once to `<cursorDir>__tmp` and publishes them by rename under the
-  * [[graft.jobs.Jobs]] crash-consistency contract. The batch itself is
+  * fixed schema supplied (no inference job) and replaces it with the
+  * merged cursors through [[graft.jobs.Jobs.replace]] (one write to
+  * `<cursorDir>__tmp`, then a rename-publish). The batch itself is
   * computed once: the emit and the cursor roll-up both read one cached
   * copy of the watermarked, deduplicated rows.
   *
@@ -59,13 +59,11 @@ object ProducerLoop {
 
   /** Read the cursor snapshot if it exists, else an empty frame. A crash
     * between the publish's two renames leaves the snapshot only under
-    * `__old`; it is restored first so it cannot read as an empty set. */
-  def readCursors(spark: SparkSession, cursorDir: String, keys: Seq[String]): DataFrame = {
-    Jobs.recover(cursorDir)
-    val dir = new java.io.File(cursorDir)
-    if (dir.exists() && dir.list().nonEmpty) spark.read.schema(cursorSchema(keys)).parquet(cursorDir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], cursorSchema(keys))
-  }
+    * `__old`; [[Jobs.readSnapshot]] restores it first so it cannot read
+    * as an empty set. */
+  def readCursors(spark: SparkSession, cursorDir: String, keys: Seq[String]): DataFrame =
+    Jobs.readSnapshot(spark, cursorDir, Some(cursorSchema(keys)))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], cursorSchema(keys)))
 
   /** One micro-batch of the producer cycle. Visible for tests. */
   def processBatch(
@@ -78,17 +76,15 @@ object ProducerLoop {
   ): Unit = {
     val cursors = readCursors(batch.sparkSession, cursorDir, keys)
     cycle(batch, keys, tsCol, arrivalCol, sinkDir, cursors) { updates =>
-      val merged = Upsert.greatestMerge(cursors, updates, keys, "last_observed_at")
-      val tmp = cursorDir + "__tmp"
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      Jobs.publish(tmp, cursorDir) // rename, not a second write — see the Jobs contract
+      Jobs.replace(Upsert.greatestMerge(cursors, updates, keys, "last_observed_at"), cursorDir)
     }
   }
 
   /** The producer cycle over any cursor store: watermark `batch` against
-    * `cursors` (the keys as strings, then `last_observed_at`), dedup it,
-    * emit the envelope to `sinkDir`, and only then pass the per-key max
-    * event times (same schema as `cursors`) to `commit`.
+    * `cursors` (the key columns, read by name and cast to string, plus
+    * `last_observed_at`), dedup it, emit the envelope to `sinkDir`, and
+    * only then pass the per-key max event times ([[cursorSchema]]) to
+    * `commit`.
     */
   private[graft] def cycle(
       batch: DataFrame,
@@ -106,7 +102,7 @@ object ProducerLoop {
     // read this one copy, so the chain behind `batch` runs once
     val fresh = Place.persisted(WatermarkDedup.filterNewWithInBatch(
       keyed,
-      cursors.toDF((kcols :+ "last_observed_at"): _*),
+      cursors.select((keys.map(k => col(k).cast("string").as(s"__k_$k")) :+ col("last_observed_at")): _*),
       kcols,
       tsCol,
       arrivalCol

@@ -153,4 +153,11 @@ class BenchRulesSpec extends SparkSpec {
     assert(timed.map(_._1) == Seq("q1_ok"))
     assert(failed == Seq("q2_bad_build", "q3_bad_run"))
   }
+
+  test("jsonString: a quote, a backslash, a tab and U+0001 parse back unchanged") {
+    val s = "sf \"dir\"\\x\ty\u0001z"
+    val record = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree("{\"sf\":" + BenchRules.jsonString(s) + "}")
+    assert(record.get("sf").asText() == s)
+  }
 }

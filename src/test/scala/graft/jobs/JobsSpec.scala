@@ -1,7 +1,8 @@
 package graft.jobs
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
 class JobsSpec extends SparkSpec {
@@ -119,5 +120,22 @@ class JobsSpec extends SparkSpec {
       assert(files >= 1 && files <= 3, s"${d.getName}: $files files, want <= 3")
     }
     assert(spark.read.parquet(out).count() == n)
+  }
+
+  test("snapshot reads and publishes live only in jobs/Jobs.scala") {
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 100, s"scanned ${files.size} files under ${root.toAbsolutePath}")
+    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
+    assert(files.exists(rel(_) == "graft/jobs/Jobs.scala"))
+    // a hand-built `<dir>__tmp` name or a direct publish call is a second
+    // copy of the replace sequence, which lives only in Jobs.replace
+    val tokens = Seq("\"__tmp\"", "publish(")
+    val found = for {
+      f <- files if rel(f) != "graft/jobs/Jobs.scala"
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      token <- tokens if line.contains(token)
+    } yield s"${rel(f)}:${n + 1}: $token"
+    assert(found.isEmpty, found.mkString("use Jobs.readSnapshot / Jobs.replace instead:\n", "\n", ""))
   }
 }
