@@ -138,7 +138,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val expect = loadExpect(sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_EXPECT", "/root/repo/docs/BENCH_EXPECT.json"))
+      "SPARK_GRAFT_BENCH_EXPECT", BenchRules.root.resolve("docs/BENCH_EXPECT.json").toString))
     val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     // ERROR, not WARN: at 313 queries a benign per-plan warning class
     // (e.g. the r9 LogicalRDD attribute-name spam) floods the driver's
@@ -265,8 +265,8 @@ object Bench {
     // creep, so `value > 1.5× prior + 0.75 s` fires exactly there.
     // Predicates and constants live in BenchRules (spec-pinned by
     // BenchRulesSpec). Failed queries have no value and are never re-run.
-    val priorDriver = BenchRules.loadPriorDriver(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_records.jsonl"))
+    val recPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", BenchRules.root.resolve("bench_records.jsonl").toString)
+    val priorDriver = BenchRules.loadPriorDriver(recPath)
     val spiked = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val reran = scala.collection.mutable.ArrayBuffer.empty[String]
     val adjudicated: Seq[(String, Double)] = {
@@ -325,7 +325,7 @@ object Bench {
     )
     val sha =
       try {
-        val p = new ProcessBuilder("git", "-C", "/root/repo", "rev-parse", "--short", "HEAD").start()
+        val p = new ProcessBuilder("git", "-C", BenchRules.root.toString, "rev-parse", "--short", "HEAD").start()
         val s0 = new String(p.getInputStream.readAllBytes()).trim
         p.waitFor()
         if (s0.nonEmpty) s0 else "unknown"
@@ -337,13 +337,13 @@ object Bench {
       def progressRound: Option[Int] =
         try {
           val last = java.nio.file.Files
-            .readString(java.nio.file.Paths.get("/root/repo/PROGRESS.jsonl"))
+            .readString(BenchRules.root.resolve("PROGRESS.jsonl"))
             .linesIterator.filter(_.nonEmpty).toSeq.lastOption
           last.flatMap("\"round\": *(\\d+)".r.findFirstMatchIn(_)).map(_.group(1).toInt)
         } catch { case _: Throwable => None }
       def verdictRound: Option[Int] =
         try {
-          val head = java.nio.file.Files.readString(java.nio.file.Paths.get("/root/repo/VERDICT.md"))
+          val head = java.nio.file.Files.readString(BenchRules.root.resolve("VERDICT.md"))
             .linesIterator.take(1).mkString
           "round (\\d+)".r.findFirstMatchIn(head).map(_.group(1).toInt + 1)
         } catch { case _: Throwable => None }
@@ -371,7 +371,6 @@ object Bench {
     // ALSO persist the full record to a file: the driver's captured
     // stdout tail truncates past ~64 per-query medians; the file is
     // what docs/BENCH_NOTES.md bands are re-derived from.
-    val recPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_records.jsonl")
     try {
       val w = new java.io.FileWriter(recPath, true)
       try w.write(line + "\n") finally w.close()

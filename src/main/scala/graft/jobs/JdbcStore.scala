@@ -1,7 +1,7 @@
 package graft.jobs
 
 import java.sql.{Connection, DriverManager, SQLException}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.{Dedup, Rollup}
@@ -430,7 +430,7 @@ object JdbcStore {
     */
   def readCursors(spark: SparkSession, url: String, table: String, keys: Seq[String]): DataFrame =
     if (tableExists(url, table)) readTable(spark, url, table)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ProducerLoop.cursorSchema(keys))
+    else ProducerLoop.cursorFrame(spark, keys, Rollup.MaxTs.zero)
 
   /** One producer micro-batch with the cursor state in the DATABASE:
     * [[graft.streaming.ProducerLoop.processBatch]]'s cycle (same
@@ -452,8 +452,9 @@ object JdbcStore {
       cursorTable: String = "ingestion_cursors"
   ): Unit = {
     val cursors = readCursors(batch.sparkSession, url, cursorTable, keys)
-    ProducerLoop.cycle(batch, keys, tsCol, arrivalCol, sinkDir, cursors) { updates =>
-      greatestUpsert(updates, url, cursorTable, keys, "last_observed_at")
+    ProducerLoop.cycle(batch, keys, tsCol, arrivalCol, sinkDir, cursors) { maxima =>
+      greatestUpsert(ProducerLoop.cursorFrame(batch.sparkSession, keys, maxima),
+        url, cursorTable, keys, "last_observed_at")
     }
   }
 }

@@ -21,7 +21,8 @@ import graft.ops.{Dedup, Normalize, Upsert}
   * a snapshot: [[readSnapshot]] recovers, then reads, and [[replace]]
   * writes `<dir>__tmp` once and publishes it. The producer's cursor
   * snapshot (the reference's `ingestion_cursors` table) goes through the
-  * same two calls from ProducerLoop.readCursors/processBatch.
+  * same two calls from ProducerLoop.readCursors/processBatch, which reads
+  * it again only when its [[generation]] moved.
   *
   * CRASH-CONSISTENCY CONTRACT (vs the reference's transactional
   * `ON CONFLICT` upserts, app/main.py:633-648): snapshot maintenance
@@ -95,6 +96,17 @@ object Jobs {
     val d = new java.io.File(dir)
     if (d.exists() && d.list().nonEmpty) Some(schema.fold(spark.read)(spark.read.schema).parquet(dir))
     else None
+  }
+
+  /** The snapshot generation at `dir` after [[recover]]: its file names
+    * and sizes, sorted, and empty when there is no snapshot. Every Spark
+    * write names its part files with a fresh job UUID, so a publish by any
+    * writer changes the generation, and an unchanged generation means
+    * unchanged contents. A caller may hold what it last read or published
+    * under the generation it saw then, and read again only when it moved. */
+  private[graft] def generation(dir: String): Seq[(String, Long)] = {
+    recover(dir)
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(f => f.getName -> f.length).sorted
   }
 
   /** Replace the snapshot at `dir` with `df`: write it once to `<dir>__tmp`,

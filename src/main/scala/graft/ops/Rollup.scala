@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Aggregation / rollup operators (SURVEY.md §2.4, §2.5, T5).
@@ -14,12 +16,46 @@ import org.apache.spark.sql.functions._
 object Rollup {
 
   /** A1: per-key max event-time — the cursor snapshot builder, and the
-    * one per-key max rule (the producer's roll-up, the JDBC cursor
-    * upsert's pre-dedup and the cursor queries all call it).
+    * one per-key max rule (the JDBC cursor upsert's pre-dedup and the
+    * cursor queries call it; the producer's roll-up is its aggregator
+    * form, [[MaxTs]]).
     * reference app/main.py:233-236 (in-batch running max per key).
     */
   def maxTsPerKey(df: DataFrame, keys: Seq[String], tsCol: String): DataFrame =
     df.groupBy(keys.map(col): _*).agg(max(col(tsCol)).as("last_observed_at"))
+
+  /** Per-key max event time in micros, keyed by the key values as
+    * strings. `None` is a key whose event times were all null: the null
+    * that [[maxTsPerKey]]'s `max` gives such a group. */
+  type Maxima = Map[Seq[String], Option[Long]]
+
+  /** [[maxTsPerKey]] as one [[Aggregator]], for a max that must come out
+    * of a job doing other work (the producer observes it on its emit).
+    * `merge` is GREATEST, and a key missing on one side keeps the other
+    * side's value, so it is also [[Upsert.greatestMerge]] on held maps. A
+    * null time never beats a present one, as `max` skips nulls. Merging a
+    * map into itself changes nothing, so a retried task cannot corrupt it.
+    */
+  object MaxTs extends Aggregator[(Seq[String], Option[Long]), Maxima, Maxima] {
+    private def put(m: Maxima, k: Seq[String], t: Option[Long]): Maxima =
+      m.updated(k, m.get(k).fold(t)(u => (u ++ t).maxOption))
+    def zero: Maxima = Map.empty
+    def reduce(m: Maxima, in: (Seq[String], Option[Long])): Maxima = put(m, in._1, in._2)
+    def merge(a: Maxima, b: Maxima): Maxima = b.foldLeft(a) { case (m, (k, t)) => put(m, k, t) }
+    def finish(m: Maxima): Maxima = m
+    def bufferEncoder: Encoder[Maxima] = ExpressionEncoder[Maxima]()
+    def outputEncoder: Encoder[Maxima] = ExpressionEncoder[Maxima]()
+
+    /** The aggregate over `keys` (cast to string) and `tsCol`. */
+    def column(keys: Seq[String], tsCol: String): Column =
+      udaf(this, ExpressionEncoder[(Seq[String], Option[Long])]())(
+        array(keys.map(k => col(k).cast("string")): _*), unix_micros(col(tsCol)))
+
+    /** A [[column]] value as Spark hands it back (an observation's or a
+      * row's map, keys as any Seq) in the held form. */
+    def of(value: Any): Maxima = value.asInstanceOf[scala.collection.Map[scala.collection.Seq[String], Any]]
+      .iterator.map { case (k, t) => k.toList -> Option(t).map(_.asInstanceOf[Long]) }.toMap
+  }
 
   /** T5: tumbling-window rollup on event time, expressed with date_trunc so
     * the result is calendar-aligned (reference fetches are calendar-day /

@@ -13,6 +13,9 @@ import org.apache.spark.sql.functions._
   * Batch form: a filtering left join — the cursor side is a per-key scalar
   * snapshot, orders of magnitude smaller than the incoming facts, so it is
   * broadcast. At 100 TB the fact side never shuffles for this operator.
+  * The producer (graft.streaming.ProducerLoop) passes its cursor side as
+  * a local relation built from the cursors it holds on the driver, one
+  * row per key, so its size is bounded by the key count.
   *
   * Streaming form: see graft.streaming.PerKeyWatermark
   * (flatMapGroupsWithState) — Spark's global `withWatermark` is a single

@@ -134,7 +134,7 @@ class BenchRulesSpec extends SparkSpec {
   test("the shipped bench_records.jsonl yields the r13 binding record") {
     // Guards the parser against drift in the real record format: the
     // prior driver record must contain q96 at a plausible settled value.
-    val m = BenchRules.loadPriorDriver("/root/repo/bench_records.jsonl")
+    val m = BenchRules.loadPriorDriver(BenchRules.root.resolve("bench_records.jsonl").toString)
     assert(m.contains("q96_pagerank"))
     assert(m.size > 300)
   }
@@ -152,6 +152,14 @@ class BenchRulesSpec extends SparkSpec {
     }
     assert(timed.map(_._1) == Seq("q1_ok"))
     assert(failed == Seq("q2_bad_build", "q3_bad_run"))
+  }
+
+  test("root: -Dgraft.root when set, else the working directory; sbt sets it to this checkout") {
+    assert(BenchRules.rootFrom(Some("/srv/checkout")) == java.nio.file.Paths.get("/srv/checkout"))
+    assert(BenchRules.rootFrom(None) == java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath)
+    // the forked test JVM gets build.sbt's option: the root holds this build
+    assert(sys.props.contains("graft.root"))
+    assert(java.nio.file.Files.isRegularFile(BenchRules.root.resolve("build.sbt")))
   }
 
   test("jsonString: a quote, a backslash, a tab and U+0001 parse back unchanged") {

@@ -79,6 +79,30 @@ class InvariantsSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("Rollup.MaxTs and its merge ≡ greatestMerge(base, maxTsPerKey(batch)) (scalacheck)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    val keys = Seq("k", "p")
+    // few keys and few distinct times: repeated keys, tied and null maxima
+    val row = Gen.zip(Gen.oneOf("k0", "k1", "k2", "k3"), Gen.oneOf("a", "b"),
+      Gen.option(Gen.chooseNum(0L, 5L).map(s => 1700000000000000L + s * 1000000L)))
+    def frame(rows: List[(String, String, Option[Long])]) =
+      rows.map { case (k, p, us) => (k, p, us.map(u => new Timestamp(u / 1000))) }.toDF("k", "p", "ts")
+    def held(cursors: org.apache.spark.sql.DataFrame): Rollup.Maxima =
+      cursors.select(col("k"), col("p"), unix_micros(col("last_observed_at"))).collect()
+        .map(r => List(r.getString(0), r.getString(1)) -> Option(r.get(2)).map(_.asInstanceOf[Long])).toMap
+    // no shrinking: each shrink step would run Spark jobs
+    val prop = Prop.forAllNoShrink(Gen.listOf(row), Gen.listOf(row)) { (baseRows, batchRows) =>
+      val base = Rollup.maxTsPerKey(frame(baseRows), keys, "ts")
+      val batch = frame(batchRows)
+      val observed = Rollup.MaxTs.of(batch.select(Rollup.MaxTs.column(keys, "ts")).head().get(0))
+      Rollup.MaxTs.merge(held(base), observed) ==
+        held(Upsert.greatestMerge(base, Rollup.maxTsPerKey(batch, keys, "ts"), keys, "last_observed_at"))
+    }
+    val result = Check.check(
+      Check.Parameters.default.withMinSuccessfulTests(25).withInitialSeed(org.scalacheck.rng.Seed(20261019L)), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+
   test("firstWins ∘ union = firstWins over concatenation (associativity of dedup)") {
     def batch(n: Int) = (1 to n).map { i =>
       (s"k${rnd.nextInt(12)}", rnd.nextInt(1000).toLong, i.toDouble)

@@ -208,6 +208,79 @@ class StreamingSpec extends SparkSpec {
     assert(!new java.io.File(cursors + "__old").exists())
   }
 
+  test("ProducerLoop.processBatch: a cycle over a present snapshot runs its job floor") {
+    val dir = Files.createTempDirectory("producer_jobs").toString
+    val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
+    ProducerLoop.processBatch(
+      parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
+      producerKeys, "ts", "arrival", sink, cursors)
+    val b2 = parquetBatch(s"$dir/b2",
+      ("st1", "pm25", "2024-01-01 13:00:00", 2.0, 2L),
+      ("st2", "o3", "2024-01-01 10:00:00", 3.0, 3L))
+    // the cursor broadcast, the dedup's map stage, the emit (which also
+    // observes the per-key maxima) and the one-task cursor write: no
+    // snapshot scan, no cache fill, no roll-up or merge shuffle
+    val n = jobsDuring(ProducerLoop.processBatch(b2, producerKeys, "ts", "arrival", sink, cursors))
+    assert(n == 4, s"$n jobs")
+  }
+
+  /** Another writer's cursors, published into `dir` through Jobs.replace. */
+  private def publishCursors(dir: String, rows: (String, String, String)*): Unit =
+    graft.jobs.Jobs.replace(
+      rows.map(r => (r._1, r._2, ts(r._3))).toDF("station_id", "pollutant", "last_observed_at"), dir)
+
+  test("ProducerLoop.processBatch: another writer's publish between cycles is honoured by the next watermark") {
+    val dir = Files.createTempDirectory("producer_writer").toString
+    val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
+    ProducerLoop.processBatch(
+      parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
+      producerKeys, "ts", "arrival", sink, cursors)
+    publishCursors(cursors, ("st1", "pm25", "2024-01-01 14:00:00"))
+    ProducerLoop.processBatch(
+      parquetBatch(s"$dir/b2",
+        ("st1", "pm25", "2024-01-01 13:00:00", 2.0, 2L), // behind the other writer's cursor
+        ("st1", "pm25", "2024-01-01 15:00:00", 3.0, 3L)),
+      producerKeys, "ts", "arrival", sink, cursors)
+    assert(spark.read.parquet(sink).count() == 2)
+    assert(cursorMap(cursors) == Map(("st1", "pm25") -> ts("2024-01-01 15:00:00")))
+  }
+
+  test("ProducerLoop.processBatch: a cursor dir removed between cycles reads as no cursors") {
+    val dir = Files.createTempDirectory("producer_removed").toString
+    val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
+    val b1 = parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L))
+    ProducerLoop.processBatch(b1, producerKeys, "ts", "arrival", sink, cursors)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(cursors))
+    // with no cursors the replay is new again (fail-open)
+    ProducerLoop.processBatch(b1, producerKeys, "ts", "arrival", sink, cursors)
+    assert(spark.read.parquet(sink).count() == 2)
+    assert(cursorMap(cursors) == Map(("st1", "pm25") -> ts("2024-01-01 12:00:00")))
+  }
+
+  test("ProducerLoop.processBatch: an empty batch and a batch the watermark empties emit nothing and keep the cursors") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = Files.createTempDirectory("producer_empty").toString
+    val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
+    ProducerLoop.processBatch(
+      parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
+      producerKeys, "ts", "arrival", sink, cursors)
+    // a publish the held cursors have not seen: a cycle that committed its
+    // own stale copy back would lose it
+    publishCursors(cursors, ("st1", "pm25", "2024-01-01 14:00:00"), ("st2", "o3", "2024-01-01 10:00:00"))
+    val published = cursorMap(cursors)
+    val empty = Seq.empty[(String, String, Timestamp, Double, Long)]
+      .toDF("station_id", "pollutant", "ts", "value", "arrival")
+    val late = parquetBatch(s"$dir/b2", ("st1", "pm25", "2024-01-01 13:00:00", 2.0, 2L))
+    for (batch <- Seq(empty, late)) {
+      // a cycle that waited on an observation its job never reports would hang
+      Await.result(Future(ProducerLoop.processBatch(batch, producerKeys, "ts", "arrival", sink, cursors)), 2.minutes)
+      assert(spark.read.parquet(sink).count() == 1)
+      assert(cursorMap(cursors) == published)
+    }
+  }
+
   test("custom sketch aggregates run in streaming aggregations (hll_distinct)") {
     // the TypedImperativeAggregate state (a byte-array register set)
     // must merge incrementally across micro-batches like any built-in
