@@ -26,12 +26,9 @@ package graft
 object BenchRules {
 
   /** The checkout the harness mains read their inputs from and write
-    * their records into: `-Dgraft.root`, which build.sbt sets to its base
-    * directory for every JVM it forks, else the working directory. */
-  def root: java.nio.file.Path = rootFrom(sys.props.get("graft.root"))
-
-  private[graft] def rootFrom(prop: Option[String]): java.nio.file.Path =
-    java.nio.file.Paths.get(prop.getOrElse(sys.props("user.dir"))).toAbsolutePath
+    * their records into: the working directory, which sbt sets to the
+    * build's base directory for every JVM it forks (`run` and `Test`). */
+  def root: java.nio.file.Path = java.nio.file.Paths.get("").toAbsolutePath
 
   /** `s` as a JSON string literal, with quote, backslash and ALL control
     * characters (< 0x20) escaped: the one escaper of Verify's and Bench's

@@ -107,9 +107,9 @@ object PlanCheck {
     */
   private def fingerprints(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    // under the checkout root, not a relative path: run under a harness
-    // whose working directory is its own, a relative path lands the file
-    // outside the checkout or throws NoSuchFileException
+    // under the checkout root (the working directory sbt forks `run` in);
+    // a harness that runs this main from a directory of its own passes
+    // SPARK_GRAFT_FP_OUT (and SPARK_GRAFT_FP_DUMP), or the files land there
     val out = if (args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_FP_OUT", BenchRules.root.resolve("docs/PLAN_FINGERPRINTS.json").toString)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt

@@ -106,17 +106,28 @@ object Jobs {
     * under the generation it saw then, and read again only when it moved. */
   private[graft] def generation(dir: String): Seq[(String, Long)] = {
     recover(dir)
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(f => f.getName -> f.length).sorted
+    listing(dir)
   }
 
+  private def listing(dir: String): Seq[(String, Long)] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(f => f.getName -> f.length).sorted
+
+  /** What [[replace]] published: the rows written, and the [[generation]]
+    * of its own files. */
+  private[graft] final case class Published(rows: Long, generation: Seq[(String, Long)])
+
   /** Replace the snapshot at `dir` with `df`: write it once to `<dir>__tmp`,
-    * then [[publish]] by rename (never a second write). Returns the rows
-    * written, counted by an observation on the write, not a read-back. */
-  private[graft] def replace(df: DataFrame, dir: String): Long = {
+    * then [[publish]] by rename (never a second write). The rows are
+    * counted by an observation on the write, not a read-back. The
+    * generation is the listing of `<dir>__tmp` before the rename, which
+    * moves the directory whole: a listing of `dir` after the publish could
+    * already show another writer's snapshot. */
+  private[graft] def replace(df: DataFrame, dir: String): Published = {
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("n")).write.mode(SaveMode.Overwrite).parquet(dir + "__tmp")
+    val written = listing(dir + "__tmp")
     publish(dir + "__tmp", dir)
-    obs.get("n").asInstanceOf[Long]
+    Published(obs.get("n").asInstanceOf[Long], written)
   }
 
   /** Retention: keep only rows with `tsCol` >= cutoff (the reference
@@ -129,7 +140,7 @@ object Jobs {
   def housekeeping(spark: SparkSession, tableDir: String, tsCol: String, cutoff: java.sql.Timestamp): Long = {
     val table = readSnapshot(spark, tableDir)
       .getOrElse(throw new java.io.FileNotFoundException(s"housekeeping: no table at $tableDir"))
-    replace(retention(table, tsCol, cutoff), tableDir)
+    replace(retention(table, tsCol, cutoff), tableDir).rows
   }
 
   /** Curated-output writer with a BOUNDED file count per partition — the
@@ -171,6 +182,6 @@ object Jobs {
     // deterministic within-batch dedup: priority over ALL columns so two
     // pages carrying the same station with different payloads resolve
     // the same way every run (priority = the key alone would tie)
-    replace(Dedup.firstWins(merged, Seq("station_id"), merged.columns.toSeq), catalogDir)
+    replace(Dedup.firstWins(merged, Seq("station_id"), merged.columns.toSeq), catalogDir).rows
   }
 }

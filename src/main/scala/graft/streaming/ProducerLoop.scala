@@ -100,9 +100,10 @@ object ProducerLoop {
 
   /** The held cursors for (`dir`, `keys`) if the snapshot's generation
     * has not moved, else the snapshot read afresh. The generation is taken
-    * before the read, so a publish racing the read can leave the held
-    * generation older than its contents (read again next cycle), never
-    * newer. */
+    * before the read, and a commit holds the generation of the files it
+    * wrote itself ([[graft.jobs.Jobs.Published]]), so a publish by another
+    * writer racing either can leave the held generation older than its
+    * contents (read again next cycle), never newer. */
   private def currentCursors(spark: SparkSession, dir: String, keys: Seq[String]): Rollup.Maxima = {
     val gen = Jobs.generation(dir)
     Option(held.get((dir, keys))).filter(_.generation == gen).map(_.cursors).getOrElse {
@@ -128,8 +129,7 @@ object ProducerLoop {
     val base = currentCursors(spark, dir, keys)
     cycle(batch, keys, tsCol, arrivalCol, sinkDir, cursorFrame(spark, keys, base)) { observed =>
       val merged = Rollup.MaxTs.merge(base, observed)
-      Jobs.replace(cursorFrame(spark, keys, merged), dir)
-      held.put((dir, keys), Held(Jobs.generation(dir), merged))
+      held.put((dir, keys), Held(Jobs.replace(cursorFrame(spark, keys, merged), dir).generation, merged))
     }
   }
 

@@ -154,11 +154,7 @@ class BenchRulesSpec extends SparkSpec {
     assert(failed == Seq("q2_bad_build", "q3_bad_run"))
   }
 
-  test("root: -Dgraft.root when set, else the working directory; sbt sets it to this checkout") {
-    assert(BenchRules.rootFrom(Some("/srv/checkout")) == java.nio.file.Paths.get("/srv/checkout"))
-    assert(BenchRules.rootFrom(None) == java.nio.file.Paths.get(sys.props("user.dir")).toAbsolutePath)
-    // the forked test JVM gets build.sbt's option: the root holds this build
-    assert(sys.props.contains("graft.root"))
+  test("root: the forked test JVM runs in this checkout") {
     assert(java.nio.file.Files.isRegularFile(BenchRules.root.resolve("build.sbt")))
   }
 

@@ -122,6 +122,19 @@ class JobsSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == n)
   }
 
+  test("replace: the generation it returns is its own files', and another writer's publish moves the snapshot's") {
+    val dir = Files.createTempDirectory("gen").toString + "/snap"
+    assert(Jobs.generation(dir).isEmpty)
+    val mine = Jobs.replace(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), dir)
+    assert(mine.rows == 2)
+    assert(mine.generation.exists(_._1.endsWith(".parquet")))
+    assert(Jobs.generation(dir) == mine.generation)
+    // same rows, another write: fresh part-file names, so a new generation
+    val theirs = Jobs.replace(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), dir)
+    assert(theirs.generation != mine.generation)
+    assert(Jobs.generation(dir) == theirs.generation)
+  }
+
   test("snapshot reads and publishes live only in jobs/Jobs.scala") {
     val root = Paths.get("src/main/scala")
     val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
