@@ -146,20 +146,16 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
     // SORTED name order (round 5; was Map iteration order): pins each
     // query's GC/cache neighborhood across rounds.
-    // Optional subset filter (A/B experiments): the tag "core" expands
-    // to the curated per-operator-family subset (SparkEntry.coreBench).
+    // Optional subset filter (A/B experiments): comma-separated query names.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
         .filter(_.nonEmpty) // an empty/blank env var must not bench nothing
         .map { names =>
-          val expanded =
-            if (names.contains("core")) names - "core" ++ SparkEntry.coreBench
-            else names
-          val unknown = expanded -- SparkEntry.queries.keySet
+          val unknown = names -- SparkEntry.queries.keySet
           require(unknown.isEmpty,
             s"SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
-          expanded
+          names
         }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,85 +1,15 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** Plan-quality audit: prints the physical plan facts that matter at
-  * scale (pushed filters, read schemas, join strategies, codegen spans)
-  * for the core queries. Not part of the driver contract.
+/** Static-plan fingerprints of the registry queries, for telling whether
+  * a change moved any plan. Usage: `runMain graft.PlanCheck fingerprints
+  * [sfDir] [outFile]`.
   */
 object PlanCheck {
-  /** The core queries whose plan facts `main` prints. */
-  private[graft] val audited: Seq[String] = Seq(
-    "q1_agg", "q2_filter", "q3_enrich", "q4_watermark", "q9_topk",
-    "q16_join_parts", "q5_dedup", "q6_latest", "q43_range_join",
-    // round-2 additions with scale-relevant plan shapes
-    "q25_knn_brute", "q27_minhash_dedup", "q50_bloom_join",
-    "q52_stratified_sample", "q55_scd2",
-    // round-3: multiprobe ANN (bucket join stays broadcast on the
-    // probed query side), the t-digest ObjectHashAggregate, the
-    // broadcast/Bloom decontamination pair, and the chunker generator
-    "q30_ann_lsh", "q59_tdigest", "q61_decontaminate",
-    "q64_decontaminate_bloom", "q63_chunking",
-    // round-3 batch 2: salted SMJ, tf-idf window limit, Bloom-bypass
-    // anti join, deflate map-side signal
-    "q65_salted_join", "q66_tfidf", "q72_incremental_dedup",
-    "q73_compress_quality",
-    // round-3 batch 3: z-order file assignment must stay pure map-side
-    // (no exchange before the per-file agg's own shuffle), compaction
-    // planning is one window over file metadata
-    "q89_zorder_layout", "q90_compaction_plan",
-    // round-3 batch 4: PQ encode/ADC must stay in one codegen'd
-    // projection (codebook literals, no join), PageRank's per-round
-    // join+agg pair, transition matrix's single lead window
-    "q94_pq_adc", "q96_pagerank", "q98_transitions",
-    // round-4: join-free gram aggregate (hashed keys), directed
-    // PageRank with the dangling fold, LSH-candidate mining
-    "q101_novelty", "q106_pagerank_directed", "q107_hard_negatives_ann",
-    // round-6: the real-codec mapPartitions seams — the object
-    // serialize/deserialize boundary should wrap ONLY the decode
-    // stage, with the rollups/joins staying codegen'd around it
-    "q32_multimodal", "q54_media_dedup", "q108_audio_decode",
-    // round-8: BM25's broadcast-pruned postings + two-pass top-k
-    // (no per-query single-task window), and the order digest's
-    // Rank-based position pass
-    "q122_bm25", "q123_order_digest",
-    // round-8: the incremental-digest diff — digests computed BEFORE
-    // the full-outer id join, so the join ships 16 B/doc, never text
-    "q124_delta_digest",
-    // round-8: stratified round-robin sharding — Rank two-pass, no
-    // per-source single-task window
-    "q125_stratified_shards"
-  )
-
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("fingerprints")) { fingerprints(args.drop(1)); return }
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = Sessions.local(4)
-    audited.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, dir)
-      // drive THIS queryExecution's physical plan (count()/foreach both
-      // wrap df in a NEW execution and leave this one's AQE
-      // un-finalized): the final plan — with its WholeStageCodegen
-      // spans — only exists after the adaptive plan actually runs
-      df.queryExecution.executedPlan.execute().count()
-      val plan = df.queryExecution.executedPlan.toString
-      val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(plan).toList
-      val schemas = "ReadSchema: [^\\n]*".r.findAllIn(plan).toList
-      val joins = plan.linesIterator.filter(l => l.contains("Join")).map(_.trim.take(90)).toList
-      // codegen ids (*(n)) only print in explain's simple mode
-      val simple = df.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
-      val wsc = "\\*\\(\\d+\\)".r.findAllIn(simple).map(_.toString).toSet.size
-      println(s"=== $name")
-      pushed.foreach(p => println(s"  $p"))
-      schemas.foreach(s => println(s"  ${s.take(120)}"))
-      joins.foreach(j => println(s"  JOIN: $j"))
-      println(s"  wholestage_codegen_nodes=$wsc")
-      println(s"  topk=" + plan.linesIterator.find(_.contains("TakeOrdered")).map(_.trim.take(90)).getOrElse("-"))
-      // map-side per-group top-k pruning (rank filters, stratified sample)
-      plan.linesIterator.find(_.contains("WindowGroupLimit")).foreach(l => println(s"  wgl=${l.trim.take(90)}"))
-      // bloom prefilter placement (q50)
-      plan.linesIterator.find(_.contains("might_contain")).foreach(l => println(s"  bloom=${l.trim.take(90)}"))
-    }
-    spark.stop()
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("fingerprints") => fingerprints(args.drop(1))
+    case _ =>
+      System.err.println("usage: PlanCheck fingerprints [sfDir] [outFile]")
+      sys.exit(2)
   }
 
   /** Per-query PHYSICAL-PLAN FINGERPRINTS: `runMain graft.PlanCheck

@@ -4,7 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The program's entry points (SURVEY.md §7): `entry` is what `Smoke` runs,
+  * `queries` what `Verify`, `Bench` and `PlanCheck fingerprints` run,
+  * and `oracleSql` with `dynamicOracleSql` what `Verify` writes for the
+  * DuckDB compare.
   *
   * Each `queries` entry re-expresses one operator family from SURVEY.md §2
   * Spark-first; `oracleSql` carries the DuckDB-equivalent ANSI SQL run by
@@ -47,45 +50,6 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Queries.oracles
-
-  /** The tagged CORE bench subset (VERDICT r8 task 3): one-or-two
-    * representatives per SURVEY §2 operator family and per LLM-pipeline
-    * capability, so an in-round bench loop costs minutes, not the
-    * 224-query ~36 min full run (which remains the round-seal record).
-    * `SPARK_GRAFT_BENCH_ONLY=core` expands to this set; membership is
-    * documented in docs/BENCH_NOTES.md. Every name is validated against
-    * the registry at Bench startup — a renamed query fails loudly.
-    */
-  val coreBench: Seq[String] = Seq(
-    // ingest/normalize/enrich/dedup/upsert (SURVEY §2.1–2.4)
-    "q2_filter", "q3_enrich", "q4_watermark", "q5_dedup", "q10_upsert",
-    "q19_normalize", "q20_stations",
-    // windows / sessionization / latest-per-key / top-k (§2.5–2.6)
-    "q7_hourly", "q9_topk", "q37_sessionize", "q171_window_functions",
-    // unions / json / explode / strings / joins (§2.7–2.8)
-    "q8_union", "q12_json", "q13_explode", "q42_asof_join",
-    "q50_bloom_join", "q65_salted_join", "q157_range_join",
-    // sketches & custom expressions (§2.10)
-    "q44_hll_sketch", "q59_tdigest", "q131_count_min",
-    // text pipeline: quality/clean/BPE/LM/BM25
-    "q80_dup_spans", "q95_bpe_train", "q110_lm_score", "q122_bm25",
-    "q126_gopher_rules", "q128_train_classifier",
-    // dedup family: exact/minhash/semantic/sparse/decontam
-    "q27_minhash_dedup", "q61_decontaminate", "q78_semantic_dedup",
-    "q112_sparse_allpairs",
-    // ANN family incl. the native operator
-    "q30_ann_lsh", "q35_ivf", "q94_pq_adc", "q103_ann_ranking",
-    "q139_native_topk", "q49_ann_adaptive",
-    // graph family (iterative/checkpointed)
-    "q60_cc_log_rounds", "q96_pagerank", "q155_label_prop",
-    "q174_triangles", "q184_kcore",
-    // export/shard planning, sampling, rank/sweep
-    "q85_hash_split", "q113_shard_plan", "q115_weighted_sample",
-    "q167_peak_concurrency",
-    // ER / spatial / multimodal / IVM
-    "q169_entity_resolution", "q201_geo_grid", "q32_multimodal",
-    "q173_video_keyframes", "q180_ivm"
-  )
 
   /** Oracles that must be GENERATED against the verify corpus (round
     * 5): q30/q31/q107 derive LSH geometry from the corpus count at

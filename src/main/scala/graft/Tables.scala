@@ -56,8 +56,9 @@ object Tables {
     withEventTime(table(s, d, "events"))
 
   /** The ts-shape adaptation itself, reusable on any frame carrying a
-    * raw events `ts` (StreamDemo applies it inside a file stream —
-    * the match is on the STATIC schema, so it is streaming-safe).
+    * raw events `ts`. The match is on the STATIC schema, so it is
+    * streaming-safe: StreamingSpec applies it to a MemoryStream of each
+    * shape and gets the batch frame's `ts`/`ts_ns`.
     */
   def withEventTime(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._

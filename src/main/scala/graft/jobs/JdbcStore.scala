@@ -452,9 +452,11 @@ object JdbcStore {
       cursorTable: String = "ingestion_cursors"
   ): Unit = {
     val cursors = readCursors(batch.sparkSession, url, cursorTable, keys)
+    // the observed maxima are already one row per key, so they go to the
+    // advance MERGE as they are, without greatestUpsert's per-key max
     ProducerLoop.cycle(batch, keys, tsCol, arrivalCol, sinkDir, cursors) { maxima =>
-      greatestUpsert(ProducerLoop.cursorFrame(batch.sparkSession, keys, maxima),
-        url, cursorTable, keys, "last_observed_at")
+      upsert(ProducerLoop.cursorFrame(batch.sparkSession, keys, maxima),
+        url, cursorTable, keys, Some("last_observed_at"))
     }
   }
 }

@@ -19,13 +19,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   That is the 100 TB posture: a 1000-executor PageRank losing one
   *   node should lose one task's worth of work, not twenty rounds.
   *
-  * `cut` picks reliable when a checkpoint dir is configured
-  * (`spark.graft.checkpoint.dir` conf, else the
-  * `SPARK_GRAFT_CHECKPOINT_DIR` env var), else local — so the harness
-  * stays fast by default and a cluster deployment flips one setting
-  * without touching any operator. Both paths are EAGER and both
-  * preserve the child's output partitioning (Spark's
-  * `Dataset.checkpoint` builds the LogicalRDD via
+  * `cut` picks reliable when the `spark.graft.checkpoint.dir` conf is
+  * set, else local — so the harness stays fast by default and a
+  * cluster deployment flips one setting without touching any operator.
+  * Both paths are EAGER and both preserve the child's output
+  * partitioning (Spark's `Dataset.checkpoint` builds the LogicalRDD via
   * `LogicalRDD.fromDataset`, which captures partitioning metadata —
   * the property LabelProp/PageRank rely on to pay their edge shuffle
   * once).
@@ -34,10 +32,7 @@ object Checkpoints {
 
   /** Reliable-checkpoint dir, if one is configured for this session. */
   def reliableDir(spark: SparkSession): Option[String] =
-    spark.conf
-      .getOption("spark.graft.checkpoint.dir")
-      .orElse(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR"))
-      .filter(_.trim.nonEmpty)
+    spark.conf.getOption("spark.graft.checkpoint.dir").filter(_.trim.nonEmpty)
 
   /** Eagerly materialize `df` and truncate its lineage, via the
     * configured backend (see object scaladoc). Always safe to call in

@@ -69,13 +69,27 @@ class PagedJsonSource extends TableProvider {
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]
-  ): Table =
+  ): Table = {
+    // the reader decodes only these types; any other would read as all
+    // nulls, and Spark trusts a source's rows
+    schema.fields.find(f => !PagedJsonSource.readable(f.dataType)).foreach { f =>
+      throw new IllegalArgumentException(
+        s"PagedJsonSource cannot read field '${f.name}' of type ${f.dataType.simpleString}: " +
+          "supported types are string, double, bigint and int")
+    }
     new PagedJsonTable(schema, properties.get("path"))
+  }
 
   override def supportsExternalMetadata(): Boolean = true
 }
 
 object PagedJsonSource {
+  /** The field types [[PageReader]] decodes from a JSON value. */
+  private[source] def readable(t: DataType): Boolean = t match {
+    case StringType | DoubleType | LongType | IntegerType => true
+    case _ => false
+  }
+
   /** Station-catalog shape (SURVEY §1.1 stations). */
   val defaultSchema: StructType = StructType(
     Seq(
@@ -398,7 +412,7 @@ class PageReader(file: String, readSchema: StructType, pushed: Array[Filter], cf
           case DoubleType => if (v.isNumber) java.lang.Double.valueOf(v.asDouble()) else null
           case LongType => if (v.isNumber) java.lang.Long.valueOf(v.asLong()) else null
           case IntegerType => if (v.isNumber) java.lang.Integer.valueOf(v.asInt()) else null
-          case _ => null
+          case other => throw new IllegalStateException(s"unreadable type $other") // getTable rejects it
         }
     }
     InternalRow.fromSeq(values.toIndexedSeq)

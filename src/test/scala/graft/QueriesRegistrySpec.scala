@@ -39,12 +39,6 @@ class QueriesRegistrySpec extends AnyFunSuite {
     assert(empty.isEmpty, s"empty oracles: $empty")
   }
 
-  test("the core bench subset and the plan audit name only registered queries") {
-    val known = Queries.registered.keySet
-    assert(SparkEntry.coreBench.filterNot(known).isEmpty)
-    assert(PlanCheck.audited.filterNot(known).isEmpty)
-  }
-
   test("a name declared twice throws") {
     val twice = new QueryRegistration {
       query("q1_a", (_, _) => null, None)

@@ -3,6 +3,7 @@ package graft.source
 import java.nio.file.{Files, Paths}
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, TimestampType}
 
 /** DSv2 paged source: partition-per-page planning, filter pushdown into
   * the reader, column pruning, catalog-refresh integration.
@@ -43,6 +44,27 @@ class PagedJsonSourceSpec extends SparkSpec {
     val df = read()
     assert(df.count() == 5)
     assert(df.rdd.getNumPartitions == 3)
+  }
+
+  test("an empty page directory reads as 0 rows without error") {
+    val empty = Files.createTempDirectory("pages_empty").toString
+    val df = spark.read
+      .format("graft.source.PagedJsonSource")
+      .schema(PagedJsonSource.defaultSchema)
+      .option("path", empty)
+      .load()
+    assert(df.count() == 0)
+    assert(df.collect().isEmpty)
+  }
+
+  test("a schema field the reader cannot decode is rejected, naming the field and its type") {
+    for ((t, shown) <- Seq(BooleanType -> "boolean", TimestampType -> "timestamp")) {
+      val schema = PagedJsonSource.defaultSchema.add("active", t)
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format("graft.source.PagedJsonSource").schema(schema).option("path", dir).load()
+      }
+      assert(e.getMessage.contains(s"'active' of type $shown"), e.getMessage)
+    }
   }
 
   test("equality filter is pushed into the source (reader-level filtering)") {

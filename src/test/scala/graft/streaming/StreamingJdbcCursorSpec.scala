@@ -4,8 +4,12 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import graft.SparkSpec
 import graft.jobs.JdbcStore
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.SaveIntoDataSourceCommand
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** T1 + T3 + S10 EXECUTED TOGETHER: a real Structured Streaming query
   * whose foreachBatch runs [[JdbcStore.processBatchJdbc]] — per
@@ -71,5 +75,37 @@ class StreamingJdbcCursorSpec extends SparkSpec {
       assert(cur.map(_.getTimestamp(2)).toSeq ==
         Seq(ts("2024-01-01 12:00:00"), ts("2024-01-01 13:00:00")))
     } finally q.stop()
+  }
+
+  test("processBatchJdbc: the cursor commit stages the observed maxima as they are, with no aggregate") {
+    val url =
+      s"jdbc:derby:memory:commit${java.util.UUID.randomUUID().toString.replace("-", "")};create=true"
+    val sink = Files.createTempDirectory("jdbccommit").toString + "/sink"
+    val keys = Seq("source", "station_id")
+    // the plan of every JDBC stage write, which only the upsert makes
+    val staged = new java.util.concurrent.LinkedBlockingQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical.foreach {
+          case c: SaveIntoDataSourceCommand if c.options.get("dbtable").exists(_.contains("_stage_")) =>
+            staged.put(c.query)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val batch = Seq(
+        ("de", "s1", ts("2024-01-01 10:00:00"), 1.0, 1L),
+        ("de", "s1", ts("2024-01-01 12:00:00"), 2.0, 2L),
+        ("de", "s2", ts("2024-01-01 11:00:00"), 3.0, 3L)
+      ).toDF("source", "station_id", "observed_at", "value", "arrival")
+      JdbcStore.processBatchJdbc(batch, keys, "observed_at", "arrival", sink, url)
+      val plan = Option(staged.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail("the cursor commit's stage write was not seen"))
+      assert(plan.collect { case a: Aggregate => a }.isEmpty, s"the commit re-aggregates:\n$plan")
+      val cur = JdbcStore.readTable(spark, url, "ingestion_cursors").orderBy("station_id").collect()
+      assert(cur.map(_.getTimestamp(2)).toSeq == Seq(ts("2024-01-01 12:00:00"), ts("2024-01-01 11:00:00")))
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -5,8 +5,11 @@ import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.hadoop.mapreduce.JobContext
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming semantics (SURVEY.md §2.9): per-key watermark state across
@@ -18,6 +21,8 @@ class StreamingSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   case class Ev(station_id: String, pollutant: String, ts: Timestamp, value: Double, arrival: Long)
+  case class RawEv(event_id: Long, ts: Timestamp)
+  case class RawNsEv(event_id: Long, ts: Long)
 
   test("PerKeyWatermark: state survives batches; equal ts dropped; per-key independence") {
     implicit val sqlCtx = spark.sqlContext
@@ -403,6 +408,41 @@ class StreamingSpec extends SparkSpec {
       val v = spark.read.parquet(s"$dir/sink").columns.toSeq
       assert(v == Seq("value"))
     } finally q.stop()
+  }
+
+  test("Tables.withEventTime: a streaming frame gets ts and ts_ns as the batch frame does, for both ts shapes") {
+    implicit val sqlCtx = spark.sqlContext
+    def sameAsBatch(name: String, stream: DataFrame, feed: () => Unit, batch: DataFrame): Seq[Row] = {
+      val q = graft.Tables.withEventTime(stream).writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", Files.createTempDirectory(name).toString)
+        .start()
+      try {
+        feed()
+        q.processAllAvailable()
+        val (got, want) = (spark.table(name), graft.Tables.withEventTime(batch))
+        assert(got.schema("ts").dataType == TimestampType)
+        assert(got.schema("ts_ns").dataType == LongType)
+        assert(got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType))
+        val rows = got.orderBy("event_id").collect().toSeq
+        assert(rows == want.orderBy("event_id").collect().toSeq)
+        rows
+      } finally q.stop()
+    }
+    // timestamp[us] parquet shape
+    val micros = Seq(RawEv(1, ts("2024-01-01 12:00:00.123456")), RawEv(2, ts("2024-01-01 12:30:00")))
+    val us = MemoryStream[RawEv]
+    val usRows = sameAsBatch("event_time_us", us.toDF(), () => us.addData(micros: _*),
+      micros.map(e => (e.event_id, e.ts)).toDF("event_id", "ts"))
+    assert(usRows.map(_.getAs[Long]("ts_ns")) == micros.map(e => DateTimeUtils.fromJavaTimestamp(e.ts) * 1000L))
+    // int64 epoch-nanos shape
+    val nanos = Seq(RawNsEv(1, 1704110400123456789L), RawNsEv(2, 1704112200000000000L))
+    val ns = MemoryStream[RawNsEv]
+    val nsRows = sameAsBatch("event_time_ns", ns.toDF(), () => ns.addData(nanos: _*),
+      nanos.map(e => (e.event_id, e.ts)).toDF("event_id", "ts"))
+    assert(nsRows.map(_.getAs[Long]("ts_ns")) == nanos.map(_.ts))
   }
 }
 
