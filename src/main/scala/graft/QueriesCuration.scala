@@ -974,11 +974,9 @@ private[graft] trait QueriesCuration extends QueryRegistration {
     * probe p" — the graded form of the binary q61/q64 sweeps (those
     * answer "does any eval gram occur?", this answers "HOW MUCH of
     * which eval doc leaked?", the report a contamination audit ships).
-    * Chosen over cosine so it needs ONE aggregation — which is what
-    * lets streaming/StreamingSparseSim run the identical law on an
-    * ingest stream against the identical index (parity spec). Pair
-    * work is again Σ df² over the CAPPED eval vocabulary — constant
-    * cap 64, same linear-work bound as q112 (round 7; was the
+    * Chosen over cosine so it needs ONE aggregation and no probe-side
+    * norm. Pair work is again Σ df² over the CAPPED eval vocabulary —
+    * constant cap 64, same linear-work bound as q112 (round 7; was the
     * scale-following cap the ladder measured superlinear); probe-side
     * work is map-side distinct-gram extraction only.
     */
@@ -1185,15 +1183,21 @@ private[graft] trait QueriesCuration extends QueryRegistration {
   /** Per-source corpus integrity digest — the INCREMENTAL-ingest end of
     * the export contract (q116 is the per-shard end at export time):
     * (n_docs, sum-mod, bit_xor) of every doc's portable content digest,
-    * grouped by source. The exact same function runs on an ingest
-    * STREAM ([[graft.streaming.StreamingDigest]] — associative
-    * aggregates are streaming-native at constant state per source;
-    * parity spec) so a live pipeline and any batch/cross-engine re-run
-    * certify each other.
+    * grouped by source. Both digests are associative aggregates (the
+    * ExportPlan.shardDigests law), so any batch or cross-engine re-run
+    * recomputing the three numbers per source certifies the corpus.
     */
   def q118SourceDigest(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingDigest
-      .perGroupDigest(Tables.documents(s, dir), "source", "text")
+    Tables
+      .documents(s, dir)
+      .select(col("source"), TextStats.contentDigest60(col("text")).as("digest"))
+      .groupBy(col("source"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        (sum(col("digest").cast("decimal(38,0)")) % lit(ExportPlan.DigestModulus))
+          .cast("long").as("digest_sum"),
+        expr("bit_xor(digest)").as("digest_xor")
+      )
       .orderBy(col("source"))
 
   val q118Oracle: String =

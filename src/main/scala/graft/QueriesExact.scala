@@ -839,13 +839,14 @@ private[graft] trait QueriesExact extends QueryRegistration {
     * URL→email→IP→SSN→phone order so class overlaps cannot
     * double-count removed spans. One corpus scan, one per-source
     * hash aggregate — map-side regex, no UDFs, no shuffle beyond the
-    * final |sources|-row rollup.
+    * final |sources|-row rollup. The five patterns below are the
+    * engine's canonical PII classes; the oracle replays them verbatim.
     */
-  private[graft] val PiiEmailRe = graft.streaming.StreamingPii.EmailRe
-  private[graft] val PiiPhoneRe = graft.streaming.StreamingPii.PhoneRe
-  private[graft] val PiiIpRe = graft.streaming.StreamingPii.IpRe
-  private[graft] val PiiSsnRe = graft.streaming.StreamingPii.SsnRe
-  private[graft] val PiiUrlRe = graft.streaming.StreamingPii.UrlRe
+  private[graft] val PiiEmailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+  private[graft] val PiiPhoneRe = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
+  private[graft] val PiiIpRe = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
+  private[graft] val PiiSsnRe = "[0-9]{3}-[0-9]{2}-[0-9]{4}"
+  private[graft] val PiiUrlRe = "https?://[A-Za-z0-9./_-]+"
 
   def q226PiiScan(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * `when(dot > 0, …)` over per-plane HOF dots) runs INTERPRETED and
   * re-evaluates a lambda chain per (row, table, bit) — tables×nbits×dim
   * boxed multiplies per vector, the dominant map-side cost of every
-  * LSH query (q30/q31/q103/q107, StreamingAnn). This is the tight-loop
+  * LSH query (q30/q31/q103/q107). This is the tight-loop
   * `doGenCode` form; the plane tensor travels as ONE reference object
   * instead of tables×nbits literal arrays.
   *

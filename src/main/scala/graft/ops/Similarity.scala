@@ -168,7 +168,7 @@ object Similarity {
     * STATUS (since round 5): INTERPRETED FALLBACK, off every hot path.
     * All production bucket computation goes through the native
     * codegen'd [[graft.expr.LshBuckets]] (via the private `allBuckets`
-    * below — q30/q31/q49/q54/q107, bucketIndex, StreamingAnn);
+    * below — q30/q31/q49/q54/q107, bucketIndex);
     * LshBucketsSpec pins the two bit-identical. Remaining callers of
     * THIS composed Column form: LshBucketsSpec's equivalence test —
     * nothing on a query path. Keep it as the dependency-free reference implementation; do
@@ -261,10 +261,9 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Public form of the bucket index for stream-static ANN
-    * (graft.streaming.StreamingAnn): the same narrow (id, tbl, bucket)
-    * rows the batch candidate join uses, buildable once over a static
-    * corpus and joined against every micro-batch.
+  /** Public form of the bucket index: the same narrow (id, tbl, bucket)
+    * rows the batch candidate join uses, built once over a corpus and
+    * joined against any number of query batches.
     */
   def bucketIndex(
       df: DataFrame,
@@ -280,25 +279,12 @@ object Similarity {
     * composed per-table [[lshBucket]] folds it replaced, which ran
     * interpreted at tables×nbits×dim lambda evaluations per vector).
     * Seeds stay fixed per table index (7700+t), so buckets computed
-    * anywhere — including map-side on a stream — join against a
-    * batch-built bucketIndex.
+    * in any pass join against a separately built bucketIndex.
     */
   private def allBuckets(vecCol: Column, nbits: Int, tables: Int, dim: Int): Column = {
     import org.apache.spark.sql.graftshim.GraftShim
     val ps = Array.tabulate(tables)(t => planes(nbits, dim, seed = 7700 + t))
     GraftShim.column(graft.expr.LshBuckets(GraftShim.expression(vecCol), ps))
-  }
-
-  /** Per-table bucket assignments as an array of (tbl, bucket) structs —
-    * explode for one row per LSH table. The repeated element_at reads
-    * of the one deterministic LshBuckets call collapse under codegen
-    * subexpression elimination (one sketch pass per row, not tables).
-    */
-  def bucketStructs(vecCol: Column, nbits: Int = 6, tables: Int = 8, dim: Int = 64): Column = {
-    val bk = allBuckets(vecCol, nbits, tables, dim)
-    array((0 until tables).map { t =>
-      struct(lit(t).as("tbl"), element_at(bk, t + 1).as("bucket"))
-    }.toIndexedSeq: _*)
   }
 
   /** Narrow (id, tbl, bucket) rows — one per (vector, LSH table). The

@@ -151,14 +151,11 @@ object SparseSim {
   // Asymmetric CONTAINMENT/coverage — the decontamination shape: "what
   // fraction of reference doc r's (idf²-weighted) feature mass appears
   // in probe doc p?". Unlike cosine it needs NO probe-side norm, which
-  // is what makes it a SINGLE aggregation — and therefore runnable as
-  // one stateful op on a STREAM of probes against a frozen reference
-  // index (streaming/StreamingSparseSim; multiple stateful aggs in one
-  // streaming query are unsupported, so the law is chosen to need one).
+  // is what makes it a SINGLE aggregation over a frozen reference index.
   // ------------------------------------------------------------------
 
   /** DISTINCT n-gram features per doc, built entirely map-side
-    * (array_distinct in-row — no shuffle, safe on a stream).
+    * (array_distinct in-row — no shuffle).
     */
   def distinctFeatures(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     docs
@@ -169,10 +166,8 @@ object SparseSim {
   /** Frozen coverage index over the reference (eval) corpus: TF-IDF
     * postings with each ref doc's total squared mass ATTACHED to every
     * posting row (`nm2` rides the feature join so no post-aggregation
-    * static join is needed — a streaming aggregate output cannot join
-    * again). idf/df/cap are all reference-corpus-relative: the frozen-
-    * model discipline of the other streaming indexes (StreamingAnn,
-    * StreamingIvfPq).
+    * join is needed). idf/df/cap are all reference-corpus-relative, so
+    * the index stays frozen whatever probes it scores.
     *
     * @return (ref_id, feature, w, nm2)
     */
@@ -189,9 +184,7 @@ object SparseSim {
 
   /** Coverage of each reference doc by each probe doc: Σ_{t ∈ p∩r} w_r²
     * / ‖w_r‖² ∈ [0,1] (1 ⟺ every capped feature of r occurs in p).
-    * Streaming-agnostic: feature join (stream-static when probes
-    * stream) + ONE aggregate; both the batch query (q114) and
-    * [[graft.streaming.StreamingSparseSim]] call exactly this.
+    * One feature join + ONE aggregate; q114 calls exactly this.
     *
     * @param probeFeats output of [[distinctFeatures]] — id column name
     *                   `probe_id` expected

@@ -44,8 +44,8 @@ object Upsert {
     *
     * Scale shape: one anti join (snapshot keeps rows with no change) +
     * one union with the surviving changes — each side shuffles once on
-    * the key, or never if snapshot and changes are co-bucketed
-    * (ops.Bucketed). No full-outer wide row, no window.
+    * the key, or never if snapshot and changes are already partitioned
+    * by it. No full-outer wide row, no window.
     */
   def applyCdc(snapshot: DataFrame, changes: DataFrame, key: String, opCol: String): DataFrame = {
     val untouched = snapshot.join(changes.select(col(key)), Seq(key), "left_anti")

@@ -24,8 +24,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object PerKeyWatermark {
 
   /** Internal envelope: the full row travels as JSON so the operator is
-    * schema-agnostic; key is the concatenated key columns. Public — the
-    * encoder's generated code must be able to reach the class.
+    * schema-agnostic; key is the key columns as one JSON struct (see
+    * `filterNew`). Public — the encoder's generated code must be able
+    * to reach the class.
     */
   case class Keyed(key: String, ts: Timestamp, payload: String)
 

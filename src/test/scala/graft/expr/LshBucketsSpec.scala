@@ -23,12 +23,9 @@ class LshBucketsSpec extends SparkSpec {
       (i.toLong, Array.tabulate(dim)(d => (((i * 31 + d * 17) % 19) - 9).toFloat / 9f))
     }
     val df = vecs.toDF("vec_id", "embedding")
-    val native = df
-      .select(
-        col("vec_id"),
-        explode(Similarity.bucketStructs(col("embedding"), nbits, tables, dim)).as("tb")
-      )
-      .select(col("vec_id"), col("tb.tbl"), col("tb.bucket"))
+    // read through bucketIndex: the (id, tbl, bucket) rows the LSH queries join on
+    val native = Similarity
+      .bucketIndex(df, "vec_id", "embedding", nbits, tables, dim)
       .as[(Long, Int, Long)]
       .collect()
       .map { case (id, t, b) => (id, t) -> b }

@@ -138,7 +138,7 @@ class JobsSpec extends SparkSpec {
   test("snapshot reads and publishes live only in jobs/Jobs.scala") {
     val root = Paths.get("src/main/scala")
     val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 100, s"scanned ${files.size} files under ${root.toAbsolutePath}")
+    assert(files.size > 80, s"scanned ${files.size} files under ${root.toAbsolutePath}")
     def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
     assert(files.exists(rel(_) == "graft/jobs/Jobs.scala"))
     // a hand-built `<dir>__tmp` name or a direct publish call is a second

@@ -346,42 +346,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("SessionizeStream: sessions close when the watermark passes last+gap") {
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val src = input.toDF().withWatermark("ts", "0 seconds")
-    val out = SessionizeStream.sessions(src, Seq("station_id"), "ts", gapMs = 30 * 60 * 1000)
-    val q = out.writeStream
-      .format("memory")
-      .queryName("sess_out")
-      .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("sess_ckpt").toString)
-      .start()
-    try {
-      // batch 1: one session for st1 (two events 10 min apart)
-      input.addData(
-        Ev("st1", "pm25", ts("2024-01-01 12:00:00"), 1.0, 1),
-        Ev("st1", "pm25", ts("2024-01-01 12:10:00"), 2.0, 2)
-      )
-      q.processAllAvailable()
-      assert(spark.table("sess_out").count() == 0) // watermark hasn't passed yet
-      // batch 2: far-future event advances the watermark past 12:40 → session closes
-      input.addData(Ev("st9", "o3", ts("2024-01-02 00:00:00"), 3.0, 3))
-      q.processAllAvailable()
-      // one more empty-ish batch so the timeout fires with the new watermark
-      input.addData(Ev("st9", "o3", ts("2024-01-02 00:00:01"), 4.0, 4))
-      q.processAllAvailable()
-      val rows = spark
-        .table("sess_out")
-        .select(col("station_id"), col("session_start").cast("string"), col("session_end").cast("string"), col("n_events"))
-        .as[(String, String, String, Long)]
-        .collect()
-        .toSeq
-      assert(rows.contains(("st1", "2024-01-01 12:00:00", "2024-01-01 12:10:00", 2L)), s"got $rows")
-    } finally q.stop()
-  }
-
   test("ProducerLoop.start: end-to-end over MemoryStream with AvailableNow-style trigger") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("producer2").toString
