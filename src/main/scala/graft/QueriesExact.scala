@@ -1673,13 +1673,12 @@ private[graft] trait QueriesExact extends QueryRegistration {
       .distinct()
       .withColumn("w", lit(1L) + (col("src") + col("dst")) % 7)
       .repartition(col("src"))
-    import graft.ops.Checkpoints.CutOps
-    val e = sym.cutLineage()
+    val e = graft.ops.Checkpoints.cut(sym)
     val seeds = e.select(col("src").as("seed")).distinct().filter(expr("seed % 100 = 3"))
     var best = seeds
       .withColumn("node", col("seed"))
       .withColumn("dist", lit(0L))
-      .cutLineage()
+      .transform(graft.ops.Checkpoints.cut)
     for (_ <- 1 to 5) {
       val relaxed = e
         .join(best, e("src") === best("node"))
@@ -1688,7 +1687,7 @@ private[graft] trait QueriesExact extends QueryRegistration {
         .unionByName(relaxed)
         .groupBy(col("seed"), col("node"))
         .agg(min(col("dist")).as("dist"))
-        .cutLineage()
+        .transform(graft.ops.Checkpoints.cut)
     }
     best
       .groupBy(col("seed"))

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.CutOps
 
 /** MULTI-SOURCE BREADTH-FIRST SEARCH by frontier expansion — shortest
   * hop distance from a seed SET to every node reachable within
@@ -19,7 +18,8 @@ import graft.ops.Checkpoints.CutOps
   * distance by induction. Per-round frames cut lineage through
   * [[Checkpoints]] (iterative-DataFrame discipline; reliable backend
   * under a configured checkpoint dir). The only driver-side values are
-  * the per-round scalar frontier counts that decide early exit.
+  * the per-round frontier row counts that decide early exit, observed
+  * on the frontier's own checkpoint job ([[Checkpoints.cutObserved]]).
   *
   * At 100 TB scale this is |E|-proportional work per round with the
   * frontier broadcast-or-shuffled on the same key every round — the
@@ -39,27 +39,27 @@ object Bfs {
     val e = edges
       .select(col("src"), col("dst"))
       .repartition(col("src"))
-      .cutLineage()
+      .transform(Checkpoints.cut)
     var visited = seeds
       .select(col("node"))
       .distinct()
       .withColumn("dist", lit(0))
-      .cutLineage()
+      .transform(Checkpoints.cut)
     var frontier = visited.select(col("node"))
     var d = 0
     var exhausted = false
     while (d < maxDepth && !exhausted) {
       d += 1
-      val next = e
-        .join(frontier, e("src") === frontier("node"))
-        .select(col("dst").as("node"))
-        .distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .withColumn("dist", lit(d))
-        .cutLineage()
-      if (next.isEmpty) exhausted = true // scalar convergence check
+      val (next, size) = Checkpoints.cutObserved(
+        e.join(frontier, e("src") === frontier("node"))
+          .select(col("dst").as("node"))
+          .distinct()
+          .join(visited, Seq("node"), "left_anti")
+          .withColumn("dist", lit(d)),
+        count(lit(1)))
+      if (size.getLong(0) == 0) exhausted = true
       else {
-        visited = visited.unionByName(next).cutLineage()
+        visited = visited.unionByName(next).transform(Checkpoints.cut)
         frontier = next.select(col("node"))
       }
     }
@@ -81,28 +81,28 @@ object Bfs {
     val e = edges
       .select(col("src"), col("dst"))
       .repartition(col("src"))
-      .cutLineage()
+      .transform(Checkpoints.cut)
     var visited = seeds
       .select(col("seed"))
       .distinct()
       .withColumn("node", col("seed"))
       .withColumn("dist", lit(0))
-      .cutLineage()
+      .transform(Checkpoints.cut)
     var frontier = visited.select(col("seed"), col("node"))
     var d = 0
     var exhausted = false
     while (d < maxDepth && !exhausted) {
       d += 1
-      val next = e
-        .join(frontier, e("src") === frontier("node"))
-        .select(col("seed"), col("dst").as("node"))
-        .distinct()
-        .join(visited, Seq("seed", "node"), "left_anti")
-        .withColumn("dist", lit(d))
-        .cutLineage()
-      if (next.isEmpty) exhausted = true
+      val (next, size) = Checkpoints.cutObserved(
+        e.join(frontier, e("src") === frontier("node"))
+          .select(col("seed"), col("dst").as("node"))
+          .distinct()
+          .join(visited, Seq("seed", "node"), "left_anti")
+          .withColumn("dist", lit(d)),
+        count(lit(1)))
+      if (size.getLong(0) == 0) exhausted = true
       else {
-        visited = visited.unionByName(next).cutLineage()
+        visited = visited.unionByName(next).transform(Checkpoints.cut)
         frontier = next.select(col("seed"), col("node"))
       }
     }

@@ -222,8 +222,8 @@ object Boruvka {
     * the pair minimum (the root self-loops), then pointer-jump until
     * p = p∘p everywhere. Every frame is ≤ |components| rows; the loop
     * BATCHES TWO jumps per iteration (p ← (p∘p)∘(p∘p), two self-joins)
-    * before paying the checkpoint + emptiness probe, so convergence
-    * costs ⌈log₄ depth⌉ probe round-trips instead of ⌈log₂ depth⌉ —
+    * per checkpoint (which counts the unsettled pointers on its own
+    * job), so convergence costs ⌈log₄ depth⌉ round-trips, not ⌈log₂⌉ —
     * on the shallow per-round hook forests (depth ≤ component count
     * halvings) that halves the fixed driver-side overhead, which is
     * the dominant cost at harness scale. Extra jumps past the root are
@@ -231,7 +231,7 @@ object Boruvka {
     */
   private def hookLabels(ptr0: DataFrame): DataFrame = {
     val grand = ptr0.select(col("c").as("p"), col("p").as("pp"))
-    // cut per step: the probe and the next jump both re-read the frame,
+    // cut per step: both sides of the next jump re-read the frame,
     // and an uncut chain re-evaluates every prior jump per consumer
     // (measured: the lazy form re-shuffled quadratically many joins)
     var ptr = Checkpoints.cut(
@@ -245,11 +245,12 @@ object Boruvka {
       // first jump (lazy — bounded lineage on the checkpointed ptr)
       val t1 = ptr.select(col("c").as("p"), col("p").as("pp"))
       val j1 = ptr.join(t1, Seq("p")).select(col("c"), col("pp").as("p"))
-      // second jump, then one checkpoint + one probe for the pair
+      // second jump, then one checkpoint counting pointers still moving
       val t2 = j1.select(col("c").as("p"), col("p").as("pp"))
-      val j2 = Checkpoints.cut(
-        j1.join(t2, Seq("p")).select(col("c"), col("p"), col("pp")))
-      done = j2.where(col("p") =!= col("pp")).isEmpty
+      val (j2, moved) = Checkpoints.cutObserved(
+        j1.join(t2, Seq("p")).select(col("c"), col("p"), col("pp")),
+        count(when(col("p") =!= col("pp"), 1)))
+      done = moved.getLong(0) == 0
       ptr = j2.select(col("c"), col("pp").as("p"))
     }
     ptr

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.CutOps
 
 /** BPE (byte-pair-encoding) tokenizer TRAINING — the iterative greedy
   * merge loop (public algorithm: Sennrich et al., "Neural Machine
@@ -88,7 +87,7 @@ object Bpe {
       .groupBy(col("word"))
       .agg(count(lit(1)).as("weight"))
       .select(col("word"), split(col("word"), "").as("tokens"), col("weight"))
-      .cutLineage()
+      .transform(Checkpoints.cut)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -104,11 +103,11 @@ object Bpe {
           merges += ((step, l, r, f))
           val fused = words
             .select(col("word"), Bpe.applyMerge(col("tokens"), l, r).as("tokens"), col("weight"))
-            .cutLineage()
+            .transform(Checkpoints.cut)
           // free the superseded round's checkpoint (eager materialize
           // above makes this safe; without it executor storage grows
           // linearly with nMerges)
-          org.apache.spark.sql.graftshim.GraftShim.unpersistCheckpoint(words)
+          Checkpoints.release(words)
           words = fused
           step += 1
       }

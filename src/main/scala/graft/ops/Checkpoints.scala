@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 
 /** Lineage-truncation backend for the iterative operators (Components,
-  * PageRank, LabelProp, KCore, Bpe). Every per-round frame in an
-  * iterative job MUST cut its lineage — otherwise round N's plan nests
-  * rounds 1..N-1 and the optimizer re-analyzes an exponentially
-  * growing tree — but HOW it cuts is a deployment decision:
+  * Scc, Bfs, KCore, Boruvka, PageRank, LabelProp, Walks, Temporal,
+  * Matching, Bpe). Every per-round frame in an iterative job MUST cut
+  * its lineage — otherwise round N's plan nests rounds 1..N-1 and the
+  * optimizer re-analyzes an exponentially growing tree — but HOW it
+  * cuts is a deployment decision:
   *
   * - `localCheckpoint(true)` stores the materialized blocks on
   *   executors with NO replication. Fast (no FS round-trip) and
@@ -27,6 +28,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `LogicalRDD.fromDataset`, which captures partitioning metadata —
   * the property LabelProp/PageRank rely on to pay their edge shuffle
   * once).
+  * `CheckpointsSpec` fails on a checkpoint or its release spelled
+  * anywhere but here.
   */
 object Checkpoints {
 
@@ -53,10 +56,17 @@ object Checkpoints {
     }
   }
 
-  /** Syntax: `df.cutLineage()` reads like the `localCheckpoint` call it
-    * replaces at the iterative call sites. */
-  implicit class CutOps(private val df: DataFrame) {
-    def cutLineage(): DataFrame = cut(df)
+  /** The one cut-and-probe rule: [[cut]] `df` and return `aggs` over its
+    * rows, observed on the checkpoint's own job — a round's convergence
+    * scalar costs no action of its own. The observation is the plan's
+    * root, so it runs in the result stage, where Spark merges each
+    * partition's update once. Empty frame: count 0, sum null. */
+  def cutObserved(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val named = aggs.zipWithIndex.map { case (a, i) => a.as(s"_$i") }
+    val out = cut(df.observe(obs, named.head, named.tail: _*))
+    val values = obs.get
+    (out, Row.fromSeq(aggs.indices.map(i => values(s"_$i"))))
   }
 
   /** Release the storage behind a frame produced by `cut` once a newer

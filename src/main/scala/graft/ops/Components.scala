@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.CutOps
 
 /** Connected components over an undirected edge list — the exact closure
   * that [[TextDedup.dedupAssignments]] approximates in one hop. Used to
@@ -18,9 +17,9 @@ import graft.ops.Checkpoints.CutOps
   * Scale shape: each round is one equi join (labels × edges, shuffled on
   * the edge key) + one groupBy-min — no collect of nodes or edges, state
   * is one (id, label) row per node. The only driver-side value per round
-  * is the scalar `changed` count that decides convergence, the same
-  * pattern as any iterative DataFrame algorithm (GraphX/Pregel does the
-  * same under the hood). Persisted per round, previous round unpersisted.
+  * is the Σcomp that decides convergence, observed on the round's own
+  * checkpoint job ([[Checkpoints.cutObserved]]). Every round is cut;
+  * no round's checkpoint is released (each is a few bytes per node).
   */
 object Components {
 
@@ -70,30 +69,24 @@ object Components {
       .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .transform(Place.persisted)
 
-    // localCheckpoint, not persist: every round's frame is derived from
+    // a checkpoint, not persist: every round's frame is derived from
     // the previous round's, so the LOGICAL plan doubles per iteration —
     // a cached-but-uncheckpointed loop spends exponentially growing time
     // in analysis/codegen even though the data is tiny (the standard
     // iterative-DataFrame pitfall; GraphFrames checkpoints for the same
-    // reason). localCheckpoint materializes AND truncates lineage.
-    var labels = sym
-      .select(col("src").as("id"))
-      .distinct()
-      .withColumn("comp", col("id"))
-      .cutLineage()
-
+    // reason). A checkpoint materializes AND truncates lineage.
+    //
     // convergence probe: labels are MIN-MONOTONE (next(comp) =
     // min(own, neighbors') ≤ own), so any change strictly decreases
     // Σcomp — "sum unchanged" is an EXACT fixpoint test, not a hash.
-    // One tiny aggregate over the checkpointed frame replaces the r10
-    // join+filter+count (a full shuffle per round spent only on the
-    // convergence scalar). decimal(38,0) keeps the sum exact for any
-    // id domain (n·max_id < 10³⁸ for anything representable in int64).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("comp").cast("decimal(38,0)")).as("s"))
-        .collect()(0)
-        .getDecimal(0)
-    var prevSum = labelSum(labels)
+    // It is observed on each round's checkpoint job, so it costs no
+    // job of its own. decimal(38,0) keeps the sum exact for any id
+    // domain (n·max_id < 10³⁸ for anything representable in int64).
+    val compSum = sum(col("comp").cast("decimal(38,0)"))
+    var (labels, probe) = Checkpoints.cutObserved(
+      sym.select(col("src").as("id")).distinct().withColumn("comp", col("id")),
+      compSum)
+    var prevSum = probe.getDecimal(0)
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -101,15 +94,16 @@ object Components {
       val viaNeighbors = labels
         .join(sym, labels("id") === sym("src"))
         .select(col("dst").as("id"), col("comp"))
-      val next = labels
-        .select(col("id"), col("comp"))
-        .unionByName(viaNeighbors)
-        .groupBy(col("id"))
-        .agg(min(col("comp")).as("comp"))
-        .cutLineage()
-      val nextSum = labelSum(next) // scalar convergence probe
+      val (next, nextProbe) = Checkpoints.cutObserved(
+        labels
+          .select(col("id"), col("comp"))
+          .unionByName(viaNeighbors)
+          .groupBy(col("id"))
+          .agg(min(col("comp")).as("comp")),
+        compSum)
+      val nextSum = nextProbe.getDecimal(0)
       labels = next
-      converged = nextSum.compareTo(prevSum) == 0
+      converged = nextSum == prevSum
       prevSum = nextSum
       iter += 1
     }
@@ -149,14 +143,11 @@ object Components {
       dstCol: String = "id_b",
       maxIter: Int = 40
   ): DataFrame = {
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      val r = e
-        .agg(
-          count(lit(1)).as("n"),
-          coalesce(sum(xxhash64(col("u"), col("v"))), lit(0L)).as("h")
-        )
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
+    // cut, observing the edge set's (count, hash-sum) fingerprint
+    def cutFingerprinted(e: DataFrame): (DataFrame, (Long, Long)) = {
+      val (c, r) = Checkpoints.cutObserved(
+        e, count(lit(1)), coalesce(sum(xxhash64(col("u"), col("v"))), lit(0L)))
+      (c, (r.getLong(0), r.getLong(1)))
     }
     // closed-neighborhood minimum per node, attached to every row of the
     // symmetric edge view via a window — ONE shuffle (the window's
@@ -182,9 +173,8 @@ object Components {
       .select(col("u").as("id"))
       .unionByName(raw.select(col("v").as("id")))
       .distinct()
-      .cutLineage()
-    var e = canon(raw).cutLineage()
-    var fp = fingerprint(e)
+      .transform(Checkpoints.cut)
+    var (e, fp) = cutFingerprinted(canon(raw))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -195,14 +185,14 @@ object Components {
       // the cache inside one job and recompute the window instead)
       val ls = canon(
         withMinNbr(sym(e)).filter(col("v") > col("u")).select(col("v").as("u"), col("m").as("v"))
-      ).cutLineage()
+      ).transform(Checkpoints.cut)
       // small star: neighbors v <= u (and u itself) attach to the min.
       // One explode emits both edge kinds in a single pass over the
       // windowed frame — no intermediate join materialization at all
       // (the old two-branch union read a checkpointed join twice). The
       // (u, m) edge repeats once per group row; canon's distinct folds
       // the copies.
-      val ss = canon(
+      val (ss, fpNext) = cutFingerprinted(canon(
         withMinNbr(sym(ls))
           .select(
             explode(
@@ -216,8 +206,7 @@ object Components {
             ).as("e")
           )
           .select(col("e.u").as("u"), col("e.v").as("v"))
-      ).cutLineage()
-      val fpNext = fingerprint(ss)
+      ))
       if (fpNext == fp) {
         // confirm the fingerprint match exactly — a hash collision must
         // cost a round, never a silently split component

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.CutOps
 
 /** K-CORE DECOMPOSITION by iterative peeling — the maximal subgraph in
   * which every node has degree ≥ k, computed by repeatedly deleting
@@ -12,7 +11,8 @@ import graft.ops.Checkpoints.CutOps
   *
   * Each round is one degree aggregate over the surviving edge
   * endpoints plus two semi joins (both endpoints must survive);
-  * lineage is truncated per round with localCheckpoint — the same
+  * lineage is truncated per round through [[Checkpoints]], with the
+  * surviving edge count observed on the cut's own job — the same
   * iterative-DataFrame discipline as [[Components]] / [[PageRank]].
   * Round count is the peeling depth of the graph (the longest deletion
   * cascade), not its diameter; bounded-degree graphs converge in a
@@ -34,14 +34,16 @@ object KCore {
       dstCol: String = "v",
       maxIter: Int = 50
   ): DataFrame = {
-    var e = edges
-      .select(
-        least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") < col("v"))
-      .distinct()
-      .cutLineage()
-    var before = e.count()
+    val edgeCount = count(lit(1))
+    var (e, probe) = Checkpoints.cutObserved(
+      edges
+        .select(
+          least(col(srcCol), col(dstCol)).as("u"),
+          greatest(col(srcCol), col(dstCol)).as("v"))
+        .where(col("u") < col("v"))
+        .distinct(),
+      edgeCount)
+    var before = probe.getLong(0)
     var iter = 0
     var stable = false
     while (!stable && iter < maxIter) {
@@ -51,12 +53,12 @@ object KCore {
         .groupBy(col("id"))
         .agg(count(lit(1)).as("deg"))
       val keep = deg.where(col("deg") >= k).select(col("id"))
-      val ne = e
-        .join(keep.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .cutLineage()
-      val after = ne.count()
+      val (ne, nextProbe) = Checkpoints.cutObserved(
+        e.join(keep.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
+          .join(keep.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
+          .select(col("u"), col("v")),
+        edgeCount)
+      val after = nextProbe.getLong(0)
       stable = after == before
       before = after
       e = ne

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.CutOps
 
 /** Synchronous LABEL-PROPAGATION community detection (Raghavan, Albert
   * & Kumara 2007), deterministic variant: every round, every node
@@ -53,7 +52,7 @@ object LabelProp {
     // reverted control read 6.5 in the same minutes) — unlike PageRank,
     // no round stage here collapses to one task, so there was nothing
     // for the spread to recover. Keeping the simpler AQE-managed form.
-    val e = edges.repartition(col("src")).cutLineage()
+    val e = edges.repartition(col("src")).transform(Checkpoints.cut)
     // The identity label map over the node universe. Consumed ONLY by
     // the !inCoverTotal join-back and the iters == 0 return — round 1's
     // vote join is skipped on BOTH paths (label(src) = src by
@@ -70,7 +69,7 @@ object LabelProp {
           e.select(col("src").as("node"))
             .unionByName(e.select(col("dst").as("node")))
             .distinct()
-      nodes.cutLineage().withColumn("label", col("node"))
+      Checkpoints.cut(nodes).withColumn("label", col("node"))
     }
     if (iters == 0) return labels0
     var labels: DataFrame = if (inCoverTotal) null else labels0
@@ -115,7 +114,7 @@ object LabelProp {
       // (census / collect) plans the one-round-deep tree fine. Callers
       // that run many actions over the result re-plan that last round
       // per action — still bounded, still exact.
-      if (i < iters) labels = labels.cutLineage()
+      if (i < iters) labels = Checkpoints.cut(labels)
     }
     labels
   }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.CutOps
 
 /** DISTRIBUTED GREEDY MAXIMAL MATCHING by locally-minimal edges — the
   * symmetric round: an edge joins the matching iff it is the MINIMUM
@@ -32,7 +31,7 @@ object Matching {
     var e = edges
       .select(col("u"), col("v"), col("w"))
       .distinct()
-      .cutLineage()
+      .transform(Checkpoints.cut)
     var matched: DataFrame = null
     for (_ <- 1 to rounds) {
       // each endpoint's minimal incident edge under (w, u, v)
@@ -48,15 +47,15 @@ object Matching {
         .agg(count(lit(1)).as("c"))
         .filter(col("c") === 2)
         .select(col("u"), col("v"))
-        .cutLineage()
-      matched = if (matched == null) picked else matched.unionByName(picked).cutLineage()
+        .transform(Checkpoints.cut)
+      matched = if (matched == null) picked else Checkpoints.cut(matched.unionByName(picked))
       val touched = matched.select(col("u").as("n"))
         .unionByName(matched.select(col("v").as("n")))
         .distinct()
       e = e
         .join(touched.withColumnRenamed("n", "u"), Seq("u"), "left_anti")
         .join(touched.withColumnRenamed("n", "v"), Seq("v"), "left_anti")
-        .cutLineage()
+        .transform(Checkpoints.cut)
     }
     (matched, e)
   }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Checkpoints.CutOps
 
 /** PageRank power iteration as DataFrame algebra — the canonical
   * iterative-graph workload (public algorithm: Brin & Page). Each round
@@ -14,8 +13,8 @@ import graft.ops.Checkpoints.CutOps
   * Scale shape: the per-round shuffle is keyed by edge source then
   * destination — at 100 TB both edges and ranks pre-partition on the
   * same key (bucketing) so the join is exchange-free and only the
-  * contribution aggregate moves data. The working set is
-  * localCheckpointed every round (the q51/q60/q95 iterative-plan
+  * contribution aggregate moves data. The working set is cut every
+  * round through [[Checkpoints]] (the q51/q60/q95 iterative-plan
   * discipline — without it the lineage doubles per round). Rank sums
   * accumulate in decimal(38,12) (the repo-wide order-independent
   * summation recipe), so results are exact across partitionings and
@@ -29,9 +28,9 @@ import graft.ops.Checkpoints.CutOps
   *  - rank held by DANGLING nodes (no out-edges) folds back uniformly:
   *    r'(v) = (1-d)/N + d·(Σ_{u→v} r(u)/outdeg(u) + D/N), D = Σ_{dangling} r(u)
   *    — the standard correction; without it total rank mass leaks every
-  *    round. The fold costs one scalar aggregate per round (bytes to
-  *    the driver — the q51 convergence-check pattern, not a data
-  *    collect). [[symmetrize]] remains the cheap path for undirected
+  *    round. The fold is one scalar aggregate per round, broadcast into
+  *    the round's own checkpoint job (no driver round trip).
+  *    [[symmetrize]] remains the cheap path for undirected
   *    graphs, where D = 0 exactly and the fold adds nothing.
   */
 object PageRank {
@@ -46,7 +45,6 @@ object PageRank {
   /** Run `iters` power-iteration rounds at damping `d` over DIRECTED
     * (src, dst) edges. Returns (node, r) over src ∪ dst. */
   def run(edges: DataFrame, iters: Int, damping: Double): DataFrame = {
-    import org.apache.spark.sql.graftshim.GraftShim
     // pay the src-shuffle ONCE: the checkpointed edge set is physically
     // hash-partitioned on src (LogicalRDD keeps the partitioning
     // metadata), so each round's ranks join plans no edge-side
@@ -55,24 +53,25 @@ object PageRank {
     // shape so rounds do one join, not two. Spread, because every round
     // aligns to the checkpointed partitioning: unspread, q96's round jobs
     // ran as one 1.78 s task (r15).
-    val e = Place.spread(edges, col("src")).cutLineage()
+    val e = Place.spread(edges, col("src")).transform(Checkpoints.cut)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // deg aggregates on e's own hash(src) partitioning and the
     // join keys match it, so ed inherits that partitioning without a
     // second exchange — the cut stores it for every round to align to
     val ed = e
       .join(deg, "src")
-      .cutLineage()
-    val nodes = e
-      .select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-      .cutLineage()
-    val srcs = e.select(col("src").as("node")).distinct().cutLineage()
-    val n = nodes.count()
+      .transform(Checkpoints.cut)
+    val (nodes, nodeCount) = Checkpoints.cutObserved(
+      e.select(col("src").as("node"))
+        .unionByName(e.select(col("dst").as("node")))
+        .distinct(),
+      count(lit(1)))
+    val (srcs, srcCount) = Checkpoints.cutObserved(
+      e.select(col("src").as("node")).distinct(), count(lit(1)))
+    val n = nodeCount.getLong(0)
     // a graph where every node has an out-edge (e.g. symmetrized) has
     // dm = 0.0 every round — skip the per-round scalar aggregate
-    val hasDangling = srcs.count() != n
+    val hasDangling = srcCount.getLong(0) != n
     var ranks = nodes.withColumn("r", lit(1.0 / n))
     var prevCkpt: DataFrame = null
     for (_ <- 1 to iters) {
@@ -114,10 +113,10 @@ object PageRank {
         // spread the round output too: the cut otherwise stores ranks at
         // the AQE-coalesced width and the next round ran as one 1.9 s task (r15)
         .transform(Place.spread(_, col("node")))
-        .cutLineage()
+        .transform(Checkpoints.cut)
       // free the superseded round's checkpoint blocks (executor storage
       // otherwise grows linearly with iters for library callers)
-      if (prevCkpt != null) GraftShim.unpersistCheckpoint(prevCkpt)
+      if (prevCkpt != null) Checkpoints.release(prevCkpt)
       prevCkpt = next
       ranks = next
     }
@@ -129,7 +128,7 @@ object PageRank {
     // by the nodes checkpoint itself — freeing it would leave the
     // returned frame unrecomputable (localCheckpoint truncates lineage)
     val dead = if (iters >= 1) Seq(e, ed, nodes, srcs) else Seq(e, ed, srcs)
-    dead.foreach(GraftShim.unpersistCheckpoint)
+    dead.foreach(Checkpoints.release)
     ranks
   }
 }

@@ -58,7 +58,8 @@ import scala.concurrent.duration.Duration
   * concurrently on idle cores, while the barrier serializes them.
   *
   * '''Overlap.''' [[overlap]] runs two independent sequential eager
-  * loops (iterative operators that cut and probe every round) on two
+  * loops (iterative operators that cut every round, observing their
+  * convergence scalar on the cut: [[Checkpoints.cutObserved]]) on two
   * driver threads, so one loop's small stages back-fill the cores the
   * other leaves idle and their per-round driver latencies overlap.
   *

@@ -32,11 +32,12 @@ object Scc {
   /** Labels: (node, f, b) after AT MOST `rounds` pull rounds each way —
     * the loop EXITS EARLY at the fixpoint: labels are min-monotone
     * (next = min(own, pulled) ≤ own), so any change strictly decreases
-    * Σlbl and "sum unchanged" is an exact convergence test (one tiny
-    * aggregate on the checkpointed frame per round — the Components
-    * probe). `rounds` stays the caller's diameter bound; on graphs that
-    * converge sooner (most real ones) the tail rounds are never paid.
-    * `edges` must expose (`src`, `dst`) long columns.
+    * Σlbl and "sum unchanged" is an exact convergence test (observed on
+    * each round's checkpoint job — the Components probe). `rounds` stays
+    * the caller's diameter bound; on graphs that converge sooner (most
+    * real ones) the tail rounds are never paid. A direction that has not
+    * settled after `rounds` rounds throws: its labels would split real
+    * components. `edges` must expose (`src`, `dst`) long columns.
     */
   def fwbwLabels(edges: DataFrame, rounds: Int): DataFrame = {
     Components.requireIntegralIds(edges, "src", "dst") // sum probe needs integer ids
@@ -64,32 +65,32 @@ object Scc {
         e0
           .select(col(a).as("node"), col(bcol).as("succ"))
           .repartition(col("succ")))
-      def labelSum(df: DataFrame): java.math.BigDecimal =
-        df.agg(sum(col("lbl").cast("decimal(38,0)")).as("s"))
-          .collect()(0)
-          .getDecimal(0)
-      var lab = Checkpoints.cut(nodes.withColumn("lbl", col("node")))
-      var prevSum = labelSum(lab)
+      val lblSum = sum(col("lbl").cast("decimal(38,0)"))
+      var (lab, probe) = Checkpoints.cutObserved(nodes.withColumn("lbl", col("node")), lblSum)
+      var prevSum = probe.getDecimal(0)
       var r = 0
       var converged = false
       while (r < rounds && !converged) {
         val pulled = proj
           .join(lab.select(col("node").as("succ"), col("lbl")), Seq("succ"))
           .select(col("node"), col("lbl"))
-        lab = Checkpoints.cut(
+        val (next, nextProbe) = Checkpoints.cutObserved(
           lab
             .unionByName(pulled)
             .groupBy(col("node"))
-            .agg(min(col("lbl")).as("lbl")))
-        val s = labelSum(lab)
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
+            .agg(min(col("lbl")).as("lbl")),
+          lblSum)
+        lab = next
+        converged = nextProbe.getDecimal(0) == prevSum
+        prevSum = nextProbe.getDecimal(0)
         r += 1
       }
+      if (!converged) throw new IllegalStateException(
+        s"Scc ${if (flip) "backward" else "forward"} labels did not converge in $rounds rounds; raise rounds")
       lab
     }
     // the two directions are independent dataflows until the final
-    // join, each a sequential eager loop (cut + probe per round):
+    // join, each a sequential eager loop (one observed cut per round):
     // overlap them on two driver threads (Place.overlap)
     val (fwd, bwd) = Place.overlap(propagate(flip = false), propagate(flip = true))
     fwd

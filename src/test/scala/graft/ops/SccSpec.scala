@@ -46,4 +46,13 @@ class SccSpec extends SparkSpec {
     val c = comps(Seq((7L, 7L), (7L, 8L)))
     assert(c(7L)._2 === 1 && c(8L)._2 === 1, s"got $c")
   }
+
+  test("a diameter beyond `rounds` throws instead of returning split classes") {
+    // a 30-node directed cycle is one SCC, but its labels need ~30 pull
+    // rounds to settle; after 4 the (f, b) classes would split it
+    val cycle = (0L until 30L).map(i => (i, (i + 1) % 30))
+    val e = intercept[IllegalStateException](comps(cycle, rounds = 4))
+    assert(e.getMessage.contains("did not converge in 4 rounds"), e.getMessage)
+    assert(comps(cycle, rounds = 40) === Map(0L -> ((0L, 30L))))
+  }
 }
