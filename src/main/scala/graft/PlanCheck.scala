@@ -58,24 +58,7 @@ object PlanCheck {
       val fp =
         try {
           val df = fn(spark, dir)
-          val norm = df.queryExecution.executedPlan.toString
-            .replaceAll("#\\d+L?", "#")      // exprIds
-            // lambda variable names carry a SESSION-GLOBAL counter
-            // (x_12, y_13, …): which queries ran earlier in the session
-            // shifts every later name — normalize the counter away
-            .replaceAll("_\\d+#", "_#")
-            .replaceAll("plan_id=\\d+", "plan_id=")
-            .replaceAll("\\bid=\\d+", "id=") // exchange/subquery ids
-            .replaceAll("@[0-9a-f]+", "@")   // object addresses
-            .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$\\$Lambda") // JIT lambda ids
-            .replaceAll("(?i)cached ?rdd ?\\d+", "cachedrdd")
-            .replaceAll("ExistingRDD\\[[^\\]]*\\]", "ExistingRDD[]")
-            .replaceAll("LogicalRDD \\[[^\\]]*\\]", "LogicalRDD []")
-            // broadcast/run uuids — word-anchored so an identifier that
-            // merely CONTAINS r+8 hex-range chars (e.g. a codegen name
-            // with a 'deadbeef' substring) isn't collapsed, which would
-            // make two genuinely different plans hash identical
-            .replaceAll("\\br[0-9a-f]{8,}\\b", "r")
+          val norm = normalize(df.queryExecution.executedPlan.toString)
           // ALWAYS dump the normalized text alongside the hash: round 6
           // proved the hashes are stable within a container but NOT
           // across containers (105/107 differed between the r5-committed
@@ -102,5 +85,103 @@ object PlanCheck {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json)
     println(s"[fingerprints] wrote ${entries.size} entries to $out")
     spark.stop()
+  }
+
+  /** A plan dump with every run-dependent token normalized away, so two
+    * dumps of one authored plan compare equal as text: exprIds, lambda
+    * counters, plan/exchange ids, object addresses, JIT lambda ids, RDD
+    * ids and run uuids, after [[canonicalExpands]] has put each
+    * count-distinct `Expand` in one order. */
+  private[graft] def normalize(plan: String): String =
+    canonicalExpands(plan)
+      .replaceAll("#\\d+L?", "#")      // exprIds
+      // lambda variable names carry a SESSION-GLOBAL counter
+      // (x_12, y_13, …): which queries ran earlier in the session
+      // shifts every later name — normalize the counter away
+      .replaceAll("_\\d+#", "_#")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("\\bid=\\d+", "id=") // exchange/subquery ids
+      .replaceAll("@[0-9a-f]+", "@")   // object addresses
+      .replaceAll("\\$\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$\\$Lambda") // JIT lambda ids
+      .replaceAll("(?i)cached ?rdd ?\\d+", "cachedrdd")
+      .replaceAll("ExistingRDD\\[[^\\]]*\\]", "ExistingRDD[]")
+      .replaceAll("LogicalRDD \\[[^\\]]*\\]", "LogicalRDD []")
+      // broadcast/run uuids — word-anchored so an identifier that
+      // merely CONTAINS r+8 hex-range chars (e.g. a codegen name
+      // with a 'deadbeef' substring) isn't collapsed, which would
+      // make two genuinely different plans hash identical
+      .replaceAll("\\br[0-9a-f]{8,}\\b", "r")
+
+  /** Each count-distinct `Expand` (the one whose output carries a
+    * `gid#N` column) with its projections in one order. Spark numbers
+    * the distinct groups, and lists their projections, in the iteration
+    * order of a map keyed by expressions, which follows expression-id
+    * hashing; so the same plan can come out with its gids permuted. Here
+    * the projections are sorted by their text with the gid and the
+    * exprIds stripped, the gid values are handed out again in that
+    * order, and every `gid#N = k` test in the plan is renumbered to
+    * match. An `Expand` this cannot parse is left as it is. */
+  private def canonicalExpands(plan: String): String = {
+    val expand = "Expand [["
+    plan.linesIterator.toSeq.foldLeft(plan) { (text, line) =>
+      val at = line.indexOf(expand)
+      if (at < 0) text
+      else {
+        val body = line.substring(at + "Expand ".length)
+        val projEnd = closing(body, 0)
+        val outStart = body.indexOf('[', projEnd + 1)
+        val outEnd = if (projEnd < 0 || outStart < 0) -1 else closing(body, outStart)
+        val parsed = if (outEnd < 0) None else {
+          val projs = topLevel(body.substring(1, projEnd)).map(p => topLevel(p.stripPrefix("[").stripSuffix("]")))
+          val out = topLevel(body.substring(outStart + 1, outEnd))
+          val gi = out.indexWhere(_.matches("gid#\\d+"))
+          if (gi < 0 || projs.exists(p => p.size != out.size || !p(gi).matches("\\d+"))) None
+          else Some((projs, out(gi), gi))
+        }
+        parsed.fold(text) { case (projs, gid, gi) =>
+          def key(p: Seq[String]) = p.patch(gi, Nil, 1).mkString(", ").replaceAll("#\\d+L?", "#")
+          val sorted = projs.sortBy(key)
+          val renumber = sorted.map(_(gi)).zip(projs.map(_(gi).toInt).sorted.map(_.toString)).toMap
+          val canon = sorted.map(p => p.updated(gi, renumber(p(gi))).mkString("[", ", ", "]")).mkString("[", ", ", "]")
+          val newLine = line.substring(0, at + "Expand ".length) + canon + body.substring(projEnd + 1)
+          java.util.regex.Pattern.compile(java.util.regex.Pattern.quote(gid) + " = (\\d+)\\b")
+            .matcher(text.replace(line, newLine))
+            .replaceAll(m => java.util.regex.Matcher.quoteReplacement(s"$gid = ${renumber.getOrElse(m.group(1), m.group(1))}"))
+        }
+      }
+    }
+  }
+
+  /** Index of the bracket closing the one at `open`, or -1. */
+  private def closing(s: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    while (i < s.length) {
+      s(i) match {
+        case '[' | '(' | '{' => depth += 1
+        case ']' | ')' | '}' =>
+          depth -= 1
+          if (depth == 0) return i
+        case _ =>
+      }
+      i += 1
+    }
+    -1
+  }
+
+  /** `s` split at its top-level commas, each part trimmed. */
+  private def topLevel(s: String): Seq[String] = {
+    val parts = Seq.newBuilder[String]
+    var depth = 0
+    var from = 0
+    for (i <- s.indices) s(i) match {
+      case '[' | '(' | '{' => depth += 1
+      case ']' | ')' | '}' => depth -= 1
+      case ',' if depth == 0 =>
+        parts += s.substring(from, i).trim
+        from = i + 1
+      case _ =>
+    }
+    (parts += s.substring(from).trim).result()
   }
 }

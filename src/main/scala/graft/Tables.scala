@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the harness parquet tables (TESTDATA.md).
   *
@@ -9,8 +13,46 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * every query benefits from the same scan discipline: parquet vectorized
   * reader, column pruning and predicate pushdown happen automatically when
   * callers `.select`/`.filter` on the returned DataFrame.
+  *
+  * '''Schema memo.''' A parquet read with no schema starts one Spark job
+  * to infer it from the footers (60-100 ms per read on a warm 4-core
+  * local session, most of a short query's construction). [[table]] lets
+  * Spark infer each table's schema once per session and passes it to
+  * every later read of the same table through `.schema(...)`, which
+  * starts no job. The memo is private
+  * driver state, one small `StructType` per table path:
+  *  - held per `SparkSession` (weakly), because inference depends on
+  *    session confs such as `nanosAsLong`;
+  *  - keyed by the table's qualified path, and tagged with the path's
+  *    listing when inferred: every file under it, with its length and
+  *    modification time, so it covers a single file and a directory of
+  *    part files alike;
+  *  - a read infers again, and replaces the entry, when the table is new
+  *    to the session or its listing has moved since (a table rewritten
+  *    under the same path). A missing path reads unmemoized and fails as
+  *    Spark's own read does.
+  * [[events]] and [[withEventTime]] adapt on whatever schema the read
+  * carries, so they see the same types either way (`TablesSpec`).
   */
 object Tables {
+
+  private type Listing = Seq[(String, Long, Long)]
+
+  /** Per session: qualified table path -> (its listing, its inferred schema). */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (Listing, StructType)]]())
+
+  /** The qualified `path` and every file under it (the path itself when
+    * it is a file), sorted; None when the path does not exist. */
+  private def listing(spark: SparkSession, path: Path): Option[(String, Listing)] = {
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = fs.listFiles(path, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+      Some((fs.makeQualified(path).toString, files))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** Defensive hardening for sessions NOT built via graft.Sessions (e.g.
     * a harness-created vanilla session): these three confs are
@@ -25,9 +67,23 @@ object Tables {
     spark.conf.set("spark.sql.ansi.enabled", "false")
   }
 
+  /** Table `name` of `dir`, read with its held schema while its listing
+    * is the one Spark inferred that schema from in this session. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     harden(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    listing(spark, new Path(path)) match {
+      case None => spark.read.parquet(path)
+      case Some((key, files)) =>
+        val held = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+        Option(held.get(key)).filter(_._1 == files) match {
+          case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            held.put(key, (files, df.schema))
+            df
+        }
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")

@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.{CompletableFuture, CompletionException, Executors}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.storage.StorageLevel
-import scala.concurrent.{Await, Future}
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.duration.Duration
 
 /** Placement and materialization policy: the one place that decides how
   * an intermediate frame is cached, when a cache is filled, how wide a
@@ -88,11 +88,24 @@ object Place {
   def spread(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, cols: _*)
 
+  /** Driver threads for [[overlap]]; daemon, so they never hold a JVM open. */
+  private lazy val overlapPool = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-place-overlap")
+    t.setDaemon(true)
+    t
+  }
+
   /** Run `a` and `b` on two driver threads; await `a`, then `b`. A
-    * failure in either is rethrown here. */
+    * failure in either is rethrown here. Both thunks run with the
+    * caller's active session and Spark local properties (job group, job
+    * tags, scheduler pool), so their jobs are attributed and cancelled
+    * with the caller's. */
   def overlap[A, B](a: => A, b: => B): (A, B) = {
-    val fa = Future(a)
-    val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    val spark = SparkSession.active.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val fa = SQLExecution.withThreadLocalCaptured(spark, overlapPool)(a)
+    val fb = SQLExecution.withThreadLocalCaptured(spark, overlapPool)(b)
+    def await[T](f: CompletableFuture[T]): T =
+      try f.join() catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+    (await(fa), await(fb))
   }
 }

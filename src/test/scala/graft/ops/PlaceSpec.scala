@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -81,6 +82,28 @@ class PlaceSpec extends SparkSpec {
       { aIn.countDown(); bIn.await(30, TimeUnit.SECONDS) },
       { bIn.countDown(); aIn.await(30, TimeUnit.SECONDS); "b" })
     assert(a && b == "b")
+  }
+
+  test("overlap runs both thunks with the caller's job group") {
+    val sc = spark.sparkContext
+    def job(n: Int) = sc.parallelize(Seq(n), 1).count()
+    // start the pool's threads outside any group first: a thread created
+    // during the grouped call would inherit the group at its creation
+    Place.overlap(job(1), job(2))
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("place-overlap", "jobs of both overlapped thunks")
+    try assert(jobsDuring(Place.overlap(job(1), job(2))) == 2)
+    finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // the two thunks' jobs, then jobsDuring's own marker job from this thread
+    assert(groups.asScala.toSeq == Seq.fill(3)("place-overlap"))
   }
 
   test("overlap rethrows when either thunk throws") {
