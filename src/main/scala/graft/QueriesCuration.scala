@@ -88,8 +88,8 @@ private[graft] trait QueriesCuration extends QueryRegistration {
     * pass at scale, a 4-long scalar constant here) and an equal-WIDTH
     * z-range file id: pure map-side integer arithmetic, NO global sort —
     * unlike an ntile layout, this assignment distributes embarrassingly
-    * (the production writer `Layout.zorderRepartition` adds the one
-    * range exchange real files need). Output: per-file min/max extents
+    * (writing real files would add one `repartitionByRange` on the
+    * z-value). Output: per-file min/max extents
     * on both dims, plus corpus audit columns — expected fraction of
     * files a point query must scan (= mean normalized extent width) for
     * the z layout vs an insertion-order (orderkey-range) layout. The

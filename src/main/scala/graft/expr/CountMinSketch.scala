@@ -54,7 +54,6 @@ final class CMBuffer(val depth: Int, val width: Int) extends Serializable {
 }
 
 object CMBuffer {
-  private val hexDigits = "0123456789abcdef".toCharArray
 
   /** Row-i bucket of `item`: first 15 hex chars of md5("i:item") parsed
     * base-16 (< 2^60, nonnegative), mod width. Engine mirror:
@@ -79,20 +78,6 @@ object CMBuffer {
     var i = 0
     while (i < buf.cells.length) { buf.cells(i) = in.readLong(); i += 1 }
     buf
-  }
-
-  /** Hex of the md5 first-15-chars parse, for spec cross-checks. */
-  def hex15(i: Int, item: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val d = md.digest((i.toString + ":" + item).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val sb = new StringBuilder(15)
-    var b = 0
-    while (sb.length < 15) {
-      sb.append(hexDigits((d(b) >> 4) & 0xf))
-      if (sb.length < 15) sb.append(hexDigits(d(b) & 0xf))
-      b += 1
-    }
-    sb.toString
   }
 }
 

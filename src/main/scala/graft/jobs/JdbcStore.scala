@@ -129,7 +129,7 @@ object JdbcStore {
       throw new IllegalArgumentException(s"no JDBC mapping for $other")
   }
 
-  /** ANSI CREATE TABLE text, shared by [[ensureTable]] and
+  /** ANSI CREATE TABLE text, the first statement of
     * [[plannedUpsertSql]] (whose output the golden-SQL spec pins).
     */
   private def createTableSql(table: String, schema: StructType, keys: Seq[String]): String = {
@@ -155,10 +155,6 @@ object JdbcStore {
     catch {
       case e: SQLException if e.getSQLState == "X0Y32" || e.getSQLState == "42P07" => ()
     }
-
-  /** CREATE TABLE if absent. */
-  def ensureTable(url: String, table: String, schema: StructType, keys: Seq[String]): Unit =
-    withConnection(url)(createIfAbsent(_, createTableSql(table, schema, keys)))
 
   /** Every statement an upsert against `url` sends, in order — the list
     * [[upsert]] executes, exposed for the golden-SQL portability spec.

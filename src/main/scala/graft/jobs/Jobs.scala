@@ -143,31 +143,6 @@ object Jobs {
     replace(retention(table, tsCol, cutoff), tableDir).rows
   }
 
-  /** Curated-output writer with a BOUNDED file count per partition — the
-    * small-files control every 100 TB pipeline needs: a naive
-    * `write.partitionBy(day)` emits one file per (task × day) — 1000
-    * executors × 365 days is ~365k files of a few KB each, and the next
-    * reader drowns in open() calls. Repartitioning on (partition column,
-    * bounded content-hash salt) caps output at `filesPerPartition` files
-    * per partition value while still writing in parallel.
-    */
-  def writePartitioned(
-      df: DataFrame,
-      outDir: String,
-      partitionCol: String,
-      filesPerPartition: Int = 4
-  ): Unit = {
-    val salt = pmod(
-      xxhash64(df.columns.map(col).toIndexedSeq: _*),
-      lit(filesPerPartition)
-    )
-    df.repartition(col(partitionCol), salt)
-      .write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .parquet(outDir)
-  }
-
   /** Catalog refresh: normalized station rows COALESCE-merged into the
     * stations snapshot (new non-null wins; reference app/main.py:633-648).
     */

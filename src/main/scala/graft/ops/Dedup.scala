@@ -3,24 +3,19 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Exact deduplication operators (SURVEY.md §2.4 A3).
+/** Exact deduplication (SURVEY.md §2.4 A3).
   *
   * The reference dedups each outgoing batch on (station_id, pollutant,
   * timestamp) keeping the FIRST occurrence in DE→NL→PL union order
   * (reference app/main.py:1194-1203). Spark's `dropDuplicates` keeps an
-  * arbitrary row, so the deterministic form is a ranking window with an
-  * explicit priority order — that is what `firstWins` implements; it is the
+  * arbitrary row, so the deterministic form takes an explicit priority
+  * order — that is what `firstWins` implements; it is the
   * oracle-checkable ground truth.
   *
-  * Scale note: both forms are one shuffle on the dedup key. At 100 TB the
-  * ranking-window form and dropDuplicates have the same exchange; the window
-  * adds a per-partition sort, which AQE-sized partitions absorb.
+  * Scale note: one shuffle on the dedup key, the same exchange
+  * `dropDuplicates` pays, with a map-side partial aggregate ahead of it.
   */
 object Dedup {
-
-  /** A3 (arbitrary winner): plain exact dedup, one shuffle on `keys`. */
-  def exact(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
 
   /** A3 (deterministic): keep the first row per key ordered by `priority`
     * (the reference's implicit union order made explicit). Implemented as

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * bin-packs them into target-size outputs partition-locally.
   *
   * Scale shape: `zValue` is pure map-side integer bit arithmetic (no
-  * shuffle, codegen'd built-ins only); the layout job itself is ONE
+  * shuffle, codegen'd built-ins only); a writer clusters on it with ONE
   * range-exchange (`repartitionByRange` on the z-value) — the same single
   * shuffle any global sort pays — then a local sort per output file.
   * `compactionPlan` is one window over (partition, file-order): the
@@ -167,19 +167,6 @@ object Layout {
     }
     val fin = s"""__hfin AS (SELECT $carrySql, hd AS hkey FROM __h$bits)"""
     ((rounds :+ fin).mkString(",\n"), "__hfin")
-  }
-
-  /** Production writer path: cluster `df` into ~`nFiles` z-ordered files.
-    * One range exchange on the z-value + a local sort inside each range —
-    * the plan a 1000-executor layout job wants (no global single-task
-    * sort, no second shuffle). Output files carry tight min/max extents
-    * on every clustered dimension.
-    */
-  def zorderRepartition(df: DataFrame, cols: Seq[(Column, Long, Long)], bits: Int, nFiles: Int): DataFrame = {
-    val z = zValue(cols, bits)
-    df.withColumn("z", z)
-      .repartitionByRange(nFiles, col("z"))
-      .sortWithinPartitions(col("z"))
   }
 
   /** Compaction plan: bin-pack ordered files into targets of

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -9,22 +9,20 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
 /** Multimodal columns for the training-data pipeline extension: media as
-  * opaque `binary` columns with typed metadata, plus decode /
-  * feature-extract / resize / frame-sample stages.
+  * opaque `binary` columns with typed metadata, plus encode / decode /
+  * perceptual-hash / frame-sample stages.
   *
-  * Since round 6 the image kernels are REAL: `renderPng` rasterizes
-  * payload bytes into a tiny RGB image and PNG-encodes it with
-  * `javax.imageio` (ships in the JDK's java.desktop module — headless
-  * safe, probed in this container), and `decodeImage` decodes those
-  * bytes back with `ImageIO.read` and computes features from the actual
-  * pixels. Because the raster law (dimensions + per-pixel channels) is a
-  * CLOSED FORM over the payload bytes, the whole encode → PNG → decode
-  * round trip is certifiable relationally — q32's DuckDB oracle
-  * recomputes the decoded width/height/pixel values from the raw text.
-  * The byte-hash kernels below ([[decodeImageStub]], [[featureExtract]],
-  * [[resizeStub]], [[decodeBatchStub]]) remain as the documented
-  * FALLBACK for non-image payloads or a JRE without java.desktop; they
-  * are no longer on the q32/q54 live path.
+  * The image kernels are REAL: `renderPng` rasterizes payload bytes into
+  * a tiny RGB image and PNG-encodes it with `javax.imageio` (ships in the
+  * JDK's java.desktop module — headless safe), and `decodeImage` decodes
+  * those bytes back with `ImageIO.read` and computes features from the
+  * actual pixels. Because the raster law (dimensions + per-pixel
+  * channels) is a CLOSED FORM over the payload bytes, the whole encode →
+  * PNG → decode round trip is certifiable relationally — q32's DuckDB
+  * oracle recomputes the decoded width/height/pixel values from the raw
+  * text. `renderWav`/`decodeAudio` are the same discipline over
+  * `javax.sound` WAV (q108). A payload no codec parses is not an error:
+  * the decode kernels return `ok = false` rows with byte-hash features.
   *
   * Scale notes: all stages are map-side (no shuffles); one
   * decode per row inside the partition iterator ([[decodeImage]] is the
@@ -259,49 +257,6 @@ object Multimodal {
           .withField("height", col("height"))
       ).otherwise(col("meta"))
     )
-  }
-
-  /** REAL resize (round 6): decode, nearest-neighbor rescale to
-    * `targetW`×`targetH` on the pixel grid (deterministic — no AA
-    * filter), PNG re-encode, metadata updated from the re-encoded
-    * bytes. Unparseable payloads pass through unchanged. Map-side.
-    */
-  def resizeImage(media: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    val inSchema = media.schema
-    val bytesIdx = inSchema.fieldIndex("bytes")
-    val metaIdx = inSchema.fieldIndex("meta")
-    media.mapPartitions { rows =>
-      rows.map { row =>
-        val bytes = row.getAs[Array[Byte]](bytesIdx)
-        val img =
-          try ImageIO.read(new ByteArrayInputStream(bytes))
-          catch { case _: Exception => null }
-        // unparseable rows pass through UNCHANGED — bytes AND metadata
-        // (stamping target dims on a payload that was never resized
-        // would be lying metadata; decodeImage guards its meta update
-        // the same way)
-        if (img == null) row
-        else {
-          val out = new BufferedImage(targetW, targetH, BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < targetH) {
-            val sy = y * img.getHeight / targetH
-            var x = 0
-            while (x < targetW) {
-              out.setRGB(x, y, img.getRGB(x * img.getWidth / targetW, sy))
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new ByteArrayOutputStream(256)
-          ImageIO.write(out, "png", bos)
-          val png = bos.toByteArray
-          val oldMeta = row.getAs[Row](metaIdx)
-          val newMeta = Row(png.length, targetW, targetH, oldMeta.get(3))
-          Row.fromSeq(row.toSeq.updated(bytesIdx, png: Any).updated(metaIdx, newMeta: Any))
-        }
-      }
-    }(Encoders.row(inSchema))
   }
 
   // ------------------------------------------------------------------
@@ -550,41 +505,6 @@ object Multimodal {
     )
   }
 
-  /** FALLBACK image decode (byte-hash stub): the pre-round-6 kernel,
-    * kept for payloads no codec can parse and JREs without
-    * java.desktop. Emits a deterministic 8-value "pixel summary" from
-    * the bytes. Not on the q32/q54 live path — [[decodeImage]] is.
-    */
-  def decodeImageStub(media: DataFrame): DataFrame =
-    media.withColumn(
-      "pixels",
-      transform(
-        sequence(lit(0), lit(7)),
-        i => pmod(xxhash64(col("bytes"), i), lit(256L)).cast("int")
-      )
-    )
-
-  /** FALLBACK featurizer (byte-hash stub): fixed-dim float vector from
-    * the raw bytes, for media kinds with no decoder. Image paths use
-    * [[decodeImage]]'s real pixel features instead.
-    */
-  def featureExtract(media: DataFrame, dim: Int = 64): DataFrame =
-    media.withColumn(
-      "features",
-      transform(
-        sequence(lit(0), lit(dim - 1)),
-        d => (pmod(xxhash64(col("bytes"), d), lit(2000L)).cast("double") / 1000.0 - 1.0).cast("float")
-      )
-    )
-
-  /** Resize FALLBACK: clamp/pad the payload to `targetBytes` (keeps the
-    * binary column contract + lengths for undecodable kinds;
-    * [[resizeImage]] is the real image path).
-    */
-  def resizeStub(media: DataFrame, targetBytes: Int): DataFrame =
-    media.withColumn("bytes", substring(col("bytes"), 1, targetBytes))
-      .withColumn("meta", col("meta").withField("n_bytes", length(col("bytes")).cast("int")))
-
   /** Frame sampling: split the payload into fixed-size frames with a
     * stride and explode one row per frame — the generator shape of video
     * pipelines (each frame row carries its index + its own bytes).
@@ -603,28 +523,5 @@ object Multimodal {
         )
       ).as(Seq("frame_idx", "frame_bytes"))
     )
-  }
-
-  /** The typed mapPartitions seam demo: per-partition batched kernel,
-    * the Scala analogue of mapInPandas — per-partition init happens once
-    * (where [[decodeImage]] amortizes its codec scan). STUB kernel:
-    * byte-sum checksum per row.
-    */
-  def decodeBatchStub(media: DataFrame): Dataset[(Long, Long)] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media
-      .select(col("media_id"), col("bytes"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition init happens ONCE (this is where a codec handle
-        // or model session would be created)
-        rows.map { case (id, bytes) =>
-          var acc = 0L
-          var i = 0
-          while (i < bytes.length) { acc += bytes(i) & 0xff; i += 1 }
-          (id, acc)
-        }
-      }
   }
 }

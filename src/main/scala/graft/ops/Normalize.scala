@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.schema.Schemas
 
 /** Record normalization (SURVEY.md §2.2 P1-P8, §2.8 F7/F8/F13).
   *
@@ -13,6 +12,9 @@ import graft.schema.Schemas
   * composition here — fully codegen'd, no UDFs.
   */
 object Normalize {
+
+  /** The pollutant allowlist (reference app/main.py:1051). */
+  val pollutants: Seq[String] = Seq("pm25", "pm10", "no2", "o3", "nox", "no", "co", "so2")
 
   /** F7: lenient multi-format timestamp parse (reference
     * app/main.py:166-181). Accepts, in priority order:
@@ -70,7 +72,7 @@ object Normalize {
         lit(source).as("source")
       )
       .filter(col("value").isNotNull)
-      .filter(col("pollutant").isin(Schemas.pollutants: _*))
+      .filter(col("pollutant").isin(pollutants: _*))
       .filter(col("timestamp").isNotNull)
 
   /** P4: drop stations without coordinates (reference app/main.py:400-401). */

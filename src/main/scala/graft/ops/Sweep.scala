@@ -137,46 +137,4 @@ object Sweep {
       .withColumn(outCol, col("__cum") - least(lit(0L), col("__rm")))
       .drop("__cum", "__rm")
   }
-
-  /** Sweep-line peak concurrency over half-open intervals [start, end):
-    * the maximum number of simultaneously-open intervals, per group.
-    *
-    * Intervals become (+1 at start, −1 at end) deltas; deltas are
-    * pre-aggregated per (group, t, sign) so (t, sign) is a total order
-    * (sign −1 < +1 ⇒ closings apply before openings at the same
-    * instant — the half-open convention); the running sum of net deltas
-    * under that order is the concurrency level. Returns one row per
-    * group: `peak` and `peak_at` (earliest order value where the peak
-    * level is reached).
-    */
-  def peakConcurrency(
-      intervals: DataFrame,
-      groupCols: Seq[String],
-      startCol: Column,
-      endCol: Column,
-      bins: Int = 64
-  ): DataFrame = {
-    val g = groupCols.map(col)
-    val starts = intervals.select((g :+ startCol.as("t") :+ lit(1L).as("sign")): _*)
-    val ends   = intervals.select((g :+ endCol.as("t") :+ lit(-1L).as("sign")): _*)
-    val deltas = starts
-      .unionByName(ends)
-      .groupBy((g :+ col("t") :+ col("sign")): _*)
-      .agg(sum(col("sign")).as("net"))
-    val run = orderedPrefixSum(
-      deltas, groupCols, col("t"), col("sign"), col("net"), "level", bins)
-    val peaks = run
-      .groupBy(g: _*)
-      .agg(max(col("level")).as("peak"))
-      .withColumnsRenamed(groupCols.map(c => c -> s"__p_$c").toMap)
-    val cond =
-      if (groupCols.nonEmpty)
-        groupCols.map(c => col(c) <=> col(s"__p_$c")).reduce(_ && _)
-      else lit(true)
-    run
-      .join(broadcast(peaks), cond)
-      .where(col("level") === col("peak"))
-      .groupBy((g :+ col("peak")): _*)
-      .agg(min(col("t")).as("peak_at"))
-  }
 }

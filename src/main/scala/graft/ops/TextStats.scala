@@ -236,21 +236,6 @@ object TextStats {
       .drop("__toks", "__grams")
   }
 
-  /** Polynomial rolling-hash fingerprint over tokens (base-31 mod
-    * 2^31-1). The modulus is sized so acc*31 + h stays inside a Long
-    * (acc < 2^31, |h| < 2^31 → |acc*31 + h| < 2^37): the arithmetic is
-    * genuinely the stated polynomial hash, reproducible in any 64-bit
-    * integer engine, with no silent two's-complement wrap.
-    */
-  def rollingFingerprint(c: Column): Column = {
-    val p = lit(2147483647L) // 2^31 - 1
-    aggregate(
-      transform(tokens(c), t => hash(t).cast("long")),
-      lit(0L),
-      (acc, h) => pmod(acc * lit(31L) + h, p)
-    )
-  }
-
   /** CHAR-WEIGHTED mass of the most frequent word n-gram: max over
     * distinct grams of count · charlen, where charlen = len(gram) −
     * (n−1) separators (the gram's character content without spaces).

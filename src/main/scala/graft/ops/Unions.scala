@@ -13,11 +13,8 @@ import org.apache.spark.sql.DataFrame
   */
 object Unions {
 
-  /** UNION ALL by column name; later duplicate resolution is A3's job. */
-  def unionAll(dfs: Seq[DataFrame]): DataFrame =
-    dfs.reduce(_.unionByName(_, allowMissingColumns = false))
-
-  /** Schema-reconciling union: missing columns become null. */
+  /** Schema-reconciling UNION ALL by column name: missing columns become
+    * null; later duplicate resolution is A3's job. */
   def unionLoose(dfs: Seq[DataFrame]): DataFrame =
     dfs.reduce(_.unionByName(_, allowMissingColumns = true))
 }

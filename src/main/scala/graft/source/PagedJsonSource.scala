@@ -126,18 +126,29 @@ case class FetchConfig(
 }
 
 object FetchConfig {
-  /** An absent option keeps the case-class default. */
+  /** An absent option keeps the case-class default. A value outside the
+    * fetch contract is rejected here, when the scan is planned: a budget
+    * below 1 would plan no page, a zero timeout means "wait forever" to
+    * `HttpURLConnection`, and a negative retry count, backoff or pace
+    * has no meaning (a negative sleep throws inside the task). */
   def fromOptions(options: CaseInsensitiveStringMap): FetchConfig = {
     val d = FetchConfig()
+    def atLeast(key: String, min: Long, v: Long): Long = {
+      if (v < min)
+        throw new IllegalArgumentException(s"PagedJsonSource option $key must be >= $min, got $v")
+      v
+    }
+    def int(key: String, min: Int, default: Int): Int = atLeast(key, min, options.getInt(key, default).toLong).toInt
+    def long(key: String, min: Long, default: Long): Long = atLeast(key, min, options.getLong(key, default))
     FetchConfig(
-      requestBudget = options.getInt("requestBudget", d.requestBudget),
-      maxRetries = options.getInt("maxRetries", d.maxRetries),
-      backoffBaseMs = options.getLong("backoffBaseMs", d.backoffBaseMs),
-      backoffStepMs = options.getLong("backoffStepMs", d.backoffStepMs),
-      paceMs = options.getLong("paceMs", d.paceMs),
+      requestBudget = int("requestBudget", 1, d.requestBudget),
+      maxRetries = int("maxRetries", 0, d.maxRetries),
+      backoffBaseMs = long("backoffBaseMs", 0L, d.backoffBaseMs),
+      backoffStepMs = long("backoffStepMs", 0L, d.backoffStepMs),
+      paceMs = long("paceMs", 0L, d.paceMs),
       transport = options.getOrDefault("transport", d.transport),
-      connectTimeoutMs = options.getInt("connectTimeoutMs", d.connectTimeoutMs),
-      readTimeoutMs = options.getInt("readTimeoutMs", d.readTimeoutMs)
+      connectTimeoutMs = int("connectTimeoutMs", 1, d.connectTimeoutMs),
+      readTimeoutMs = int("readTimeoutMs", 1, d.readTimeoutMs)
     )
   }
 }

@@ -50,23 +50,12 @@ import graft.ops.{Rollup, WatermarkDedup}
   */
 object ProducerLoop {
 
-  /** The exact frame `.format("kafka")` consumes: `key` (stable
-    * per-record-key partitioning, so per-key ordering survives the
-    * topic) + `value` (full-record JSON envelope, micros timestamps).
-    * The connector jar is not on this offline classpath, so the sink
-    * writes this frame to parquet — KafkaFrameSpec pins the schema
-    * contract so the production swap is `.format("kafka")
-    * .option("topic", ...)` and nothing else.
-    */
-  def kafkaFrame(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.select(
-      to_json(struct(keys.map(col).toIndexedSeq: _*), PerKeyWatermark.keyJsonOpts).as("key"),
-      envelope(df).as("value")
-    )
-
   /** The Kafka `value` envelope: every column of `df` as one JSON record,
     * timestamps in micros so event times survive the round trip. Both
-    * producer loops emit exactly this column. */
+    * producer loops emit exactly this column and no key, like the
+    * reference's value-only JSON sends (SURVEY S11); with the connector on
+    * the classpath, `select(envelope(df).as("value"))` is the frame
+    * `.format("kafka")` writes. KafkaFrameSpec pins the round trip. */
   def envelope(df: DataFrame): Column =
     to_json(struct(df.columns.map(col).toIndexedSeq: _*), PerKeyWatermark.jsonOpts)
 

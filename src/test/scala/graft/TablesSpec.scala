@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
@@ -78,15 +78,9 @@ class TablesSpec extends SparkSpec {
     "graft/jobs/Jobs.scala" -> "readSnapshot supplies its schema when the caller has one")
 
   test("an unsupplied-schema parquet read appears only in Tables.scala and jobs/Jobs.scala") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 80, s"scanned ${files.size} files under ${root.toAbsolutePath}")
-    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
-    assert(unsuppliedReads.keys.forall(k => files.exists(rel(_) == k)))
     val found = for {
-      f <- files if !unsuppliedReads.contains(rel(f))
-      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex if line.contains("read.parquet(")
-    } yield s"${rel(f)}:${n + 1}"
+      (file, n, line) <- SourceScan.linesOutside(unsuppliedReads.keys.toSeq: _*) if line.contains("read.parquet(")
+    } yield s"$file:$n"
     assert(found.isEmpty, found.mkString("read tables through graft.Tables instead:\n", "\n", ""))
   }
 }

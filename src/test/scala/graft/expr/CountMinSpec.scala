@@ -9,6 +9,14 @@ import org.apache.spark.sql.functions._
 class CountMinSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The first 15 hex chars of md5("i:item") — the string the oracles
+    * parse — spelled out independently of [[CMBuffer.bucket]]. */
+  private def hex15(i: Int, item: String): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val d = md.digest((i.toString + ":" + item).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    d.map(b => f"${b & 0xff}%02x").mkString.take(15)
+  }
+
   private def sketch(df: org.apache.spark.sql.DataFrame, d: Int, w: Int): Seq[Seq[Long]] = {
     import org.apache.spark.sql.graftshim.GraftShim
     df.agg(
@@ -69,7 +77,7 @@ class CountMinSpec extends SparkSpec {
     // CMBuffer.bucket must equal parsing the first 15 hex chars of the
     // md5 string — the exact value the oracles compute
     for (i <- 0 until 3; item <- Seq("a", "tok7", "the quick fox")) {
-      val viaHex = java.lang.Long.parseLong(CMBuffer.hex15(i, item), 16) % 64
+      val viaHex = java.lang.Long.parseLong(hex15(i, item), 16) % 64
       assert(CMBuffer.bucket(i, item, 64) == viaHex.toInt)
     }
   }

@@ -309,7 +309,8 @@ class JdbcStoreSpec extends SparkSpec {
     val rows = Seq((7L, "a"), (42L, "b")).toDF("k", "v")
     JdbcStore.coalesceUpsert(rows, url, "b1", Seq("k"))
     assert(JdbcStore.columnBounds(url, "b1", "k") == ((7L, 42L)))
-    JdbcStore.ensureTable(url, "b2", rows.schema, Seq("k"))
+    JdbcStore.coalesceUpsert(rows.limit(0), url, "b2", Seq("k"))
+    assert(JdbcStore.tableExists(url, "b2"))
     assert(JdbcStore.columnBounds(url, "b2", "k") == ((0L, 1L)))
     // single key: bounds widened so lower < upper always holds (the
     // partitioned read rejects equal bounds) — and the read still

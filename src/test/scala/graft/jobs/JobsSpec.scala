@@ -1,9 +1,8 @@
 package graft.jobs
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 import java.sql.Timestamp
-import scala.jdk.CollectionConverters._
-import graft.SparkSpec
+import graft.{SourceScan, SparkSpec}
 
 class JobsSpec extends SparkSpec {
   import spark.implicits._
@@ -103,25 +102,6 @@ class JobsSpec extends SparkSpec {
     assert(spark.read.parquet(hkDir).count() == 1)
   }
 
-  test("writePartitioned bounds files per partition dir and round-trips rows") {
-    import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("wp").toString
-    val ev = graft.Tables
-      .events(spark, "/root/testdata/sf0.001")
-      .withColumn("day", date_format(date_trunc("day", col("ts")), "yyyy-MM-dd"))
-      .repartition(16) // simulate a many-task upstream: naive partitionBy would fan out per task
-      .drop("ts") // ts is int64-nanos-derived; day carries the partition
-    val n = ev.count()
-    Jobs.writePartitioned(ev, out, "day", filesPerPartition = 3)
-    val dayDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("day="))
-    assert(dayDirs.nonEmpty)
-    dayDirs.foreach { d =>
-      val files = d.listFiles().count(_.getName.endsWith(".parquet"))
-      assert(files >= 1 && files <= 3, s"${d.getName}: $files files, want <= 3")
-    }
-    assert(spark.read.parquet(out).count() == n)
-  }
-
   test("replace: the generation it returns is its own files', and another writer's publish moves the snapshot's") {
     val dir = Files.createTempDirectory("gen").toString + "/snap"
     assert(Jobs.generation(dir).isEmpty)
@@ -136,19 +116,13 @@ class JobsSpec extends SparkSpec {
   }
 
   test("snapshot reads and publishes live only in jobs/Jobs.scala") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 80, s"scanned ${files.size} files under ${root.toAbsolutePath}")
-    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
-    assert(files.exists(rel(_) == "graft/jobs/Jobs.scala"))
     // a hand-built `<dir>__tmp` name or a direct publish call is a second
     // copy of the replace sequence, which lives only in Jobs.replace
     val tokens = Seq("\"__tmp\"", "publish(")
     val found = for {
-      f <- files if rel(f) != "graft/jobs/Jobs.scala"
-      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      (file, n, line) <- SourceScan.linesOutside("graft/jobs/Jobs.scala")
       token <- tokens if line.contains(token)
-    } yield s"${rel(f)}:${n + 1}: $token"
+    } yield s"$file:$n: $token"
     assert(found.isEmpty, found.mkString("use Jobs.readSnapshot / Jobs.replace instead:\n", "\n", ""))
   }
 }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** PARTITION PRUNING — the first-line 100 TB mechanism, asserted on the
-  * PHYSICAL plan rather than assumed: a day-partitioned write via
-  * [[Jobs.writePartitioned]] must give readers (1) static pruning — a
-  * `day = X` filter lands in the scan's partitionFilters and the scan
-  * touches exactly that partition's files, and (2) DYNAMIC partition
+  * PHYSICAL plan rather than assumed: a day-partitioned write (rows
+  * shuffled by day first, so each day is one file) must give readers
+  * (1) static pruning — a `day = X` filter lands in the scan's
+  * partitionFilters and the scan touches exactly that partition's
+  * files, and (2) DYNAMIC partition
   * pruning — a join against a filtered dim builds a runtime subquery
   * filter on the fact scan, so the fact side never reads the
   * non-qualifying days even though the days aren't literals in the
@@ -25,7 +26,7 @@ class PartitionPruneSpec extends SparkSpec {
       .events(spark, "/root/testdata/sf0.001")
       .withColumn("day", to_date(col("ts")))
       .select("event_id", "user_id", "event_type", "value", "day")
-    Jobs.writePartitioned(ev, out, "day", filesPerPartition = 2)
+    ev.repartition(col("day")).write.partitionBy("day").parquet(out)
     out
   }
 

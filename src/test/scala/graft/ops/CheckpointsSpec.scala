@@ -1,8 +1,6 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-import graft.SparkSpec
+import graft.{SourceScan, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{CollectMetricsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ResultQueryStageExec}
@@ -160,18 +158,12 @@ class CheckpointsSpec extends SparkSpec {
   private val checkpointTokens = Seq(".localCheckpoint(", ".checkpoint(", "unpersistCheckpoint", "cutLineage")
 
   test("checkpoints are cut and released only through ops/Checkpoints.scala") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 80, s"scanned ${files.size} files under ${root.toAbsolutePath}")
-    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
-    assert(files.exists(rel(_) == "graft/ops/Checkpoints.scala"))
     val found = for {
-      f <- files if rel(f) != "graft/ops/Checkpoints.scala"
-      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      (file, n, line) <- SourceScan.linesOutside("graft/ops/Checkpoints.scala")
       token <- checkpointTokens if line.contains(token)
-      if !(rel(f) == "org/apache/spark/sql/graftshim/GraftShim.scala" &&
+      if !(file == "org/apache/spark/sql/graftshim/GraftShim.scala" &&
         line.contains("def unpersistCheckpoint("))
-    } yield s"${rel(f)}:${n + 1}: $token"
+    } yield s"$file:$n: $token"
     assert(found.isEmpty, found.mkString("use graft.ops.Checkpoints instead:\n", "\n", ""))
   }
 }

@@ -38,9 +38,4 @@ class DedupSpec extends SparkSpec {
       assert(got == expect.map { case (k, (_, p, v)) => k -> ((p, v)) })
     }
   }
-
-  test("exact dedup row count equals distinct key count") {
-    val df = Seq(("a", 1), ("a", 1), ("b", 2)).toDF("k", "v")
-    assert(Dedup.exact(df, Seq("k", "v")).count() == 2)
-  }
 }

@@ -88,27 +88,6 @@ class LayoutSpec extends SparkSpec {
     ))
   }
 
-  test("zorderRepartition: files are disjoint z-ranges in order") {
-    val rnd = new scala.util.Random(11)
-    val rows = Seq.fill(2000)((rnd.nextInt(100).toLong, rnd.nextInt(100).toLong))
-    val parted = Layout.zorderRepartition(
-      rows.toDF("x", "y"),
-      Seq((col("x"), 0L, 99L), (col("y"), 0L, 99L)), 7, 8)
-    val perPart = parted
-      .select(spark_partition_id().as("pid"), col("z"))
-      .groupBy("pid")
-      .agg(min("z").as("lo"), max("z").as("hi"))
-      .orderBy("pid")
-      .as[(Int, Long, Long)]
-      .collect()
-    // range partitioning: consecutive partitions hold non-overlapping,
-    // ordered z intervals
-    perPart.sliding(2).foreach {
-      case Array((_, _, hi1), (_, lo2, _)) => assert(hi1 <= lo2)
-      case _ =>
-    }
-  }
-
   /** Reference Hilbert xy2d on plain Scala longs (classic rotate/flip). */
   private def hilbertRef(x0: Long, y0: Long, bits: Int): Long = {
     val n = 1L << bits

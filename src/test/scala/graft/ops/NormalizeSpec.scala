@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
 
 /** Edge cases lifted from the reference's defensive code (SURVEY.md §5.2):
   * naive vs aware timestamps, DST transitions, invalid floats, pollutant
@@ -70,6 +71,18 @@ class NormalizeSpec extends SparkSpec {
     assert(rows(1).isNullAt(7)) // lat "bad" → null
     // location_name falls back to city (both null here stays null)
     assert(rows(1).isNullAt(6))
+  }
+
+  test("toMeasurements: the output record is the 11 measurement fields, named and typed, in order") {
+    // the names the Kafka envelope carries and perfbench's sink check reads
+    val raw = Seq(("s1", "pm10", "1.0", "c", "l", "50.0", "19.0", "2024-01-01T00:00:00Z"))
+      .toDF("station_id", "pollutant", "value", "city", "location_name", "lat", "lon", "ts_raw")
+    val fields = Normalize.toMeasurements(raw, "de", "DE", "UTC").schema.fields.map(f => f.name -> f.dataType)
+    assert(fields.toSeq == Seq(
+      "station_id" -> StringType, "pollutant" -> StringType, "value" -> DoubleType,
+      "unit" -> StringType, "country" -> StringType, "city" -> StringType,
+      "location_name" -> StringType, "lat" -> DoubleType, "lon" -> DoubleType,
+      "timestamp" -> TimestampType, "source" -> StringType))
   }
 
   test("dropNullIsland and onlyAutomatic") {

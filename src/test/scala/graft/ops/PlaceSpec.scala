@@ -1,9 +1,8 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
-import graft.SparkSpec
+import graft.{SourceScan, SparkSpec}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
@@ -126,16 +125,10 @@ class PlaceSpec extends SparkSpec {
   )
 
   test("the placement policy lives only in ops/Place.scala") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 80, s"scanned ${files.size} files under ${root.toAbsolutePath}")
-    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
-    assert(files.exists(rel(_) == "graft/ops/Place.scala"))
     val found = for {
-      f <- files if rel(f) != "graft/ops/Place.scala"
-      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
-      (token, allowed) <- policyTokens if line.contains(token) && !allowed.contains(rel(f))
-    } yield s"${rel(f)}:${n + 1}: $token"
+      (file, n, line) <- SourceScan.linesOutside("graft/ops/Place.scala")
+      (token, allowed) <- policyTokens if line.contains(token) && !allowed.contains(file)
+    } yield s"$file:$n: $token"
     assert(found.isEmpty, found.mkString("use graft.ops.Place instead:\n", "\n", ""))
   }
 }

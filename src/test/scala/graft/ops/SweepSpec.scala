@@ -84,32 +84,4 @@ class SweepSpec extends SparkSpec {
     assert(got.columns.toSet === want.columns.toSet)
     assert(got.except(want).count() === 0 && want.except(got).count() === 0)
   }
-
-  test("peakConcurrency equals brute-force open-interval counting") {
-    val rnd = new scala.util.Random(7)
-    val iv = (1 to 400).map { i =>
-      val s = rnd.nextInt(1000).toLong
-      (s"g${i % 2}", s, s + 1 + rnd.nextInt(50).toLong)
-    }
-    val df = iv.toDF("grp", "s", "e")
-    val got = Sweep
-      .peakConcurrency(df, Seq("grp"), $"s", $"e")
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    // brute force: for each group, concurrency(t) = #{[s,e) : s <= t < e}
-    // evaluated at every start instant (peaks occur at starts under the
-    // half-open, close-before-open convention)
-    val byG = iv.groupBy(_._1)
-    for ((gname, ivs) <- byG) {
-      val levels = ivs.map(_._2).distinct.map { t =>
-        (t, ivs.count(x => x._2 <= t && t < x._3).toLong)
-      }
-      val peak = levels.map(_._2).max
-      val peakAt = levels.filter(_._2 == peak).map(_._1).min
-      val (gotPeak, gotAt) = got(gname)
-      assert(gotPeak === peak, s"peak for $gname")
-      assert(gotAt === peakAt, s"peak_at for $gname")
-    }
-  }
 }

@@ -123,15 +123,4 @@ class TextDedupSpec extends SparkSpec {
     assert(out(12L) == (12L, true) && out(14L) == (14L, true))
     assert(out.forall { case (id, (rep, kept)) => rep <= id && kept == (rep == id) })
   }
-
-  test("rolling fingerprint: equal for identical, differs for different docs") {
-    val fps = docs
-      .select(col("doc_id"), TextStats.rollingFingerprint(col("text")).as("fp"))
-      .as[(Long, Long)]
-      .collect()
-      .toMap
-    assert(fps(1L) == fps(3L))
-    assert(fps(1L) != fps(2L))
-    assert(fps(1L) != fps(4L))
-  }
 }

@@ -1,8 +1,6 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-import graft.SparkSpec
+import graft.{SourceScan, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** PII redaction and stratified-sampling units (the oracle batteries
@@ -87,15 +85,10 @@ class TextStatsSpec extends SparkSpec {
   private val tokenizeCopy = """\bsplit\(.*,\s*"\\\\s\+"\s*\)""".r
 
   test("the tokenize rule lives only in ops/TextStats.scala") {
-    val root = Paths.get("src/main/scala")
-    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 80, s"scanned ${files.size} files under ${root.toAbsolutePath}")
-    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
-    assert(files.exists(rel(_) == "graft/ops/TextStats.scala"))
     val found = for {
-      f <- files if rel(f) != "graft/ops/TextStats.scala"
-      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex if tokenizeCopy.findFirstIn(line).isDefined
-    } yield s"${rel(f)}:${n + 1}: ${line.trim}"
+      (file, n, line) <- SourceScan.linesOutside("graft/ops/TextStats.scala")
+      if tokenizeCopy.findFirstIn(line).isDefined
+    } yield s"$file:$n: ${line.trim}"
     assert(found.isEmpty, found.mkString(s"${found.size} copies; use TextStats.tokens instead:\n", "\n", ""))
   }
 }

@@ -98,6 +98,25 @@ class PagedJsonSourceSpec extends SparkSpec {
       Seq("DE1", "DE2", "NL1", "NL2"))
   }
 
+  test("fetch options outside their contract are rejected at planning, naming the option and value") {
+    val bad = Seq(
+      "requestBudget" -> "-1", "requestBudget" -> "0", "maxRetries" -> "-1",
+      "backoffBaseMs" -> "-1", "backoffStepMs" -> "-500", "paceMs" -> "-1",
+      "connectTimeoutMs" -> "0", "readTimeoutMs" -> "0")
+    for ((key, value) <- bad) {
+      val e = intercept[IllegalArgumentException] {
+        spark.read
+          .format("graft.source.PagedJsonSource")
+          .schema(PagedJsonSource.defaultSchema)
+          .option("path", dir)
+          .option(key, value)
+          .load()
+          .count()
+      }
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"got $value"), e.getMessage)
+    }
+  }
+
   test("T7 backoff: a 429 burst below maxRetries is retried to success") {
     val d = Files.createTempDirectory("pages429").toString
     Files.writeString(

