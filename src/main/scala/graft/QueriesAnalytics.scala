@@ -629,38 +629,7 @@ private[graft] trait QueriesAnalytics extends QueryRegistration {
     * and the q123 HUGEINT digest algebra.
     */
   val q154Oracle: String =
-    """WITH tk AS (
-      |  SELECT CAST(source AS VARCHAR) AS source,
-      |    CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens
-      |  FROM documents GROUP BY source
-      |), p AS (
-      |  SELECT CAST(sum(n_tokens) * 9 // 10 AS BIGINT) AS budget,
-      |         CAST(count(*) AS BIGINT) AS n
-      |  FROM tk
-      |), o AS (
-      |  SELECT source, n_tokens,
-      |    CAST(row_number() OVER (ORDER BY n_tokens, source) AS BIGINT) AS rk,
-      |    CAST(sum(n_tokens) OVER (ORDER BY n_tokens, source
-      |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS csum
-      |  FROM tk
-      |), cutc AS MATERIALIZED (
-      |  SELECT o.*, p.budget, p.n,
-      |    (o.n_tokens * (p.n - o.rk + 1) <= p.budget - (o.csum - o.n_tokens)) AS sat_test
-      |  FROM o, p
-      |), cut AS (
-      |  SELECT COALESCE((SELECT min(rk) FROM cutc WHERE NOT sat_test),
-      |                  (SELECT n + 1 FROM p)) AS cut
-      |), lvl AS (
-      |  SELECT c.cut,
-      |    CASE WHEN c.cut <= p.n
-      |         THEN (p.budget - COALESCE((SELECT max(csum) FROM cutc WHERE rk < c.cut), 0))
-      |              // (p.n - c.cut + 1)
-      |         ELSE 0 END AS level,
-      |    CASE WHEN c.cut <= p.n
-      |         THEN (p.budget - COALESCE((SELECT max(csum) FROM cutc WHERE rk < c.cut), 0))
-      |              % (p.n - c.cut + 1)
-      |         ELSE 0 END AS rem
-      |  FROM cut c, p
+    QueriesCuration.waterfillCtes + """
       |), alloc AS MATERIALIZED (
       |  SELECT c.source, c.n_tokens,
       |    CAST(CASE WHEN c.rk < l.cut THEN c.n_tokens
@@ -887,38 +856,7 @@ private[graft] trait QueriesAnalytics extends QueryRegistration {
     * censuses, the deterministic global top-20, and the ppm algebra.
     */
   val q156Oracle: String =
-    """WITH tk AS (
-      |  SELECT CAST(source AS VARCHAR) AS source,
-      |    CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens
-      |  FROM documents GROUP BY source
-      |), p AS (
-      |  SELECT CAST(sum(n_tokens) * 9 // 10 AS BIGINT) AS budget,
-      |         CAST(count(*) AS BIGINT) AS n
-      |  FROM tk
-      |), o AS (
-      |  SELECT source, n_tokens,
-      |    CAST(row_number() OVER (ORDER BY n_tokens, source) AS BIGINT) AS rk,
-      |    CAST(sum(n_tokens) OVER (ORDER BY n_tokens, source
-      |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS csum
-      |  FROM tk
-      |), cutc AS MATERIALIZED (
-      |  SELECT o.*, p.budget, p.n,
-      |    (o.n_tokens * (p.n - o.rk + 1) <= p.budget - (o.csum - o.n_tokens)) AS sat_test
-      |  FROM o, p
-      |), cut AS (
-      |  SELECT COALESCE((SELECT min(rk) FROM cutc WHERE NOT sat_test),
-      |                  (SELECT n + 1 FROM p)) AS cut
-      |), lvl AS (
-      |  SELECT c.cut,
-      |    CASE WHEN c.cut <= p.n
-      |         THEN (p.budget - COALESCE((SELECT max(csum) FROM cutc WHERE rk < c.cut), 0))
-      |              // (p.n - c.cut + 1)
-      |         ELSE 0 END AS level,
-      |    CASE WHEN c.cut <= p.n
-      |         THEN (p.budget - COALESCE((SELECT max(csum) FROM cutc WHERE rk < c.cut), 0))
-      |              % (p.n - c.cut + 1)
-      |         ELSE 0 END AS rem
-      |  FROM cut c, p
+    QueriesCuration.waterfillCtes + """
       |), alloc AS MATERIALIZED (
       |  SELECT c.source,
       |    CAST(CASE WHEN c.rk < l.cut THEN c.n_tokens

@@ -4196,38 +4196,7 @@ private[graft] trait QueriesCuration extends QueryRegistration {
       .orderBy(col("source"))
 
   val q144Oracle: String =
-    """WITH tk AS (
-      |  SELECT CAST(source AS VARCHAR) AS source,
-      |    CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens
-      |  FROM documents GROUP BY source
-      |), p AS (
-      |  SELECT CAST(sum(n_tokens) * 9 // 10 AS BIGINT) AS budget,
-      |         CAST(count(*) AS BIGINT) AS n
-      |  FROM tk
-      |), o AS (
-      |  SELECT source, n_tokens,
-      |    CAST(row_number() OVER (ORDER BY n_tokens, source) AS BIGINT) AS rk,
-      |    CAST(sum(n_tokens) OVER (ORDER BY n_tokens, source
-      |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS csum
-      |  FROM tk
-      |), cutc AS MATERIALIZED (
-      |  SELECT o.*, p.budget, p.n,
-      |    (o.n_tokens * (p.n - o.rk + 1) <= p.budget - (o.csum - o.n_tokens)) AS sat_test
-      |  FROM o, p
-      |), cut AS (
-      |  SELECT COALESCE((SELECT min(rk) FROM cutc WHERE NOT sat_test),
-      |                  (SELECT n + 1 FROM p)) AS cut
-      |), lvl AS (
-      |  SELECT c.cut,
-      |    CASE WHEN c.cut <= p.n
-      |         THEN (p.budget - COALESCE((SELECT max(csum) FROM cutc WHERE rk < c.cut), 0))
-      |              // (p.n - c.cut + 1)
-      |         ELSE 0 END AS level,
-      |    CASE WHEN c.cut <= p.n
-      |         THEN (p.budget - COALESCE((SELECT max(csum) FROM cutc WHERE rk < c.cut), 0))
-      |              % (p.n - c.cut + 1)
-      |         ELSE 0 END AS rem
-      |  FROM cut c, p
+    QueriesCuration.waterfillCtes + """
       |), alloc AS (
       |  SELECT c.source, c.n_tokens, c.budget,
       |    CASE WHEN c.rk < l.cut THEN c.n_tokens
@@ -4581,4 +4550,48 @@ private[graft] trait QueriesCuration extends QueryRegistration {
       |FROM ch GROUP BY doc_id ORDER BY doc_id""".stripMargin
   query("q324_token_chunks", q324TokenChunks, Some(q324Oracle))
 
+}
+
+/** SQL text the query traits share. */
+private[graft] object QueriesCuration {
+
+  /** The q144 waterfill CTE chain (`tk`, `p`, `o`, `cutc`, `cut`, `lvl`):
+    * per-source token counts, the 0.9 budget, the cap-order prefix sums,
+    * the saturation cut and the re-levelled share. The q144, q154 and
+    * q156 oracles continue it with their own `alloc`. A `def`, so no
+    * trait's initialization order can read it unset.
+    */
+  def waterfillCtes: String =
+    """WITH tk AS (
+      |  SELECT CAST(source AS VARCHAR) AS source,
+      |    CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n_tokens
+      |  FROM documents GROUP BY source
+      |), p AS (
+      |  SELECT CAST(sum(n_tokens) * 9 // 10 AS BIGINT) AS budget,
+      |         CAST(count(*) AS BIGINT) AS n
+      |  FROM tk
+      |), o AS (
+      |  SELECT source, n_tokens,
+      |    CAST(row_number() OVER (ORDER BY n_tokens, source) AS BIGINT) AS rk,
+      |    CAST(sum(n_tokens) OVER (ORDER BY n_tokens, source
+      |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS csum
+      |  FROM tk
+      |), cutc AS MATERIALIZED (
+      |  SELECT o.*, p.budget, p.n,
+      |    (o.n_tokens * (p.n - o.rk + 1) <= p.budget - (o.csum - o.n_tokens)) AS sat_test
+      |  FROM o, p
+      |), cut AS (
+      |  SELECT COALESCE((SELECT min(rk) FROM cutc WHERE NOT sat_test),
+      |                  (SELECT n + 1 FROM p)) AS cut
+      |), lvl AS (
+      |  SELECT c.cut,
+      |    CASE WHEN c.cut <= p.n
+      |         THEN (p.budget - COALESCE((SELECT max(csum) FROM cutc WHERE rk < c.cut), 0))
+      |              // (p.n - c.cut + 1)
+      |         ELSE 0 END AS level,
+      |    CASE WHEN c.cut <= p.n
+      |         THEN (p.budget - COALESCE((SELECT max(csum) FROM cutc WHERE rk < c.cut), 0))
+      |              % (p.n - c.cut + 1)
+      |         ELSE 0 END AS rem
+      |  FROM cut c, p""".stripMargin
 }

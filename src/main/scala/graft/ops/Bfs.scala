@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB scale this is |E|-proportional work per round with the
   * frontier broadcast-or-shuffled on the same key every round — the
-  * Pregel shape expressed declaratively.
+  * Pregel shape expressed declaratively. [[layers]] and [[layersBySeed]]
+  * run the same wave; they differ only in the visited key columns.
   */
 object Bfs {
 
@@ -35,36 +36,8 @@ object Bfs {
     *
     * @param seeds one-column frame of seed node ids (column `node`)
     */
-  def layers(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
-    val e = edges
-      .select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .transform(Checkpoints.cut)
-    var visited = seeds
-      .select(col("node"))
-      .distinct()
-      .withColumn("dist", lit(0))
-      .transform(Checkpoints.cut)
-    var frontier = visited.select(col("node"))
-    var d = 0
-    var exhausted = false
-    while (d < maxDepth && !exhausted) {
-      d += 1
-      val (next, size) = Checkpoints.cutObserved(
-        e.join(frontier, e("src") === frontier("node"))
-          .select(col("dst").as("node"))
-          .distinct()
-          .join(visited, Seq("node"), "left_anti")
-          .withColumn("dist", lit(d)),
-        count(lit(1)))
-      if (size.getLong(0) == 0) exhausted = true
-      else {
-        visited = visited.unionByName(next).transform(Checkpoints.cut)
-        frontier = next.select(col("node"))
-      }
-    }
-    visited
-  }
+  def layers(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame =
+    wave(edges, seeds.select(col("node")).distinct(), Seq("node"), maxDepth)
 
   /** PER-SEED BFS: (seed, node, dist) for every seed×node pair within
     * `maxDepth` hops — [[layers]] merges all seeds into one wave (one
@@ -77,33 +50,41 @@ object Bfs {
     *
     * @param seeds one-column frame of seed node ids (column `seed`)
     */
-  def layersBySeed(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
+  def layersBySeed(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame =
+    wave(
+      edges,
+      seeds.select(col("seed")).distinct().withColumn("node", col("seed")),
+      Seq("seed", "node"),
+      maxDepth)
+
+  /** The wave both variants run: `start` holds the visited `keys` at
+    * dist 0; round d joins the frontier's `node` into the edges, keeps
+    * the reached keys not yet visited and stamps them dist d, until the
+    * frontier is empty or `maxDepth` rounds have run. The key columns
+    * before `node` (the seed) ride along unchanged.
+    */
+  private def wave(edges: DataFrame, start: DataFrame, keys: Seq[String], maxDepth: Int): DataFrame = {
     val e = edges
       .select(col("src"), col("dst"))
       .repartition(col("src"))
       .transform(Checkpoints.cut)
-    var visited = seeds
-      .select(col("seed"))
-      .distinct()
-      .withColumn("node", col("seed"))
-      .withColumn("dist", lit(0))
-      .transform(Checkpoints.cut)
-    var frontier = visited.select(col("seed"), col("node"))
+    var visited = start.withColumn("dist", lit(0)).transform(Checkpoints.cut)
+    var frontier = visited.select(keys.map(col): _*)
     var d = 0
     var exhausted = false
     while (d < maxDepth && !exhausted) {
       d += 1
       val (next, size) = Checkpoints.cutObserved(
         e.join(frontier, e("src") === frontier("node"))
-          .select(col("seed"), col("dst").as("node"))
+          .select(keys.init.map(col) :+ col("dst").as("node"): _*)
           .distinct()
-          .join(visited, Seq("seed", "node"), "left_anti")
+          .join(visited, keys, "left_anti")
           .withColumn("dist", lit(d)),
         count(lit(1)))
       if (size.getLong(0) == 0) exhausted = true
       else {
         visited = visited.unionByName(next).transform(Checkpoints.cut)
-        frontier = next.select(col("seed"), col("node"))
+        frontier = next.select(keys.map(col): _*)
       }
     }
     visited

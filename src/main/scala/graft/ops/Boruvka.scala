@@ -228,6 +228,14 @@ object Boruvka {
     * halvings) that halves the fixed driver-side overhead, which is
     * the dominant cost at harness scale. Extra jumps past the root are
     * no-ops (the root self-loops), so over-jumping is always safe.
+    *
+    * The loop is its own, not [[Checkpoints.fixpoint]]: its first cut
+    * observes nothing (no pointer has jumped yet) and each step starts
+    * from a projection of the last cut, while the helper observes its
+    * probe on every cut, the first included. Routing it there would add
+    * an observation and a column to the first cut's plan. The loop needs
+    * no round bound: once 2-cycles are broken the pointers form a forest,
+    * and each step halves every pointer's distance to its root twice.
     */
   private def hookLabels(ptr0: DataFrame): DataFrame = {
     val grand = ptr0.select(col("c").as("p"), col("p").as("pp"))

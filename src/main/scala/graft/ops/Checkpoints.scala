@@ -30,6 +30,10 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
   * once).
   * `CheckpointsSpec` fails on a checkpoint or its release spelled
   * anywhere but here.
+  *
+  * The round loop of the probe-converged operators (Components' two
+  * closures, Scc, KCore) is [[fixpoint]]: it owns the per-round cut,
+  * the probe comparison, the round bound and the non-convergence throw.
   */
 object Checkpoints {
 
@@ -67,6 +71,32 @@ object Checkpoints {
     val out = cut(df.observe(obs, named.head, named.tail: _*))
     val values = obs.get
     (out, Row.fromSeq(aggs.indices.map(i => values(s"_$i"))))
+  }
+
+  /** A cut frame with the probe row observed on its job. */
+  type Probed = (DataFrame, Row)
+
+  /** `settled` for a min- or count-monotone probe: unchanged = fixpoint. */
+  val sameProbe: (Probed, Probed) => Boolean = (prev, next) => prev._2 == next._2
+
+  /** The one fixpoint loop: cut `start`, then cut `step` of the last cut
+    * until `settled(prev, next)` holds, and return that last cut. Every
+    * cut observes `probe` on its own job ([[cutObserved]]). A loop that
+    * has not settled after `maxRounds` steps throws rather than return a
+    * partial result: the caller's bound is the depth it will pay for.
+    */
+  def fixpoint(op: String, maxRounds: Int, start: DataFrame, probe: Column*)(
+      settled: (Probed, Probed) => Boolean)(step: DataFrame => DataFrame): DataFrame = {
+    @annotation.tailrec
+    def loop(prev: Probed, round: Int): DataFrame =
+      if (round >= maxRounds)
+        throw new IllegalStateException(
+          s"$op did not converge in $maxRounds rounds: its fixpoint lies past the bound; raise it")
+      else {
+        val next = cutObserved(step(prev._1), probe: _*)
+        if (settled(prev, next)) next._1 else loop(next, round + 1)
+      }
+    loop(cutObserved(start, probe: _*), 0)
   }
 
   /** Release the storage behind a frame produced by `cut` once a newer

@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   * the edge key) + one groupBy-min — no collect of nodes or edges, state
   * is one (id, label) row per node. The only driver-side value per round
   * is the Σcomp that decides convergence, observed on the round's own
-  * checkpoint job ([[Checkpoints.cutObserved]]). Every round is cut;
-  * no round's checkpoint is released (each is a few bytes per node).
+  * checkpoint job. The round loop, its bound and its throw are
+  * [[Checkpoints.fixpoint]], as for [[largeStarSmallStar]]. Every round
+  * is cut; no round's checkpoint is released (each is a few bytes per
+  * node).
   */
 object Components {
 
@@ -82,42 +84,28 @@ object Components {
     // It is observed on each round's checkpoint job, so it costs no
     // job of its own. decimal(38,0) keeps the sum exact for any id
     // domain (n·max_id < 10³⁸ for anything representable in int64).
+    //
+    // a silent partial result would return SPLIT components (multiple
+    // "representatives" per true cluster), so an unsettled loop throws;
+    // min-label closes one hop per round, so maxIter bounds the
+    // component diameter the caller is prepared to pay for
+    // (largeStarSmallStar converges in O(log n) rounds instead)
+    val start = sym.select(col("src").as("id")).distinct().withColumn("comp", col("id"))
     val compSum = sum(col("comp").cast("decimal(38,0)"))
-    var (labels, probe) = Checkpoints.cutObserved(
-      sym.select(col("src").as("id")).distinct().withColumn("comp", col("id")),
-      compSum)
-    var prevSum = probe.getDecimal(0)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // each node's new label: min over (its label, its neighbors' labels)
-      val viaNeighbors = labels
-        .join(sym, labels("id") === sym("src"))
-        .select(col("dst").as("id"), col("comp"))
-      val (next, nextProbe) = Checkpoints.cutObserved(
+    try Checkpoints
+      .fixpoint("connectedComponents", maxIter, start, compSum)(Checkpoints.sameProbe) { labels =>
+        // each node's new label: min over (its label, its neighbors' labels)
+        val viaNeighbors = labels
+          .join(sym, labels("id") === sym("src"))
+          .select(col("dst").as("id"), col("comp"))
         labels
           .select(col("id"), col("comp"))
           .unionByName(viaNeighbors)
           .groupBy(col("id"))
-          .agg(min(col("comp")).as("comp")),
-        compSum)
-      val nextSum = nextProbe.getDecimal(0)
-      labels = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      iter += 1
-    }
-    sym.unpersist(blocking = false)
-    // a silent partial result would return SPLIT components (multiple
-    // "representatives" per true cluster) — refuse instead; min-label
-    // closes one hop per round, so maxIter bounds the component
-    // diameter the caller is prepared to pay for
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — " +
-          "a component has diameter > maxIter; raise maxIter " +
-          "(or use largeStarSmallStar, which converges in O(log n) rounds)")
-    labels.select(col("id"), col("comp").as("component"))
+          .agg(min(col("comp")).as("comp"))
+      }
+      .select(col("id"), col("comp").as("component"))
+    finally sym.unpersist(blocking = false)
   }
 
   /** Connected components by alternating large-star / small-star
@@ -132,10 +120,11 @@ object Components {
     * of its closed neighborhood; both are one groupBy-min + one join —
     * the same two-shuffle cost as a min-label round, so the log-round
     * bound is the whole win. Convergence is detected with a count +
-    * order-independent hash-sum fingerprint of the edge set; a
-    * fingerprint match is then CONFIRMED with an exact two-sided
-    * anti-join equality check (runs once, at convergence), so a 64-bit
-    * collision can cost an extra round but never a wrong answer.
+    * order-independent hash-sum fingerprint of the edge set, observed
+    * on each small-star cut ([[Checkpoints.fixpoint]]); a fingerprint
+    * match is then CONFIRMED with an exact two-sided anti-join equality
+    * check (run only on a match), so a 64-bit collision can cost an
+    * extra round but never a wrong answer.
     */
   def largeStarSmallStar(
       edges: DataFrame,
@@ -143,12 +132,6 @@ object Components {
       dstCol: String = "id_b",
       maxIter: Int = 40
   ): DataFrame = {
-    // cut, observing the edge set's (count, hash-sum) fingerprint
-    def cutFingerprinted(e: DataFrame): (DataFrame, (Long, Long)) = {
-      val (c, r) = Checkpoints.cutObserved(
-        e, count(lit(1)), coalesce(sum(xxhash64(col("u"), col("v"))), lit(0L)))
-      (c, (r.getLong(0), r.getLong(1)))
-    }
     // closed-neighborhood minimum per node, attached to every row of the
     // symmetric edge view via a window — ONE shuffle (the window's
     // hash-partition on u) where a groupBy-min + join-back costs two and
@@ -174,10 +157,13 @@ object Components {
       .unionByName(raw.select(col("v").as("id")))
       .distinct()
       .transform(Checkpoints.cut)
-    var (e, fp) = cutFingerprinted(canon(raw))
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    // the edge set's (count, hash-sum) fingerprint, observed on each cut;
+    // a match is confirmed exactly before the loop stops — a hash
+    // collision must cost a round, never a silently split component
+    val fingerprint = Seq(count(lit(1)), coalesce(sum(xxhash64(col("u"), col("v"))), lit(0L)))
+    val stars = Checkpoints.fixpoint("largeStarSmallStar", maxIter, canon(raw), fingerprint: _*) {
+      case ((e, fp), (ss, fpNext)) => fp == fpNext && ss.except(e).isEmpty && e.except(ss).isEmpty
+    } { e =>
       // large star: neighbors v > u attach to min of u's closed nbhd.
       // (checkpointed: the next step's sym() reads it twice, and the
       // canon distinct must not replay per consumer — a lazy persist
@@ -192,7 +178,7 @@ object Components {
       // (the old two-branch union read a checkpointed join twice). The
       // (u, m) edge repeats once per group row; canon's distinct folds
       // the copies.
-      val (ss, fpNext) = cutFingerprinted(canon(
+      canon(
         withMinNbr(sym(ls))
           .select(
             explode(
@@ -206,24 +192,11 @@ object Components {
             ).as("e")
           )
           .select(col("e.u").as("u"), col("e.v").as("v"))
-      ))
-      if (fpNext == fp) {
-        // confirm the fingerprint match exactly — a hash collision must
-        // cost a round, never a silently split component
-        converged =
-          ss.except(e).isEmpty && e.except(ss).isEmpty
-      }
-      fp = fpNext
-      e = ss
-      iter += 1
+      )
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"largeStarSmallStar did not converge in $maxIter rounds")
     // fixpoint edges are stars (node, root); roots label themselves,
     // and nodes with no surviving edges (self-loop-only) are singletons
-    val s = sym(e)
-    val labeled = s
+    val labeled = sym(stars)
       .groupBy(col("u")).agg(min(col("v")).as("component"))
       .select(col("u").as("id"), least(col("u"), col("component")).as("component"))
     nodes

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * under k).
   *
   * Each round is one degree aggregate over the surviving edge
-  * endpoints plus two semi joins (both endpoints must survive);
-  * lineage is truncated per round through [[Checkpoints]], with the
-  * surviving edge count observed on the cut's own job — the same
-  * iterative-DataFrame discipline as [[Components]] / [[PageRank]].
+  * endpoints plus two semi joins (both endpoints must survive); the
+  * rounds run through [[Checkpoints.fixpoint]], which cuts each one and
+  * observes the surviving edge count on the cut's own job — the same
+  * loop as [[Components]] and [[Scc]].
   * Round count is the peeling depth of the graph (the longest deletion
   * cascade), not its diameter; bounded-degree graphs converge in a
   * handful of rounds. At cluster scale the refinement is DELTA peeling
@@ -34,44 +34,26 @@ object KCore {
       dstCol: String = "v",
       maxIter: Int = 50
   ): DataFrame = {
-    val edgeCount = count(lit(1))
-    var (e, probe) = Checkpoints.cutObserved(
-      edges
-        .select(
-          least(col(srcCol), col(dstCol)).as("u"),
-          greatest(col(srcCol), col(dstCol)).as("v"))
-        .where(col("u") < col("v"))
-        .distinct(),
-      edgeCount)
-    var before = probe.getLong(0)
-    var iter = 0
-    var stable = false
-    while (!stable && iter < maxIter) {
+    // a silent partial peel would return edges whose endpoints can
+    // still be under-degree (the cascade was cut mid-flight), so an
+    // unsettled loop throws: maxIter bounds the peeling depth the caller
+    // is prepared to pay for. The probe is the surviving edge count.
+    val canonical = edges
+      .select(
+        least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"))
+      .where(col("u") < col("v"))
+      .distinct()
+    Checkpoints.fixpoint("KCore.coreEdges", maxIter, canonical, count(lit(1)))(Checkpoints.sameProbe) { e =>
       val deg = e
         .select(col("u").as("id"))
         .unionByName(e.select(col("v").as("id")))
         .groupBy(col("id"))
         .agg(count(lit(1)).as("deg"))
       val keep = deg.where(col("deg") >= k).select(col("id"))
-      val (ne, nextProbe) = Checkpoints.cutObserved(
-        e.join(keep.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
-          .join(keep.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
-          .select(col("u"), col("v")),
-        edgeCount)
-      val after = nextProbe.getLong(0)
-      stable = after == before
-      before = after
-      e = ne
-      iter += 1
+      e.join(keep.withColumnRenamed("id", "u"), Seq("u"), "left_semi")
+        .join(keep.withColumnRenamed("id", "v"), Seq("v"), "left_semi")
+        .select(col("u"), col("v"))
     }
-    // a silent partial peel would return edges whose endpoints can
-    // still be under-degree (the cascade was cut mid-flight) — refuse
-    // instead, the Components convergence discipline: maxIter bounds
-    // the peeling depth the caller is prepared to pay for
-    if (!stable)
-      throw new IllegalStateException(
-        s"coreEdges did not reach the peeling fixpoint in $maxIter rounds — " +
-          "the deletion cascade is deeper than maxIter; raise maxIter")
-    e
   }
 }

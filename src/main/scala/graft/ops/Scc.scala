@@ -23,9 +23,10 @@ import org.apache.spark.sql.functions._
   * the condensation — each pass only ever SPLITS classes.
   *
   * Scale shape: per round one equi join + one min-aggregate, both
-  * shuffling on node id; lineage cut per round ([[Checkpoints]] — the
-  * PageRank discipline); rounds bounded by the graph's directed
-  * diameter, passed explicitly by the caller. No driver collects.
+  * shuffling on node id; each direction's rounds run through
+  * [[Checkpoints.fixpoint]] (one observed cut per round); rounds bounded
+  * by the graph's directed diameter, passed explicitly by the caller.
+  * No driver collects.
   */
 object Scc {
 
@@ -65,29 +66,21 @@ object Scc {
         e0
           .select(col(a).as("node"), col(bcol).as("succ"))
           .repartition(col("succ")))
-      val lblSum = sum(col("lbl").cast("decimal(38,0)"))
-      var (lab, probe) = Checkpoints.cutObserved(nodes.withColumn("lbl", col("node")), lblSum)
-      var prevSum = probe.getDecimal(0)
-      var r = 0
-      var converged = false
-      while (r < rounds && !converged) {
+      // a direction that has not settled in `rounds` would split real
+      // components, so the loop throws at the bound
+      Checkpoints.fixpoint(
+        s"Scc ${if (flip) "backward" else "forward"} labels",
+        rounds,
+        nodes.withColumn("lbl", col("node")),
+        sum(col("lbl").cast("decimal(38,0)")))(Checkpoints.sameProbe) { lab =>
         val pulled = proj
           .join(lab.select(col("node").as("succ"), col("lbl")), Seq("succ"))
           .select(col("node"), col("lbl"))
-        val (next, nextProbe) = Checkpoints.cutObserved(
-          lab
-            .unionByName(pulled)
-            .groupBy(col("node"))
-            .agg(min(col("lbl")).as("lbl")),
-          lblSum)
-        lab = next
-        converged = nextProbe.getDecimal(0) == prevSum
-        prevSum = nextProbe.getDecimal(0)
-        r += 1
+        lab
+          .unionByName(pulled)
+          .groupBy(col("node"))
+          .agg(min(col("lbl")).as("lbl"))
       }
-      if (!converged) throw new IllegalStateException(
-        s"Scc ${if (flip) "backward" else "forward"} labels did not converge in $rounds rounds; raise rounds")
-      lab
     }
     // the two directions are independent dataflows until the final
     // join, each a sequential eager loop (one observed cut per round):

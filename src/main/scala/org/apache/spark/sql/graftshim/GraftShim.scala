@@ -32,7 +32,7 @@ object GraftShim {
 
   /** Release the executor storage behind a `localCheckpoint(true)`-ed
     * frame once a newer round supersedes it (iterative operators:
-    * Components / PageRank / Bpe). A checkpointed Dataset's analyzed
+    * PageRank / Bpe). A checkpointed Dataset's analyzed
     * plan is a LogicalRDD over the persisted RDD; unpersisting that RDD
     * is the only way to free it — `Dataset.unpersist` only talks to the
     * cache manager, which never saw it. No-op for non-checkpointed

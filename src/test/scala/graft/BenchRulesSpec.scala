@@ -113,7 +113,7 @@ class BenchRulesSpec extends SparkSpec {
   }
 
   test("loadPriorDriver picks the LAST full driver record; skips subset/small/local") {
-    val f = java.nio.file.Files.createTempFile("bench_records", ".jsonl")
+    val f = java.nio.file.Paths.get(tempDir("bench_records"), "records.jsonl")
     val lines = Seq(
       rec("driver", 300, subset = false, Map("q1_a" -> 9.0)),  // older driver
       rec("local", 300, subset = false, Map("q1_a" -> 1.0)),   // local: never binding

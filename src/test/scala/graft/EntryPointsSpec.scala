@@ -31,8 +31,9 @@ class EntryPointsSpec extends AnyFunSuite {
     "JdbcStore.readStations", "JdbcStore.deleteOlderThan", "JdbcStore.processBatchJdbc",
     // composed forms the native expressions are compared against
     "Similarity.cosineComposed", "Similarity.lshBucket",
-    // the reference's per-key watermark in streaming form (T2), pinned by StreamingSpec
-    "PerKeyWatermark.filterNew")
+    // the reference's per-key watermark in streaming form (T2) and its
+    // continuous producer loop (T1), both run by StreamingSpec
+    "PerKeyWatermark.filterNew", "ProducerLoop.start")
 
   test("def main( appears only in Smoke, Verify, Bench and PlanCheck") {
     val withMain = SourceScan.linesOutside().collect { case (file, _, line) if line.contains("def main(") => file }.toSet
@@ -70,14 +71,19 @@ class EntryPointsSpec extends AnyFunSuite {
       }
     }
     assert(members.size > 200, s"found ${members.size} public operator members")
-    // called: the bare name on another line of its own file, `Owner.name`
-    // elsewhere, or the bare name in a file that imports it from Owner
+    // called: on another line of its own file the bare name not after a
+    // `.` (`x.name` is some other object's member) or `Owner.name`;
+    // `Owner.name` elsewhere, or the bare name in a file that imports it
+    // from Owner
     def called(owner: String, name: String, own: SourceScan.Source, at: Int): Boolean = {
       val word = s"\\b$name\\b".r
+      val bare = s"(?<!\\.)\\b$name\\b".r
       val qualified = s"\\b$owner\\s*\\.\\s*$name\\b".r
       val imported = s"import .*\\b$owner\\.(_|$name\\b|\\{[^}]*\\b$name\\b)".r
       code.exists { src =>
-        if (src.path == own.path) src.lines.zipWithIndex.exists { case (l, i) => i != at && word.findFirstIn(l).isDefined }
+        if (src.path == own.path) src.lines.zipWithIndex.exists { case (l, i) =>
+          i != at && (bare.findFirstIn(l).isDefined || qualified.findFirstIn(l).isDefined)
+        }
         else qualified.findFirstIn(src.lines.mkString("\n")).isDefined ||
           (src.lines.exists(imported.findFirstIn(_).isDefined) &&
             src.lines.exists(l => !l.trim.startsWith("import") && word.findFirstIn(l).isDefined))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -41,7 +40,7 @@ class EventsSchemaSpec extends SparkSpec {
   }
 
   private def check(tsType: DataType): Unit = {
-    val dir = Files.createTempDirectory(s"events_fixture_").toString
+    val dir = tempDir(s"events_fixture_")
     writeFixture(dir, tsType)
     val ev = Tables.events(spark, dir)
     assert(ev.columns.toSeq == Seq("event_id", "ts", "event_type", "ts_ns"),
@@ -69,7 +68,7 @@ class EventsSchemaSpec extends SparkSpec {
   }
 
   test("events loader rejects an unsupported physical ts type") {
-    val dir = Files.createTempDirectory("events_fixture_bad_").toString
+    val dir = tempDir("events_fixture_bad_")
     import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(StructField("event_id", LongType), StructField("ts", StringType)))
     spark.createDataFrame(Seq(Row(1L, "not-a-ts")).asJava, schema)

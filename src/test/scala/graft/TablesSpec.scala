@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
@@ -26,7 +25,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("the first read of a table infers its schema with 1 job, a second read starts none") {
-    val dir = Files.createTempDirectory("tables_memo_").toString
+    val dir = tempDir("tables_memo_")
     writeEvents(dir, LongType)
     assert(jobsDuring(Tables.table(spark, dir, "events")) == 1)
     assert(jobsDuring(Tables.table(spark, dir, "events")) == 0)
@@ -34,7 +33,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("the held schema is Spark's own inferred schema, for every fixture table") {
-    val dir = Files.createTempDirectory("tables_fixtures_").toString
+    val dir = tempDir("tables_fixtures_")
     val tables = Map(
       // three part files: a directory listing, not a single file
       "lineitem" -> spark.range(0, 30, 1, 3).selectExpr("id AS l_orderkey",
@@ -55,7 +54,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a table rewritten under the same path with another schema is read with its new schema") {
-    val dir = Files.createTempDirectory("tables_rewrite_").toString
+    val dir = tempDir("tables_rewrite_")
     writeEvents(dir, LongType)
     assert(Tables.table(spark, dir, "events").schema("ts").dataType == LongType)
     assert(Tables.table(spark, dir, "events").schema("ts").dataType == LongType)
@@ -68,7 +67,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a missing table fails as Spark's own read does") {
-    val dir = Files.createTempDirectory("tables_missing_").toString
+    val dir = tempDir("tables_missing_")
     intercept[AnalysisException](Tables.table(spark, dir, "absent"))
   }
 

@@ -99,8 +99,7 @@ class FreqSketchSpec extends SparkSpec {
   }
 
   test("heavy_hitters merges incrementally across streaming micro-batches") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
     val agg = input.toDF
@@ -111,7 +110,7 @@ class FreqSketchSpec extends SparkSpec {
       .format("memory")
       .queryName("mg_stream")
       .outputMode("complete")
-      .option("checkpointLocation", Files.createTempDirectory("mg_ckpt").toString)
+      .option("checkpointLocation", tempDir("mg_ckpt"))
       .start()
     try {
       input.addData(Seq.fill(30)("hot") ++ (0 until 10).map(i => s"a$i"): _*)

@@ -64,9 +64,7 @@ class TDigestSpec extends SparkSpec {
       .format("memory")
       .queryName("td_stream")
       .outputMode("complete")
-      .option(
-        "checkpointLocation",
-        java.nio.file.Files.createTempDirectory("td_ckpt").toString)
+      .option("checkpointLocation", tempDir("td_ckpt"))
       .start()
     try {
       input.addData((1 to 5000).map(_.toDouble): _*)

@@ -1,6 +1,5 @@
 package graft.jobs
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -17,7 +16,7 @@ import graft.ops.Upsert
 class JdbcStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  System.setProperty("derby.system.home", Files.createTempDirectory("derbyhome").toString)
+  System.setProperty("derby.system.home", tempDir("derbyhome"))
 
   private def freshUrl(): String =
     s"jdbc:derby:memory:t${java.util.UUID.randomUUID().toString.replace("-", "")};create=true"
@@ -131,7 +130,7 @@ class JdbcStoreSpec extends SparkSpec {
 
   test("processBatchJdbc: watermark filter against DB cursors, commit-after-emit crash window") {
     val url = freshUrl()
-    val base = Files.createTempDirectory("jdbcloop").toString
+    val base = tempDir("jdbcloop")
     val sink = base + "/sink"
     val t = (s: String) => Timestamp.valueOf(s)
 

@@ -8,7 +8,7 @@ class JobsSpec extends SparkSpec {
   import spark.implicits._
 
   test("housekeeping drops rows older than the cutoff, keeps the rest") {
-    val dir = Files.createTempDirectory("hk").toString + "/curated"
+    val dir = tempDir("hk") + "/curated"
     Seq(
       ("a", Timestamp.valueOf("2024-01-01 00:00:00")),
       ("b", Timestamp.valueOf("2024-01-08 00:00:00")),
@@ -24,7 +24,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("catalogRefresh: bootstrap then coalesce-merge update") {
-    val dir = Files.createTempDirectory("cat").toString + "/stations"
+    val dir = tempDir("cat") + "/stations"
     val first = Seq(
       ("s1", Some("cityA"), Some(1.0), Some(2.0)),
       ("s2", None: Option[String], Some(3.0), Some(4.0)),
@@ -43,7 +43,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("rename-publish: no second write artifacts; crashed-publish leftovers swept") {
-    val base = Files.createTempDirectory("pub").toString
+    val base = tempDir("pub")
     val dir = base + "/stations"
     val first = Seq(("s1", Some("cityA"), Some(1.0), Some(2.0)))
       .toDF("station_id", "city", "lat", "lon")
@@ -69,7 +69,7 @@ class JobsSpec extends SparkSpec {
 
   test("crash between publish's two renames: re-running the job restores from __old, no data loss") {
     // build a healthy 2-station catalog
-    val dir = Files.createTempDirectory("crash").toString + "/stations"
+    val dir = tempDir("crash") + "/stations"
     val first = Seq(
       ("s1", Some("cityA"), Some(1.0), Some(2.0)),
       ("s2", Some("cityB"), Some(3.0), Some(4.0))
@@ -93,7 +93,7 @@ class JobsSpec extends SparkSpec {
 
     // same crash state, housekeeping path: must restore then run, not
     // fail on the missing target dir
-    val hkDir = Files.createTempDirectory("crash2").toString + "/curated"
+    val hkDir = tempDir("crash2") + "/curated"
     Seq(("a", Timestamp.valueOf("2024-01-09 00:00:00")))
       .toDF("k", "observed_at").write.parquet(hkDir)
     assert(new java.io.File(hkDir).renameTo(new java.io.File(hkDir + "__old")))
@@ -103,7 +103,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("replace: the generation it returns is its own files', and another writer's publish moves the snapshot's") {
-    val dir = Files.createTempDirectory("gen").toString + "/snap"
+    val dir = tempDir("gen") + "/snap"
     assert(Jobs.generation(dir).isEmpty)
     val mine = Jobs.replace(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), dir)
     assert(mine.rows == 2)

@@ -1,6 +1,5 @@
 package graft.jobs
 
-import java.nio.file.Files
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -21,7 +20,7 @@ class PartitionPruneSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val out = Files.createTempDirectory("prune").toString + "/events_by_day"
+    val out = tempDir("prune") + "/events_by_day"
     val ev = Tables
       .events(spark, "/root/testdata/sf0.001")
       .withColumn("day", to_date(col("ts")))
@@ -51,7 +50,7 @@ class PartitionPruneSpec extends SparkSpec {
       .map(d => (java.sql.Date.valueOf(f"2024-01-$d%02d"), if (d <= 2) "keep" else "drop"))
       .toDF("d_day", "flag")
     // write the dim so DPP sees a non-streamed relation worth reusing
-    val dimDir = Files.createTempDirectory("prune_dim").toString + "/dim"
+    val dimDir = tempDir("prune_dim") + "/dim"
     dim.write.parquet(dimDir)
     val dimT = spark.read.parquet(dimDir)
     val joined = fact

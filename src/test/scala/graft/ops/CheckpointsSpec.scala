@@ -28,16 +28,10 @@ class CheckpointsSpec extends SparkSpec {
     (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
 
   private def withReliableDir[A](f: java.io.File => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toFile
+    val dir = new java.io.File(tempDir("graft_ckpt_"))
     spark.conf.set("spark.graft.checkpoint.dir", dir.getAbsolutePath)
     try f(dir)
-    finally {
-      spark.conf.unset("spark.graft.checkpoint.dir")
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      rm(dir)
-    }
+    finally spark.conf.unset("spark.graft.checkpoint.dir")
   }
 
   test("cut: default backend is localCheckpoint — no dir configured, no files") {

@@ -69,6 +69,27 @@ class IterativeJobsSpec extends SparkSpec {
     assert(jobs === 32)
   }
 
+  test("Bfs.layersBySeed: two seeds on a 6-node path reach 5 and 3 layers, then an empty frontier") {
+    val edges = (0L until 5L).map(i => (i, i + 1)).toDF("src", "dst")
+    val (jobs, cuts) = jobsAndCuts { Bfs.layersBySeed(edges, Seq(0L, 2L).toDF("seed"), maxDepth = 10) }
+    // edges and seeds, then per round the frontier and (while it is
+    // non-empty) the visited union: seed 0's wave is the longest
+    assert(cuts === 2 + 5 + 5 + 1)
+    assert(jobs === 35)
+  }
+
+  test("Boruvka.forest: a triangle and a pair merge in one round, the 2nd finding no cross edge") {
+    val edges = Seq((1L, 2L, 10L), (2L, 3L, 20L), (1L, 3L, 30L), (10L, 11L, 1L)).toDF("src", "dst", "w")
+    val (jobs, cuts) = jobsAndCuts { Boruvka.forest(edges, rounds = 6) }
+    // edges and initial labels; round 1 cuts the hook pointers with each
+    // 2-cycle broken, one pointer-jump step that sees none move, and the
+    // labels; round 2 counts no cross edge and cuts nothing; then the
+    // forest. (A 5-chain needs a second jump step, and repeated calls on
+    // it ran 36, 37 or 38 jobs in one JVM, so it could pin nothing.)
+    assert(cuts === 2 + 3 + 1)
+    assert(jobs === 30)
+  }
+
   test("KCore.coreEdges: a 3-path hanging off a triangle peels in 3 rounds, confirmed by a 4th") {
     val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("u", "v")
     val (jobs, cuts) = jobsAndCuts { KCore.coreEdges(edges, 2) }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{BooleanType, TimestampType}
 class PagedJsonSourceSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("pages").toString
+    val d = tempDir("pages")
     // 3 pages of station rows (the reference's paged catalog GETs)
     Files.writeString(
       Paths.get(d, "page-0001.jsonl"),
@@ -47,7 +47,7 @@ class PagedJsonSourceSpec extends SparkSpec {
   }
 
   test("an empty page directory reads as 0 rows without error") {
-    val empty = Files.createTempDirectory("pages_empty").toString
+    val empty = tempDir("pages_empty")
     val df = spark.read
       .format("graft.source.PagedJsonSource")
       .schema(PagedJsonSource.defaultSchema)
@@ -118,7 +118,7 @@ class PagedJsonSourceSpec extends SparkSpec {
   }
 
   test("T7 backoff: a 429 burst below maxRetries is retried to success") {
-    val d = Files.createTempDirectory("pages429").toString
+    val d = tempDir("pages429")
     Files.writeString(
       Paths.get(d, "page-0001.jsonl"),
       """{"station_id":"A1","source":"de","city":"X","lat":1.0,"lon":2.0}
@@ -140,7 +140,7 @@ class PagedJsonSourceSpec extends SparkSpec {
   }
 
   test("T7 backoff: a 429 burst past maxRetries fails the read (reference re-raises)") {
-    val d = Files.createTempDirectory("pages429x").toString
+    val d = tempDir("pages429x")
     Files.writeString(
       Paths.get(d, "page-0001.jsonl"),
       """{"station_id":"A1","source":"de","city":"X","lat":1.0,"lon":2.0}
@@ -252,7 +252,7 @@ class PagedJsonSourceSpec extends SparkSpec {
   }
 
   test("feeds the catalog-refresh job end-to-end (null island dropped)") {
-    val out = Files.createTempDirectory("cat").toString + "/stations"
+    val out = tempDir("cat") + "/stations"
     val n = graft.jobs.Jobs.catalogRefresh(spark, read(), out)
     assert(n == 4) // NL2 has null lat → dropped by P4
     val kept = spark.read.parquet(out).select("station_id").collect().map(_.getString(0)).sorted
@@ -286,7 +286,7 @@ class PagedJsonSourceSpec extends SparkSpec {
 
   /** Captured-shape fixture pages, one file per national API. */
   private lazy val capturedDir: String = {
-    val d = Files.createTempDirectory("captured").toString
+    val d = tempDir("captured")
     // UBA /stations/json entries (reference app/main.py:383-391):
     // positional [id, code, name, city, ..., lon@7, lat@8]; one
     // dict-shaped entry (the non-list branch); one without coords.

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import graft.SparkSpec
 import graft.ops.{BloomJoin, TextDedup}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -57,7 +56,7 @@ class StreamingDecontaminationSpec extends SparkSpec {
       .format("memory")
       .queryName("decon_out")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("decon_ckpt").toString)
+      .option("checkpointLocation", tempDir("decon_ckpt"))
       .start()
     try {
       input.addData(

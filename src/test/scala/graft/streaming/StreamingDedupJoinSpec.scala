@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -31,7 +30,7 @@ class StreamingDedupJoinSpec extends SparkSpec {
       .format("memory")
       .queryName("ddww_out")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ddww_ckpt").toString)
+      .option("checkpointLocation", tempDir("ddww_ckpt"))
       .start()
     try {
       // batch 1: same (key) twice → one survivor
@@ -83,7 +82,7 @@ class StreamingDedupJoinSpec extends SparkSpec {
       .format("memory")
       .queryName("ssj_out")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ssj_ckpt").toString)
+      .option("checkpointLocation", tempDir("ssj_ckpt"))
       .start()
     try {
       imps.addData(
@@ -130,7 +129,7 @@ class StreamingDedupJoinSpec extends SparkSpec {
       .format("memory")
       .queryName("ssj_outer")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ssjo_ckpt").toString)
+      .option("checkpointLocation", tempDir("ssjo_ckpt"))
       .start()
     try {
       // one matching pair and one impression that will never match

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import graft.SparkSpec
 import graft.jobs.JdbcStore
@@ -31,7 +30,7 @@ class StreamingJdbcCursorSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val url =
       s"jdbc:derby:memory:stream${java.util.UUID.randomUUID().toString.replace("-", "")};create=true"
-    val base = Files.createTempDirectory("jdbcstream").toString
+    val base = tempDir("jdbcstream")
     val sink = base + "/sink"
     val keys = Seq("source", "station_id")
 
@@ -80,7 +79,7 @@ class StreamingJdbcCursorSpec extends SparkSpec {
   test("processBatchJdbc: the cursor commit stages the observed maxima as they are, with no aggregate") {
     val url =
       s"jdbc:derby:memory:commit${java.util.UUID.randomUUID().toString.replace("-", "")};create=true"
-    val sink = Files.createTempDirectory("jdbccommit").toString + "/sink"
+    val sink = tempDir("jdbccommit") + "/sink"
     val keys = Seq("source", "station_id")
     // the plan of every JDBC stage write, which only the upsert makes
     val staged = new java.util.concurrent.LinkedBlockingQueue[LogicalPlan]()

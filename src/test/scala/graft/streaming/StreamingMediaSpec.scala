@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import graft.SparkSpec
 import graft.ops.Multimodal
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -38,7 +37,7 @@ class StreamingMediaSpec extends SparkSpec {
       .format("memory")
       .queryName("media_stream")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("media_ckpt").toString)
+      .option("checkpointLocation", tempDir("media_ckpt"))
       .start()
     try {
       input.addData(docs.take(2): _*)
@@ -79,7 +78,7 @@ class StreamingMediaSpec extends SparkSpec {
       .format("memory")
       .queryName("audio_stream")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("audio_ckpt").toString)
+      .option("checkpointLocation", tempDir("audio_ckpt"))
       .start()
     try {
       input.addData(docs: _*)

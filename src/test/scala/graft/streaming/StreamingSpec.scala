@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.hadoop.mapreduce.JobContext
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
@@ -32,7 +31,7 @@ class StreamingSpec extends SparkSpec {
       .format("memory")
       .queryName("pkw_out")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("pkw_ckpt").toString)
+      .option("checkpointLocation", tempDir("pkw_ckpt"))
       .start()
     try {
       // batch 1: st1 advances to 12:00; st2 advances to 10:00
@@ -66,7 +65,7 @@ class StreamingSpec extends SparkSpec {
       .format("memory")
       .queryName("pkw_collide")
       .outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("pkw_ckpt2").toString)
+      .option("checkpointLocation", tempDir("pkw_ckpt2"))
       .start()
     try {
       input.addData(Ev("ab", "c", ts("2024-01-01 12:00:00"), 1.0, 1))
@@ -85,7 +84,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ProducerLoop.processBatch: emit-then-commit, watermark enforced across batches") {
-    val dir = Files.createTempDirectory("producer").toString
+    val dir = tempDir("producer")
     val sink = s"$dir/sink"
     val cursors = s"$dir/cursors"
     val keys = Seq("station_id", "pollutant")
@@ -129,7 +128,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ProducerLoop.readCursors: an existing snapshot is read with its schema supplied, starting no job") {
-    val dir = Files.createTempDirectory("producer_read").toString
+    val dir = tempDir("producer_read")
     val cursors = s"$dir/cursors"
     ProducerLoop.processBatch(
       parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
@@ -138,7 +137,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ProducerLoop.processBatch: the batch is computed once for the emit and the cursor roll-up") {
-    val dir = Files.createTempDirectory("producer_once").toString
+    val dir = tempDir("producer_once")
     val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
     ProducerLoop.processBatch(
       parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
@@ -162,7 +161,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ProducerLoop.processBatch: a failed cursor write after the emit keeps the cursors; a rerun re-emits that batch") {
-    val dir = Files.createTempDirectory("producer_fault").toString
+    val dir = tempDir("producer_fault")
     val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
     ProducerLoop.processBatch(
       parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
@@ -196,7 +195,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ProducerLoop.processBatch: cursors stranded under __old are restored before the watermark") {
-    val dir = Files.createTempDirectory("producer_crash").toString
+    val dir = tempDir("producer_crash")
     val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
     val b1 = parquetBatch(s"$dir/b1",
       ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L),
@@ -214,7 +213,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ProducerLoop.processBatch: a cycle over a present snapshot runs its job floor") {
-    val dir = Files.createTempDirectory("producer_jobs").toString
+    val dir = tempDir("producer_jobs")
     val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
     ProducerLoop.processBatch(
       parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
@@ -235,7 +234,7 @@ class StreamingSpec extends SparkSpec {
       rows.map(r => (r._1, r._2, ts(r._3))).toDF("station_id", "pollutant", "last_observed_at"), dir)
 
   test("ProducerLoop.processBatch: another writer's publish between cycles is honoured by the next watermark") {
-    val dir = Files.createTempDirectory("producer_writer").toString
+    val dir = tempDir("producer_writer")
     val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
     ProducerLoop.processBatch(
       parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
@@ -251,7 +250,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ProducerLoop.processBatch: a cursor dir removed between cycles reads as no cursors") {
-    val dir = Files.createTempDirectory("producer_removed").toString
+    val dir = tempDir("producer_removed")
     val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
     val b1 = parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L))
     ProducerLoop.processBatch(b1, producerKeys, "ts", "arrival", sink, cursors)
@@ -266,7 +265,7 @@ class StreamingSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
-    val dir = Files.createTempDirectory("producer_empty").toString
+    val dir = tempDir("producer_empty")
     val (sink, cursors) = (s"$dir/sink", s"$dir/cursors")
     ProducerLoop.processBatch(
       parquetBatch(s"$dir/b1", ("st1", "pm25", "2024-01-01 12:00:00", 1.0, 1L)),
@@ -297,7 +296,7 @@ class StreamingSpec extends SparkSpec {
       .format("memory")
       .queryName("hll_stream")
       .outputMode("complete")
-      .option("checkpointLocation", Files.createTempDirectory("hll_ckpt").toString)
+      .option("checkpointLocation", tempDir("hll_ckpt"))
       .start()
     try {
       input.addData((1 to 40).map(i => Ev(s"st$i", "pm25", ts("2024-01-01 12:00:00"), 1.0, i)): _*)
@@ -323,7 +322,7 @@ class StreamingSpec extends SparkSpec {
       .format("memory")
       .queryName("t5_out")
       .outputMode("complete")
-      .option("checkpointLocation", Files.createTempDirectory("t5_ckpt").toString)
+      .option("checkpointLocation", tempDir("t5_ckpt"))
       .start()
     try {
       input.addData(
@@ -348,7 +347,7 @@ class StreamingSpec extends SparkSpec {
 
   test("ProducerLoop.start: end-to-end over MemoryStream with AvailableNow-style trigger") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("producer2").toString
+    val dir = tempDir("producer2")
     val input = MemoryStream[Ev]
     input.addData(
       Ev("st1", "pm25", ts("2024-01-01 12:00:00"), 1.0, 1),
@@ -381,7 +380,7 @@ class StreamingSpec extends SparkSpec {
         .format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", Files.createTempDirectory(name).toString)
+        .option("checkpointLocation", tempDir(name))
         .start()
       try {
         feed()

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -60,7 +59,7 @@ class TransformWithStateSpec extends SparkSpec {
         .format("memory")
         .queryName("tws_out")
         .outputMode("append")
-        .option("checkpointLocation", Files.createTempDirectory("tws_ckpt").toString)
+        .option("checkpointLocation", tempDir("tws_ckpt"))
         .start()
       try {
         input.addData(TwsEv("a", Timestamp.valueOf("2024-01-01 12:00:00"), 1.0))
